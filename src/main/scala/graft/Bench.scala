@@ -1,4 +1,7 @@
 package graft
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   /** Forces FULL evaluation of every output row via the no-op sink.
@@ -13,6 +16,118 @@ object Bench {
     */
   private[graft] def evaluate(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
+
+  /** Local property naming the query (and timed pass) a job runs for. It
+    * is set before the query's DataFrame is built, so the jobs some
+    * entries run at construction time are counted too; broadcast and
+    * subquery threads inherit it from the submitting thread.
+    */
+  private[graft] val QueryTag = "graft.bench.query"
+
+  /** Jobs started, stages completed and tasks ended under one tag. */
+  private[graft] final case class Census(jobs: Int, stages: Int, tasks: Long)
+
+  /** One query in one timed pass: seconds (-1 on failure), why it failed,
+    * and its census.
+    */
+  private[graft] final case class Run(sec: Double, failure: Option[String], census: Census)
+
+  /** Every timed pass, plus all stages completed while they ran (tagged
+    * or not) — the compact line's structural `stages` census.
+    */
+  private[graft] final case class Timed(passes: Seq[Map[String, Run]], stages: Int) {
+    /** Per query, the run whose time is kept: the fastest pass, or a
+      * failing one — a failure must never be hidden by a good pass.
+      */
+    def kept: Map[String, Run] =
+      passes.head.keys.map(q => q -> passes.map(_(q)).minBy(_.sec)).toMap
+  }
+
+  /** Counts jobs, stages and tasks per [[QueryTag]] value. A stage takes
+    * the tag of the job that submitted it; tasks take their stage's.
+    */
+  private final class CensusListener extends SparkListener {
+    // all state is touched under the listener's lock: the bus thread
+    // writes it, the bench thread reads it after settle()
+    private val counts = mutable.Map.empty[String, Array[Long]]
+    private val stageTags = mutable.Map.empty[Int, String]
+    private var events = 0L
+    private var stagesDone = 0
+    private def count(tag: Option[String], i: Int): Unit = {
+      events += 1
+      tag.foreach(counts.getOrElseUpdate(_, new Array[Long](3))(i) += 1)
+    }
+    private def tagOf(p: java.util.Properties): Option[String] =
+      Option(p).flatMap(p => Option(p.getProperty(QueryTag)))
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      synchronized(count(tagOf(e.properties), 0))
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      synchronized(tagOf(e.properties).foreach(stageTags(e.stageInfo.stageId) = _))
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      stagesDone += 1
+      count(stageTags.get(e.stageInfo.stageId), 1)
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      synchronized(count(stageTags.get(e.stageId), 2))
+    def apply(tag: String): Census = synchronized {
+      val c = counts.getOrElse(tag, new Array[Long](3))
+      Census(c(0).toInt, c(1).toInt, c(2))
+    }
+    def stages: Int = synchronized(stagesDone)
+    /** The listener bus is async: poll until the event count goes quiet,
+      * so the last query's tail events are in before anything is read.
+      */
+    def settle(): Unit = {
+      var prev = -1L
+      var cur = synchronized(events)
+      while (cur != prev) {
+        Thread.sleep(150)
+        prev = cur
+        cur = synchronized(events)
+      }
+    }
+  }
+
+  private def reason(e: Throwable): String =
+    e.getClass.getName + ": " +
+      Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+
+  /** `passes` timed passes over `queries` in the given order, each
+    * followed by `clearCache`, under a census listener that is removed
+    * before returning. A failing query reports -1 plus its reason, never a
+    * fast timing. The listener drain runs once, after the last pass,
+    * outside every query's timing.
+    */
+  private[graft] def timed(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      passes: Int): Timed = {
+    val sc = spark.sparkContext
+    val census = new CensusListener
+    sc.addSparkListener(census)
+    try {
+      val ran = (1 to passes).map { pass =>
+        val r = queries.map { case (name, fn) =>
+          sc.setLocalProperty(QueryTag, s"$pass/$name")
+          val t0 = System.nanoTime()
+          val failure =
+            try { evaluate(fn(spark, sfDir)); None }
+            catch { case e: Throwable => Some(reason(e)) }
+          val sec = (System.nanoTime() - t0) / 1e9
+          sc.setLocalProperty(QueryTag, null)
+          name -> (if (failure.isEmpty) sec else -1.0, failure)
+        }
+        spark.catalog.clearCache()
+        pass -> r
+      }
+      census.settle()
+      Timed(ran.map { case (pass, r) =>
+        r.map { case (name, (sec, failure)) =>
+          name -> Run(sec, failure, census(s"$pass/$name"))
+        }.toMap
+      }, census.stages)
+    } finally sc.removeSparkListener(census)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.create(_
@@ -30,15 +145,15 @@ object Bench {
       .config("spark.locality.wait", "0ms"))
     // the FIXED-INPUT set reads the reference 514-game sample, not the sf
     // dir — excluded so bench numbers reflect sf scaling only. ONE
-    // canonical set (SparkEntry.fixedInputQueries, r13 ADVICE) shared
-    // with StageCount and published in the bench JSON for
-    // tools/bench_oracle.py. Sorted-name execution
+    // canonical set (SparkEntry.fixedInputQueries, r13 ADVICE), published
+    // in the bench JSON for tools/bench_oracle.py. Sorted-name execution
     // order: deterministic run-to-run (a Map's hash order is not), and it
     // fixes WHICH query pays any shared-subtree build cost (the dedup
     // family persists one hash-array/pair subtree; in sorted order
     // dedup_clusters, the family's first, builds it).
     // SPARK_GRAFT_ONLY=a,b,c restricts the run to a named subset (the
-    // scale harness times just the heavy tail); unset = the full board
+    // scale harness times just the heavy tail; one name is the
+    // single-query dev loop); unset = the full board
     val fixedInput = SparkEntry.fixedInputQueries
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
@@ -56,39 +171,22 @@ object Bench {
     spark.catalog.clearCache()
     // two timed passes, best-of per query: the host environment shows
     // intermittent multi-second contention spikes; min-of-N is the standard
-    // way to measure the query rather than the noise
-    def timedPass(): Map[String, Double] = {
-      val r = benched.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        // a failure must NOT masquerade as a fast timing: report -1 (same
-        // contract as the fixed-input block below)
-        val ok = try { evaluate(fn(spark, sfDir)); true } catch { case _: Throwable => false }
-        name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-      }.toMap
-      spark.catalog.clearCache()
-      r
-    }
-    // stage census of the timed region (VERDICT r15 #8): published in the
-    // JSON line so host/session drift is diagnosable from the artifact
-    // alone — the stage count is structural (same plans → same count), so
-    // seconds-per-stage separates "the host was slow" from "a query grew
-    // stages". Listener events are async; the post-pass sleep lets the bus
-    // drain before the count is read.
-    val stageCount = new java.util.concurrent.atomic.AtomicInteger(0)
-    val stageListener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        stageCount.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(stageListener)
-    val p1 = timedPass()
-    val p2 = timedPass()
-    Thread.sleep(500)
-    val timedStages = stageCount.get()
-    spark.sparkContext.removeSparkListener(stageListener)
-    val results = p1.map { case (k, v) => k -> math.min(v, p2(k)) }
+    // way to measure the query rather than the noise. The stage census of
+    // the timed region (VERDICT r15 #8) is published so host/session drift
+    // is diagnosable from the artifact alone — the stage count is
+    // structural (same plans → same count), so seconds-per-stage separates
+    // "the host was slow" from "a query grew stages"; the per-query census
+    // feeds tools/floor_model.py.
+    val run = timed(spark, sfDir, benched, passes = 2)
+    val kept = run.kept
+    val results = kept.map { case (k, r) => k -> r.sec }
     def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    def jstr(s: String): String = "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => "\\u%04x".format(c.toInt)
+      case c => c.toString
+    } + "\""
     // fixed-input queries (they read the reference sample, not the sf dir)
     // timed once, reported on their own line and excluded from the
     // sf-scaled total so round-over-round totals stay comparable
@@ -110,16 +208,24 @@ object Bench {
       if (v >= 0.01) "%.2f".formatLocal(java.util.Locale.ROOT, v) else f(v)
     val qs = results.toSeq.sortBy(_._1).map { case (k, v) => s"\"" + k + "\":" + fq(v) }
       .mkString("{", ",", "}")
+    // census and failure reasons come from the pass whose time is kept
+    val censusJson = kept.toSeq.sortBy(_._1).map { case (k, r) =>
+      s"\"$k\":{\"jobs\":${r.census.jobs},\"stages\":${r.census.stages},\"tasks\":${r.census.tasks}}"
+    }.mkString("{", ",", "}")
+    val failuresJson = kept.toSeq.sortBy(_._1)
+      .flatMap { case (k, r) => r.failure.map(why => s"\"$k\":" + jstr(why)) }
+      .mkString("{", ",", "}")
     // the total sums SURVIVING queries only: a -1 failure sentinel must
     // not subtract from the total and make a failing round read faster
     val total = results.values.filter(_ >= 0).sum
     val sfLabel = new java.io.File(sfDir).getName
+    val cpus = spark.sparkContext.defaultParallelism
     // fixed_input published so downstream tools (bench_oracle.py) read the
     // canonical set from the bench artifact instead of hardcoding a copy
     val fixedJson = fixedInput.toSeq.sorted
       .map("\"" + _ + "\"").mkString("[", ",", "]")
     val fullLine =
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"fixed_input":$fixedJson,"sf":"$sfLabel","passes":2,"eval":"noop"}"""
+      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"census":$censusJson,"failures":$failuresJson,"fixed_input":$fixedJson,"sf":"$sfLabel","cpus":$cpus,"passes":2,"eval":"noop"}"""
     // the full line goes to the file ONLY (stderr as the read-only-cwd
     // fallback): the driver parses the LAST stdout line as the bench JSON,
     // and a second {"metric":"total"...} line above it is exactly what
@@ -140,14 +246,14 @@ object Bench {
     // round (testdata missing, session-wide regression) cannot push THIS
     // line past the snapshot window either — the one scenario where the
     // compact line matters most; sorted for run-to-run determinism
-    val (failed, timed) = results.partition(_._2 < 0)
-    val top = timed.toSeq.sortBy(-_._2).take(30)
-    val floor = timed.toSeq.sortBy(-_._2).drop(30)
+    val (failed, ok) = results.partition(_._2 < 0)
+    val top = ok.toSeq.sortBy(-_._2).take(30)
+    val floor = ok.toSeq.sortBy(-_._2).drop(30)
     val topJson = (failed.toSeq.sortBy(_._1).take(10)
         .map { case (k, _) => s"\"" + k + "\":-1.000" } ++
       top.sortBy(_._1).map { case (k, v) => s"\"" + k + "\":" + fq(v) })
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${f(total)},"unit":"sec","n_failed":${failed.size},"queries":$topJson,"floor_queries":{"n":${floor.size},"sum":${f(floor.map(_._2).sum)}},"stages":$timedStages,"sf":"$sfLabel","passes":2,"eval":"noop","full":${if (fullWritten) "\"" + fullOut + "\"" else "null"}}""")
+    println(s"""{"metric":"total","value":${f(total)},"unit":"sec","n_failed":${failed.size},"queries":$topJson,"floor_queries":{"n":${floor.size},"sum":${f(floor.map(_._2).sum)}},"stages":${run.stages},"sf":"$sfLabel","cpus":$cpus,"passes":2,"eval":"noop","full":${if (fullWritten) "\"" + fullOut + "\"" else "null"}}""")
     spark.stop()
   }
 }

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Canonical session factory. Every entry point (Verify, Bench, TimeOne,
-  * demos, the shared test fixture) builds its session here, so the Graft
+/** Canonical session factory. Every entry point (Verify, Bench, the
+  * tools, demos, the shared test fixture) builds its session here, so the Graft
   * planner extensions ([[graft.plans.PrefixJoinStrategy]] via
   * [[graft.plans.GraftPlanExtensions]]) and the engine-parity configs
   * (UTC session timezone) can never be silently lost — a plain

@@ -426,7 +426,8 @@ object SparkEntry {
     *    spread IS the exchange sensitivity). The SMJ spelling beat the
     *    co-partitioned shuffle-hash spelling 30.2 s vs 46.3 s in-session
     *    — the two bounded sorts cost less than 128-slot hash builds.
-    *    J4Lab `write_bucketed`/`j4_bucketed` reproduces both columns.
+    *    The J4Lab `write_bucketed`/`j4_bucketed` variants reproduced
+    *    both columns.
     */
   private[graft] def j4Roleplay(s: SparkSession, d: String,
                                 packedBytes: Long = j4PackedBytes,
@@ -1310,8 +1311,8 @@ object SparkEntry {
   /** Queries whose inputs are the FIXED reference sample (the 514-game
     * chess JSON / openings CSV), not the sf-scaled parquet dir — excluded
     * from sf-scaled bench totals and the floor-model census. THE canonical
-    * set (r13 ADVICE): [[graft.Bench]] and [[graft.tools.StageCount]]
-    * consume it, and Bench publishes it as `"fixed_input"` in the bench
+    * set (r13 ADVICE): [[graft.Bench]] consumes it for its timed board
+    * and per-query census, and publishes it as `"fixed_input"` in the bench
     * JSON so `tools/bench_oracle.py` reads it from there instead of
     * hardcoding a copy. An explicit set, not a name-prefix filter:
     * `chess_scale_winrate` is chess-SHAPED but reads the sf-scaled orders

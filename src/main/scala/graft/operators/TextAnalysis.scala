@@ -702,8 +702,9 @@ object TextAnalysis {
     * and normalized to (least, greatest); same-block pairs (which meet
     * twice) keep the `doc_l < doc_r` cut. The emitted set is identical to
     * the plain self-join's for ANY deterministic block assignment —
-    * TedEquivalenceSpec pins all spellings row-identical in CI and TedLab
-    * re-pins by checksum at x100/x1000.
+    * TedEquivalenceSpec pins all spellings row-identical in CI; the r16
+    * TedLab runs re-pinned them by checksum at x100/x1000
+    * (tools/sweeps/tedlab_*).
     *
     * Per-pair gauntlet, cheap to expensive (CombineFilters keeps the
     * conjunct order): orientation cut, then the ~30-op histogram L1 reject

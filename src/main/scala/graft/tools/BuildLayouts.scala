@@ -4,7 +4,7 @@ import graft.{GraftSession, SparkEntry}
 
 /** Layout-prep entry point for the scale harness: pays the write-once
   * forced-path cost of the named layouts OUTSIDE any timed measurement,
-  * so a TimeOne/Bench run that follows probes complete layouts (GATES.md:
+  * so a Bench run that follows probes complete layouts (GATES.md:
   * the default query paths never write). The build cost is printed — it
   * is the amortized-shuffle number the board records next to any adopted
   * layout row.

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
 /** Dev harness: dump formatted physical plans for every SparkEntry query
   * (or the named subset) to stdout for plan review — pushed filters, scan
@@ -12,11 +11,12 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = args.drop(1).toSet
-    val spark = SparkSession.builder()
+    // the canonical session: without its planner extensions the dumped
+    // plans are not the ones the queries run (prefix joins would show as
+    // BroadcastNestedLoopJoin instead of PrefixJoinExec)
+    val spark = GraftSession.create(_
       .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .config("spark.sql.shuffle.partitions", 4))
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => names.isEmpty || names.contains(q._1))

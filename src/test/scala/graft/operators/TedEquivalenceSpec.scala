@@ -22,8 +22,8 @@ import graft.{SparkFixture, Tables}
   *
   * Runs on the sf0.001 fixture AND on a synthetic corpus with one hot
   * bucket sized to span many hash blocks (the cross-block regime the
-  * fixture's small buckets barely reach). TedLab re-pins the same
-  * equality by checksum at x100/x1000.
+  * fixture's small buckets barely reach). The r16 TedLab runs re-pinned
+  * the same equality by checksum at x100/x1000 (tools/sweeps/tedlab_*).
   */
 class TedEquivalenceSpec extends AnyFunSuite with Matchers with SparkFixture {
 

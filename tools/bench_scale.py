@@ -58,12 +58,13 @@ def time_queries(con, oracle, names):
 def main():
     sf01, x10, oracle_path, bench01_path, bench10_path = sys.argv[1:6]
     out_path = sys.argv[6] if len(sys.argv) > 6 else "BENCH_SCALE.json"
-    # optional 8th arg: a TimeOne SPARK_GRAFT_JSON_OUT dump for the big
-    # size — per-query warm back-to-back min-of-N, i.e. the SAME
-    # convention as the DuckDB min-of-3 below. The Bench numbers are
-    # one-shot interleaved (each query runs cold-ish after 25 others),
-    # which DuckDB's hot loop never pays; reporting both labels the
-    # harness asymmetry instead of hiding it.
+    # optional 8th arg: the BENCH_FULL.json of a single-query
+    # SPARK_GRAFT_ONLY=<q> Bench run at the big size (its own warm pass,
+    # then min-of-2 back to back), i.e. the SAME convention as the DuckDB
+    # min-of-3 below. The subset Bench numbers are interleaved (each
+    # query runs cold-ish after 25 others), which DuckDB's hot loop never
+    # pays; reporting both labels the harness asymmetry instead of hiding
+    # it.
     steady10 = (json.load(open(sys.argv[7]))["queries"]
                 if len(sys.argv) > 7 else {})
     oracle = json.load(open(oracle_path))

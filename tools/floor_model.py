@@ -2,8 +2,8 @@
 """The sf0.1 floor model (r12 VERDICT #3): turn "the heavy subset is
 structurally floor-bound" from an argument into a checkable record.
 
-Joins the graft.tools.StageCount census (actually-submitted jobs/stages
-per query under the Bench session configs) against BENCH_ORACLE.json's
+Joins graft.Bench's per-query census (the `census` map of
+BENCH_FULL.json: jobs/stages of the kept timed pass) against BENCH_ORACLE.json's
 paired numbers, CALIBRATES the per-stage floor from the floor-subset
 queries themselves (median spark_sec/stages over queries under the heavy
 threshold — no hand-picked constant), then decomposes every heavy query:
@@ -19,8 +19,8 @@ shave list. Output: FLOOR_MODEL.json (calibration + per-heavy-query
 table + the non-floor-bound list), referenced next to the heavy-subset
 table this model explains.
 
-  sbt "runMain graft.tools.StageCount" | grep '^{' > /tmp/stagecount.jsonl
-  python3 tools/floor_model.py --census /tmp/stagecount.jsonl \
+  SPARK_GRAFT_FULL_OUT=/tmp/bench_full.json sbt "runMain graft.Bench"
+  python3 tools/floor_model.py --census /tmp/bench_full.json \
       --oracle BENCH_ORACLE.json --out FLOOR_MODEL.json
 """
 import argparse
@@ -37,14 +37,8 @@ def main():
     ap.add_argument("--floor-bound", type=float, default=0.6)
     args = ap.parse_args()
 
-    census = {}
     with open(args.census) as f:
-        for line in f:
-            line = line.strip()
-            if line.startswith("{"):
-                d = json.loads(line)
-                if "stages" in d:
-                    census[d["query"]] = d
+        census = json.load(f)["census"]
 
     oracle = json.load(open(args.oracle))
     threshold = oracle.get("heavy_subset", {}).get("threshold_spark_sec", 0.4)
@@ -88,9 +82,10 @@ def main():
                 "scheduling cost (amortized at scale; see the x1000 "
                 "board), below -> real work, the shave list"
                 % args.floor_bound,
-        "census_tool": "graft.tools.StageCount (actually-submitted "
-                       "jobs/stages of one steady evaluation, Bench "
-                       "session configs, AQE re-plans included)",
+        "census_tool": "graft.Bench census (jobs started/stages "
+                       "completed in the kept timed pass, attributed by "
+                       "a per-query local property, AQE re-plans "
+                       "included)",
         "oracle_pairing_stamp": oracle.get("pairing", {}).get("stamp"),
         "per_stage_floor_sec": round(per_stage, 4),
         "calibration": {

@@ -6,7 +6,8 @@ None-division crashes, stale-ratio retention, and labels that disagreed
 with the summed rows).
 
 Per-row semantics (update-or-insert, notes preserved):
-  - a Spark TimeOne number updates `spark_x1000` and REMOVES any
+  - a Spark `TIME` line (the committed single-query logs under
+    tools/sweeps/) updates `spark_x1000` and REMOVES any
     `spark_convention_override` (the row is now on the board convention);
   - a finished DuckDB number updates `duck_x1000`/`duck_reps` and clears
     any prior `duck_status`;
@@ -36,7 +37,8 @@ import re
 
 
 def parse_spark_logs(paths):
-    """TimeOne lines: 'TIME <name> <sec> s (min-of-N...'. Later files win."""
+    """Single-query log lines: 'TIME <name> <sec> s (min-of-N...'. Later
+    files win."""
     out = {}
     for path in paths:
         with open(path) as f:
