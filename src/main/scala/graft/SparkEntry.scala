@@ -373,25 +373,15 @@ object SparkEntry {
     }
   }
 
-  /** `j4_roleplay_join` body, size-adaptive, LAYOUT-AWARE (r13). Before
-    * choosing an exchange plan, the large regime probes the disk for a
-    * completed orderkey-bucketed layout of its two fact projections (the
-    * write-once layout [[layoutBucketedJoin]] persists). When one exists,
-    * the join routes THROUGH it — zero fact-scale exchanges, Sort-free
-    * SMJ off the trusted sorted layout, the measured 100 TB answer
-    * (x1000 r12b: 18.2 s vs DuckDB 12.3 s = 1.48×, where the best
-    * exchange-bound plan below pays a measured 20.1 s two-exchange floor
-    * before any join work — the r10-r12 verdicts' one standing weak
-    * item). The result contract is identical by construction: the
-    * bucketed body computes the same counts join, and
-    * `layout_bucketed_join`'s DuckDB oracle IS the j4 oracle. `layout`
-    * forces the routing for the parity spec (Some(true) builds the
-    * layout if missing; Some(false) pins the exchange plans; None =
-    * probe, never paying a layout write inside the default query).
+  /** `j4_roleplay_join` body, size-adaptive. The plan depends only on the
+    * input's stats: the write-once orderkey-bucketed layout of the two
+    * fact projections is its own query, [[layoutBucketedJoin]], with the
+    * same result contract (`layout_bucketed_join`'s DuckDB oracle IS the
+    * j4 oracle).
     *
-    * Without a layout, both exchange paths probe the two role-playing
-    * dims as broadcasts and meet lineitem⋈orders on orderkey; they
-    * differ in what the fact⋈fact exchanges CARRY:
+    * Both exchange paths probe the two role-playing dims as broadcasts
+    * and meet lineitem⋈orders on orderkey; they differ in what the
+    * fact⋈fact exchanges CARRY:
     *
     *  - small (orders-2col stats under `packedBytes`): the r6-r8 shape —
     *    2-col pre-projections through [[hashJoined]] (0.59 s vs the
@@ -430,24 +420,12 @@ object SparkEntry {
     *    both columns.
     */
   private[graft] def j4Roleplay(s: SparkSession, d: String,
-                                packedBytes: Long = j4PackedBytes,
-                                layout: Option[Boolean] = None): DataFrame = {
+                                packedBytes: Long = j4PackedBytes): DataFrame = {
     val nat = Tables.nation(s, d)
     val li2 = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
     val ord2 = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
     val supp2 = Tables.supplier(s, d).select(col("s_suppkey"), col("s_nationkey"))
     val cust2 = Tables.customer(s, d).select(col("c_custkey"), col("c_nationkey"))
-    val onDisk = probeBucketedLayout(d)
-    val useLayout = layout.getOrElse(
-      onDisk.isDefined && !operators.AdaptiveGate.isSmall(ord2, packedBytes))
-    if (useLayout)
-      // identical result contract (the bucketed body ends in the same
-      // counts⋈nation projection); bucket count comes from the on-disk
-      // sidecar so a pre-existing layout of ANY width registers cleanly —
-      // only the forced spec path (layout=Some(true), nothing on disk)
-      // falls back to the session default and pays the write
-      return layoutBucketedJoinWith(s, d,
-        onDisk.getOrElse(sys.env.getOrElse("SPARK_GRAFT_BUCKETS", "32").toInt))
     val counts =
       if (operators.AdaptiveGate.isSmall(ord2, packedBytes))
         hashJoined(li2, ord2, "l_orderkey", "o_orderkey")
@@ -547,15 +525,16 @@ object SparkEntry {
     * (regenerated testdata changes the mtimes → new slug → fresh write);
     * stale dirs are simply abandoned. Since r15 the SAME fingerprint is
     * also recorded in each layout's sidecar (`source` field) and
-    * re-checked at every probe/trust point, so even a layout dir copied
-    * to a currently-valid path is rejected instead of serving old rows.
+    * re-checked at every trust point, so even a layout dir copied to a
+    * currently-valid path is rejected instead of serving old rows.
     */
   private[graft] def layoutSlug(d: String, tables: String*): String =
     operators.Bucketing.sourceFingerprint(d, tables: _*)
 
   /** `layout_bucketed_join` body — the write-once bucketed layout as a
     * first-class operator (VERDICT r11 #4: promoted from the J4Lab test
-    * harness to the product surface). Both j4 fact projections are
+    * harness to the product surface), and the one query that writes or
+    * reads a persisted layout. Both j4 fact projections are
     * persisted bucketed+sorted by orderkey via
     * [[operators.Bucketing.ensureBucketed]] (re-registered from disk when
     * a previous JVM already paid the write — bucket count derived from
@@ -580,147 +559,30 @@ object SparkEntry {
   private val bucketedJoinCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
-  private[graft] def layoutBucketedJoin(s: SparkSession, d: String): DataFrame =
-    layoutBucketedJoinWith(s, d,
-      sys.env.getOrElse("SPARK_GRAFT_BUCKETS", "32").toInt)
-
-  private[graft] def layoutBucketedJoinWith(s: SparkSession, d: String,
-                                            buckets: Int): DataFrame = {
-    val slug0 = layoutSlug(d, "lineitem.parquet", "orders.parquet")
-    bucketedJoinCache.keySet.removeIf { case (ss, _) => ss.sparkContext.isStopped }
-    bucketedJoinCache.computeIfAbsent((s, s"$slug0/$buckets"),
-      _ => layoutBucketedJoinUncached(s, d, slug0, buckets))
-  }
-
-  /** `q18_large_orders` body, LAYOUT-AWARE (r13, Q18Lab order-controlled
-    * adopt): when BOTH orderkey-bucketed projections exist on disk
-    * (lineitem `li_oq` and orders `ord_oq`, equal width), the whole query
-    * is exchange-FREE — the per-order sum aggregates per bucket, and the
-    * HAVING-survivor join meets the bucketed orders projection in a
-    * Sort-free SMJ on the same distribution. The lineitem layout alone
-    * measured 11.18/12.52 s vs 39.87/33.73 s for the gated exchange plan
-    * (x1000, BOTH orders) but still paid a ~150M-row orders exchange with
-    * 12-31 s/run spread under host I/O noise (the survivor set — 2.285M
-    * orders at x1000 — is too big to broadcast and invisible to AQE with
-    * no shuffle boundary on the bucketed side); the orders layout removes
-    * that last exchange. Without layouts, the r8 gated plan:
-    * [[preShuffled]] raw 2-col repartition past [[rawAggBytes]], direct
-    * groupBy under it. `layout` forces the routing for the parity spec
-    * (Some(true) builds missing layouts — the write-once cost the
-    * default probe never pays: it requires both on disk).
-    */
-  private[graft] def q18LargeOrders(s: SparkSession, d: String,
-                                    layout: Option[Boolean] = None): DataFrame = {
-    // the default probe requires BOTH equal-width layouts on disk — a
-    // probe must never pay a write; only the forced spec path
-    // (layout = Some(true)) builds missing layouts
-    val onDisk = for {
-      li <- probeLiOqLayout(d)
-      ord <- probeOrdOqLayout(d)
-      if li == ord
-    } yield li
-    val useLayout = layout.getOrElse(onDisk.isDefined)
-    if (useLayout) {
-      // per-projection width: on the FORCED path (layout = Some(true),
-      // "build missing layouts") each existing projection keeps the width
-      // its own sidecar declares — ensureBucketed fail-fasts on a width
-      // mismatch, so adopting the on-disk count is the only way a forced
-      // run can reuse a projection written under a different
-      // SPARK_GRAFT_BUCKETS (r13 ADVICE); only a projection that truly
-      // needs WRITING takes the env default. Unequal widths still compute
-      // correctly (the SMJ re-exchanges one side); rewriting both at one
-      // width is what restores the exchange-free plan. The default probe
-      // route requires equal widths (onDisk) and never gets here unequal.
-      val envB = sys.env.getOrElse("SPARK_GRAFT_BUCKETS", "32").toInt
-      val liBuckets = onDisk.orElse(probeLiOqLayout(d)).getOrElse(envB)
-      val ordBuckets = onDisk.orElse(probeOrdOqLayout(d)).getOrElse(envB)
-      val liSlug = layoutSlug(d, "lineitem.parquet")
-      val li = operators.Bucketing.ensureBucketed(
-        s, s"graft_li_oq_$liSlug", s"/tmp/graft-bucketed/$liSlug/li_oq",
-        "l_orderkey", liBuckets, source = Some(liSlug))(
-        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_quantity")))
-      val big = li.groupBy(col("l_orderkey").as("bk"))
-        .agg(sum(col("l_quantity")).as("total_qty"))
-        .filter(col("total_qty") > 250)
-      // the survivor set is too big to broadcast at scale (x1000: 2.285M
-      // orders) and too opaque for AQE to measure (no shuffle boundary on
-      // the bucketed side), so the join back to orders would exchange the
-      // 150M-row orders scan — ~20 s of the r13 PlanPeek runs, the last
-      // exchange in the query. An orderkey-bucketed ORDERS projection of
-      // the same width removes it: both SMJ sides consume the bucket
-      // distribution (Sort-free under the trusted sorted layout), zero
-      // exchanges end-to-end.
-      val ordSlug = layoutSlug(d, "orders.parquet")
-      val ord = operators.Bucketing.ensureBucketed(
-        s, s"graft_ord_oq_$ordSlug",
-        s"/tmp/graft-bucketed/$ordSlug/ord_oq",
-        "o_orderkey", ordBuckets, source = Some(ordSlug))(
-        Tables.orders(s, d).select(col("o_orderkey"), col("o_orderdate"),
-          col("o_totalprice")))
-      ord.join(big, col("o_orderkey") === col("bk"))
-        .select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"),
-          col("total_qty"))
-    } else {
-      val big = preShuffled(Tables.lineitem(s, d)
-          .select(col("l_orderkey"), col("l_quantity")), "l_orderkey")
-        .groupBy(col("l_orderkey").as("bk"))
-        .agg(sum(col("l_quantity")).as("total_qty"))
-        .filter(col("total_qty") > 250)
-      Tables.orders(s, d).join(big, col("o_orderkey") === col("bk"))
-        .select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"),
-          col("total_qty"))
-    }
-  }
-
-  /** Bucket count of a COMPLETE on-disk q18 lineitem projection layout
-    * (`li_oq`: l_orderkey, l_quantity — the j4 `li_ok` layout does NOT
-    * carry l_quantity, so q18 keeps its own) — or None. Probe only.
-    */
-  private[graft] def probeLiOqLayout(d: String): Option[Int] = {
-    import java.nio.file.{Files, Paths}
-    val slug = layoutSlug(d, "lineitem.parquet")
-    val root = s"/tmp/graft-bucketed/$slug/li_oq"
-    if (Files.exists(Paths.get(root, "_SUCCESS")))
-      operators.Bucketing.readMetaIfSource(root, slug)
-        .filter(_.key.equalsIgnoreCase("l_orderkey")).map(_.buckets)
-    else None
-  }
-
-  /** Bucket count of a COMPLETE on-disk q18 orders projection layout
-    * (`ord_oq`: o_orderkey, o_orderdate, o_totalprice — the j4 `ord_ok`
-    * layout carries o_custkey instead) — or None. Probe only.
-    */
-  private[graft] def probeOrdOqLayout(d: String): Option[Int] = {
-    import java.nio.file.{Files, Paths}
-    val slug = layoutSlug(d, "orders.parquet")
-    val root = s"/tmp/graft-bucketed/$slug/ord_oq"
-    if (Files.exists(Paths.get(root, "_SUCCESS")))
-      operators.Bucketing.readMetaIfSource(root, slug)
-        .filter(_.key.equalsIgnoreCase("o_orderkey")).map(_.buckets)
-    else None
-  }
-
-  /** Bucket count of a COMPLETE on-disk bucketed layout for the two j4
-    * fact projections of `d` (both `_SUCCESS`-stamped, sidecar-described,
-    * orderkey-keyed, equal width) — or None. A probe only: never writes,
-    * never registers; [[j4Roleplay]] uses it to decide whether the
-    * write-once layout path is free to take.
-    */
-  private[graft] def probeBucketedLayout(d: String): Option[Int] = {
-    import java.nio.file.{Files, Paths}
+  private[graft] def layoutBucketedJoin(s: SparkSession, d: String): DataFrame = {
+    val buckets = sys.env.getOrElse("SPARK_GRAFT_BUCKETS", "32").toInt
     val slug = layoutSlug(d, "lineitem.parquet", "orders.parquet")
-    val root = s"/tmp/graft-bucketed/$slug"
-    def meta(sub: String): Option[operators.Bucketing.BucketMeta] =
-      if (Files.exists(Paths.get(s"$root/$sub", "_SUCCESS")))
-        operators.Bucketing.readMetaIfSource(s"$root/$sub", slug)
-      else None
-    for {
-      li <- meta("li_ok")
-      ord <- meta("ord_ok")
-      if li.buckets == ord.buckets &&
-        li.key.equalsIgnoreCase("l_orderkey") &&
-        ord.key.equalsIgnoreCase("o_orderkey")
-    } yield li.buckets
+    bucketedJoinCache.keySet.removeIf { case (ss, _) => ss.sparkContext.isStopped }
+    bucketedJoinCache.computeIfAbsent((s, s"$slug/$buckets"),
+      _ => layoutBucketedJoinUncached(s, d, slug, buckets))
+  }
+
+  /** `q18_large_orders` body: the r8 gated plan — [[preShuffled]] raw
+    * 2-col repartition past [[rawAggBytes]], direct groupBy under it —
+    * then the HAVING survivors join back to orders. The r13 exchange-free
+    * variant over orderkey-bucketed projections (x1000: 6.4 s vs 33.7 s)
+    * needed layouts prebuilt outside the query, so it is not a plan of
+    * this query (GATES.md "On-disk state").
+    */
+  private[graft] def q18LargeOrders(s: SparkSession, d: String): DataFrame = {
+    val big = preShuffled(Tables.lineitem(s, d)
+        .select(col("l_orderkey"), col("l_quantity")), "l_orderkey")
+      .groupBy(col("l_orderkey").as("bk"))
+      .agg(sum(col("l_quantity")).as("total_qty"))
+      .filter(col("total_qty") > 250)
+    Tables.orders(s, d).join(big, col("o_orderkey") === col("bk"))
+      .select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"),
+        col("total_qty"))
   }
 
   private def layoutBucketedJoinUncached(s: SparkSession, d: String,
@@ -752,64 +614,34 @@ object SparkEntry {
         col("sn.n_name").as("supp_nation"), col("n"))
   }
 
-  /** `chess_scale_winrate` body, LAYOUT-AWARE (r14) — the reference's
-    * win-rate dashboard shape (monthly trend × time_class × my_color,
-    * `README.md:29-33`) over an orders-derived chess-gold-shaped fact.
-    * The x1000 row read 2.85× DuckDB and the deficit is structural and
-    * HONEST at any scale: the per-row CASE/pmod kernels read 4 raw orders
-    * columns, `o_orderpriority` has 5 distinct values on a real corpus
-    * too, and DuckDB evaluates the CASE once per parquet-dictionary value
-    * where Spark decodes per row. The engine's answer is the reference's
-    * own architecture: materialize the silver→gold projection ONCE
-    * (`res_idx` byte, truncated month, color flag, time-class byte —
-    * ~10 bytes/row, dictionary/RLE-friendly) and let the dashboard
-    * aggregate the gold layout. Probe rules as in GATES.md: the default
-    * probes `gold_wr` under the orders slug and never writes; only the
-    * forced spec path (`layout = Some(true)`) builds it. Either path maps
-    * `res_idx` → result class through a 15-entry literal array derived
-    * from [[graft.chess.Dims.resultSeed]] (sorted-code order — exactly
-    * the oracle's row_number index), so the per-row work is integer
+  /** `chess_scale_winrate` body — the reference's win-rate dashboard
+    * shape (monthly trend × time_class × my_color, `README.md:29-33`)
+    * over an orders-derived chess-gold-shaped fact. The per-row CASE/pmod
+    * kernels read 4 raw orders columns into the silver→gold projection
+    * (`res_idx` byte, truncated month, color flag, time-class byte), which
+    * the dashboard aggregates in the same plan. `res_idx` maps to a result
+    * class through a 15-entry literal array derived from
+    * [[graft.chess.Dims.resultSeed]] (sorted-code order — exactly the
+    * oracle's row_number index), so the per-row work is integer
     * element_at + byte compares; strings appear only on the ≤36
-    * post-aggregate rows.
+    * post-aggregate rows. The r14 write-once `gold_wr` materialization of
+    * that projection (x1000: 1.2 s vs 3.0 s) was prebuilt outside the
+    * query and is not a plan of this query (GATES.md "On-disk state").
     */
-  private[graft] def chessScaleWinrate(s: SparkSession, d: String,
-                                       layout: Option[Boolean] = None): DataFrame = {
-    import java.nio.file.{Files, Paths}
+  private[graft] def chessScaleWinrate(s: SparkSession, d: String): DataFrame = {
     val sortedSeed = graft.chess.Dims.resultSeed
       .map { case (c, r, _) => (c, r) }.sortBy(_._1)
     // result class codes in sorted-code (= oracle row_number) order
     val classCodes = sortedSeed.map(_._2 match {
       case "Win" => 0; case "Loss" => 1; case _ => 2
     })
-    val slug = layoutSlug(d, "orders.parquet")
-    val root = s"/tmp/graft-bucketed/$slug/gold_wr"
-    // gold_wr is a plain (non-bucketed) projection, so it has no
-    // Bucketing sidecar; the same source-staleness rule applies through a
-    // one-line fingerprint file. Absent fp file = pre-r15 layout (its
-    // path slug is the guard it was built under); a PRESENT fp that
-    // disagrees with the current fixture fingerprint means a copied/
-    // stale dir → treat as not-on-disk and aggregate the raw projection.
-    val fpFile = Paths.get(root, "_graft_source_fp")
-    def fpOk = !Files.exists(fpFile) ||
-      new String(Files.readAllBytes(fpFile), "UTF-8").trim == slug
-    def onDisk = Files.exists(Paths.get(root, "_SUCCESS")) && fpOk
-    val useLayout = layout.getOrElse(onDisk)
-    def goldProjection: DataFrame = Tables.orders(s, d).select(
+    val fact = Tables.orders(s, d).select(
       pmod(col("o_orderkey"), lit(15)).cast("int").as("res_idx"),
       date_trunc("month", col("o_orderdate")).cast("date").as("month"),
       (pmod(col("o_custkey"), lit(2)) === 0).as("is_white"),
       when(col("o_orderpriority") < "3", 0)
         .when(col("o_orderpriority") < "5", 1)
         .otherwise(2).cast("byte").as("tc"))
-    val fact =
-      if (useLayout) {
-        if (!onDisk) { // only the forced path gets here (the probe saw _SUCCESS)
-          goldProjection.sortWithinPartitions(col("tc"), col("is_white"), col("month"))
-            .write.mode("overwrite").parquet(root)
-          Files.write(fpFile, slug.getBytes("UTF-8"))
-        }
-        s.read.parquet(root)
-      } else goldProjection
     val cls = element_at(typedlit(classCodes), col("res_idx") + 1)
     // res_idx is null only for a null orderkey; the oracle's inner dim
     // join drops such rows, so the filter keeps the two aligned
@@ -829,23 +661,6 @@ object SparkEntry {
         (col("wins").cast("double") / col("games")).as("win_rate"))
   }
 
-  /** Bucket count of a COMPLETE on-disk events tape layout (`ev_uts`:
-    * event_id, user_id, ts, value — bucketed by user_id, SORTED BY
-    * (user_id, ts)) — or None. Probe only: never writes, never throws.
-    */
-  private[graft] def probeEvUtsLayout(d: String): Option[Int] = {
-    import java.nio.file.{Files, Paths}
-    val slug = layoutSlug(d, "events.parquet")
-    val root = s"/tmp/graft-bucketed/$slug/ev_uts"
-    if (Files.exists(Paths.get(root, "_SUCCESS")))
-      operators.Bucketing.readMetaIfSource(root, slug)
-        .filter(m => m.key.equalsIgnoreCase("user_id") &&
-          m.sortCols.map(_.toLowerCase(java.util.Locale.ROOT)) ==
-            Seq("user_id", "ts"))
-        .map(_.buckets)
-    else None
-  }
-
   /** `j5_asof_join` body (r14, the first j5 scale adjudication). Probes
     * and references live in ONE stream, so the query takes the TAPE
     * spelling ([[operators.AsofJoin.leftAsofTape]]): one scan, one
@@ -853,56 +668,17 @@ object SparkEntry {
     * at x1000 (100M events, same-session DuckDB native ASOF 4.8 s):
     * composed leftAsof(probes, refs-preagg) 16.8 s; two-window tape
     * 26-50 s (rejected — WindowExec buffering); single-window
-    * struct-max tape 12.4 s. The remaining exchange+sort is the classic
-    * write-once trade: with the `ev_uts` bucketed tape layout (user_id
-    * buckets, SORTED BY (user_id, ts) — the layout every time-series
-    * store keeps) the plan is exchange-free AND sort-free, a pure
-    * streaming window over the bucketed scan. Probe rules as in GATES.md:
-    * the default never writes; `layout = Some(true)` builds for specs and
-    * the scale harness (BuildLayouts ev_uts).
+    * struct-max tape 12.4 s. The r14 `ev_uts` bucketed tape layout made
+    * the plan exchange- and sort-free (3.5 s) but was prebuilt outside the
+    * query, so it is not a plan of this query (GATES.md "On-disk state").
     */
-  private[graft] def j5AsofJoin(s: SparkSession, d: String,
-                                layout: Option[Boolean] = None): DataFrame = {
-    val onDisk = probeEvUtsLayout(d)
-    val useLayout = layout.getOrElse(onDisk.isDefined)
-    val slug = layoutSlug(d, "events.parquet")
-    def projected = Tables.events(s, d)
-      .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-    val tape =
-      if (useLayout)
-        operators.Bucketing.ensureBucketed(
-          s, s"graft_ev_uts_$slug", s"/tmp/graft-bucketed/$slug/ev_uts",
-          "user_id",
-          onDisk.getOrElse(sys.env.getOrElse("SPARK_GRAFT_BUCKETS", "32").toInt),
-          Seq("user_id", "ts"), Some(slug))(projected)
-      else projected
-    operators.AsofJoin.leftAsofTape(tape, "user_id", "ts",
-        col("event_id") % 10 === 0,
-        Seq("ref_value" -> col("value"), "ref_event" -> col("event_id")),
-        preClustered = useLayout)
+  private[graft] def j5AsofJoin(s: SparkSession, d: String): DataFrame =
+    operators.AsofJoin.leftAsofTape(Tables.events(s, d)
+        .select(col("event_id"), col("user_id"), col("ts"), col("value")),
+        "user_id", "ts", col("event_id") % 10 === 0,
+        Seq("ref_value" -> col("value"), "ref_event" -> col("event_id")))
       .select(col("event_id"), col("user_id"), col("ts"),
         col("ref_value"), col("ref_event"))
-  }
-
-  /** Bucket count of a COMPLETE on-disk two-table as-of tape layout
-    * (`ev_tape2`: the [[operators.AsofJoin.leftAsofLayout]] tape of the
-    * j5b probes/refs pair — bucketed by user_id, SORTED BY (user_id,
-    * ts)) — or None. Probe only: never writes, never throws; a sidecar
-    * whose `source` fingerprint names another fixture generation is
-    * rejected (r15 staleness rule).
-    */
-  private[graft] def probeEvTape2Layout(d: String): Option[Int] = {
-    import java.nio.file.{Files, Paths}
-    val slug = layoutSlug(d, "events.parquet")
-    val root = s"/tmp/graft-bucketed/$slug/ev_tape2"
-    if (Files.exists(Paths.get(root, "_SUCCESS")))
-      operators.Bucketing.readMetaIfSource(root, slug)
-        .filter(m => m.key.equalsIgnoreCase("user_id") &&
-          m.sortCols.map(_.toLowerCase(java.util.Locale.ROOT)) ==
-            Seq("user_id", "ts"))
-        .map(_.buckets)
-    else None
-  }
 
   /** `j5b_asof_two_table` body (r15; closes VERDICT r14 #2). The
     * TWO-TABLE as-of API over the j5 workload: probes and pre-aggregated
@@ -913,17 +689,12 @@ object SparkEntry {
     * native ASOF 4.8 s; the r15 `leftAsof` resolves through the tape
     * plan (one exchange, one single-key sort, one window — raw x1000
     * 10.9/13.2 s order-controlled, a wash with union-carry's 9.7/11.0 s
-    * that day), and the CLOSER is the write-once `ev_tape2` layout
-    * ([[operators.AsofJoin.leftAsofLayout]]; probes+refs persisted as
-    * one bucketed (user_id)-hashed, (user_id, ts)-sorted tape): the
-    * query is exchange-free AND sort-free — measured 1.944 s min-of-2
-    * vs same-day DuckDB 4.295 s = 0.45× (layout build 34.5 s one-time,
-    * tools/sweeps/duck_j5b_r15.json). Probe rules as in GATES.md:
-    * the default never writes; `layout = Some(true)` builds for specs
-    * and BuildLayouts.
+    * that day). The r15 write-once `ev_tape2` tape layout (1.9 s vs
+    * DuckDB 4.3 s, tools/sweeps/duck_j5b_r15.json) was prebuilt outside
+    * the query, so it is not a plan of this query (GATES.md "On-disk
+    * state").
     */
-  private[graft] def j5bAsofTwoTable(s: SparkSession, d: String,
-                                     layout: Option[Boolean] = None): DataFrame = {
+  private[graft] def j5bAsofTwoTable(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
     val probes = ev.filter(col("event_id") % 10 =!= 0)
       .select(col("event_id"), col("user_id"), col("ts"))
@@ -931,18 +702,8 @@ object SparkEntry {
       .groupBy(col("user_id"), col("ts"))
       .agg(max(col("value")).as("ref_value"),
         max(col("event_id")).as("ref_event"))
-    val onDisk = probeEvTape2Layout(d)
-    val useLayout = layout.getOrElse(onDisk.isDefined)
-    if (useLayout) {
-      val slug = layoutSlug(d, "events.parquet")
-      operators.AsofJoin.leftAsofLayout(probes, refs, "user_id", "ts",
-        Seq("ref_value", "ref_event"), s"graft_ev_tape2_$slug",
-        s"/tmp/graft-bucketed/$slug/ev_tape2",
-        onDisk.getOrElse(sys.env.getOrElse("SPARK_GRAFT_BUCKETS", "32").toInt),
-        Some(slug))
-    } else
-      operators.AsofJoin.leftAsof(probes, refs, "user_id", "ts",
-        Seq("ref_value", "ref_event"))
+    operators.AsofJoin.leftAsof(probes, refs, "user_id", "ts",
+      Seq("ref_value", "ref_event"))
   }
 
   /** `a6_sketch_agg` body, size-adaptive (audit inline). `smallBytes`
@@ -1452,11 +1213,9 @@ object SparkEntry {
     // AUDIT (r10, x1000): past the same gate the exchanges now carry
     // PACKED single-long rows (orderkey<<5 | nationkey, dims probed
     // before the wire) — 29.2 s vs 48.1 s for the r8 plan, against a
-    // measured 20.1 s two-exchange floor. AUDIT (r13): when a completed
-    // orderkey-bucketed layout of the fact projections exists on disk,
-    // the large regime routes through it instead — zero fact-scale
-    // exchanges (x1000: 18.2 s vs the packed plan's 29.2 s and the
-    // 20.1 s exchange floor it can never beat). See [[j4Roleplay]].
+    // measured 20.1 s two-exchange floor. The zero-exchange bucketed
+    // spelling (x1000: 18.2 s over a prebuilt layout) is its own query,
+    // layout_bucketed_join. See [[j4Roleplay]].
     "j4_roleplay_join" -> ((s, d) => j4Roleplay(s, d)),
 
     // W1/P6: latest-record dedup (the reference's merge semantics).
@@ -1604,14 +1363,11 @@ object SparkEntry {
     // tiny, so AQE broadcast-joins it into the orders scan. Gate
     // validated at x100 (2.2 GB): 3.49 s gated vs 5.01 s direct-groupBy
     // spelling, min-of-3 same session — the x30 trend holds.
-    // AUDIT (r13, x1000, Q18Lab order-controlled ADOPT): an orderkey-
-    // bucketed lineitem(l_orderkey, l_quantity) layout removes the one
-    // fact-scale exchange — the per-order sum aggregates per bucket with
-    // ZERO exchanges before the broadcast join. Measured BOTH orders at
-    // x1000 (min-of-2 each): bucketed 11.18/12.52 s vs the gated
-    // exchange plan's 39.87/33.73 s — a >2.9x win from the disadvantaged
-    // position too, so the probe routes through the layout when one
-    // exists on disk (tools/sweeps/q18_ab_x1000_r13.log). See
+    // AUDIT (r13, x1000, Q18Lab order-controlled): over a PREBUILT
+    // orderkey-bucketed lineitem(l_orderkey, l_quantity) layout the
+    // per-order sum ran exchange-free, 11.18/12.52 s vs the gated plan's
+    // 39.87/33.73 s (tools/sweeps/q18_ab_x1000_r13.log); the query plans
+    // from its input only, so it keeps the gated plan. See
     // [[q18LargeOrders]].
     "q18_large_orders" -> ((s, d) => q18LargeOrders(s, d)),
 
@@ -2042,12 +1798,12 @@ object SparkEntry {
     // J5 (beyond reference): as-of point-in-time join — each event gets the
     // most recent reference snapshot at or before its timestamp
     // probes and references live in ONE stream, so the entry takes the
-    // TAPE spelling, layout-aware — see j5AsofJoin
+    // TAPE spelling — see j5AsofJoin
     "j5_asof_join" -> ((s, d) => j5AsofJoin(s, d)),
 
     // J5b (r15): the TWO-TABLE as-of API surface — same workload as j5,
     // probes and refs as separate tables through AsofJoin.leftAsof's tape
-    // plan (layout-aware: ev_tape2) — see j5bAsofTwoTable
+    // plan — see j5bAsofTwoTable
     "j5b_asof_two_table" -> ((s, d) => j5bAsofTwoTable(s, d)),
 
     // A5 (beyond reference): hierarchical ROLLUP with grouping level marker.
@@ -2094,7 +1850,7 @@ object SparkEntry {
     // engine and oracle both derive the result mapping from the ONE
     // shared constant (Dims.resultSeed, r13 ADVICE): the engine as a
     // sorted-code literal array, the oracle as a generated VALUES +
-    // row_number — see chessScaleWinrate for the layout routing
+    // row_number — see chessScaleWinrate
     "chess_scale_winrate" -> ((s, d) => chessScaleWinrate(s, d)),
 
     // deterministic hash sample: md5-prefix filter is engine-portable
@@ -3273,7 +3029,7 @@ object SparkEntry {
 
     // identical semantics to j5 by construction (refs are pre-aggregated
     // per (user_id, ts), so the two-table tie-break has nothing to break);
-    // what differs is the ENGINE path under test: leftAsof/leftAsofLayout
+    // what differs is the ENGINE path under test: leftAsof vs leftAsofTape
     "j5b_asof_two_table" ->
       """WITH refs AS (
         | SELECT user_id, ts, max(value) AS ref_value, max(event_id) AS ref_event

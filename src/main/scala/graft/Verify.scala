@@ -22,14 +22,21 @@ object Verify {
         s"GRAFT_VERIFY_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
       require(names.nonEmpty, "GRAFT_VERIFY_ONLY is set but names no queries")
     }
-    SparkEntry.queries
+    val selected = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    // a failed query is logged and recorded, and the dump moves on; the
+    // exit status stays 0 either way, so failures.json is the artifact
+    // that says which queries have no dump and why
+    val failures = selected.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        val firstLine = Option(e.getMessage)
+          .flatMap(_.linesIterator.nextOption()).getOrElse("")
+        Some(name -> s"${e.getClass.getName}: $firstLine")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -47,6 +54,10 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/failures.json"), failures
+      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+    System.err.println(s"[verify] dumped ${selected.size - failures.size}/" +
+      s"${selected.size}, failed ${failures.size}")
     spark.stop()
   }
 }

@@ -35,21 +35,12 @@ object AsofJoin {
     * narrows the 3-key sort `(ts, side, tb)` to `ts`; RAW x1000 cost is a
     * wash (order-controlled both ways, j5b shape, 100M events: tape
     * 13.2/10.9 s vs union-carry 9.7/11.0 s — within same-day scatter,
-    * and both ≈2.3–3.1× DuckDB's native ASOF 4.3 s). The rewrite is kept
-    * because it is what makes the WRITE-ONCE path expressible: the same
-    * tape persisted bucketed+sorted ([[leftAsofLayout]]) answers
-    * exchange-free and sort-free — measured 1.94 s vs DuckDB 4.30 s
-    * (0.45×) at x1000 on the `ev_tape2` layout — which no spelling of
-    * the padded union can reach. `AsofJoinSpec` pins row-identity
+    * and both ≈2.3–3.1× DuckDB's native ASOF 4.3 s). The tape also has a
+    * write-once spelling the padded union lacks: persisted
+    * bucketed+sorted it answered exchange-free and sort-free (r15, 1.94 s
+    * vs DuckDB 4.30 s at x1000). `AsofJoinSpec` pins row-identity
     * against [[leftAsofUnionCarry]] on both fixture and adversarial
     * tied/null inputs.
-    *
-    * `preClustered = true` declares the inputs already hash-distributed
-    * on the key (co-bucketed layouts): the explicit repartition is
-    * skipped and the planner inserts an exchange only if the scan really
-    * doesn't satisfy the window's distribution. For the write-once
-    * answer at scale use [[leftAsofLayout]], which persists the tape
-    * itself bucketed+sorted and answers exchange-free AND sort-free.
     *
     * @param left      probe side; must have `key` and `ts` columns
     * @param right     reference side; must have `key` and `ts` columns
@@ -58,9 +49,9 @@ object AsofJoin {
     * @param valueCols right-side columns to carry
     */
   def leftAsof(left: DataFrame, right: DataFrame, key: String, ts: String,
-               valueCols: Seq[String], preClustered: Boolean = false): DataFrame = {
+               valueCols: Seq[String]): DataFrame = {
     val tape = twoTableTape(left, right, key, ts, valueCols)
-    fromTape(tape, left.columns, key, ts, valueCols, preClustered)
+    fromTape(tape, left.columns, key, ts, valueCols)
   }
 
   /** The common tape of a two-table as-of join: left rows carry their
@@ -83,35 +74,11 @@ object AsofJoin {
     * and project back to `leftCols ++ valueCols`.
     */
   private def fromTape(tape: DataFrame, leftCols: Seq[String], key: String,
-                       ts: String, valueCols: Seq[String],
-                       preClustered: Boolean): DataFrame = {
-    leftAsofTape(tape, key, ts, col("__isref"),
-        Seq("__pick" -> col("__rv")), preClustered)
+                       ts: String, valueCols: Seq[String]): DataFrame = {
+    leftAsofTape(tape, key, ts, col("__isref"), Seq("__pick" -> col("__rv")))
       .select((leftCols.map(c =>
         if (c == key || c == ts) col(c) else col(s"__lrow.$c").as(c)) ++
         valueCols.map(c => col(s"__pick.$c").as(c))): _*)
-  }
-
-  /** Two-table as-of join over a WRITE-ONCE tape layout: persists the
-    * combined tape bucketed by `key` and SORTED BY `(key, ts)` at
-    * `location` (first call pays the one-time shuffle; every later call
-    * — any JVM — re-registers from disk), then answers with a pure
-    * streaming window over the bucketed scan: zero exchanges, zero
-    * sorts. This is the 100 TB shape for a standing trades⋈quotes
-    * enrichment: the tape layout is the time-series store every market
-    * data system keeps anyway, and all the as-of queries over it ride
-    * the same layout. `source` is the fixture fingerprint recorded in
-    * the sidecar ([[Bucketing.BucketMeta.source]]) so a stale layout is
-    * rejected rather than served.
-    */
-  def leftAsofLayout(left: DataFrame, right: DataFrame, key: String,
-                     ts: String, valueCols: Seq[String], table: String,
-                     location: String, buckets: Int,
-                     source: Option[String] = None): DataFrame = {
-    val persisted = Bucketing.ensureBucketed(left.sparkSession, table,
-      location, key, buckets, Seq(key, ts), source)(
-      twoTableTape(left, right, key, ts, valueCols))
-    fromTape(persisted, left.columns, key, ts, valueCols, preClustered = true)
   }
 
   /** The pre-r15 union-and-carry spelling, kept as the semantic reference
@@ -120,7 +87,7 @@ object AsofJoin {
     * Not a public entry point. Raw cost matches the tape plan within
     * same-day scatter at x1000 (see [[leftAsof]]); what it CANNOT do is
     * ride a persisted tape layout — the padded-union shape has no
-    * write-once spelling, which is why the tape plan ships.
+    * write-once spelling.
     */
   private[graft] def leftAsofUnionCarry(left: DataFrame, right: DataFrame,
                                         key: String, ts: String,
@@ -200,17 +167,10 @@ object AsofJoin {
     * them, and a null timestamp has no place in the as-of order.
     */
   def leftAsofTape(tape: DataFrame, key: String, ts: String, isRef: Column,
-                   refVals: Seq[(String, Column)],
-                   preClustered: Boolean = false): DataFrame = {
+                   refVals: Seq[(String, Column)]): DataFrame = {
     require(refVals.nonEmpty, "leftAsofTape: need at least one carried value")
     val outCols = tape.columns
-    // preClustered: the tape is already hash-distributed on the key (a
-    // bucketed layout) — skip the explicit repartition and let the window
-    // consume the scan's own clustering; with a key-led sorted bucket
-    // layout (Bucketing sortCols + the session's trusted-bucketed-order
-    // config) the sort drops too, leaving a pure streaming window pass
-    val keyed0 = tape.withColumn("__isref", isRef)
-    val keyed = if (preClustered) keyed0 else keyed0.repartition(col(key))
+    val keyed = tape.withColumn("__isref", isRef).repartition(col(key))
     // RANGE frame: peers (rows at the probe's own ts) are in-frame, so a
     // same-instant reference is visible whatever the tie order
     val w = Window.partitionBy(col(key)).orderBy(col(ts))

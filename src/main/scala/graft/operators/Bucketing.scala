@@ -54,14 +54,13 @@ object Bucketing {
     * mtimes). This is the sidecar-level staleness defense: the layout
     * PATHS in this engine already embed the same fingerprint (a
     * regenerated fixture changes the slug, so the stale dir is simply
-    * never probed again), but a layout dir that was copied, renamed, or
+    * never read again), but a layout dir that was copied, renamed, or
     * hand-built at the "right" path would still be trusted on path
     * evidence alone. With `source` recorded, every trust point
     * re-derives the fingerprint from the CURRENT fixture and rejects a
-    * mismatch: probes fall back to the exchange plan
-    * ([[readMetaIfSource]]), [[registerExternal]] fails fast. Pre-r15
-    * sidecars carry no source and are accepted (the path slug is their
-    * only — and so far sufficient — guard).
+    * mismatch: [[registerExternal]] fails fast. Pre-r15 sidecars carry
+    * no source and are accepted (the path slug is their only — and so
+    * far sufficient — guard).
     */
   final case class BucketMeta(buckets: Int, key: String,
                               sort: Seq[String] = Nil,
@@ -74,7 +73,7 @@ object Bucketing {
     * slug. Cheap (pure metadata walk, no reads), and any regeneration of
     * the data changes it (rewritten files get new mtimes even when sizes
     * collide). Used both as the layout PATH component (a stale dir is
-    * abandoned, never probed) and as the sidecar `source` field (a dir
+    * abandoned, never read) and as the sidecar `source` field (a dir
     * that somehow reappears at a current path is still rejected).
     */
   def sourceFingerprint(dir: String, tables: String*): String = {
@@ -169,27 +168,6 @@ object Bucketing {
     }
   }
 
-  /** [[readMeta]] for PROBE call sites (the never-write, never-throw
-    * layout probes in SparkEntry): a corrupt/truncated/unreadable sidecar
-    * degrades to None — the probe routes to the exchange plan instead of
-    * failing the shipped query (r13 ADVICE). [[registerExternal]] keeps
-    * the fail-fast [[readMeta]]: when a caller is about to TRUST a
-    * layout, an unparseable sidecar must be an error, not a guess.
-    */
-  def readMetaOpt(location: String): Option[BucketMeta] =
-    scala.util.Try(readMeta(location)).toOption.flatten
-
-  /** [[readMetaOpt]] PLUS the source-staleness check, for probes: None
-    * when the sidecar is missing/corrupt OR when it records a `source`
-    * fingerprint that disagrees with `currentSource` (the fingerprint of
-    * the fixture the query is about to run against) — the layout was
-    * built from DIFFERENT data, so trusting it would serve stale rows.
-    * Sidecars without a source field (pre-r15) pass: their paths embed
-    * the same fingerprint, which is the defense they were built under.
-    */
-  def readMetaIfSource(location: String, currentSource: String): Option[BucketMeta] =
-    readMetaOpt(location).filter(_.source.forall(_ == currentSource))
-
   /** The distinct bucket ids present in the part-file names at `location`
     * (Spark encodes the id as the `_NNNNN` suffix before the codec
     * extension: `part-00000-<uuid>_00042.c000.snappy.parquet`).
@@ -253,8 +231,8 @@ object Bucketing {
     for (m <- meta; ms <- m.source; es <- expectSource) require(ms == es,
       s"stale bucketed layout at $location: sidecar source fingerprint " +
         s"'$ms' != current fixture fingerprint '$es' — the layout was " +
-        "built from a different generation of the data. Rebuild it " +
-        "(BuildLayouts) or delete the dir.")
+        "built from a different generation of the data. Delete the dir " +
+        "so the next run rebuilds it.")
     val sortCols = meta.map(_.sortCols).getOrElse(Seq(key))
     val schema = spark.read.parquet(location).schema.toDDL
     spark.sql(s"CREATE TABLE `$table` ($schema) USING parquet " +

@@ -746,10 +746,11 @@ object TextAnalysis {
       // r15) — without this the corpus scan+normalize+agg subtree ran
       // twice more per query (TedLab x100: 10.68 s → 6.44 s, on par with
       // the old window spelling's 6.20 s whose skew-fatal x1000 profile
-      // this decomposition exists to fix). persist, NOT localCheckpoint:
-      // a checkpointed LogicalRDD has no stats (defaultSizeInBytes), which
-      // silently dropped the downstream hashHinted gate to sort-merge at
-      // every scale — the InMemoryRelation keeps honest stats. The eager
+      // this decomposition exists to fix). persist rather than
+      // localCheckpoint: no gate reads its stats (the DP join below is
+      // un-hinted sort-merge), so what the persist buys is the reuse above
+      // — both broadcast builds read the one cached fill and the corpus
+      // subtree never runs twice. The eager
       // count serializes the fill so the two broadcast builds cannot race
       // it; the cache is session-scoped like the dedup family hubs.
       val counts0 = t.groupBy("bucket").agg(count(lit(1)).as("__n"))

@@ -61,11 +61,7 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkFixture {
     // side ships one packed long (orderkey<<5 | nationkey), the fact
     // meet keeps the hash strategy (no sorts), and only the two fact
     // repartitions exchange data besides broadcasts
-    // layout = Some(false) pins the packed plan: the layout-routing tests
-    // leave a bucketed sf0.001 layout on disk that the default probe
-    // would (correctly) prefer past the gate
-    val p = SparkEntry.j4Roleplay(spark, sf0001, packedBytes = 0L,
-        layout = Some(false))
+    val p = SparkEntry.j4Roleplay(spark, sf0001, packedBytes = 0L)
       .queryExecution.executedPlan.toString
     p should include("ShuffledHashJoin")
     p should not include "SortMergeJoin"

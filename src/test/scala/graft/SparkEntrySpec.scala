@@ -99,36 +99,10 @@ class SparkEntrySpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("j4Roleplay: packed-exchange path (forced) agrees with the plain-join path") {
-    // layout = Some(false) pins the EXCHANGE plans: with a bucketed
-    // layout on disk (another test may have written one) packedBytes = 0
-    // would otherwise route to the layout instead of the packed plan
-    val packed = SparkEntry.j4Roleplay(spark, sf0001,
-      packedBytes = 0L, layout = Some(false))
-    val plain = SparkEntry.j4Roleplay(spark, sf0001,
-      packedBytes = Long.MaxValue, layout = Some(false))
+    val packed = SparkEntry.j4Roleplay(spark, sf0001, packedBytes = 0L)
+    val plain = SparkEntry.j4Roleplay(spark, sf0001, packedBytes = Long.MaxValue)
     packed.collect().map(_.toString).sorted shouldBe
       plain.collect().map(_.toString).sorted
-  }
-
-  test("j4Roleplay: bucketed-layout routing (forced both ways) changes the plan, never the answer") {
-    // Some(true) builds/registers the layout and routes through it;
-    // Some(false) pins the exchange plans — identical rows either way
-    val viaLayout = SparkEntry.j4Roleplay(spark, sf0001, layout = Some(true))
-    val exchange = SparkEntry.j4Roleplay(spark, sf0001,
-      packedBytes = 0L, layout = Some(false))
-    viaLayout.collect().map(_.toString).sorted shouldBe
-      exchange.collect().map(_.toString).sorted
-    // the routed plan really consumes the on-disk layout
-    viaLayout.queryExecution.executedPlan.toString should include("graft-bucketed")
-    // and the DEFAULT probe takes it once the layout exists and the
-    // stats sit past the gate (packedBytes = 0 ⇒ never "small")
-    SparkEntry.probeBucketedLayout(sf0001) should not be empty
-    val routed = SparkEntry.j4Roleplay(spark, sf0001, packedBytes = 0L)
-    routed.queryExecution.executedPlan.toString should include("graft-bucketed")
-    // while under the gate (everything is "small" at MaxValue) the probe
-    // stands down and the small exchange plan keeps the query
-    val small = SparkEntry.j4Roleplay(spark, sf0001, packedBytes = Long.MaxValue)
-    small.queryExecution.executedPlan.toString should not include "graft-bucketed"
   }
 
   test("layout_bucketed_join: layout changes the plan, never the answer; join is exchange-free") {
@@ -143,112 +117,6 @@ class SparkEntrySpec extends AnyFunSuite with Matchers with SparkFixture {
     val planStr = df.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
     "Exchange hashpartitioning".r.findAllIn(planStr).size should be <= 1
-  }
-
-  test("q18LargeOrders: bucketed-layout routing (forced both ways) changes the plan, never the answer") {
-    val viaLayout = SparkEntry.q18LargeOrders(spark, sf0001, layout = Some(true))
-    val exchange = SparkEntry.q18LargeOrders(spark, sf0001, layout = Some(false))
-    viaLayout.collect().map(_.toString).sorted shouldBe
-      exchange.collect().map(_.toString).sorted
-    // the routed per-order sum consumes the bucket distribution: the
-    // layout scan is there and no hash exchange precedes the aggregate
-    val p = viaLayout.queryExecution.executedPlan.toString
-    p should include("graft-bucketed")
-    p should not include "Exchange hashpartitioning"
-    // the layout now exists, so the default probe takes it
-    SparkEntry.probeLiOqLayout(sf0001) should not be empty
-    SparkEntry.q18LargeOrders(spark, sf0001).queryExecution
-      .executedPlan.toString should include("graft-bucketed")
-  }
-
-  test("layout probes: incomplete or foreign layouts are never routed to") {
-    // a probe must answer None — never write, never throw — for every
-    // not-actually-usable state: no directory, no _SUCCESS, wrong key
-    val dir = java.nio.file.Files.createTempDirectory("probe-neg").toString
-    val s = spark
-    import s.implicits._
-    Seq((1L, 1L, 300.0)).toDF("l_orderkey", "l_suppkey", "l_quantity")
-      .write.parquet(s"$dir/lineitem.parquet")
-    Seq((1L, 1L, java.sql.Date.valueOf("2024-01-01"), 10.0))
-      .toDF("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice")
-      .write.parquet(s"$dir/orders.parquet")
-    // nothing on disk
-    SparkEntry.probeBucketedLayout(dir) shouldBe empty
-    SparkEntry.probeLiOqLayout(dir) shouldBe empty
-    SparkEntry.probeOrdOqLayout(dir) shouldBe empty
-    // a sidecar WITHOUT _SUCCESS (interrupted write) is not a layout
-    val liOq = s"/tmp/graft-bucketed/${SparkEntry.layoutSlug(dir, "lineitem.parquet")}/li_oq"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(liOq))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(liOq, operators.Bucketing.MetaFile),
-      """{"buckets":8,"key":"l_orderkey"}""")
-    SparkEntry.probeLiOqLayout(dir) shouldBe empty
-    // _SUCCESS present but the sidecar names a FOREIGN key → not usable
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(liOq, "_SUCCESS"), "")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(liOq, operators.Bucketing.MetaFile),
-      """{"buckets":8,"key":"l_partkey"}""")
-    SparkEntry.probeLiOqLayout(dir) shouldBe empty
-    // right key + _SUCCESS → the count surfaces; q18's default probe
-    // still stands down because ord_oq is missing (never pays its write)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(liOq, operators.Bucketing.MetaFile),
-      """{"buckets":8,"key":"l_orderkey"}""")
-    SparkEntry.probeLiOqLayout(dir) shouldBe Some(8)
-    SparkEntry.probeOrdOqLayout(dir) shouldBe empty
-    val p = SparkEntry.q18LargeOrders(spark, dir)
-      .queryExecution.executedPlan.toString
-    p should not include "graft-bucketed"
-  }
-
-  test("r14 layout probes (ev_uts, gold_wr): incomplete or foreign layouts never route") {
-    val dir = java.nio.file.Files.createTempDirectory("probe-neg-r14").toString
-    val s = spark
-    import s.implicits._
-    Seq((1L, 7L, new java.sql.Timestamp(1700000000000L), 1.5))
-      .toDF("event_id", "user_id", "ts", "value")
-      .write.parquet(s"$dir/events.parquet")
-    Seq((1L, 1L, java.sql.Date.valueOf("2024-01-01"), 10.0, "1-URGENT"))
-      .toDF("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice",
-        "o_orderpriority")
-      .write.parquet(s"$dir/orders.parquet")
-    // nothing on disk → both default plans stay direct
-    SparkEntry.probeEvUtsLayout(dir) shouldBe empty
-    SparkEntry.chessScaleWinrate(spark, dir)
-      .queryExecution.executedPlan.toString should not include "graft-bucketed"
-    // ev_uts: sidecar without _SUCCESS (interrupted write) is not a layout
-    val evUts = s"/tmp/graft-bucketed/${SparkEntry.layoutSlug(dir, "events.parquet")}/ev_uts"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(evUts))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(evUts, operators.Bucketing.MetaFile),
-      """{"buckets":8,"key":"user_id","sort":["user_id","ts"]}""")
-    SparkEntry.probeEvUtsLayout(dir) shouldBe empty
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(evUts, "_SUCCESS"), "")
-    // _SUCCESS + wrong KEY → not usable
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(evUts, operators.Bucketing.MetaFile),
-      """{"buckets":8,"key":"event_id","sort":["event_id","ts"]}""")
-    SparkEntry.probeEvUtsLayout(dir) shouldBe empty
-    // right key but key-only SORT (a pre-r14 sidecar) → the tape plan
-    // needs the (user_id, ts) order; a key-only layout must not route
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(evUts, operators.Bucketing.MetaFile),
-      """{"buckets":8,"key":"user_id"}""")
-    SparkEntry.probeEvUtsLayout(dir) shouldBe empty
-    // corrupt sidecar degrades to the direct plan, never throws
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(evUts, operators.Bucketing.MetaFile),
-      """{"buckets": garbage""")
-    SparkEntry.probeEvUtsLayout(dir) shouldBe empty
-    noException should be thrownBy
-      SparkEntry.j5AsofJoin(spark, dir).queryExecution.executedPlan
-    // the full correct sidecar finally routes
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(evUts, operators.Bucketing.MetaFile),
-      """{"buckets":8,"key":"user_id","sort":["user_id","ts"]}""")
-    SparkEntry.probeEvUtsLayout(dir) shouldBe Some(8)
   }
 
   test("a6SketchAgg: an EMPTY relation yields one row, no error, on both forced paths (r12 ADVICE)") {
@@ -316,46 +184,6 @@ class SparkEntrySpec extends AnyFunSuite with Matchers with SparkFixture {
         col("redacted").rlike("https?://[^ <]+") ||
         col("redacted").rlike("[0-9]{6,}"))
       .count() shouldBe 0L
-  }
-
-  test("chess_scale_winrate: forced gold layout agrees with the direct projection") {
-    // Some(true) builds the write-once gold_wr layout (the only path that
-    // writes — the default probe never does), Some(false) pins the direct
-    // orders projection; GATES layout-probe convention
-    val viaLayout = SparkEntry.chessScaleWinrate(spark, sf0001, layout = Some(true))
-    val direct = SparkEntry.chessScaleWinrate(spark, sf0001, layout = Some(false))
-    viaLayout.exceptAll(direct).count() shouldBe 0L
-    direct.exceptAll(viaLayout).count() shouldBe 0L
-    // the routed plan consumes the layout dir, not the orders table
-    viaLayout.queryExecution.executedPlan.toString should include("gold_wr")
-  }
-
-  test("j5_asof_join: forced tape layout agrees with the direct plan and drops exchange AND sort") {
-    val viaLayout = SparkEntry.j5AsofJoin(spark, sf0001, layout = Some(true))
-    val direct = SparkEntry.j5AsofJoin(spark, sf0001, layout = Some(false))
-    viaLayout.exceptAll(direct).count() shouldBe 0L
-    direct.exceptAll(viaLayout).count() shouldBe 0L
-    // the routed plan consumes the sorted bucketed tape: zero shuffle
-    // exchanges and zero sorts — a pure streaming window pass
-    val p = viaLayout.queryExecution.executedPlan.toString
-    p should include("ev_uts")
-    p should not include "Exchange hashpartitioning"
-    "\\+- Sort ".r.findAllIn(p).length shouldBe 0
-  }
-
-  test("j5b_asof_two_table: forced tape layout agrees with the direct two-table plan, exchange- and sort-free") {
-    val viaLayout = SparkEntry.j5bAsofTwoTable(spark, sf0001, layout = Some(true))
-    val direct = SparkEntry.j5bAsofTwoTable(spark, sf0001, layout = Some(false))
-    viaLayout.exceptAll(direct).count() shouldBe 0L
-    direct.exceptAll(viaLayout).count() shouldBe 0L
-    // and both agree with j5 (identical semantics, different engine path)
-    val j5 = SparkEntry.j5AsofJoin(spark, sf0001, layout = Some(false))
-    direct.exceptAll(j5).count() shouldBe 0L
-    j5.exceptAll(direct).count() shouldBe 0L
-    val p = viaLayout.queryExecution.executedPlan.toString
-    p should include("ev_tape2")
-    p should not include "Exchange hashpartitioning"
-    "\\+- Sort ".r.findAllIn(p).length shouldBe 0
   }
 
   test("chess_scale_winrate: engine dim and oracle VALUES both derive from Dims.resultSeed") {

@@ -118,6 +118,11 @@ class AsofJoinSpec extends AnyFunSuite with Matchers with SparkFixture {
       refs, "user_id", "ts", Seq("ref_value", "ref_event"))
     tape.exceptAll(composed).count() shouldBe 0L
     composed.exceptAll(tape).count() shouldBe 0L
+    // the shipped pair: j5b (two-table API) answers exactly as j5 (tape)
+    val j5 = graft.SparkEntry.queries("j5_asof_join")(spark, sf0001)
+    val j5b = graft.SparkEntry.queries("j5b_asof_two_table")(spark, sf0001)
+    j5b.exceptAll(j5).count() shouldBe 0L
+    j5.exceptAll(j5b).count() shouldBe 0L
     // both statuses exercised: probes before any ref (null carry) and after
     tape.filter($"ref_value".isNull).count() should be > 0L
     tape.filter($"ref_value".isNotNull).count() should be > 0L
@@ -174,37 +179,5 @@ class AsofJoinSpec extends AnyFunSuite with Matchers with SparkFixture {
     val p = neu.queryExecution.executedPlan.toString
     "Exchange hashpartitioning".r.findAllIn(p).length shouldBe 1
     "\\+- Sort ".r.findAllIn(p).length shouldBe 1
-  }
-
-  test("leftAsofLayout answers from the persisted tape: zero exchanges, zero sorts, same rows") {
-    import org.apache.spark.sql.functions._
-    val ev = graft.Tables.events(spark, sf0001)
-    val probes = ev.filter($"event_id" % 10 =!= 0)
-      .select($"event_id", $"user_id", $"ts")
-    val refs = ev.filter($"event_id" % 10 === 0)
-      .select($"user_id", $"ts", $"value".as("ref_value"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-asof-layout")
-    val loc = dir.resolve("tape2").toString
-    spark.sql("DROP TABLE IF EXISTS asof_tape2_spec")
-    try {
-      val out = AsofJoin.leftAsofLayout(probes, refs, "user_id", "ts",
-        Seq("ref_value"), "asof_tape2_spec", loc, 4)
-      val plain = AsofJoin.leftAsof(probes, refs, "user_id", "ts",
-        Seq("ref_value"))
-      out.exceptAll(plain).count() shouldBe 0L
-      plain.exceptAll(out).count() shouldBe 0L
-      // the write-once contract: the bucketed sorted tape satisfies both
-      // the window's distribution AND its ordering — nothing to exchange,
-      // nothing to sort
-      val p = out.queryExecution.executedPlan.toString
-      "Exchange hashpartitioning".r.findAllIn(p).length shouldBe 0
-      "\\+- Sort ".r.findAllIn(p).length shouldBe 0
-      // second call must reuse the layout, never rebuild the inputs
-      spark.sql("DROP TABLE asof_tape2_spec")
-      val again = AsofJoin.leftAsofLayout(
-        probes, refs, "user_id", "ts", Seq("ref_value"),
-        "asof_tape2_spec", loc, 4)
-      again.count() shouldBe plain.count()
-    } finally spark.sql("DROP TABLE IF EXISTS asof_tape2_spec")
   }
 }

@@ -93,19 +93,15 @@ class BucketingSpec extends AnyFunSuite with Matchers with SparkFixture {
     spark.catalog.tableExists("li_misdeclared") shouldBe false
   }
 
-  test("readMetaOpt degrades a corrupt sidecar to None; readMeta fails fast") {
+  test("readMeta fails fast on a corrupt sidecar") {
     val metaPath = java.nio.file.Paths.get(extLoc, Bucketing.MetaFile)
     val bytes = java.nio.file.Files.readAllBytes(metaPath)
     java.nio.file.Files.write(metaPath,
       "{\"buckets\": garbage".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    try {
-      // the probe contract (GATES "a probe never writes / never throws"):
-      // an unreadable sidecar routes to the exchange plan, silently
-      Bucketing.readMetaOpt(extLoc) shouldBe None
-      // but a caller about to TRUST the layout must see the error
-      intercept[RuntimeException] { Bucketing.readMeta(extLoc) }
-        .getMessage should include("unparseable")
-    } finally java.nio.file.Files.write(metaPath, bytes)
+    // a caller about to TRUST the layout must see the error, not a guess
+    try intercept[RuntimeException] { Bucketing.readMeta(extLoc) }
+      .getMessage should include("unparseable")
+    finally java.nio.file.Files.write(metaPath, bytes)
   }
 
   test("registerExternal derives the count from part-file names when no sidecar exists") {
@@ -161,87 +157,65 @@ class BucketingSpec extends AnyFunSuite with Matchers with SparkFixture {
   test("a stale layout can never serve old rows: slug layer, sidecar source layer, trust fail-fast") {
     import java.nio.file.{Files => F, Paths => P}
     val fixture = F.createTempDirectory("graft-fp-fixture").toString
-    val srcEvents = spark.read.parquet(s"$sf0001/events.parquet")
-    srcEvents.write.mode("overwrite").parquet(s"$fixture/events.parquet")
-
-    // no layout yet → probe misses
-    graft.SparkEntry.probeEvUtsLayout(fixture) shouldBe None
-    // forced path builds the ev_uts layout; probe now routes to it
-    val staleRows = graft.SparkEntry.j5AsofJoin(spark, fixture, Some(true)).count()
-    graft.SparkEntry.probeEvUtsLayout(fixture) should not be None
-    val slugA = graft.SparkEntry.layoutSlug(fixture, "events.parquet")
-    Bucketing.readMeta(s"/tmp/graft-bucketed/$slugA/ev_uts")
-      .flatMap(_.source) shouldBe Some(slugA)
-
-    // REGENERATE the fixture (half the events): the content fingerprint
-    // moves, so the old layout's path is simply never probed again
-    srcEvents.filter($"event_id" % 2 === 0)
-      .write.mode("overwrite").parquet(s"$fixture/events.parquet")
-    graft.Tables.invalidate(Some(fixture)) // REFRESH after regen (TESTDATA.md contract)
-    val slugB = graft.SparkEntry.layoutSlug(fixture, "events.parquet")
-    slugB should not be slugA
-    graft.SparkEntry.probeEvUtsLayout(fixture) shouldBe None
-
-    // adversarial second layer: the STALE layout dir reappears at the
-    // CURRENT slug path (copied/renamed/restored-from-backup). Path
-    // evidence alone would trust it — the sidecar source fingerprint
-    // (slugA, recorded at write time) disagrees with the fixture's
-    // current fingerprint (slugB), so the probe must reject it and the
-    // shipped query must compute from the FRESH fixture.
-    val stalePath = P.get(s"/tmp/graft-bucketed/$slugB/ev_uts")
-    copyTree(P.get(s"/tmp/graft-bucketed/$slugA/ev_uts"), stalePath)
+    for (t <- Seq("lineitem", "orders", "customer", "supplier", "nation"))
+      spark.read.parquet(s"$sf0001/$t.parquet")
+        .write.mode("overwrite").parquet(s"$fixture/$t.parquet")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val slugA = graft.SparkEntry.layoutSlug(fixture, "lineitem.parquet", "orders.parquet")
+    val rootA = P.get(s"/tmp/graft-bucketed/$slugA")
+    var slugB = slugA
     try {
-      graft.SparkEntry.probeEvUtsLayout(fixture) shouldBe None
-      val routed = graft.SparkEntry.j5AsofJoin(spark, fixture)
-      val fresh = graft.SparkEntry.j5AsofJoin(spark, fixture, Some(false))
-      routed.exceptAll(fresh).count() shouldBe 0L
-      fresh.exceptAll(routed).count() shouldBe 0L
-      routed.count() should be < staleRows // stale rows would double-count
-      // and a caller about to TRUST the stale dir fails fast, loudly
-      spark.sql("DROP TABLE IF EXISTS ev_stale_reg")
+      // layout_bucketed_join writes its layouts under the input's slug,
+      // and each sidecar records that fingerprint as its source
+      val staleRows = rows(graft.SparkEntry.layoutBucketedJoin(spark, fixture))
+      Bucketing.readMeta(rootA.resolve("ord_ok").toString)
+        .flatMap(_.source) shouldBe Some(slugA)
+
+      // REGENERATE the fixture (half the orders): the content fingerprint
+      // moves, so the old layout's path is simply never read again
+      spark.read.parquet(s"$sf0001/orders.parquet").filter($"o_orderkey" % 2 === 0)
+        .write.mode("overwrite").parquet(s"$fixture/orders.parquet")
+      graft.Tables.invalidate(Some(fixture)) // REFRESH after regen (TESTDATA.md contract)
+      slugB = graft.SparkEntry.layoutSlug(fixture, "lineitem.parquet", "orders.parquet")
+      slugB should not be slugA
+      val fresh = rows(graft.SparkEntry.j4Roleplay(spark, fixture))
+      fresh should not be staleRows
+
+      // adversarial second layer: the STALE layout dirs reappear at the
+      // CURRENT slug path (copied/renamed/restored-from-backup). Path
+      // evidence alone would trust them — the sidecar source fingerprint
+      // (slugA, recorded at write time) disagrees with the fixture's
+      // current fingerprint (slugB), so the query fails fast instead of
+      // serving the old corpus's rows
+      val rootB = P.get(s"/tmp/graft-bucketed/$slugB")
+      Seq("li_ok", "ord_ok").foreach(sub => copyTree(rootA.resolve(sub), rootB.resolve(sub)))
       val ex = intercept[IllegalArgumentException] {
-        Bucketing.registerExternal(spark, "ev_stale_reg", stalePath.toString,
-          expectSource = Some(slugB))
+        graft.SparkEntry.layoutBucketedJoin(spark, fixture)
       }
       ex.getMessage should include("stale bucketed layout")
-      spark.catalog.tableExists("ev_stale_reg") shouldBe false
+      spark.catalog.tableExists(s"graft_li_ok_$slugB") shouldBe false
+      // the same check at the lower-level trust point
+      val staleOrd = rootB.resolve("ord_ok").toString
+      intercept[IllegalArgumentException] {
+        Bucketing.registerExternal(spark, "ord_stale_reg", staleOrd,
+          expectSource = Some(slugB))
+      }.getMessage should include("stale bucketed layout")
+      spark.catalog.tableExists("ord_stale_reg") shouldBe false
+
+      // once the stale dirs are gone the query rebuilds from the fresh
+      // fixture and agrees with the exchange plan
+      F.walk(rootB).sorted(java.util.Comparator.reverseOrder()).forEach(p => F.delete(p))
+      rows(graft.SparkEntry.layoutBucketedJoin(spark, fixture)) shouldBe fresh
     } finally {
-      spark.sql(s"DROP TABLE IF EXISTS graft_ev_uts_$slugA")
-      Seq(slugA, slugB).foreach { s =>
+      for (sl <- Seq(slugA, slugB).distinct; t <- Seq("li_ok", "ord_ok"))
+        spark.sql(s"DROP TABLE IF EXISTS graft_${t}_$sl")
+      Seq(slugA, slugB).distinct.foreach { s =>
         val root = P.get(s"/tmp/graft-bucketed/$s")
         if (F.exists(root))
           F.walk(root).sorted(java.util.Comparator.reverseOrder())
             .forEach(p => F.delete(p))
       }
-    }
-  }
-
-  test("gold_wr source-fp file gates the chess_scale_winrate layout the same way") {
-    import java.nio.file.{Files => F, Paths => P}
-    val fixture = F.createTempDirectory("graft-fp-gold").toString
-    spark.read.parquet(s"$sf0001/orders.parquet")
-      .write.mode("overwrite").parquet(s"$fixture/orders.parquet")
-    val slug = graft.SparkEntry.layoutSlug(fixture, "orders.parquet")
-    try {
-      val built = graft.SparkEntry.chessScaleWinrate(spark, fixture, Some(true))
-      built.count() should be > 0L
-      val fp = P.get(s"/tmp/graft-bucketed/$slug/gold_wr/_graft_source_fp")
-      new String(F.readAllBytes(fp), "UTF-8") shouldBe slug
-      // routed plan consumes the layout while the fp matches …
-      graft.SparkEntry.chessScaleWinrate(spark, fixture)
-        .queryExecution.executedPlan.toString should include("gold_wr")
-      // … and abandons it the moment the fp names another generation
-      F.write(fp, "deadbeefdead".getBytes("UTF-8"))
-      val rerouted = graft.SparkEntry.chessScaleWinrate(spark, fixture)
-      rerouted.queryExecution.executedPlan.toString should not include "gold_wr"
-      val raw = graft.SparkEntry.chessScaleWinrate(spark, fixture, Some(false))
-      rerouted.exceptAll(raw).count() shouldBe 0L
-      raw.exceptAll(rerouted).count() shouldBe 0L
-    } finally {
-      val root = P.get(s"/tmp/graft-bucketed/$slug")
-      if (F.exists(root))
-        F.walk(root).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => F.delete(p))
+      graft.Tables.invalidate(Some(fixture))
     }
   }
 }
