@@ -1,8 +1,10 @@
 package graft
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 object Bench {
   /** Forces FULL evaluation of every output row via the no-op sink.
     * `count()` is NOT a valid evaluation driver for a benchmark that is
@@ -27,10 +29,23 @@ object Bench {
   /** Jobs started, stages completed and tasks ended under one tag. */
   private[graft] final case class Census(jobs: Int, stages: Int, tasks: Long)
 
-  /** One query in one timed pass: seconds (-1 on failure), why it failed,
-    * and its census.
+  /** Classes Spark compiled and the seconds Janino spent compiling them.
+    * Both counters are JVM-wide, so a query's share is the delta across
+    * its run; the bench runs one query at a time.
     */
-  private[graft] final case class Run(sec: Double, failure: Option[String], census: Census)
+  private[graft] final case class Compiles(classes: Long, seconds: Double) {
+    def -(o: Compiles): Compiles = Compiles(classes - o.classes, seconds - o.seconds)
+  }
+  private[graft] object Compiles {
+    def now(): Compiles = Compiles(CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      CodeGenerator.compileTime / 1e9)
+  }
+
+  /** One query in one timed pass: seconds (-1 on failure), why it failed,
+    * its census and what it compiled.
+    */
+  private[graft] final case class Run(sec: Double, failure: Option[String], census: Census,
+      compiles: Compiles)
 
   /** Every timed pass, plus all stages completed while they ran (tagged
     * or not) — the compact line's structural `stages` census.
@@ -108,25 +123,38 @@ object Bench {
       val ran = (1 to passes).map { pass =>
         val r = queries.map { case (name, fn) =>
           sc.setLocalProperty(QueryTag, s"$pass/$name")
+          val c0 = Compiles.now()
           val t0 = System.nanoTime()
           val failure =
             try { evaluate(fn(spark, sfDir)); None }
             catch { case e: Throwable => Some(reason(e)) }
           val sec = (System.nanoTime() - t0) / 1e9
+          val compiled = Compiles.now() - c0
           sc.setLocalProperty(QueryTag, null)
-          name -> (if (failure.isEmpty) sec else -1.0, failure)
+          name -> (if (failure.isEmpty) sec else -1.0, failure, compiled)
         }
         spark.catalog.clearCache()
         pass -> r
       }
       census.settle()
       Timed(ran.map { case (pass, r) =>
-        r.map { case (name, (sec, failure)) =>
-          name -> Run(sec, failure, census(s"$pass/$name"))
+        r.map { case (name, (sec, failure, compiled)) =>
+          name -> Run(sec, failure, census(s"$pass/$name"), compiled)
         }.toMap
       }, census.stages)
     } finally sc.removeSparkListener(census)
   }
+
+  private def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+
+  /** `BENCH_FULL.json`'s `census`: per query, the kept run's jobs, stages,
+    * tasks, compiled classes and compile seconds.
+    */
+  private[graft] def censusJson(kept: Map[String, Run]): String =
+    kept.toSeq.sortBy(_._1).map { case (k, r) =>
+      s"\"$k\":{\"jobs\":${r.census.jobs},\"stages\":${r.census.stages},\"tasks\":${r.census.tasks}," +
+        s"\"compiles\":${r.compiles.classes},\"compile_s\":${f(r.compiles.seconds)}}"
+    }.mkString("{", ",", "}")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -162,7 +190,10 @@ object Bench {
       .toSeq.sortBy(_._1)
     // one untimed pass first: JVM/codegen/JIT, shuffle system, parquet
     // footers and OS page cache all warm, so the timed pass measures
-    // steady-state query cost rather than whichever query runs first
+    // steady-state query cost rather than whichever query runs first. The
+    // generated-class cache holds the whole board's classes (see
+    // GraftSession.CodegenCache), so the timed passes compile next to
+    // nothing; the census's compiles/compile_s show what they did compile
     benched.foreach { case (_, fn) =>
       try evaluate(fn(spark, sfDir)) catch { case _: Throwable => }
     }
@@ -180,7 +211,6 @@ object Bench {
     val run = timed(spark, sfDir, benched, passes = 2)
     val kept = run.kept
     val results = kept.map { case (k, r) => k -> r.sec }
-    def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     def jstr(s: String): String = "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
@@ -209,9 +239,7 @@ object Bench {
     val qs = results.toSeq.sortBy(_._1).map { case (k, v) => s"\"" + k + "\":" + fq(v) }
       .mkString("{", ",", "}")
     // census and failure reasons come from the pass whose time is kept
-    val censusJson = kept.toSeq.sortBy(_._1).map { case (k, r) =>
-      s"\"$k\":{\"jobs\":${r.census.jobs},\"stages\":${r.census.stages},\"tasks\":${r.census.tasks}}"
-    }.mkString("{", ",", "}")
+    val census = censusJson(kept)
     val failuresJson = kept.toSeq.sortBy(_._1)
       .flatMap { case (k, r) => r.failure.map(why => s"\"$k\":" + jstr(why)) }
       .mkString("{", ",", "}")
@@ -225,7 +253,7 @@ object Bench {
     val fixedJson = fixedInput.toSeq.sorted
       .map("\"" + _ + "\"").mkString("[", ",", "]")
     val fullLine =
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"census":$censusJson,"failures":$failuresJson,"fixed_input":$fixedJson,"sf":"$sfLabel","cpus":$cpus,"passes":2,"eval":"noop"}"""
+      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"census":$census,"failures":$failuresJson,"fixed_input":$fixedJson,"sf":"$sfLabel","cpus":$cpus,"passes":2,"eval":"noop"}"""
     // the full line goes to the file ONLY (stderr as the read-only-cwd
     // fallback): the driver parses the LAST stdout line as the bench JSON,
     // and a second {"metric":"total"...} line above it is exactly what

@@ -72,17 +72,21 @@ object ChessAnalytics {
     * can query `fact_games`, `dim_*`, `win_rate_by_family`, … directly.
     */
   def registerViews(pipe: ChessPipeline): Unit = {
+    // each gold table is read once and shared by every view over it
     val fact = pipe.fact
+    val dimOpenings = pipe.dimOpenings
+    val dimResults = pipe.dimResults
+    val dimTimeControl = pipe.dimTimeControl
     fact.createOrReplaceTempView("fact_games")
-    pipe.dimOpenings.createOrReplaceTempView("dim_openings")
+    dimOpenings.createOrReplaceTempView("dim_openings")
     pipe.dimDate.createOrReplaceTempView("dim_date")
-    pipe.dimResults.createOrReplaceTempView("dim_results")
-    pipe.dimTimeControl.createOrReplaceTempView("dim_time_control")
-    winRateByOpeningFamily(fact, pipe.dimOpenings, pipe.dimResults)
+    dimResults.createOrReplaceTempView("dim_results")
+    dimTimeControl.createOrReplaceTempView("dim_time_control")
+    winRateByOpeningFamily(fact, dimOpenings, dimResults)
       .createOrReplaceTempView("win_rate_by_family")
-    winRateByColorAndClass(fact, pipe.dimTimeControl, pipe.dimResults)
+    winRateByColorAndClass(fact, dimTimeControl, dimResults)
       .createOrReplaceTempView("win_rate_by_color_class")
-    monthlyTrend(fact, pipe.dimResults).createOrReplaceTempView("monthly_trend")
+    monthlyTrend(fact, dimResults).createOrReplaceTempView("monthly_trend")
     ratingByDay(fact).createOrReplaceTempView("rating_by_day")
   }
 }

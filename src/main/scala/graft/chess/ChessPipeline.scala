@@ -1,7 +1,10 @@
 package graft.chess
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShims, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** End-to-end medallion pipeline: bronze JSON → silver parquet → gold star
   * schema, with the reference's incremental semantics (existence-probe
@@ -12,6 +15,12 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * scale); layout mirrors the reference's blob names:
   * bronze/{yyyy}-{MM}-games.json, silver/fact-{yyyy}-{MM}-games.parquet,
   * gold/{fact-games,dim_*}.parquet.
+  *
+  * Every table the pipeline writes is read back with the schema it was
+  * written with, taken from the writer's analyzed plan: inferring a
+  * parquet schema runs a Spark job per read, on files this instance wrote
+  * moments earlier. Only the first read of a gold table this instance did
+  * not write infers. The openings book is read once per instance.
   */
 class ChessPipeline(spark: SparkSession, root: String, username: String,
                     openingsBook: Option[String] = None) {
@@ -23,7 +32,27 @@ class ChessPipeline(spark: SparkSession, root: String, username: String,
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
 
-  private def readGold(rel: String): DataFrame = spark.read.parquet(path(rel))
+  /** Schema of each table under `root`, as parquet reads it back: every
+    * column nullable, partition columns last. The dim builds write
+    * concurrently, hence the concurrent map.
+    */
+  private val schemas = TrieMap.empty[String, StructType]
+
+  private def written(rel: String, df: DataFrame, partitionBy: String*): Unit = {
+    val (parts, data) = df.schema.partition(f => partitionBy.contains(f.name))
+    schemas(rel) = GraftShims.asNullable(StructType(data ++ parts))
+  }
+
+  /** What the reads of `rel` use, for a spec to hold against the files. */
+  private[chess] def readSchema(rel: String): Option[StructType] = schemas.get(rel)
+
+  private def readBack(rel: String): DataFrame = schemas.get(rel) match {
+    case Some(schema) => spark.read.schema(schema).parquet(path(rel))
+    case None =>
+      val df = spark.read.parquet(path(rel))
+      schemas(rel) = df.schema
+      df
+  }
 
   private def writeGold(df: DataFrame, rel: String): Unit = {
     // dims and the cumulative fact are replaced atomically each batch; the
@@ -31,6 +60,7 @@ class ChessPipeline(spark: SparkSession, root: String, username: String,
     // to a temp location then swap (parquet overwrite would clobber input)
     val tmp = path(rel + ".tmp")
     df.write.mode(SaveMode.Overwrite).parquet(tmp)
+    written(rel, df)
     val fs = new Path(path(rel)).getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(new Path(path(rel)), true)
     fs.rename(new Path(tmp), new Path(path(rel)))
@@ -40,14 +70,25 @@ class ChessPipeline(spark: SparkSession, root: String, username: String,
     spark.read.schema(Schemas.bronze).option("multiLine", true)
       .json(path(f"bronze/$year-$month%02d-games.json"))
 
-  def silverPath(year: Int, month: Int): String =
-    path(f"silver/fact-$year-$month%02d-games.parquet")
+  private def silverRel(year: Int, month: Int): String =
+    f"silver/fact-$year-$month%02d-games.parquet"
+
+  def silverPath(year: Int, month: Int): String = path(silverRel(year, month))
 
   /** EP1: one month bronze → silver. */
   def buildSilver(year: Int, month: Int): DataFrame = {
     val silver = SilverFact.transform(readBronze(year, month))
     silver.write.mode(SaveMode.Overwrite).parquet(silverPath(year, month))
-    spark.read.parquet(silverPath(year, month))
+    written(silverRel(year, month), silver)
+    readBack(silverRel(year, month))
+  }
+
+  /** The openings book as a local relation: read and collected once, on
+    * the first month that needs it.
+    */
+  private lazy val book: Option[DataFrame] = openingsBook.map { csv =>
+    val df = OpeningMatcher.readBook(spark, csv)
+    spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
   }
 
   /** EP2 dims: initial build or incremental append per existence probe
@@ -62,15 +103,14 @@ class ChessPipeline(spark: SparkSession, root: String, username: String,
     import scala.concurrent.duration.Duration
     def upsert(rel: String, fresh: DataFrame, key: String): Unit = {
       val next =
-        if (exists(rel)) Dims.incremental(fresh, readGold(rel), key) else fresh
+        if (exists(rel)) Dims.incremental(fresh, readBack(rel), key) else fresh
       writeGold(next, rel)
     }
     // with an openings book configured, dim_openings carries the csv's
     // colon-form "Family: Variation" names (slug fallback for unmatched
     // URLs); without one, the slug-only derivation
-    val openings = openingsBook match {
-      case Some(csv) => Dims.openingsFromSilverEnriched(silver,
-        OpeningMatcher.readBook(spark, csv))
+    val openings = book match {
+      case Some(b) => Dims.openingsFromSilverEnriched(silver, b)
       case None => Dims.openingsFromSilver(silver)
     }
     val builds = Seq(
@@ -100,25 +140,28 @@ class ChessPipeline(spark: SparkSession, root: String, username: String,
     val projected = GoldFact.project(silver, username, lastUpdated)
       .withColumn("game_month", date_format(col("game_date"), "yyyy-MM"))
     val joined = GoldFact.starJoin(projected,
-      readGold("gold/dim_date.parquet"),
-      readGold("gold/dim_openings.parquet"),
-      readGold("gold/dim_results.parquet"),
-      readGold("gold/dim_time_control.parquet"))
+      readBack("gold/dim_date.parquet"),
+      readBack("gold/dim_openings.parquet"),
+      readBack("gold/dim_results.parquet"),
+      readBack("gold/dim_time_control.parquet"))
     if (!exists(factRel)) {
       joined.write.mode(SaveMode.Overwrite).partitionBy("game_month")
         .parquet(path(factRel))
+      written(factRel, joined, "game_month")
     } else {
       val months = joined.select("game_month").distinct()
         .collect().map(_.getString(0)).toSeq // one entry per batch month
-      val prevMonths = readGold(factRel)
+      val prevMonths = readBack(factRel)
         .filter(col("game_month").isin(months: _*)) // partition-pruned scan
         .select(joined.columns.map(col): _*)
       val merged = GoldFact.merge(prevMonths, joined)
       // stage the merged months (can't overwrite a path being read), then
       // dynamic-overwrite replaces exactly those partitions
-      val tmp = path(factRel + ".merge-tmp")
+      val tmpRel = factRel + ".merge-tmp"
+      val tmp = path(tmpRel)
       merged.write.mode(SaveMode.Overwrite).parquet(tmp)
-      val staged = spark.read.parquet(tmp)
+      written(tmpRel, merged)
+      val staged = readBack(tmpRel)
       val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
       spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
       try staged.write.mode(SaveMode.Overwrite).partitionBy("game_month")
@@ -167,11 +210,11 @@ class ChessPipeline(spark: SparkSession, root: String, username: String,
     withRetry("fact")(buildFact(silver, lastUpdated))
   }
 
-  def fact: DataFrame = readGold("gold/fact-games.parquet")
-  def dimOpenings: DataFrame = readGold("gold/dim_openings.parquet")
-  def dimDate: DataFrame = readGold("gold/dim_date.parquet")
-  def dimResults: DataFrame = readGold("gold/dim_results.parquet")
-  def dimTimeControl: DataFrame = readGold("gold/dim_time_control.parquet")
+  def fact: DataFrame = readBack("gold/fact-games.parquet")
+  def dimOpenings: DataFrame = readBack("gold/dim_openings.parquet")
+  def dimDate: DataFrame = readBack("gold/dim_date.parquet")
+  def dimResults: DataFrame = readBack("gold/dim_results.parquet")
+  def dimTimeControl: DataFrame = readBack("gold/dim_time_control.parquet")
 
   /** EP3: warehouse load — full-replace JDBC writes of the star schema
     * (the reference's pandas `to_sql(if_exists="replace")`,

@@ -2,6 +2,7 @@ package graft.chess
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** J3: longest-prefix opening matching (prototype at test.ipynb cells
   * 27-28). Given the 3,514-row Lichess openings table (eco_family, eco,
@@ -18,9 +19,15 @@ object OpeningMatcher {
 
   case class Opening(eco: String, name: String, pgn: String)
 
-  /** Load the openings book CSV (header: eco_family,eco,name,pgn). */
+  /** The openings book's columns, all strings, in file order. */
+  private val bookSchema: StructType = StructType(
+    Seq("eco_family", "eco", "name", "pgn").map(StructField(_, StringType)))
+
+  /** Load the openings book CSV (header: eco_family,eco,name,pgn). The
+    * schema is declared, so no job reads the header to infer it.
+    */
   def readBook(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", true).csv(path)
+    spark.read.option("header", true).schema(bookSchema).csv(path)
 
   /** Matches each game's `movetextCol` (numbered, e.g. "1. d4 e5 2. …")
     * against the book; adds `opening_name`, `opening_eco`,

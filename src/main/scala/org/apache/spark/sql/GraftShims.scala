@@ -10,6 +10,11 @@ object GraftShims {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** `schema` with every field, nested ones included, nullable: how a
+    * file source reads back what it wrote.
+    */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
+
   /** Whether `df`'s plan is currently registered in the session's
     * CacheManager — lets a memoized handle to a persisted result detect
     * eviction (`unpersist()` / `clearCache()`) and recompute instead of
