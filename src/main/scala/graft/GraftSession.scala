@@ -46,11 +46,13 @@ object GraftSession {
     */
   def create(configure: SparkSession.Builder => SparkSession.Builder = identity): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
     val base = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
+      // older testdata generations store events.ts as TIMESTAMP(NANOS),
+      // which Spark reads only as an int64; Tables.events normalizes it
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       // InferFiltersFromGenerate turns explode(f(x)) into an inferred
       // `size(f(x)) > 0` filter that predicate pushdown then sinks through

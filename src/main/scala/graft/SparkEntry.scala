@@ -549,22 +549,13 @@ object SparkEntry {
     * SPARK_GRAFT_BUCKETS (default 32; 128 at x1000 so each write task
     * sorts a bounded ~4.7M-row slice).
     */
-  // memoized per (session, slug, buckets): rebuilding this DataFrame costs
-  // ~0.4 s of pure driver work per call (two catalog lookups + external-
-  // table re-analysis + the slug file-walk) — measured by Scratch r12:
-  // 1.145 s total vs ~0.6 s of job wall. Same snapshot semantics as
-  // Tables.read: the slug is a content fingerprint of the INPUT tables, so
-  // regenerated testdata changes the key and the stale entry is simply
-  // never hit again; stopped sessions are pruned on each miss.
-  private val bucketedJoinCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   private[graft] def layoutBucketedJoin(s: SparkSession, d: String): DataFrame = {
     val buckets = sys.env.getOrElse("SPARK_GRAFT_BUCKETS", "32").toInt
     val slug = layoutSlug(d, "lineitem.parquet", "orders.parquet")
-    bucketedJoinCache.keySet.removeIf { case (ss, _) => ss.sparkContext.isStopped }
-    bucketedJoinCache.computeIfAbsent((s, s"$slug/$buckets"),
-      _ => layoutBucketedJoinUncached(s, d, slug, buckets))
+    // memoized: rebuilding this DataFrame costs ~0.4 s of driver work per
+    // call (two catalog lookups and the external-table re-analysis)
+    Tables.memo(s, Some(d), s"bucketedJoin/$slug/$buckets")(
+      layoutBucketedJoinUncached(s, d, slug, buckets))
   }
 
   /** `q18_large_orders` body: the r8 gated plan — [[preShuffled]] raw
@@ -945,53 +936,24 @@ object SparkEntry {
     Dedup.jaccardFromStats(sharedPairStats(s, d), threshold = 0.5)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-  /** dedup_clusters / dedup_keep share ONE connected-components labeling
-    * per (session, sf dir). The CC loop's output rides on localCheckpoint
-    * lineage, which CacheManager plan-matching cannot identify across
-    * invocations, so the HANDLE itself is memoized per session, with the
-    * same lifecycle as the persisted result it wraps: `clearCache()`
-    * evicts the cache entry, the next use detects that
-    * ([[org.apache.spark.sql.GraftShims.isCached]]) and recomputes.
-    * A WeakHashMap alone would NOT reclaim entries — the memoized
-    * DataFrame value strongly references its SparkSession key (the
-    * documented WeakHashMap caveat) — so every access also sweeps entries
-    * whose session has stopped, bounding the map by the live-session
-    * count.
-    */
-  private val clustersMemo =
-    new java.util.HashMap[SparkSession, scala.collection.mutable.Map[String, DataFrame]]
-
   /** `text_token_ids` and `pack_materialize` encode the same corpus
     * against the same top-24 vocab; the vocab build ends in a driver-side
     * collect ([[operators.TextAnalysis.tokenEncode]]), which CacheManager
-    * plan-matching cannot deduplicate across invocations — so the encoded
-    * handle is memoized per (session, sf dir), same lifecycle discipline
-    * as [[sharedClusters]]: sweep stopped sessions, recompute after
-    * `clearCache()`.
+    * plan-matching cannot deduplicate across invocations — so the
+    * persisted handle is memoized per (session, sf dir) in
+    * [[Tables.memoPersisted]].
     */
-  private val encodedMemo =
-    new java.util.HashMap[SparkSession, scala.collection.mutable.Map[String, DataFrame]]
-
   private def sharedEncoded(s: SparkSession, d: String): DataFrame =
-    encodedMemo.synchronized {
-      encodedMemo.keySet.removeIf(k => k.sparkContext.isStopped)
-      val m = encodedMemo.computeIfAbsent(s,
-        _ => scala.collection.mutable.Map.empty[String, DataFrame])
-      m.get(d).filter(org.apache.spark.sql.GraftShims.isCached) match {
-        case Some(df) => df
-        case None =>
-          // (doc_id, ids) ONLY: both consumers read just these two, so
-          // caching the full 6-column table (text, lang, source, n_chars
-          // ride along) would triple the columnar fill bytes for nothing
-          // (r15; guide §5 cache economics). n_tokens falls out of the
-          // cached array as size(ids) — vocab_encode emits one id per
-          // whitespace token (OOV -> sentinel), so the count is identical.
-          val df = TextAnalysis.tokenEncode(Tables.documents(s, d), vocabSize = 24)
-            .select(col("doc_id"), col("ids"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          m(d) = df
-          df
-      }
+    Tables.memoPersisted(s, Some(d), "tokenEncode") {
+      // (doc_id, ids) ONLY: both consumers read just these two, so
+      // caching the full 6-column table (text, lang, source, n_chars
+      // ride along) would triple the columnar fill bytes for nothing
+      // (r15; guide §5 cache economics). n_tokens falls out of the
+      // cached array as size(ids) — vocab_encode emits one id per
+      // whitespace token (OOV -> sentinel), so the count is identical.
+      TextAnalysis.tokenEncode(Tables.documents(s, d), vocabSize = 24)
+        .select(col("doc_id"), col("ids"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Docs-scan stats bound under which the connected-components labelers
@@ -1018,19 +980,16 @@ object SparkEntry {
     else distributed(pairs)
   }
 
+  /** dedup_clusters / dedup_keep share ONE connected-components labeling
+    * per (session, sf dir). The CC loop's output rides on localCheckpoint
+    * lineage, which CacheManager plan-matching cannot identify across
+    * invocations, so the persisted handle is memoized in
+    * [[Tables.memoPersisted]]; the driver path's labeling is not
+    * persisted, so it is rebuilt on every call.
+    */
   private def sharedClusters(s: SparkSession, d: String): DataFrame =
-    clustersMemo.synchronized {
-      clustersMemo.keySet.removeIf(k => k.sparkContext.isStopped)
-      val m = clustersMemo.computeIfAbsent(s,
-        _ => scala.collection.mutable.Map.empty[String, DataFrame])
-      m.get(d).filter(org.apache.spark.sql.GraftShims.isCached) match {
-        case Some(df) => df
-        case None =>
-          val df = ccLabels(s, d, p => Dedup.duplicateClusters(p))
-          m(d) = df
-          df
-      }
-    }
+    Tables.memoPersisted(s, Some(d), "clusters")(
+      ccLabels(s, d, p => Dedup.duplicateClusters(p)))
 
   /** Transitive-closure labeling oracle shared by `dedup_clusters` (min-
     * label propagation) and `dedup_clusters_star` (large-star/small-star):
@@ -1863,10 +1822,10 @@ object SparkEntry {
     // columnar-format breadth: write customer out as ORC, read it back,
     // aggregate — the second columnar source/sink proven end-to-end under
     // the oracle (which reads the identical rows from parquet). The write
-    // happens once per JVM (orcCustomerFixture) so repeated invocations —
-    // bench passes, plan audits — time the ORC scan, not a rewrite
+    // happens once per session and dir (Sources.fixture) so repeated
+    // invocations — bench passes, plan audits — time the ORC scan
     "src_orc_roundtrip" -> ((s, d) => {
-      val dir = graft.sources.Sources.orcCustomerFixture(s, d)
+      val dir = graft.sources.Sources.fixture(s, d, "customer", "orc")
       graft.sources.Sources.orc(s, dir)
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n"),
@@ -1879,7 +1838,7 @@ object SparkEntry {
     // path) and JSON-lines sink+source, each proven end-to-end under an
     // oracle reading the identical rows from parquet
     "src_csv_roundtrip" -> ((s, d) => {
-      val dir = graft.sources.Sources.csvNationFixture(s, d)
+      val dir = graft.sources.Sources.fixture(s, d, "nation", "csv")
       graft.sources.Sources.csv(s, dir,
           Some(Tables.nation(s, d).schema))
         .groupBy(col("n_regionkey"))
@@ -1887,7 +1846,7 @@ object SparkEntry {
     }),
 
     "src_json_roundtrip" -> ((s, d) => {
-      val dir = graft.sources.Sources.jsonSupplierFixture(s, d)
+      val dir = graft.sources.Sources.fixture(s, d, "supplier", "json")
       // multiLine = false: the fixture is JSON-LINES (writeJson's format);
       // the facade's multiLine default serves the bronze array-file shape
       graft.sources.Sources.json(s, dir, Tables.supplier(s, d).schema,

@@ -162,15 +162,9 @@ class ChessPipeline(spark: SparkSession, root: String, username: String,
       merged.write.mode(SaveMode.Overwrite).parquet(tmp)
       written(tmpRel, merged)
       val staged = readBack(tmpRel)
-      val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
       try staged.write.mode(SaveMode.Overwrite).partitionBy("game_month")
-        .parquet(path(factRel))
+        .option("partitionOverwriteMode", "dynamic").parquet(path(factRel))
       finally {
-        prevMode match {
-          case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-          case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
         val fs = new Path(tmp).getFileSystem(spark.sessionState.newHadoopConf())
         fs.delete(new Path(tmp), true)
       }

@@ -348,70 +348,18 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("rnk").cast("long").as("rnk"))
   }
 
-  /** IVF-flat ANN: partition the corpus by nearest of `nlist` sampled
-    * centroids (broadcast argmin assignment — one narrow pass, no fitting
-    * step beyond the deterministic sample), probe the `nprobe` nearest
-    * centroid cells per query, re-rank exactly.
+  /** IVF index build: the `nlist` centroids for `corpus`. Exposed as its
+    * own entry point so an index can be built (and its cell balance
+    * audited — CellBalanceSpec) separately from querying.
     *
-    * The scale path: corpus assignment is embarrassingly parallel; each
-    * query joins only nprobe/nlist of the corpus through a hash join on
-    * `cell`. Unlike hyperplane LSH, cells follow the data distribution, so
-    * recall holds on clustered real-world embedding corpora.
-    *
-    * Sizing: the centroid matrix rides inside the two native expressions
-    * as ONE reference object each ([[graft.functions.IvfArgmaxCell]] /
-    * IvfTopCells), so plan size and codegen are O(1) in nlist — the old
-    * literal-array ceiling is gone. The knob that still matters is cell
-    * POPULATION: probe cost per query is nprobe x |corpus|/nlist, so a
-    * fixed nlist degrades linearly as the corpus grows. Use
-    * [[suggestNlist]] to derive nlist from the corpus count when the call
-    * site doesn't need a pinned index layout — `ann_ivf`/`ann_ivf_refined`
-    * do exactly that, with the DuckDB oracle computing the same
-    * max(32, N/1024) in its centroid LIMIT subquery, so the re-derivation
-    * stays byte-stable at every scale.
-    * Queries are driver-collected (bounded by `maxQueries`); an oversized
-    * query set should be sharded by the caller.
-    */
-  // memoized centroid sets per (session, canonicalized corpus plan, nlist,
-  // refineSteps): an IVF index is built once and queried many times — the
-  // seed TakeOrdered and each refine pass (a full corpus scan) are INDEX
-  // BUILD cost, not per-query cost, and both are deterministic by
-  // construction (first-nlist seed, fixed-point means, cos6 ties), so a
-  // cache hit returns bit-identical centroids. Keyed by the analyzed
-  // plan's canonicalized OBJECT — lookup is structural plan equality
-  // (QueryPlan equality compares the full tree: HadoopFsRelation's
-  // FileIndex identity, LocalRelation's embedded rows, untruncated
-  // attribute lists), so two different corpus plans can never collide
-  // into each other's centroids. The r13 canonicalized-STRING key could:
-  // plan toString prints only the format name for a file relation (no
-  // path), omits LocalRelation data, and truncates attribute lists past
-  // maxToStringFields — two same-schema corpora from different
-  // directories would have collided into one key (r13 ADVICE). The plan
-  // object is immutable and already computed, and a spurious MISS (two
-  // equal-content relations read as distinct FileIndex objects) merely
-  // rebuilds a deterministic index — [[graft.Tables.read]]'s relation
-  // memo makes same-path reads share one object anyway. A regenerated
-  // table is a new relation memo in [[graft.Tables]] (new FileIndex →
-  // new key); [[graft.Tables.invalidate]] additionally clears this memo
-  // outright via [[invalidateCentroids]] so a refreshed path can never
-  // serve pre-refresh centroids; stopped sessions are pruned on each
-  // miss, mirroring Tables.read's snapshot semantics.
-  private val centroidCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession,
-     org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String),
-    Array[(Long, Seq[Float])]]()
-
-  /** Drop every memoized IVF centroid set — called by
-    * [[graft.Tables.invalidate]] (the REFRESH TABLE analogue): a memo
-    * derived from refreshed inputs must not outlive them.
-    */
-  def invalidateCentroids(): Unit = centroidCache.clear()
-
-  /** IVF index build: the `nlist` centroids for `corpus`, memoized per
-    * (session, canonicalized corpus plan, nlist, refineSteps) — see the
-    * cache notes above. Exposed as its own entry point so an index can be
-    * built (and its cell balance audited — CellBalanceSpec) separately
-    * from querying.
+    * Memoized in [[graft.Tables.memo]] per (session, canonicalized corpus
+    * plan, nlist, refineSteps): an IVF index is built once and queried
+    * many times, and the seed and refine passes are deterministic, so a
+    * hit returns bit-identical centroids. The key is the analyzed plan's
+    * canonicalized OBJECT, compared by structural plan equality (a file
+    * relation's FileIndex, a LocalRelation's rows, untruncated attribute
+    * lists); a plan STRING key would print no path and no local rows, so
+    * two same-schema corpora from different directories would collide.
     *
     * Seed (r15, VERDICT r14 #4): a deterministic HASH-ORDERED sample —
     * order by md5 of the id, not by the id itself. First-nlist-by-vec_id
@@ -437,11 +385,8 @@ object Similarity {
     */
   def ivfCentroids(corpus: DataFrame, nlist: Int,
                    refineSteps: Int): Array[(Long, Seq[Float])] = {
-    val cacheKey = (corpus.sparkSession,
-      corpus.queryExecution.analyzed.canonicalized,
-      s"$nlist/$refineSteps")
-    centroidCache.keySet.removeIf { case (ss, _, _) => ss.sparkContext.isStopped }
-    centroidCache.computeIfAbsent(cacheKey, { _ =>
+    graft.Tables.memo(corpus.sparkSession, None,
+        (corpus.queryExecution.analyzed.canonicalized, s"$nlist/$refineSteps")) {
       var cs: Array[(Long, Seq[Float])] = corpus
         .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(nlist)
         .select(col("vec_id").as("id"), col("embedding").as("e"))
@@ -459,9 +404,33 @@ object Similarity {
         cs = refined.map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1)
       }
       cs
-    })
+    }
   }
 
+  /** IVF-flat ANN: partition the corpus by nearest of `nlist` sampled
+    * centroids (broadcast argmin assignment — one narrow pass, no fitting
+    * step beyond the deterministic sample), probe the `nprobe` nearest
+    * centroid cells per query, re-rank exactly.
+    *
+    * The scale path: corpus assignment is embarrassingly parallel; each
+    * query joins only nprobe/nlist of the corpus through a hash join on
+    * `cell`. Unlike hyperplane LSH, cells follow the data distribution, so
+    * recall holds on clustered real-world embedding corpora.
+    *
+    * Sizing: the centroid matrix rides inside the two native expressions
+    * as ONE reference object each ([[graft.functions.IvfArgmaxCell]] /
+    * IvfTopCells), so plan size and codegen are O(1) in nlist — the old
+    * literal-array ceiling is gone. The knob that still matters is cell
+    * POPULATION: probe cost per query is nprobe x |corpus|/nlist, so a
+    * fixed nlist degrades linearly as the corpus grows. Use
+    * [[suggestNlist]] to derive nlist from the corpus count when the call
+    * site doesn't need a pinned index layout — `ann_ivf`/`ann_ivf_refined`
+    * do exactly that, with the DuckDB oracle computing the same
+    * max(32, N/1024) in its centroid LIMIT subquery, so the re-derivation
+    * stays byte-stable at every scale.
+    * Queries are driver-collected (bounded by `maxQueries`); an oversized
+    * query set should be sharded by the caller.
+    */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int, nlist: Int = 32,
               nprobe: Int = 8, refineSteps: Int = 1,
               maxQueries: Int = 100000): DataFrame = {

@@ -67,12 +67,16 @@ object UniqueKeys {
     * optimizer — the REFRESH TABLE analogue for the constraint catalog.
     */
   def undeclare(pathPrefix: Option[String] = None): Unit = pathPrefix match {
-    case Some(p) =>
-      // path-boundary match: undeclaring /data/foo must not also drop
-      // /data/foobar — only the exact path or true descendants
-      val n = normalize(p).stripSuffix("/")
-      byPath.keySet.removeIf(k => k == n || k.startsWith(n + "/"))
+    case Some(p) => byPath.keySet.removeIf(within(_, p))
     case None => byPath.clear()
+  }
+
+  /** Whether `path` is `dir` or lies under it, on directory boundaries:
+    * `/data/foo` covers `/data/foo/t.parquet` but not `/data/foobar`.
+    */
+  private[graft] def within(path: String, dir: String): Boolean = {
+    val (p, d) = (normalize(path), normalize(dir).stripSuffix("/"))
+    p == d || p.startsWith(d + "/")
   }
 
   /** The path's SINGLE-column unique declarations (compatibility view of

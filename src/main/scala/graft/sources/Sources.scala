@@ -42,22 +42,6 @@ object Sources {
   def writeOrc(df: DataFrame, path: String): Unit =
     df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).orc(path)
 
-  /** Once-per-JVM ORC fixture for the roundtrip query: writes `customer`
-    * as ORC to a deterministic tmp path the first time a given sf dir is
-    * requested, then returns the same path for every later invocation —
-    * so plan audits and repeated bench passes measure the ORC *scan*, not
-    * a fresh write, and no temp directories leak across runs (the path is
-    * stable and overwrite-mode reclaims it on the next JVM).
-    */
-  private val orcFixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  def orcCustomerFixture(spark: SparkSession, sfDir: String): String =
-    orcFixtures.computeIfAbsent(sfDir, { d =>
-      val p = System.getProperty("java.io.tmpdir") + "/graft-orc-fixture" +
-        d.replaceAll("[^a-zA-Z0-9]", "_") + "/customer.orc"
-      writeOrc(graft.Tables.customer(spark, d), p)
-      p
-    })
-
   /** CSV sink (full replace, header row). */
   def writeCsv(df: DataFrame, path: String): Unit =
     df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -71,27 +55,23 @@ object Sources {
   def writeJson(df: DataFrame, path: String): Unit =
     df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).json(path)
 
-  /** Once-per-JVM text-format fixtures for the roundtrip queries — same
-    * lifecycle contract as [[orcCustomerFixture]]: repeated invocations
-    * measure the scan, never a rewrite.
-    */
-  private val csvFixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  def csvNationFixture(spark: SparkSession, sfDir: String): String =
-    csvFixtures.computeIfAbsent(sfDir, { d =>
-      val p = System.getProperty("java.io.tmpdir") + "/graft-csv-fixture" +
-        d.replaceAll("[^a-zA-Z0-9]", "_") + "/nation.csv"
-      writeCsv(graft.Tables.nation(spark, d), p)
-      p
-    })
+  private val sinks: Map[String, (DataFrame, String) => Unit] =
+    Map("orc" -> writeOrc, "csv" -> writeCsv, "json" -> writeJson)
 
-  private val jsonFixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  def jsonSupplierFixture(spark: SparkSession, sfDir: String): String =
-    jsonFixtures.computeIfAbsent(sfDir, { d =>
-      val p = System.getProperty("java.io.tmpdir") + "/graft-json-fixture" +
-        d.replaceAll("[^a-zA-Z0-9]", "_") + "/supplier.json"
-      writeJson(graft.Tables.supplier(spark, d), p)
+  /** The round-trip queries' fixture: `table` of `sfDir` written in
+    * `format` ("orc", "csv" or "json") to a deterministic tmp path, once
+    * per session and dir until [[graft.Tables.invalidate]] — so plan
+    * audits and repeated bench passes measure the scan, not a fresh
+    * write, and no temp directories leak across runs (overwrite mode
+    * reclaims the stable path on the next write).
+    */
+  def fixture(spark: SparkSession, sfDir: String, table: String, format: String): String =
+    graft.Tables.memo(spark, Some(sfDir), s"fixture/$table.$format") {
+      val p = System.getProperty("java.io.tmpdir") + s"/graft-$format-fixture" +
+        sfDir.replaceAll("[^a-zA-Z0-9]", "_") + s"/$table.$format"
+      sinks(format)(graft.Tables.read(spark, sfDir, table), p)
       p
-    })
+    }
 
   /** S6: JDBC table read; `partitionColumn` splits the read into
     * `numPartitions` parallel range queries — without it a warehouse read
