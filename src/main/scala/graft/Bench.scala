@@ -103,9 +103,22 @@ object Bench {
     }
   }
 
-  private def reason(e: Throwable): String =
+  /** Why a query failed: the exception class and its message's first line
+    * (Bench's `failures` and Verify's `failures.json`).
+    */
+  private[graft] def reason(e: Throwable): String =
     e.getClass.getName + ": " +
       Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+
+  /** `s` as a JSON string literal: quote, backslash and every control
+    * char escaped, so builder-authored SQL with a tab or CR still parses.
+    */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => "\\u%04x".format(c.toInt)
+    case c => c.toString
+  } + "\""
 
   /** `passes` timed passes over `queries` in the given order, each
     * followed by `clearCache`, under a census listener that is removed
@@ -211,12 +224,6 @@ object Bench {
     val run = timed(spark, sfDir, benched, passes = 2)
     val kept = run.kept
     val results = kept.map { case (k, r) => k -> r.sec }
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => "\\u%04x".format(c.toInt)
-      case c => c.toString
-    } + "\""
     // fixed-input queries (they read the reference sample, not the sf dir)
     // timed once, reported on their own line and excluded from the
     // sf-scaled total so round-over-round totals stay comparable

@@ -66,9 +66,11 @@ object GraftSession {
       // let AQE re-plan (notably: coalesce post-shuffle partitions of)
       // plans that feed a persisted relation — off by default so cached
       // data keeps a stable output partitioning for downstream reuse, but
-      // the eager persist-count-unpersist lifecycle our operators use
-      // (stratified sampling, LSH dedup, cluster labels) never relies on
-      // that partitioning, and without AQE the cached subtree runs every
+      // nothing this engine persists relies on that partitioning (the
+      // dedup family's hubs, the token encoding, the cluster labelings,
+      // dedupCorpus, contaminationBloom, lshIndex, and the scoped
+      // persists of a2_count_distinct, lm_cross_entropy and
+      // text_edit_distance), and without AQE the cached subtree runs every
       // stage at full shuffle width however tiny the data
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       // trust the sort order of 1-file-per-bucket bucketed layouts: every

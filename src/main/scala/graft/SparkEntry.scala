@@ -239,10 +239,9 @@ object SparkEntry {
     * the raw rows and every answer is a projection of it (n_pairs is its
     * size, n_parts/n_supps are distincts over it), so one in-partition
     * dedup into a persisted intermediate replaces a second full-width
-    * dedup AND the suppkey branch's re-scan of the source. Eager
-    * persist-count-unpersist lifecycle (same pattern as the dedup hub /
-    * stratified sampling): three bounded scalars leave the JVM, the cache
-    * is freed before the 1-row result returns. Measured x1000: 109.3 s
+    * dedup AND the suppkey branch's re-scan of the source. Scoped
+    * persist-count-unpersist lifecycle: three bounded scalars leave the
+    * JVM, the cache is freed before the 1-row result returns. Measured x1000: 109.3 s
     * (reused-exchange 3-branch) -> 62.8 s (DuckDB 42.4 s — 1.48x); sf0.1
     * 0.71 s (was 0.81 s). `smallBytes` pins a path for parity specs.
     */
@@ -886,19 +885,6 @@ object SparkEntry {
        |       FROM hp a JOIN hp b ON a.h31 = b.h31 AND a.doc_id < b.doc_id
        |       GROUP BY a.doc_id, b.doc_id)""".stripMargin
 
-  /** The dedup family's shared subtree: the per-doc 31-bit shingle-hash
-    * arrays (k=5) and the exact-jaccard pair table at the family's lowest
-    * threshold (0.5), both lazily persisted. Spark's CacheManager
-    * substitutes cached plans by CANONICAL equality, so every dedup_*
-    * query that rebuilds these exact plans — in the same session, across
-    * separate `queries(...)` invocations — reads the one cached copy
-    * instead of re-hashing the corpus: the corpus is shingle-hashed once
-    * per session, not once per query (re-`persist` of an already-cached
-    * plan is a no-op; after `clearCache()` the next use re-registers and
-    * re-fills). Pairs at any threshold ≥ 0.5 are a narrow filter over the
-    * shared table, because `jaccardPairs`' threshold only appears in its
-    * final filter.
-    */
   /** The documents scan fanned to session width when the corpus is a
     * single small file: the text-analysis kernels (regexp scans, HOF
     * walks, char n-gram folds) are CPU-bound per-row work, and a
@@ -918,23 +904,31 @@ object SparkEntry {
     else docs
   }
 
-  private def sharedShingleArr(s: SparkSession, d: String): DataFrame =
-    Dedup.docShingleHashes(Tables.documents(s, d), k = 5)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-  /** The unfiltered candidate-pair statistics, one persisted copy per
-    * session: every pair scorer (jaccard at any threshold ≥ the family's
-    * lowest, containment, the source matrix) is a narrow filter over this
-    * table, so the posting self-join runs once per session, not once per
-    * scorer.
+  /** The dedup family's session hubs, each persisted lazily (the first
+    * query that reads it fills it) and memoized per (session, sf dir) in
+    * [[Tables.memoPersisted]]: after `clearCache()` the next use
+    * re-registers and re-fills, and `Tables.invalidate` releases it. They
+    * are the per-doc 31-bit shingle-hash arrays (k=5), so the corpus is
+    * hashed once per session, not once per query; the unfiltered
+    * candidate-pair statistics, of which every pair scorer (jaccard at any
+    * threshold, containment, the source matrix) is a narrow filter, so
+    * the posting self-join runs once per session; and the jaccard pairs
+    * at the family's lowest threshold (0.5), which the CC labelings read.
     */
+  private def sharedShingleArr(s: SparkSession, d: String): DataFrame =
+    Tables.memoPersisted(s, Some(d), "shingleArr")(
+      Dedup.docShingleHashes(Tables.documents(s, d), k = 5)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+
   private def sharedPairStats(s: SparkSession, d: String): DataFrame =
-    Dedup.pairStatsFromArr(sharedShingleArr(s, d))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Tables.memoPersisted(s, Some(d), "pairStats")(
+      Dedup.pairStatsFromArr(sharedShingleArr(s, d))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   private def sharedJaccardPairs(s: SparkSession, d: String): DataFrame =
-    Dedup.jaccardFromStats(sharedPairStats(s, d), threshold = 0.5)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Tables.memoPersisted(s, Some(d), "jaccardPairs")(
+      Dedup.jaccardFromStats(sharedPairStats(s, d), threshold = 0.5)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** `text_token_ids` and `pack_materialize` encode the same corpus
     * against the same top-24 vocab; the vocab build ends in a driver-side
@@ -971,25 +965,27 @@ object SparkEntry {
   private val ccDriverDocBytes: Long = 64L << 20
   private val CcDriverMaxEdges: Int = 2000000
 
-  private def ccLabels(s: SparkSession, d: String,
-                       distributed: DataFrame => DataFrame): DataFrame = {
-    val pairs = sharedJaccardPairs(s, d)
-    if (operators.AdaptiveGate.isSmall(Tables.documents(s, d), ccDriverDocBytes))
-      Dedup.duplicateClustersDriver(pairs, CcDriverMaxEdges)
-        .getOrElse(distributed(pairs))
-    else distributed(pairs)
-  }
-
-  /** dedup_clusters / dedup_keep share ONE connected-components labeling
-    * per (session, sf dir). The CC loop's output rides on localCheckpoint
-    * lineage, which CacheManager plan-matching cannot identify across
-    * invocations, so the persisted handle is memoized in
+  /** The connected-components labeling `what` of the family's jaccard
+    * pairs, one per (session, sf dir): dedup_clusters, dedup_keep and
+    * dedup_split_by_cluster share the min-label one; dedup_clusters_star
+    * reads the large-star one. The CC loops' output rides on
+    * localCheckpoint lineage, which CacheManager plan-matching cannot
+    * identify across invocations, so the persisted handle is memoized in
     * [[Tables.memoPersisted]]; the driver path's labeling is not
     * persisted, so it is rebuilt on every call.
     */
+  private def ccLabels(s: SparkSession, d: String, what: String,
+                       distributed: DataFrame => DataFrame): DataFrame =
+    Tables.memoPersisted(s, Some(d), what) {
+      val pairs = sharedJaccardPairs(s, d)
+      if (operators.AdaptiveGate.isSmall(Tables.documents(s, d), ccDriverDocBytes))
+        Dedup.duplicateClustersDriver(pairs, CcDriverMaxEdges)
+          .getOrElse(distributed(pairs))
+      else distributed(pairs)
+    }
+
   private def sharedClusters(s: SparkSession, d: String): DataFrame =
-    Tables.memoPersisted(s, Some(d), "clusters")(
-      ccLabels(s, d, p => Dedup.duplicateClusters(p)))
+    ccLabels(s, d, "clusters", p => Dedup.duplicateClusters(p))
 
   /** Transitive-closure labeling oracle shared by `dedup_clusters` (min-
     * label propagation) and `dedup_clusters_star` (large-star/small-star):
@@ -1042,15 +1038,16 @@ object SparkEntry {
     Set("chess_e2e", "chess_silver", "chess_gold", "chess_dim_openings")
 
   /** Every entry builds its DataFrame lazily — construction is job-free —
-    * with the documented exceptions that run bounded Spark jobs at
-    * construction time: `q13_custdist`'s large path (see [[q13Custdist]]'s
-    * eager-materialization contract) and the connected-components family
-    * (`dedup_clusters`/`dedup_clusters_star`/`dedup_keep`/
-    * `dedup_split_by_cluster` via [[ccLabels]]/[[sharedClusters]]), whose
-    * iterative fixpoint loops (or gated driver union-find) are inherently
-    * evaluation, not plan construction.
+    * except those SparkEntrySpec declares, one reason each: bounded driver
+    * collects (query vectors, IVF centroids, the token vocab), row counts
+    * that size a plan, layouts and fixtures written once per input, the
+    * connected-components family ([[ccLabels]]), whose fixpoint loops or
+    * driver union-find are evaluation rather than plan construction, and
+    * `q13_custdist`'s large path (see [[q13Custdist]]). Persisted results
+    * that outlive a query are [[Tables.memoPersisted]] entries, released
+    * by `Tables.invalidate`. Built once; every lookup shares the map.
     */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // A1/A4 + F: grouped aggregation with exact and rounded measures
     "a1_groupby_agg" -> ((s, d) => {
@@ -1884,7 +1881,7 @@ object SparkEntry {
     // gate as dedup_clusters: below [[ccDriverDocBytes]] both labelers'
     // iterative loops lose to one bounded union-find job
     "dedup_clusters_star" -> ((s, d) =>
-      ccLabels(s, d, p => Dedup.duplicateClustersStar(p))),
+      ccLabels(s, d, "clustersStar", p => Dedup.duplicateClustersStar(p))),
 
     // the dedup endgame: pairs -> clusters -> one survivor per cluster
     // (longest text, ties to min doc_id), singletons pass through
@@ -2590,8 +2587,7 @@ object SparkEntry {
 
     // incremental LSH dedup: corpus (doc_id % 10 != 0) is indexed once;
     // the new batch (doc_id % 10 == 0) probes the index — per-batch cost
-    // O(|batch| + collisions), never a corpus re-hash. Result persisted
-    // eagerly so the index can be released before returning.
+    // O(|batch| + collisions), never a corpus re-hash.
     "dedup_incremental" -> ((s, d) => {
       // corpus and batch sides are narrow filters over the family's ONE
       // shared hash-array table (docShingleHashes is per-row, so
@@ -2599,12 +2595,9 @@ object SparkEntry {
       val arr = sharedShingleArr(s, d)
       val arrIdx = arr.filter(col("doc_id") % 10 =!= 0)
       val bandIdx = Dedup.bandIndexFromArr(arrIdx, numPerm = 16, bands = 4)
-      val out = Dedup.nearDupsAgainstIndexArr(
-          arr.filter(col("doc_id") % 10 === 0), arrIdx, bandIdx,
-          numPerm = 16, bands = 4, threshold = 0.5)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.count()
-      out
+      Dedup.nearDupsAgainstIndexArr(
+        arr.filter(col("doc_id") % 10 === 0), arrIdx, bandIdx,
+        numPerm = 16, bands = 4, threshold = 0.5)
     }),
 
     // the streaming near-dup quarantine's per-batch ROUTING decision as a

@@ -20,17 +20,19 @@ import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
   *    gives; no data is cached, plans stay lazy;
   *  - the row count per table ([[rowCount]]), for operators whose plan is
   *    a function of corpus size (IVF's nlist follows |embeddings|);
-  *  - handles to results the engine persists or writes once per input:
-  *    the token encoding and connected-components labeling shared by
-  *    several queries, the bucketed join, and the ORC/CSV/JSON round-trip
-  *    fixtures (their vocab collect, localCheckpoint lineage or file write
-  *    is invisible to CacheManager plan matching);
+  *  - handles to results the engine persists or writes once per input
+  *    and shares across queries: the dedup family's hubs (shingle-hash
+  *    arrays, pair statistics, jaccard pairs), the token encoding, the
+  *    connected-components labelings ([[memoPersisted]]), the bucketed
+  *    join and the ORC/CSV/JSON round-trip fixtures. Every cache that
+  *    outlives the query that built it is one of these entries;
   *  - the IVF centroid sets, keyed by their corpus plan and so by no dir.
   *
   * Like a registered view, every entry snapshots its inputs: files added
   * to, removed from or rewritten in a dir are invisible until
   * [[invalidate]] (the analogue of REFRESH TABLE) drops every entry
-  * derived from tables under that dir, plus every entry with no dir. A
+  * derived from tables under that dir, plus every entry with no dir, and
+  * unpersists the persisted results among them. A
   * handle to a persisted result is also rebuilt when its cache entry is
   * gone (`clearCache()`), and entries of stopped sessions are swept on a
   * miss, so short-lived sessions don't pin their contexts for the JVM
@@ -43,9 +45,14 @@ object Tables {
   /** Filled once, by its first caller, outside the map's lock: builds look
     * up other entries (rowCount reads its relation, the encoding reads
     * `documents`), which `computeIfAbsent` on the same map forbids.
+    * A `persisted` cell holds a handle to a persisted result, which
+    * [[release]] unpersists once the cell has been built.
     */
-  private final class Cell(build: () => AnyRef) {
-    lazy val value: AnyRef = build()
+  private final class Cell(build: () => AnyRef, persisted: Boolean) {
+    @volatile private var built = false
+    lazy val value: AnyRef = { val v = build(); built = true; v }
+    def release(): Unit =
+      if (persisted && built) value.asInstanceOf[DataFrame].unpersist(blocking = false)
   }
 
   private val entries = new java.util.concurrent.ConcurrentHashMap[Key, Cell]()
@@ -55,17 +62,18 @@ object Tables {
     */
   private[graft] def memo[T <: AnyRef](s: SparkSession, dir: Option[String], what: Any)
                                       (build: => T): T =
-    lookup[T](Key(s, dir, what), _ => true, () => build)
+    lookup[T](Key(s, dir, what), _ => true, () => build, persisted = false)
 
   /** [[memo]] for a handle to a persisted result: rebuilt once the cache
     * entry it wraps is gone (`clearCache()`, or a result that was never
-    * persisted).
+    * persisted), and unpersisted by [[invalidate]].
     */
   private[graft] def memoPersisted(s: SparkSession, dir: Option[String], what: Any)
                                   (build: => DataFrame): DataFrame =
-    lookup[DataFrame](Key(s, dir, what), GraftShims.isCached, () => build)
+    lookup[DataFrame](Key(s, dir, what), GraftShims.isCached, () => build, persisted = true)
 
-  private def lookup[T <: AnyRef](key: Key, valid: T => Boolean, build: () => T): T = {
+  private def lookup[T <: AnyRef](key: Key, valid: T => Boolean, build: () => T,
+                                  persisted: Boolean): T = {
     val hit = entries.get(key)
     if (hit != null) {
       val v = hit.value.asInstanceOf[T]
@@ -73,7 +81,7 @@ object Tables {
       entries.remove(key, hit)
     }
     entries.keySet.removeIf(_.session.sparkContext.isStopped)
-    val fresh = new Cell(build)
+    val fresh = new Cell(build, persisted)
     val prior = entries.putIfAbsent(key, fresh)
     (if (prior == null) fresh else prior).value.asInstanceOf[T]
   }
@@ -107,15 +115,19 @@ object Tables {
   /** REFRESH TABLE for the memo: drop every entry derived from tables
     * under `dir` (a directory-boundary match: `/data/a` does not cover
     * `/data/ab`) plus every entry with no dir; with no `dir`, drop every
-    * entry. Also drops the matching [[graft.plans.UniqueKeys]]
-    * declarations: overwriting a declared path with PK-violating data
-    * must invalidate the constraint too, or the optimizer would keep
-    * eliminating joins from a promise the files no longer keep (the next
-    * read re-declares).
+    * entry. A dropped handle to a persisted result is unpersisted; a cell
+    * nobody built is dropped without building it. Also drops the matching
+    * [[graft.plans.UniqueKeys]] declarations: overwriting a declared path
+    * with PK-violating data must invalidate the constraint too, or the
+    * optimizer would keep eliminating joins from a promise the files no
+    * longer keep (the next read re-declares).
     */
   def invalidate(dir: Option[String] = None): Unit = {
-    entries.keySet.removeIf(k =>
-      dir.forall(d => k.dir.forall(graft.plans.UniqueKeys.within(_, d))))
+    entries.forEach { (k, cell) =>
+      if (dir.forall(d => k.dir.forall(graft.plans.UniqueKeys.within(_, d))) &&
+          entries.remove(k, cell) && !k.session.sparkContext.isStopped)
+        cell.release()
+    }
     graft.plans.UniqueKeys.undeclare(dir)
   }
 

@@ -34,28 +34,13 @@ object Verify {
         None
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        val firstLine = Option(e.getMessage)
-          .flatMap(_.linesIterator.nextOption()).getOrElse("")
-        Some(name -> s"${e.getClass.getName}: $firstLine")
+        Some(name -> Bench.reason(e))
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    Files.writeString(Paths.get(s"$outDir/failures.json"), failures
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+    def json(m: Iterable[(String, String)]): String =
+      m.map { case (k, v) => s"${Bench.jstr(k)}: ${Bench.jstr(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/failures.json"), json(failures))
     System.err.println(s"[verify] dumped ${selected.size - failures.size}/" +
       s"${selected.size}, failed ${failures.size}")
     spark.stop()

@@ -662,7 +662,7 @@ object TextOps {
     // Long count first: n*(n-1)/2 overflows Int from n = 65536, silently
     // sizing a negative/wrapped array. A single row cannot sensibly hold
     // more pairs than this anyway — callers must route bigger id lists
-    // through a distributed self-join (see Dedup.lshCandidatesLazy).
+    // through a distributed self-join (see Dedup.lshCandidates).
     val nPairs = n.toLong * (n - 1) / 2
     require(nPairs <= 4194304L,
       s"array_pairs: $n ids expand to $nPairs pairs in ONE row — cap the " +

@@ -32,6 +32,15 @@ import org.apache.spark.sql.functions._
   *    which would route every posting of the hot key through one task's sort
   *    before the filter could drop it (the guard becoming the bottleneck it
   *    guards against).
+  *
+  * Lifecycle: an operator returns a lazy plan and caches nothing; the
+  * caller's one action runs it, and a caller that shares a subtree
+  * across queries persists and releases it (SparkEntry keeps the family's
+  * hubs as [[graft.Tables.memoPersisted]] entries). The exceptions return
+  * a filled, persisted result that the caller releases: the
+  * connected-components labelers and [[dedupCorpus]], which free the
+  * checkpoints or labeling they pinned before returning, and
+  * [[lshIndex]], an index built to outlive its first probe.
   */
 object Dedup {
 
@@ -212,10 +221,10 @@ object Dedup {
     df.join(broadcast(hot), cond, "left_anti")
   }
 
-  /** Candidate near-dup pairs: docs sharing at least one LSH band bucket.
-    * Lazy — nothing is materialized or cached; a caller composing a larger
-    * pipeline pays the whole thing inside its one final action (the
-    * `cleanup` thunk is retained for signature stability and is a no-op).
+  /** Candidate near-dup pairs over a [[docShingleHashes]] table: docs
+    * sharing at least one LSH band bucket. Lazy — nothing is materialized
+    * or cached; a caller composing a larger pipeline pays the whole thing
+    * inside its one final action.
     *
     * `maxBucket` is the band-bucket df-cut: pair expansion is quadratic in
     * the largest bucket, so one degenerate bucket (a flood of
@@ -226,9 +235,8 @@ object Dedup {
     * before expansion, bounding candidate count by bands * maxBucket^2 / 2
     * regardless of corpus skew.
     */
-  private[graft] def lshCandidatesLazy(
-      arr: DataFrame, numPerm: Int, bands: Int,
-      maxBucket: Long = DefaultMaxBucket): (DataFrame, () => Unit) = {
+  def lshCandidates(arr: DataFrame, numPerm: Int, bands: Int,
+                    maxBucket: Long = DefaultMaxBucket): DataFrame = {
     // one hash shuffle on (band, bh) gathers each bucket's doc ids as a
     // list; the df-cut is then a plain size filter; pairs stream out of a
     // double explode (first Generate: one row per id, still carrying the
@@ -252,26 +260,11 @@ object Dedup {
     val buckets = bandTable.groupBy(col("band"), col("bh"))
       .agg(collect_list(col("doc_id")).as("ids"))
       .filter(size(col("ids")) >= 2 && size(col("ids")) <= maxBucket)
-    val out = buckets
+    buckets
       .select(col("ids"), explode(col("ids")).as("doc_a"))
       .select(col("doc_a"), explode(col("ids")).as("doc_b"))
       .filter(col("doc_a") < col("doc_b"))
       .distinct()
-    (out, () => ())
-  }
-
-  /** Eager standalone variant of [[lshCandidatesLazy]] over a document
-    * table. Returns the persisted (CacheManager-registered) candidate set;
-    * the caller releases it with `unpersist()`.
-    */
-  def lshCandidates(docs: DataFrame, k: Int, numPerm: Int, bands: Int,
-                    maxBucket: Long = DefaultMaxBucket): DataFrame = {
-    val arr = docShingleHashes(docs, k)
-    val (cand, cleanup) = lshCandidatesLazy(arr, numPerm, bands, maxBucket)
-    val out = cand.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    cleanup()
-    out
   }
 
   /** Exact Jaccard of candidate pairs against the per-doc hashed shingle
@@ -453,43 +446,22 @@ object Dedup {
 
   /** Full MinHash-LSH near-dup pipeline: LSH candidates, then exact Jaccard
     * verification of candidates only (the scale path: verification cost is
-    * proportional to candidates, not to n^2).
-    *
-    * Lifecycle: ONE materializing action fills every internal cache (the
-    * per-doc array table and the band table), the result is computed
-    * eagerly, persisted (CacheManager-registered, so `unpersist()`/
-    * `spark.catalog.clearCache()` releases it), and every intermediate is
-    * unpersisted before returning. Repeated invocations in a long-lived
-    * session therefore hold at most the (small) result.
+    * proportional to candidates, not to n^2). Lazy and persist-free, like
+    * [[jaccardPairs]]: the caller's one action runs it.
     */
   def minhashLshDedup(docs: DataFrame, k: Int, numPerm: Int, bands: Int,
-                      threshold: Double, maxBucket: Long = DefaultMaxBucket): DataFrame = {
-    // the array table feeds the signature/band pipeline and both verify
-    // sides — materialize it once. Hashing runs in the scan stage
-    // (file-split parallel at scale; see jaccardPairs) — the persist then
-    // caches compact hash arrays.
-    val arr = docShingleHashes(docs, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val result = minhashLshDedupFromArr(arr, numPerm, bands, threshold, maxBucket)
-    arr.unpersist(blocking = false)
-    result
-  }
+                      threshold: Double, maxBucket: Long = DefaultMaxBucket): DataFrame =
+    minhashLshDedupFromArr(docShingleHashes(docs, k), numPerm, bands, threshold, maxBucket)
 
-  /** [[minhashLshDedup]] over a pre-built (caller-managed, ideally
-    * persisted) [[docShingleHashes]] table — see [[jaccardPairsFromArr]]
-    * for the family-sharing rationale. The result is eager and
-    * CacheManager-registered; `arr`'s lifecycle stays with the caller.
+  /** [[minhashLshDedup]] over a pre-built [[docShingleHashes]] table (a
+    * caller may share one persisted table across the family — see
+    * [[jaccardPairsFromArr]]). Lazy; `arr`'s lifecycle stays with the
+    * caller.
     */
   def minhashLshDedupFromArr(arr: DataFrame, numPerm: Int, bands: Int,
                              threshold: Double,
-                             maxBucket: Long = DefaultMaxBucket): DataFrame = {
-    val (cand, candCleanup) = lshCandidatesLazy(arr, numPerm, bands, maxBucket)
-    val result = verifyPairs(cand, arr, threshold)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    result.count() // the one action: every upstream cache fills inside it
-    candCleanup()
-    result
-  }
+                             maxBucket: Long = DefaultMaxBucket): DataFrame =
+    verifyPairs(lshCandidates(arr, numPerm, bands, maxBucket), arr, threshold)
 
   /** Pre-built LSH index of a corpus, reusable across probe batches: the
     * per-doc hashed shingle arrays and the gathered band buckets, both
@@ -500,28 +472,18 @@ object Dedup {
     * O(|batch| + collisions), not O(|corpus|)).
     *
     * Buckets larger than `maxBucket` are dropped at index build (same
-    * df-cut semantics as [[lshCandidatesLazy]]: a bucket holding a large
+    * df-cut semantics as [[lshCandidates]]: a bucket holding a large
     * fraction of the corpus is indistinguishable from chance and only
-    * fans out probe joins).
-    */
-  /** `eager = false` skips the materializing action: the caches are still
-    * CacheManager-registered and fill inside the FIRST probe's action —
-    * right for a build-probe-release composition that runs exactly once
-    * (one job instead of two); keep the eager default when the index
-    * outlives its first probe, so later probes never race a cold cache.
+    * fans out probe joins). The index outlives its first probe, so it is
+    * filled before returning: later probes never race a cold cache.
     */
   def lshIndex(corpus: DataFrame, k: Int, numPerm: Int, bands: Int,
-               maxBucket: Long = DefaultMaxBucket,
-               eager: Boolean = true): (DataFrame, DataFrame) = {
+               maxBucket: Long = DefaultMaxBucket): (DataFrame, DataFrame) = {
     val arr = docShingleHashes(corpus, k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bandIdx = lshBands(minhashSignatures(arr, numPerm), numPerm, bands)
-      .groupBy(col("band"), col("bh"))
-      .agg(collect_list(col("doc_id")).as("ids"))
-      .filter(size(col("ids")) <= maxBucket)
+    val bandIdx = bandIndexFromArr(arr, numPerm, bands, maxBucket)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (eager)
-      bandIdx.count() // one action fills BOTH caches (bandIdx reads through arr)
+    bandIdx.count() // one action fills BOTH caches (bandIdx reads through arr)
     (arr, bandIdx)
   }
 
@@ -895,13 +857,16 @@ object Dedup {
   /** The user-facing endgame of corpus dedup: resolve near-dup pairs to
     * clusters, keep ONE representative per cluster (longest text, ties to
     * the smallest doc_id), pass singleton docs through untouched, and
-    * return the surviving rows with their cluster id and size. Lifecycle
-    * matches [[minhashLshDedup]]: eager, CacheManager-registered result,
-    * intermediates released before returning.
+    * return the surviving rows with their cluster id and size. The
+    * labeling it pins is freed before returning, so the result is
+    * persisted and filled first; the caller releases it with
+    * `unpersist()` / `clearCache()`.
     */
   def dedupCorpus(docs: DataFrame, pairs: DataFrame): DataFrame = {
     val labels = duplicateClusters(pairs) // persisted by contract
     val result = keepBestPerCluster(docs, labels)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    result.count()
     labels.unpersist(blocking = false)
     result
   }
@@ -909,23 +874,20 @@ object Dedup {
   /** The keep-one endgame over a PRECOMPUTED cluster labeling (the
     * [[duplicateClusters]] output, or any (doc_id, component) table) —
     * lets a caller that already holds a persisted labeling (e.g. one
-    * shared across several queries) skip re-running the CC loop. `labels`'
-    * lifecycle stays with the caller.
+    * shared across several queries) skip re-running the CC loop. Lazy;
+    * `labels`' lifecycle stays with the caller.
     */
   def keepBestPerCluster(docs: DataFrame, labels: DataFrame): DataFrame = {
     val labeled = docs.join(labels, Seq("doc_id"), "left")
       .withColumn("component", coalesce(col("component"), col("doc_id")))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("component")
       .orderBy(desc("len"), col("doc_id"))
-    val result = labeled.withColumn("len", length(col("text")))
+    labeled.withColumn("len", length(col("text")))
       .withColumn("rn", row_number().over(w))
       .withColumn("n_in_cluster", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("component")))
       .filter(col("rn") === 1)
       .select((docs.columns.map(col) :+ col("component") :+ col("n_in_cluster")): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    result
   }
 
   /** Embedding-cosine near-duplicate pairs above `threshold`, restricted to

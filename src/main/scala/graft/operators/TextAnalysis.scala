@@ -348,6 +348,11 @@ object TextAnalysis {
     * is invisible to callers. Pass `smallBytes = 0` to pin the bloom path
     * (specs; corpora whose stats the optimizer cannot bound are already
     * treated as large).
+    *
+    * Lifecycle: the exact path is a lazy plan. The bloom path pins the
+    * eval shingle set and frees it before returning, so its result comes
+    * back persisted and filled; the caller releases it with
+    * `unpersist()` / `clearCache()`.
     */
   def contaminationBloom(train: DataFrame, eval: DataFrame, k: Int,
                          smallBytes: Long = 64L << 20): DataFrame = {
@@ -357,9 +362,8 @@ object TextAnalysis {
     val trainSh = Dedup.shingleTable(train, k)
     // the eval shingle set is read three times (sizing count, bloom build,
     // exact-verify join) — persist it so the eval corpus is shingled and
-    // distinct-shuffled ONCE, not per use. Lifecycle matches
-    // minhashLshDedup: eager CacheManager-registered result, intermediates
-    // released before returning.
+    // distinct-shuffled ONCE, not per use; released before returning,
+    // so the result is persisted and filled first.
     val evalSh = Dedup.shingleTable(eval, k).select(col("s")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {

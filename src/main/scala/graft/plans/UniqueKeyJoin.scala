@@ -26,9 +26,9 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * declarations are keyed by the scan's file-system path (the identity
   * [[graft.Tables]] hands out), and [[EliminateUniqueKeyLeftJoin]]
   * consumes them inside the operator-optimization fixed point — nested
-  * star joins unwrap outside-in, one probe per iteration. Disable with
-  * `spark.graft.eliminateUniqueKeyJoins=false` (the parity specs do, to
-  * force the physical join).
+  * star joins unwrap outside-in, one probe per iteration. Like any
+  * optimizer rule it can be listed in `spark.sql.optimizer.excludedRules`
+  * (the parity specs do, to force the physical join).
   */
 object UniqueKeys {
   /** normalized path (scheme-stripped URI path) -> declared unique KEYS,
@@ -88,15 +88,6 @@ object UniqueKeys {
   /** Every declared unique key (column-name set) for the table at `path`. */
   def keysFor(path: String): Set[Set[String]] =
     byPath.getOrDefault(normalize(path), Set.empty)
-
-  /** Accepted kill-switch spellings (see [[EliminateUniqueKeyLeftJoin]]). */
-  private[plans] val FalsySpellings = Set("false", "0", "off", "no")
-  private[plans] val TruthySpellings = Set("true", "1", "on", "yes")
-  /** Conf values already warned about — bounds the log to one line per
-    * distinct misspelling per JVM, not one per optimized query.
-    */
-  private[plans] val warnedConfValues =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Unique KEYS of `plan`'s output — each returned [[AttributeSet]] is a
     * set of output attributes that are unique TOGETHER — traced to scan
@@ -190,22 +181,7 @@ object UniqueKeys {
   * RIGHT OUTER is the mirror. See [[UniqueKeys]].
   */
 object EliminateUniqueKeyLeftJoin extends Rule[LogicalPlan] with PredicateHelper {
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    // lenient parse: a malformed conf value must not detonate inside the
-    // optimizer (which would fail every query in the session). All common
-    // falsy spellings disable the rule; anything unrecognized keeps the
-    // default-on behavior but WARNS (once per distinct value) — a user who
-    // typo'd their kill-switch must not silently get rewritten plans
-    val raw = conf.getConfString("spark.graft.eliminateUniqueKeyJoins", "true")
-    val v = raw.trim.toLowerCase(java.util.Locale.ROOT)
-    val off = UniqueKeys.FalsySpellings.contains(v)
-    if (!off && !UniqueKeys.TruthySpellings.contains(v) &&
-        UniqueKeys.warnedConfValues.add(raw)) {
-      logWarning(s"spark.graft.eliminateUniqueKeyJoins=$raw is not a " +
-        "recognized boolean (true/false/1/0/on/off/yes/no); join " +
-        "elimination stays ENABLED")
-    }
-    if (off) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       case p @ Project(projList, j: Join) =>
         preservedSide(j, AttributeSet(projList.flatMap(_.references)))
@@ -214,7 +190,6 @@ object EliminateUniqueKeyLeftJoin extends Rule[LogicalPlan] with PredicateHelper
         preservedSide(j, AttributeSet((gExprs ++ aExprs).flatMap(_.references)))
           .map(side => a.copy(child = side)).getOrElse(a)
     }
-  }
 
   /** The join's preserved side, when `refs` read only that side and the
     * other side's key is declared unique under the join condition.

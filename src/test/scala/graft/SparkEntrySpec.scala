@@ -18,9 +18,79 @@ class SparkEntrySpec extends AnyFunSuite with Matchers with SparkFixture {
     missing shouldBe empty
   }
 
+  /** The queries whose DataFrame construction submits Spark jobs at
+    * sf0.001, each with the reason. Every other entry builds a lazy plan.
+    */
+  private val constructionJobs: Map[String, String] = {
+    val cc = "connected-components labeling (bounded driver union-find or the iterative loop)"
+    val queryCollect = "bounded collect of the query vectors"
+    val ivf = "embeddings rowCount sizes nlist, then bounded centroid collects"
+    val vocab = "token encoding's bounded top-24 vocab collect"
+    val fixture = "writes its round-trip fixture once per input"
+    Map(
+      "ann_bruteforce" -> queryCollect,
+      "ann_lsh" -> queryCollect,
+      "ann_ivf" -> ivf,
+      "ann_ivf_refined" -> ivf,
+      "dedup_semantic" -> (ivf + " and the bounded hot-cell guard"),
+      "dedup_clusters" -> cc,
+      "dedup_clusters_star" -> cc,
+      "dedup_keep" -> cc,
+      "dedup_split_by_cluster" -> cc,
+      "layout_bucketed_join" -> "writes its bucketed layout once per input",
+      "pack_materialize" -> vocab,
+      "text_token_ids" -> vocab,
+      "sample_mix" -> "bounded collect of the per-group counts",
+      "src_csv_roundtrip" -> fixture,
+      "src_json_roundtrip" -> fixture,
+      "src_orc_roundtrip" -> fixture)
+  }
+
+  private val ConstructTag = "graft.spec.construct"
+
+  /** `body`'s result and the number of Spark jobs submitted while it ran. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(ConstructTag) != null))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(ConstructTag, "on")
+    try {
+      val out = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (out, jobs.get)
+    } finally {
+      sc.setLocalProperty(ConstructTag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  // each query starts from an empty memo, so the jobs its construction
+  // submits do not depend on which query ran before it. The relations are
+  // resolved before counting (parquet schema inference runs a job per
+  // table). After the action, Tables.invalidate must release everything
+  // the query left persisted
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"query $name executes at sf0.001") {
-      noException should be thrownBy fn(spark, sf0001).count()
+      val sc = spark.sparkContext
+      Tables.invalidate(Some(sf0001))
+      Seq("region", "nation", "customer", "supplier", "part", "orders",
+        "lineitem", "events", "documents", "embeddings")
+        .foreach(Tables.read(spark, sf0001, _))
+      val persisted = sc.getPersistentRDDs.size
+      val (df, jobs) = jobsDuring(fn(spark, sf0001))
+      withClue(s"$jobs jobs while building the DataFrame: ") {
+        (jobs > 0) shouldBe constructionJobs.contains(name)
+      }
+      df.count()
+      Tables.invalidate(Some(sf0001))
+      withClue("persisted RDDs after the action and invalidate: ") {
+        sc.getPersistentRDDs.size shouldBe persisted
+      }
     }
   }
 
@@ -167,12 +237,11 @@ class SparkEntrySpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("j1_star_join: eliminated plan agrees with the physical-join plan (rule off)") {
     val eliminated = SparkEntry.queries("j1_star_join")(spark, sf0001)
-    val joined = try {
-      spark.conf.set("spark.graft.eliminateUniqueKeyJoins", "false")
+    val joined = withoutJoinElimination {
       val df = SparkEntry.queries("j1_star_join")(spark, sf0001)
       df.queryExecution.executedPlan.toString should include("Join")
       df.collect()
-    } finally spark.conf.unset("spark.graft.eliminateUniqueKeyJoins")
+    }
     eliminated.collect().sortBy(_.toString).map(_.toString) shouldBe
       joined.sortBy(_.toString).map(_.toString)
   }

@@ -20,4 +20,17 @@ object SparkFixture {
 trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
   lazy val spark: SparkSession = SparkFixture.spark
   lazy val sf0001 = "/root/testdata/sf0.001"
+
+  /** Runs `body` with [[graft.plans.EliminateUniqueKeyLeftJoin]] added to
+    * Spark's `spark.sql.optimizer.excludedRules` (after the rules the
+    * session already excludes), so plans keep their physical joins; the
+    * prior value is restored afterwards.
+    */
+  def withoutJoinElimination[T](body: => T): T = {
+    val key = "spark.sql.optimizer.excludedRules"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key,
+      (prior.toSeq :+ graft.plans.EliminateUniqueKeyLeftJoin.ruleName).mkString(","))
+    try body finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

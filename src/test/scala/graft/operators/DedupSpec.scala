@@ -80,18 +80,18 @@ class DedupSpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("lshCandidates band df-cut: generous cap is a no-op, tight cap bounds degenerate buckets") {
-    val uncapped = Dedup.lshCandidates(docs, 3, 16, 8, maxBucket = Long.MaxValue)
-      .as[(Long, Long)].collect().toSet
-    val generous = Dedup.lshCandidates(docs, 3, 16, 8, maxBucket = 1000L)
-      .as[(Long, Long)].collect().toSet
+    def cand(d: org.apache.spark.sql.DataFrame, maxBucket: Long) =
+      Dedup.lshCandidates(Dedup.docShingleHashes(d, 3), 16, 8, maxBucket)
+    val uncapped = cand(docs, Long.MaxValue).as[(Long, Long)].collect().toSet
+    val generous = cand(docs, 1000L).as[(Long, Long)].collect().toSet
     generous shouldBe uncapped // cap above any real bucket changes nothing
     // degenerate corpus: 100 identical docs -> every band puts all 100 in one
     // bucket -> uncapped candidate count is 100*99/2; a df-cut drops the
     // bucket entirely (it carries no near-dup signal), bounding the join
     val flood = (1L to 100L).map(i => (i, "same boilerplate text everywhere"))
       .toDF("doc_id", "text")
-    Dedup.lshCandidates(flood, 3, 16, 8, maxBucket = Long.MaxValue).count() shouldBe 4950L
-    Dedup.lshCandidates(flood, 3, 16, 8, maxBucket = 10L).count() shouldBe 0L
+    cand(flood, Long.MaxValue).count() shouldBe 4950L
+    cand(flood, 10L).count() shouldBe 0L
   }
 
   test("dropOverCapKeys removes exactly the rows of over-cap keys") {
@@ -196,13 +196,10 @@ class DedupSpec extends AnyFunSuite with Matchers with SparkFixture {
       pairs.count()
       val clusters = Dedup.duplicateClusters(pairs)
       clusters.count()
-      val jp = Dedup.jaccardPairs(docs, k = 3, threshold = 0.4)
-      jp.count()
-      // results are CacheManager-registered by contract; release them the
-      // public way (a bench/ETL loop calls clearCache between queries)
-      pairs.unpersist(blocking = true)
+      Dedup.jaccardPairs(docs, k = 3, threshold = 0.4).count()
+      // the pair operators are lazy plans with nothing to release; the CC
+      // labeling comes back persisted, and the caller releases it
       clusters.unpersist(blocking = true)
-      jp.unpersist(blocking = true)
       // nothing else — no shingle cache, no bands cache, no localCheckpoint
       // blocks — may survive the call
       sc.getPersistentRDDs.size shouldBe baseline

@@ -117,7 +117,7 @@ class SamplingSpec extends AnyFunSuite with Matchers with SparkFixture {
     (1 to 2).foreach { _ =>
       val out = Sampling.stratified(orders, "o_orderstatus", "o_orderkey", 10)
       out.count()
-      out.unpersist(blocking = true) // CacheManager-registered by contract
+      out.unpersist(blocking = true) // a lazy plan: releasing it is a no-op
       sc.getPersistentRDDs.size shouldBe baseline // survivor cache released internally
     }
   }

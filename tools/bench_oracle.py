@@ -4,29 +4,24 @@ the Spark bench reads, and emit per-query Spark/DuckDB ratios.
 
 The reference publishes no performance numbers (BASELINE.md), so the only
 reproducible baseline is the oracle engine itself executing the identical
-semantics on identical data. Run after a bench:
+semantics on identical data. Run after a bench, on the full per-query
+file graft.Bench writes (SPARK_GRAFT_FULL_OUT, BENCH_FULL.json by default;
+its compact stdout line carries only the slowest queries):
 
-  sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/verify_sf001"
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt -batch "runMain graft.Bench" \
-      2>&1 | grep '"metric"' | sed 's/^\[info\] //' > /tmp/bench.json
-  python3 tools/bench_oracle.py /root/testdata/sf0.1 /tmp/verify_sf001 \
+  sbt -batch "runMain graft.Verify <sf0.01 dir> /tmp/verify_sf001"
+  SPARK_GRAFT_SF_DIR=<sf0.1 dir> SPARK_GRAFT_FULL_OUT=/tmp/bench.json \
+      sbt -batch "runMain graft.Bench"
+  python3 tools/bench_oracle.py <sf0.1 dir> /tmp/verify_sf001 \
       /tmp/bench.json BENCH_ORACLE.json
 
 Per-query timing is min-of-2 (same convention as graft.Bench). Queries whose
-oracle reads fixed sample files rather than the sf dir (FIXED_INPUT) are timed
-too but flagged `fixed_input` since they don't scale with sf.
+oracle reads fixed sample files rather than the sf dir are timed too but
+flagged `fixed_input` since they don't scale with sf; the set comes from each
+bench file's "fixed_input" field, and a bench file without it is an error.
 """
 import json, sys, time
 
 import duckdb
-
-# queries reading the fixed reference sample, not the sf dir. The
-# CANONICAL set lives in SparkEntry.fixedInputQueries and arrives via the
-# bench JSON's "fixed_input" field (r13 ADVICE: one source, not three
-# hardcoded copies); this literal is only the fallback for pre-r14 bench
-# artifacts that lack the field.
-FIXED_INPUT_FALLBACK = {"chess_e2e", "chess_silver", "chess_gold",
-                        "chess_dim_openings"}
 
 sfdir, oracledir = sys.argv[1], sys.argv[2]
 # argv[3] may be a comma-separated list of bench JSONs from REPEATED Bench
@@ -43,16 +38,20 @@ for t in ["region", "nation", "customer", "supplier", "part", "orders",
 
 oracle = json.load(open(f"{oracledir}/oracle_sql.json"))
 bench = {}
-FIXED_INPUT = None
+# queries reading the fixed reference sample, not the sf dir: the canonical
+# set is SparkEntry.fixedInputQueries, published in the full bench file
+FIXED_INPUT = set()
 if bench_path:
-    for bp in bench_path.split(","):
-        b = json.load(open(bp))
+    bench_files = [(bp, json.load(open(bp))) for bp in bench_path.split(",")]
+    missing = [bp for bp, b in bench_files if "fixed_input" not in b]
+    if missing:
+        sys.exit("bench file(s) without \"fixed_input\" (pass the full file "
+                 "graft.Bench writes, BENCH_FULL.json by default): "
+                 + ", ".join(missing))
+    for bp, b in bench_files:
         for q, t in b.get("queries", {}).items():
             bench[q] = min(bench[q], t) if q in bench else t
-        if "fixed_input" in b:
-            FIXED_INPUT = set(b["fixed_input"]) | (FIXED_INPUT or set())
-if FIXED_INPUT is None:
-    FIXED_INPUT = FIXED_INPUT_FALLBACK
+        FIXED_INPUT |= set(b["fixed_input"])
 
 rows = []
 total_duck = 0.0
