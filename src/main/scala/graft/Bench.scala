@@ -184,21 +184,21 @@ object Bench {
       // local mode has no data locality to wait for; the 3s default can
       // stall tiny stages behind a phantom locality preference
       .config("spark.locality.wait", "0ms"))
-    // the FIXED-INPUT set reads the reference 514-game sample, not the sf
-    // dir — excluded so bench numbers reflect sf scaling only. ONE
-    // canonical set (SparkEntry.fixedInputQueries, r13 ADVICE), published
-    // in the bench JSON for tools/bench_oracle.py. Sorted-name execution
-    // order: deterministic run-to-run (a Map's hash order is not), and it
-    // fixes WHICH query pays any shared-subtree build cost (the dedup
-    // family persists one hash-array/pair subtree; in sorted order
-    // dedup_clusters, the family's first, builds it).
+    // the FIXED-INPUT queries (SparkEntry.Query's `fixedInput` flag) read
+    // the reference 514-game sample, not the sf dir — excluded so bench
+    // numbers reflect sf scaling only, and published in the bench JSON for
+    // tools/bench_oracle.py. Sorted-name execution order: deterministic
+    // run-to-run (a Map's hash order is not), and it fixes WHICH query pays
+    // any shared-subtree build cost (the dedup family persists one
+    // hash-array/pair subtree; in sorted order dedup_clusters, the
+    // family's first, builds it).
     // SPARK_GRAFT_ONLY=a,b,c restricts the run to a named subset (the
     // scale harness times just the heavy tail; one name is the
     // single-query dev loop); unset = the full board
-    val fixedInput = SparkEntry.fixedInputQueries
+    val (fixedInput, sfScaled) = SparkEntry.queries.partition(_._2.fixedInput)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val benched = SparkEntry.queries.filterNot(q => fixedInput(q._1))
+    val benched = sfScaled
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .toSeq.sortBy(_._1)
     // one untimed pass first: JVM/codegen/JIT, shuffle system, parquet
@@ -227,7 +227,7 @@ object Bench {
     // fixed-input queries (they read the reference sample, not the sf dir)
     // timed once, reported on their own line and excluded from the
     // sf-scaled total so round-over-round totals stay comparable
-    val fixed = SparkEntry.queries.filter(q => fixedInput(q._1)).map { case (name, fn) =>
+    val fixed = fixedInput.map { case (name, fn) =>
       val t0 = System.nanoTime()
       // a failure must NOT masquerade as a fast timing: report -1
       val ok = try { evaluate(fn(spark, sfDir)); true } catch { case _: Throwable => false }
@@ -257,7 +257,7 @@ object Bench {
     val cpus = spark.sparkContext.defaultParallelism
     // fixed_input published so downstream tools (bench_oracle.py) read the
     // canonical set from the bench artifact instead of hardcoding a copy
-    val fixedJson = fixedInput.toSeq.sorted
+    val fixedJson = fixedInput.keys.toSeq.sorted
       .map("\"" + _ + "\"").mkString("[", ",", "]")
     val fullLine =
       s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"census":$census,"failures":$failuresJson,"fixed_input":$fixedJson,"sf":"$sfLabel","cpus":$cpus,"passes":2,"eval":"noop"}"""

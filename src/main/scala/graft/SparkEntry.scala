@@ -10,10 +10,10 @@ import graft.operators.{Dedup, Similarity, TextAnalysis}
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2 (names are prefixed with the inventory id they cover), plus
   * the scale-path operators (dedup / similarity / text analysis /
-  * multimodal). Every query that is ANSI-SQL-expressible has a DuckDB
-  * oracle in [[oracleSql]] with identical column names and value semantics
-  * (exact integer arithmetic or per-row IEEE double ops; accumulation-order-
-  * sensitive double sums are rounded on both sides).
+  * multimodal). Every query carries its DuckDB oracle in its [[Query]]
+  * entry, with identical column names and value semantics (exact integer
+  * arithmetic or per-row IEEE double ops; accumulation-order-sensitive
+  * double sums are rounded on both sides).
   */
 object SparkEntry {
 
@@ -1024,18 +1024,23 @@ object SparkEntry {
 
   // ---- queries ----------------------------------------------------------
 
-  /** Queries whose inputs are the FIXED reference sample (the 514-game
-    * chess JSON / openings CSV), not the sf-scaled parquet dir — excluded
-    * from sf-scaled bench totals and the floor-model census. THE canonical
-    * set (r13 ADVICE): [[graft.Bench]] consumes it for its timed board
-    * and per-query census, and publishes it as `"fixed_input"` in the bench
-    * JSON so `tools/bench_oracle.py` reads it from there instead of
-    * hardcoding a copy. An explicit set, not a name-prefix filter:
-    * `chess_scale_winrate` is chess-SHAPED but reads the sf-scaled orders
-    * table and must be benched/paired like any other query.
+  /** One registry entry: the Spark body, the DuckDB SQL it must match
+    * (same column names and value semantics; [[graft.Verify]] publishes it
+    * in `oracle_sql.json`), and whether its input is the FIXED reference
+    * sample (the 514-game chess JSON / openings CSV) rather than the
+    * sf-scaled parquet dir. [[graft.Bench]] times fixed-input queries once,
+    * outside the sf-scaled total and census, and publishes their names as
+    * `"fixed_input"` for `tools/bench_oracle.py`. A flag, not a name
+    * prefix: `chess_scale_winrate` is chess-shaped but reads the sf-scaled
+    * orders table. The entry is itself the body, so
+    * `queries(name)(spark, dir)` builds the DataFrame.
     */
-  val fixedInputQueries: Set[String] =
-    Set("chess_e2e", "chess_silver", "chess_gold", "chess_dim_openings")
+  final case class Query(oracle: String, fixedInput: Boolean = false)(
+      body: (SparkSession, String) => DataFrame)
+      extends ((SparkSession, String) => DataFrame) {
+    require(oracle.trim.nonEmpty, "every query carries its DuckDB oracle")
+    def apply(s: SparkSession, d: String): DataFrame = body(s, d)
+  }
 
   /** Every entry builds its DataFrame lazily — construction is job-free —
     * except those SparkEntrySpec declares, one reason each: bounded driver
@@ -1045,12 +1050,17 @@ object SparkEntry {
     * driver union-find are evaluation rather than plan construction, and
     * `q13_custdist`'s large path (see [[q13Custdist]]). Persisted results
     * that outlive a query are [[Tables.memoPersisted]] entries, released
-    * by `Tables.invalidate`. Built once; every lookup shares the map.
+    * by `Tables.invalidate`. Built once; every lookup shares the map, the
+    * one name-keyed registry of queries and their oracles.
     */
-  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val queries: Map[String, Query] = Map(
 
     // A1/A4 + F: grouped aggregation with exact and rounded measures
-    "a1_groupby_agg" -> ((s, d) => {
+    "a1_groupby_agg" -> Query(
+      """SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty,
+        | round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+        | count(*) AS count_order
+        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin)((s, d) => {
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
@@ -1060,11 +1070,14 @@ object SparkEntry {
     }),
 
     // P2/A3: SELECT DISTINCT projection
-    "p2_distinct" -> ((s, d) =>
+    "p2_distinct" -> Query(
+      "SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders")((s, d) =>
       Tables.orders(s, d).select(col("o_orderstatus"), col("o_orderpriority")).distinct()),
 
     // J2/P4: NOT IN incremental anti-join (keys non-null -> left_anti)
-    "j2_anti_join" -> ((s, d) =>
+    "j2_anti_join" -> Query(
+      """SELECT c_custkey, c_name, c_mktsegment FROM customer
+        |WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)""".stripMargin)((s, d) =>
       Tables.customer(s, d)
         .join(Tables.orders(s, d), col("c_custkey") === col("o_custkey"), "left_anti")
         .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))),
@@ -1096,7 +1109,13 @@ object SparkEntry {
     // join was 3.31x). Cost tracks projection width, confirming pure
     // materialization: 8-col 4.66 s vs 2-col 1.68 s (the bare 2-col scan
     // floor is 2.2 s the same day).
-    "j1_star_join" -> ((s, d) => {
+    "j1_star_join" -> Query(
+      """SELECT l.l_orderkey, l.l_linenumber, l.l_partkey, l.l_suppkey,
+        | l.l_quantity, l.l_extendedprice, l.l_returnflag, l.l_shipdate
+        |FROM lineitem l
+        |LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey
+        |LEFT JOIN part p ON l.l_partkey = p.p_partkey
+        |LEFT JOIN supplier s ON l.l_suppkey = s.s_suppkey""".stripMargin)((s, d) => {
       Tables.lineitem(s, d)
         .join(Tables.orders(s, d).select(col("o_orderkey")),
           col("l_orderkey") === col("o_orderkey"), "left")
@@ -1127,7 +1146,15 @@ object SparkEntry {
     // three broadcast joins then run over |supplier| rows and the final
     // 125-group re-agg is free. Same rows: supplier->nation->region is
     // functionally dependent on l_suppkey, sum/count re-associate.
-    "j1_a1_star_rollup" -> ((s, d) => j1A1Rollup(s, d)),
+    "j1_a1_star_rollup" -> Query(
+      """SELECT r_name, n_name,
+        | round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+        | count(*) AS n_items
+        |FROM lineitem
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |GROUP BY r_name, n_name""".stripMargin)((s, d) => j1A1Rollup(s, d)),
 
     // J4: role-playing dimension joined twice under different aliases.
     // Both fact sides are pre-projected to exactly their join+agg columns
@@ -1172,7 +1199,15 @@ object SparkEntry {
     // measured 20.1 s two-exchange floor. The zero-exchange bucketed
     // spelling (x1000: 18.2 s over a prebuilt layout) is its own query,
     // layout_bucketed_join. See [[j4Roleplay]].
-    "j4_roleplay_join" -> ((s, d) => j4Roleplay(s, d)),
+    "j4_roleplay_join" -> Query(
+      """SELECT cn.n_name AS cust_nation, sn.n_name AS supp_nation, count(*) AS n
+        |FROM lineitem l
+        |JOIN orders o ON l.l_orderkey = o.o_orderkey
+        |JOIN customer c ON o.o_custkey = c.c_custkey
+        |JOIN nation cn ON c.c_nationkey = cn.n_nationkey
+        |JOIN supplier s ON l.l_suppkey = s.s_suppkey
+        |JOIN nation sn ON s.s_nationkey = sn.n_nationkey
+        |GROUP BY cn.n_name, sn.n_name""".stripMargin)((s, d) => j4Roleplay(s, d)),
 
     // W1/P6: latest-record dedup (the reference's merge semantics).
     // Formulated as max-of-ordered-struct instead of row_number()+rn=1: the
@@ -1184,7 +1219,11 @@ object SparkEntry {
     // where the window form shuffles and SORTS every event row. The
     // row_number() formulation itself stays exercised by GoldFact.merge and
     // the chess pipeline; the DuckDB oracle keeps the window spelling.
-    "w1_window_dedup" -> ((s, d) => {
+    "w1_window_dedup" -> Query(
+      """SELECT user_id, event_id, event_type, ts, value FROM (
+        | SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
+        | FROM events) t
+        |WHERE rn = 1""".stripMargin)((s, d) => {
       val top = max(struct(col("ts"), col("event_id"), col("event_type"),
         col("value"))).as("top")
       Tables.events(s, d).groupBy(col("user_id")).agg(top)
@@ -1194,13 +1233,19 @@ object SparkEntry {
     }),
 
     // U1: set-semantics union
-    "u1_union_distinct" -> ((s, d) =>
+    "u1_union_distinct" -> Query(
+      """SELECT c_nationkey AS nationkey FROM customer
+        |UNION
+        |SELECT s_nationkey AS nationkey FROM supplier""".stripMargin)((s, d) =>
       Tables.customer(s, d).select(col("c_nationkey").as("nationkey"))
         .union(Tables.supplier(s, d).select(col("s_nationkey").as("nationkey")))
         .distinct()),
 
     // U2: bag union
-    "u2_union_all" -> ((s, d) =>
+    "u2_union_all" -> Query(
+      """SELECT c_nationkey AS nationkey, 'customer' AS src FROM customer
+        |UNION ALL
+        |SELECT s_nationkey AS nationkey, 'supplier' AS src FROM supplier""".stripMargin)((s, d) =>
       Tables.customer(s, d).select(col("c_nationkey").as("nationkey"), lit("customer").as("src"))
         .unionByName(Tables.supplier(s, d)
           .select(col("s_nationkey").as("nationkey"), lit("supplier").as("src")))),
@@ -1250,7 +1295,17 @@ object SparkEntry {
     // this plan broadcasts 15M packed longs and aggregates once. With
     // all four rejected re-plans measured, q3 is floor-accepted: the
     // same-day r11 pair is 6.28 s vs DuckDB 3.29 s = 1.91x (≤2x).
-    "q3_shipping_priority" -> ((s, d) => {
+    "q3_shipping_priority" -> Query(
+      """SELECT l_orderkey, o_orderdate,
+        | round(sum(l_extendedprice * (1 - l_discount)), 2) AS rev
+        |FROM customer
+        |JOIN orders ON c_custkey = o_custkey
+        |JOIN lineitem ON o_orderkey = l_orderkey
+        |WHERE c_mktsegment = 'BUILDING'
+        |  AND o_orderdate < DATE '1995-03-15'
+        |  AND l_shipdate > DATE '1995-03-15'
+        |GROUP BY l_orderkey, o_orderdate
+        |ORDER BY rev DESC, l_orderkey LIMIT 10""".stripMargin)((s, d) => {
       val ord = Tables.orders(s, d)
       // 14-bit date pack is lossless only for epoch days in [0, 16384)
       // (1970-01-01 .. 2014-11-06); the query filter bounds dates above
@@ -1304,7 +1359,12 @@ object SparkEntry {
     // (min-of-3, same session; sf0.1 keeps the direct groupBy, 0.28 s vs
     // 0.32 s). Gate validated at x100 (2.2 GB): 1.01 s gated vs 1.46 s
     // direct-groupBy spelling, min-of-3 same session.
-    "q13_custdist" -> ((s, d) => q13Custdist(s, d)),
+    "q13_custdist" -> Query(
+      """SELECT c_count, count(*) AS custdist FROM (
+        | SELECT c_custkey, count(o_orderkey) AS c_count
+        | FROM customer LEFT JOIN orders ON c_custkey = o_custkey
+        | GROUP BY c_custkey) t
+        |GROUP BY c_count""".stripMargin)((s, d) => q13Custdist(s, d)),
 
     // Q18: HAVING over a grouped sum, joined back to the fact.
     // The per-order sum groups ~|lineitem|/4 keys — high-cardinality
@@ -1325,10 +1385,24 @@ object SparkEntry {
     // 39.87/33.73 s (tools/sweeps/q18_ab_x1000_r13.log); the query plans
     // from its input only, so it keeps the gated plan. See
     // [[q18LargeOrders]].
-    "q18_large_orders" -> ((s, d) => q18LargeOrders(s, d)),
+    "q18_large_orders" -> Query(
+      """WITH big AS (
+        | SELECT l_orderkey AS bk, sum(l_quantity) AS total_qty
+        | FROM lineitem GROUP BY l_orderkey HAVING sum(l_quantity) > 250)
+        |SELECT o_orderkey, o_orderdate, o_totalprice, total_qty
+        |FROM orders JOIN big ON o_orderkey = bk""".stripMargin)((s, d) => q18LargeOrders(s, d)),
 
     // U3 (beyond reference): INTERSECT / EXCEPT set operations
-    "u3_intersect_except" -> ((s, d) => {
+    "u3_intersect_except" -> Query(
+      """SELECT nationkey, 'both' AS op FROM (
+        | SELECT c_nationkey AS nationkey FROM customer
+        | INTERSECT
+        | SELECT s_nationkey FROM supplier)
+        |UNION ALL
+        |SELECT nationkey, 'cust_only' AS op FROM (
+        | SELECT c_nationkey AS nationkey FROM customer
+        | EXCEPT
+        | SELECT s_nationkey FROM supplier)""".stripMargin)((s, d) => {
       val custNations = Tables.customer(s, d).select(col("c_nationkey").as("nationkey"))
       val suppNations = Tables.supplier(s, d).select(col("s_nationkey").as("nationkey"))
       custNations.intersect(suppNations).withColumn("op", lit("both"))
@@ -1336,7 +1410,18 @@ object SparkEntry {
     }),
 
     // W3 (beyond reference): window frames + rank family
-    "w3_frames_ranks" -> ((s, d) => {
+    "w3_frames_ranks" -> Query(
+      """SELECT user_id, event_id,
+        | round(avg(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |   ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 6) AS mov_avg3,
+        | lead(event_id, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_event,
+        | first_value(event_id) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS first_event,
+        | CAST(rank() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) AS rnk,
+        | percent_rank() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS pct_rank,
+        | CAST(ntile(4) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT)
+        |   AS quartile
+        |FROM events""".stripMargin)((s, d) => {
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       Tables.events(s, d).select(
         col("user_id"), col("event_id"),
@@ -1350,7 +1435,13 @@ object SparkEntry {
     }),
 
     // P7: searched CASE derivations
-    "p7_case_pivot" -> ((s, d) =>
+    "p7_case_pivot" -> Query(
+      """SELECT o_orderkey, o_orderstatus,
+        | CASE WHEN o_totalprice < 50000 THEN 'small'
+        |      WHEN o_totalprice < 150000 THEN 'medium'
+        |      ELSE 'large' END AS price_band,
+        | CAST(quarter(o_orderdate) AS BIGINT) AS order_quarter
+        |FROM orders""".stripMargin)((s, d) =>
       Tables.orders(s, d).select(
         col("o_orderkey"), col("o_orderstatus"),
         when(col("o_totalprice") < 50000, "small")
@@ -1359,13 +1450,19 @@ object SparkEntry {
         quarter(col("o_orderdate")).cast("long").as("order_quarter"))),
 
     // O1: global total-order sort (range-partitioned exchange at scale)
-    "o1_global_sort" -> ((s, d) =>
+    "o1_global_sort" -> Query(
+      """SELECT n_nationkey, n_name, n_regionkey FROM nation
+        |ORDER BY n_regionkey, n_name DESC""".stripMargin)((s, d) =>
       Tables.nation(s, d).select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
         .orderBy(col("n_regionkey"), desc("n_name"))),
 
     // F3+F4: dotted-date normalize + parse round-trip (the PGN
     // `[Date "2024.01.01"]` handling: REPLACE('.','/') then STRPTIME)
-    "f3_replace_parse_date" -> ((s, d) => {
+    "f3_replace_parse_date" -> Query(
+      """SELECT o_orderkey, strftime(CAST(o_orderdate AS DATE), '%Y.%m.%d') AS dotted,
+        | CAST(strptime(replace(strftime(CAST(o_orderdate AS DATE), '%Y.%m.%d'), '.', '/'),
+        |               '%Y/%m/%d') AS DATE) AS parsed
+        |FROM orders""".stripMargin)((s, d) => {
       val dotted = date_format(col("o_orderdate"), "yyyy.MM.dd")
       Tables.orders(s, d).select(
         col("o_orderkey"),
@@ -1374,12 +1471,15 @@ object SparkEntry {
     }),
 
     // O2: deterministic top-k (tie-broken global sort + limit)
-    "o2_topk" -> ((s, d) =>
+    "o2_topk" -> Query(
+      """SELECT c_custkey, c_acctbal FROM customer
+        |ORDER BY c_acctbal DESC, c_custkey LIMIT 10""".stripMargin)((s, d) =>
       Tables.customer(s, d).select(col("c_custkey"), col("c_acctbal"))
         .orderBy(desc("c_acctbal"), col("c_custkey")).limit(10)),
 
     // O3: watermark max
-    "o3_watermark_max" -> ((s, d) =>
+    "o3_watermark_max" -> Query(
+      "SELECT max(ts) AS last_updated FROM events")((s, d) =>
       Tables.events(s, d).agg(max(col("ts")).as("last_updated"))),
 
     // F7-F9 + P2: dim_date build (year/month/monthname/day/weekday/quarter).
@@ -1390,7 +1490,15 @@ object SparkEntry {
     // rows regardless of fact size — and the distinct itself is a narrow
     // partial-agg over a single date column. Same rows (every derived
     // column is a pure function of order_date), same oracle.
-    "f7_dim_date" -> ((s, d) => {
+    "f7_dim_date" -> Query(
+      """SELECT DISTINCT CAST(o_orderdate AS DATE) AS order_date,
+        | CAST(year(CAST(o_orderdate AS DATE)) AS BIGINT) AS year,
+        | CAST(month(CAST(o_orderdate AS DATE)) AS BIGINT) AS month,
+        | strftime(CAST(o_orderdate AS DATE), '%B') AS month_name,
+        | CAST(day(CAST(o_orderdate AS DATE)) AS BIGINT) AS day,
+        | strftime(CAST(o_orderdate AS DATE), '%A') AS weekday,
+        | CAST(quarter(CAST(o_orderdate AS DATE)) AS BIGINT) AS quarter
+        |FROM orders""".stripMargin)((s, d) => {
       val dt = col("order_date")
       Tables.orders(s, d)
         .select(to_date(col("o_orderdate")).as("order_date")).distinct()
@@ -1405,7 +1513,13 @@ object SparkEntry {
     }),
 
     // P1 + F10: wide projection with casts, arithmetic and string ops
-    "p1_wide_projection" -> ((s, d) =>
+    "p1_wide_projection" -> Query(
+      """SELECT l_orderkey, l_linenumber, CAST(l_quantity AS BIGINT) AS qty,
+        | floor(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 100 + 0.5) / 100 AS charge,
+        | l_returnflag || '/' || l_linestatus AS flag_status,
+        | CAST(l_shipdate AS DATE) AS ship_date,
+        | CASE WHEN l_discount > 0.05 THEN 'promo' ELSE 'std' END AS promo_flag
+        |FROM lineitem""".stripMargin)((s, d) =>
       Tables.lineitem(s, d).select(
         col("l_orderkey"), col("l_linenumber"),
         col("l_quantity").cast("long").as("qty"),
@@ -1419,14 +1533,21 @@ object SparkEntry {
         when(col("l_discount") > 0.05, "promo").otherwise("std").as("promo_flag"))),
 
     // F1: regex group extraction (PGN-header analog over JSON-ish props)
-    "f1_regex_extract" -> ((s, d) =>
+    "f1_regex_extract" -> Query(
+      """SELECT event_id, regexp_extract(props, '"k": (\d+)', 1) AS k_str,
+        | TRY_CAST(regexp_extract(props, '"k": (\d+)', 1) AS BIGINT) AS k_val
+        |FROM events""".stripMargin)((s, d) =>
       Tables.events(s, d).select(
         col("event_id"),
         regexp_extract(col("props"), "\"k\": (\\d+)", 1).as("k_str"),
         regexp_extract(col("props"), "\"k\": (\\d+)", 1).cast("long").as("k_val"))),
 
     // F2/UD5: regexp_extract_all count (pgn-depth analog)
-    "f2_regex_count" -> ((s, d) =>
+    "f2_regex_count" -> Query(
+      """SELECT doc_id,
+        | CAST(len(regexp_extract_all(text, '[a-z]+')) AS BIGINT) AS n_alpha_tokens,
+        | CAST(len(string_split(text, ' ')) AS BIGINT) AS n_ws_tokens
+        |FROM documents""".stripMargin)((s, d) =>
       Tables.documents(s, d).select(
         col("doc_id"),
         size(regexp_extract_all(col("text"), lit("[a-z]+"), lit(0))).cast("long")
@@ -1434,20 +1555,40 @@ object SparkEntry {
         TextAnalysis.tokenCount(col("text")).as("n_ws_tokens"))),
 
     // UD3/UD4: family/variation split
-    "ud3_split_family" -> ((s, d) =>
+    "ud3_split_family" -> Query(
+      """SELECT p_partkey, split_part(p_name, ' ', 1) AS family,
+        | split_part(p_name, ' ', 2) AS variation
+        |FROM part""".stripMargin)((s, d) =>
       Tables.part(s, d).select(
         col("p_partkey"),
         split(col("p_name"), " ").getItem(0).as("family"),
         split(col("p_name"), " ").getItem(1).as("variation"))),
 
     // F6: duration in seconds between first and last event per user
-    "f6_duration_secs" -> ((s, d) =>
+    "f6_duration_secs" -> Query(
+      """SELECT user_id,
+        | CAST(floor(epoch(max(ts))) - floor(epoch(min(ts))) AS BIGINT) AS span_secs,
+        | count(*) AS n_events
+        |FROM events GROUP BY user_id""".stripMargin)((s, d) =>
       Tables.events(s, d).groupBy(col("user_id")).agg(
         (max(col("ts")).cast("long") - min(col("ts")).cast("long")).as("span_secs"),
         count(lit(1)).as("n_events"))),
 
     // UD6: format_time_control over synthesized "base+inc" strings
-    "ud6_format_time_control" -> ((s, d) => {
+    "ud6_format_time_control" -> Query(
+      """WITH t AS (
+        | SELECT event_id,
+        |  CASE WHEN event_id % 3 = 0
+        |   THEN CAST((event_id % 9 + 1) * 60 + (event_id % 7) * 10 AS VARCHAR)
+        |   ELSE CAST((event_id % 9 + 1) * 60 + (event_id % 7) * 10 AS VARCHAR)
+        |        || '+' || CAST(event_id % 13 AS VARCHAR) END AS tc
+        | FROM events)
+        |SELECT event_id, tc,
+        | CASE WHEN strpos(tc, '+') > 0
+        |  THEN CAST(CAST(floor(CAST(split_part(tc, '+', 1) AS BIGINT) / 60) AS BIGINT) AS VARCHAR)
+        |       || '|' || split_part(tc, '+', 2)
+        |  ELSE CAST(CAST(floor(CAST(tc AS BIGINT) / 60) AS BIGINT) AS VARCHAR) END AS formatted
+        |FROM t""".stripMargin)((s, d) => {
       val base = (col("event_id") % 9 + 1) * 60 + (col("event_id") % 7) * 10
       val tc = when(col("event_id") % 3 === 0, base.cast("string"))
         .otherwise(concat(base.cast("string"), lit("+"), (col("event_id") % 13).cast("string")))
@@ -1456,7 +1597,9 @@ object SparkEntry {
     }),
 
     // P5: LIKE predicates
-    "p5_like_filter" -> ((s, d) =>
+    "p5_like_filter" -> Query(
+      """SELECT p_partkey, p_name, p_brand FROM part
+        |WHERE p_name LIKE '%widget%' AND p_brand LIKE 'Brand#1%'""".stripMargin)((s, d) =>
       Tables.part(s, d)
         .filter(col("p_name").like("%widget%") && col("p_brand").like("Brand#1%"))
         .select(col("p_partkey"), col("p_name"), col("p_brand"))),
@@ -1481,7 +1624,13 @@ object SparkEntry {
     // round-robin exchange buys 32-way sketch building: 10.8 s -> 1.1 s
     // at sf0.1); above it, multi-row-group splits already parallelize
     // the scan and the exchange would shuffle the full fact for nothing.
-    "a6_sketch_agg" -> ((s, d) => a6SketchAgg(s, d)),
+    "a6_sketch_agg" -> Query(
+      """SELECT count(DISTINCT l_partkey) AS exact_parts,
+        | count(DISTINCT l_orderkey) AS exact_orders,
+        | floor(median(l_extendedprice) * 100 + 0.5) / 100 AS exact_median_price,
+        | TRUE AS parts_within_3rsd, TRUE AS orders_within_3rsd,
+        | TRUE AS median_within_1pct
+        |FROM lineitem""".stripMargin)((s, d) => a6SketchAgg(s, d)),
 
     // A2: count-distinct single and pair
     // AUDIT (r8, x1000): the one-pass spelling plans an Expand that
@@ -1499,7 +1648,11 @@ object SparkEntry {
     // so ITS map-side dedup genuinely reduces. Below the gate the plain
     // one-pass spelling stays (0.3 s at sf0.1 — the Expand is free on
     // 600k rows).
-    "a2_count_distinct" -> ((s, d) => a2CountDistinct(s, d)),
+    "a2_count_distinct" -> Query(
+      """SELECT count(DISTINCT l_partkey) AS n_parts,
+        | count(DISTINCT l_suppkey) AS n_supps,
+        | count(DISTINCT (l_partkey, l_suppkey)) AS n_pairs
+        |FROM lineitem""".stripMargin)((s, d) => a2CountDistinct(s, d)),
 
     // J3: longest-prefix match join (opening-book analog): dict of 2- and
     // 3-word prefixes, startsWith semantics, longest match wins.
@@ -1519,17 +1672,40 @@ object SparkEntry {
     // equi-join degrades to a shuffle, never back to the nested loop.
     // Below the gate the BNLJ spelling stays (0.33 s at sf0.1 — one job,
     // no length-collect pass).
-    "j3_prefix_match" -> ((s, d) => j3PrefixMatch(Tables.documents(s, d))),
+    "j3_prefix_match" -> Query(
+      """WITH sample AS (SELECT text, string_split(text, ' ') AS w FROM documents
+        |               WHERE doc_id % 20 = 0),
+        |dict AS (
+        | SELECT DISTINCT array_to_string(w[1:2], ' ') AS p FROM sample
+        | UNION
+        | SELECT DISTINCT array_to_string(w[1:3], ' ') AS p FROM sample WHERE len(w) >= 3)
+        |SELECT d.doc_id, max_by(t.p, strlen(t.p)) AS opening,
+        | CAST(max(strlen(t.p)) AS BIGINT) AS opening_len
+        |FROM documents d LEFT JOIN dict t ON starts_with(d.text, t.p)
+        |GROUP BY d.doc_id""".stripMargin)((s, d) => j3PrefixMatch(Tables.documents(s, d))),
 
     // G1 (beyond reference): generator — positional token explode
-    "g1_posexplode" -> ((s, d) =>
+    "g1_posexplode" -> Query(
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents
+        |           WHERE doc_id < 50)
+        |SELECT doc_id, CAST(u.pos AS BIGINT) AS pos, u.tok FROM (
+        |  SELECT doc_id, unnest(list_transform(range(1, len(w) + 1),
+        |    i -> struct_pack(pos := i - 1, tok := w[i]))) AS u FROM t)""".stripMargin)((s, d) =>
       Tables.documents(s, d)
         .filter(col("doc_id") < 50)
         .select(col("doc_id"), posexplode(split(col("text"), " ")))
         .select(col("doc_id"), col("pos").cast("long").as("pos"), col("col").as("tok"))),
 
     // F15 (beyond reference): string function breadth
-    "f15_string_ops" -> ((s, d) =>
+    "f15_string_ops" -> Query(
+      """SELECT p_partkey,
+        | upper(p_name) AS upper_name,
+        | lpad(CAST(p_partkey AS VARCHAR), 8, '0') AS padded_key,
+        | translate(p_name, 'ae', '@3') AS leeted,
+        | reverse(p_brand) AS rev_brand,
+        | split_part(p_name, ' ', 2) AS second_word,
+        | repeat(substr(p_brand, 1, 2), 3) AS brand_echo
+        |FROM part""".stripMargin)((s, d) =>
       Tables.part(s, d).select(
         col("p_partkey"),
         upper(col("p_name")).as("upper_name"),
@@ -1540,7 +1716,15 @@ object SparkEntry {
         repeat(substring(col("p_brand"), 1, 2), 3).as("brand_echo"))),
 
     // F16 (beyond reference): date arithmetic breadth
-    "f16_date_ops" -> ((s, d) => {
+    "f16_date_ops" -> Query(
+      """SELECT o_orderkey,
+        | last_day(CAST(o_orderdate AS DATE)) AS month_end,
+        | CAST(date_trunc('month', CAST(o_orderdate AS DATE)) AS DATE) AS month_start,
+        | CAST(CAST(o_orderdate AS DATE) + INTERVAL 10 DAY AS DATE) AS plus10,
+        | CAST(CAST(o_orderdate AS DATE) + INTERVAL 2 MONTH AS DATE) AS plus2m,
+        | make_date(year(CAST(o_orderdate AS DATE)), month(CAST(o_orderdate AS DATE)),
+        |           day(CAST(o_orderdate AS DATE))) AS remade
+        |FROM orders""".stripMargin)((s, d) => {
       val dt = col("o_orderdate")
       Tables.orders(s, d).select(
         col("o_orderkey"),
@@ -1552,14 +1736,23 @@ object SparkEntry {
     }),
 
     // A10 (beyond reference): CUBE with grouping marker
-    "a10_cube" -> ((s, d) =>
+    "a10_cube" -> Query(
+      """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
+        | CAST(grouping(o_orderstatus, o_orderpriority) AS BIGINT) AS gid
+        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""".stripMargin)((s, d) =>
       Tables.orders(s, d)
         .cube(col("o_orderstatus"), col("o_orderpriority"))
         .agg(count(lit(1)).as("n"), grouping_id().as("gid"))),
 
     // A11 (beyond reference): exact interpolated percentiles per group —
     // size-adaptive, see [[a11Percentiles]]
-    "a11_percentiles" -> ((s, d) => a11Percentiles(s, d)),
+    "a11_percentiles" -> Query(
+      // quantile_cont shares percentile()'s index-interpolation definition
+      """SELECT l_returnflag,
+        | round(quantile_cont(l_extendedprice, 0.5), 4) AS p50,
+        | round(quantile_cont(l_extendedprice, 0.9), 4) AS p90,
+        | round(quantile_cont(l_extendedprice, 0.99), 4) AS p99
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin)((s, d) => a11Percentiles(s, d)),
 
     // A13 (beyond reference): weighted quantiles over a value-count
     // pre-aggregate — the bounded-domain quantile pattern at 100 TB.
@@ -1579,7 +1772,18 @@ object SparkEntry {
     // from the exact quantile. Lowering the accuracy (or reusing this
     // pattern on a denser domain) re-opens that margin; recheck the
     // bound before touching either.
-    "a13_weighted_quantiles" -> ((s, d) => {
+    "a13_weighted_quantiles" -> Query(
+      // the sketch values are engine-internal; the query exports only the
+      // within-step booleans, TRUE by the accuracy-1000 error bound (rank
+      // error << any quantity value's weight run — see the queries-entry
+      // comment; the exact columns hash-match quantile_cont over the raw
+      // rows, percentile's frequency form interpolates the same multiset)
+      """SELECT count(DISTINCT l_quantity) AS n_quantities,
+        | count(*) AS total_rows,
+        | floor(quantile_cont(l_quantity, 0.5) * 10000 + 0.5) / 10000 AS p50,
+        | floor(quantile_cont(l_quantity, 0.9) * 10000 + 0.5) / 10000 AS p90,
+        | TRUE AS p50_within_step, TRUE AS p90_within_step
+        |FROM lineitem""".stripMargin)((s, d) => {
       val vc = Tables.lineitem(s, d)
         .groupBy(col("l_quantity")).agg(count(lit(1)).as("__cnt"))
       vc.agg(
@@ -1607,7 +1811,13 @@ object SparkEntry {
     // (each row re-writes a measure-name string DuckDB serves from a
     // dictionary vector); per-partition work is embarrassingly parallel,
     // so a cluster scales it linearly — nothing structural to remove.
-    "a9_unpivot" -> ((s, d) =>
+    "a9_unpivot" -> Query(
+      """SELECT l_orderkey, l_linenumber, 'quantity' AS measure, l_quantity AS value
+        |FROM lineitem
+        |UNION ALL
+        |SELECT l_orderkey, l_linenumber, 'discount', l_discount FROM lineitem
+        |UNION ALL
+        |SELECT l_orderkey, l_linenumber, 'tax', l_tax FROM lineitem""".stripMargin)((s, d) =>
       Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_linenumber"),
           col("l_quantity").as("quantity"), col("l_discount").as("discount"),
@@ -1617,7 +1827,14 @@ object SparkEntry {
           "measure", "value")),
 
     // A8 (beyond reference): PIVOT — orders count per status × priority
-    "a8_pivot" -> ((s, d) =>
+    "a8_pivot" -> Query(
+      """SELECT o_orderstatus,
+        | count(*) FILTER (o_orderpriority = '1-URGENT') AS p1,
+        | count(*) FILTER (o_orderpriority = '2-HIGH') AS p2,
+        | count(*) FILTER (o_orderpriority = '3-MEDIUM') AS p3,
+        | count(*) FILTER (o_orderpriority = '4-NOT SPECIFIED') AS p4,
+        | count(*) FILTER (o_orderpriority = '5-LOW') AS p5
+        |FROM orders GROUP BY o_orderstatus""".stripMargin)((s, d) =>
       Tables.orders(s, d)
         .groupBy(col("o_orderstatus"))
         .pivot("o_orderpriority",
@@ -1631,7 +1848,16 @@ object SparkEntry {
           .map(c => coalesce(col(c), lit(0L)).as(c)): _*)),
 
     // F13 (beyond reference): array algebra — sort/contains/slice/zip fold
-    "f13_array_ops" -> ((s, d) => {
+    "f13_array_ops" -> Query(
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
+        |SELECT doc_id,
+        | array_to_string(list_sort(list_distinct(w))[1:3], ',') AS first3_sorted,
+        | list_contains(w, 'the') AS has_the,
+        | CAST(len(list_filter(list_distinct(w), x -> x IN ('the', 'a', 'of'))) AS BIGINT)
+        |   AS n_common,
+        | CAST(list_aggregate(list_transform(w, x -> CAST(strlen(x) AS BIGINT)), 'sum')
+        |   AS BIGINT) AS total_chars
+        |FROM t""".stripMargin)((s, d) => {
       val w = split(col("text"), " ")
       Tables.documents(s, d).select(
         col("doc_id"),
@@ -1655,7 +1881,12 @@ object SparkEntry {
     // groupBy+broadcast re-join was measured 10.8 s and REJECTED: the
     // second 100M-row string pass costs what the parse cost). try_cast
     // mirrors the oracle's TRY_CAST (null, never throw, on non-numeric k).
-    "f14_json_ops" -> ((s, d) =>
+    "f14_json_ops" -> Query(
+      """SELECT event_id,
+        | TRY_CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
+        | json_extract_string(props, '$.tag') AS tag,
+        | json_extract_string(props, '$.missing') AS missing
+        |FROM events""".stripMargin)((s, d) =>
       Tables.events(s, d)
         .select(col("event_id"),
           graft.functions.TextFunctions.json_top_scalars(
@@ -1667,7 +1898,9 @@ object SparkEntry {
           element_at(col("__j"), 3).as("missing"))),
 
     // J6 (beyond reference): semi-join — customers with at least one order
-    "j6_semi_join" -> ((s, d) =>
+    "j6_semi_join" -> Query(
+      """SELECT c_custkey, c_name FROM customer c
+        |WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)""".stripMargin)((s, d) =>
       Tables.customer(s, d)
         .join(Tables.orders(s, d), col("c_custkey") === col("o_custkey"), "left_semi")
         .select(col("c_custkey"), col("c_name"))),
@@ -1707,7 +1940,14 @@ object SparkEntry {
     // broadcast stays (1.17 s vs 2.94 s at x30 — it wins by 2.5x when
     // the build fits). Equivalent bit-for-bit: quantities are integral,
     // so sum/avg are exact in double regardless of accumulation order.
-    "a7_below_avg_qty" -> ((s, d) => {
+    "a7_below_avg_qty" -> Query(
+      """WITH pa AS (SELECT l_partkey AS ap_partkey, avg(l_quantity) AS avg_qty
+        |            FROM lineitem GROUP BY l_partkey)
+        |SELECT l_returnflag, count(*) AS n_below,
+        | round(sum(l_extendedprice) / 100, 0) AS price_hundreds
+        |FROM lineitem JOIN pa ON l_partkey = ap_partkey
+        |WHERE l_quantity < avg_qty * 0.5
+        |GROUP BY l_returnflag""".stripMargin)((s, d) => {
       val raw = Tables.lineitem(s, d)
         .select(col("l_partkey"), col("l_quantity"))
       val pa = preShuffled(raw, "l_partkey")
@@ -1728,7 +1968,14 @@ object SparkEntry {
 
     // F12 (beyond reference): null semantics — coalesce, nullif, null-safe
     // equality over a sparse extracted value
-    "f12_null_ops" -> ((s, d) => {
+    "f12_null_ops" -> Query(
+      """SELECT event_id,
+        | coalesce(TRY_CAST(nullif(regexp_extract(props, '"k": (\d+)', 1), '') AS BIGINT), -1)
+        |   AS k_or_default,
+        | nullif(event_type, 'click') AS type_not_click,
+        | TRY_CAST(nullif(regexp_extract(props, '"k": (\d+)', 1), '') AS BIGINT) IS NULL
+        |   AS k_is_null
+        |FROM events""".stripMargin)((s, d) => {
       val k = regexp_extract(col("props"), "\"k\": (\\d+)", 1)
       val kNum = when(k === "", lit(null)).otherwise(k).cast("long")
       Tables.events(s, d).select(
@@ -1748,19 +1995,49 @@ object SparkEntry {
     // (was 898.7 s before the hist_l1 reject + prefix/suffix strip);
     // DuckDB's oracle did not finish in 700 s the same day. r15/r16
     // hash-block + gate measurements: see OPTIMIZATION_r16.md.
-    "text_edit_distance" -> ((s, d) =>
+    "text_edit_distance" -> Query(
+      """WITH t AS (
+        | SELECT doc_id,
+        |  substr(trim(regexp_replace(regexp_replace(lower(substr(text, 1, 128)), '[^a-z0-9 ]', '', 'g'),
+        |              ' +', ' ', 'g')), 1, 32) AS prefix,
+        |  substr(trim(regexp_replace(regexp_replace(lower(substr(text, 1, 128)), '[^a-z0-9 ]', '', 'g'),
+        |              ' +', ' ', 'g')), 1, 8) AS bucket
+        | FROM documents)
+        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+        | CAST(levenshtein(a.prefix, b.prefix) AS BIGINT) AS edit_dist
+        |FROM t a JOIN t b ON a.bucket = b.bucket AND a.doc_id < b.doc_id
+        |WHERE levenshtein(a.prefix, b.prefix) <= 8""".stripMargin)((s, d) =>
       TextAnalysis.editDistancePairs(Tables.documents(s, d))),
 
     // J5 (beyond reference): as-of point-in-time join — each event gets the
     // most recent reference snapshot at or before its timestamp
     // probes and references live in ONE stream, so the entry takes the
     // TAPE spelling — see j5AsofJoin
-    "j5_asof_join" -> ((s, d) => j5AsofJoin(s, d)),
+    "j5_asof_join" -> Query(
+      """WITH refs AS (
+        | SELECT user_id, ts, max(value) AS ref_value, max(event_id) AS ref_event
+        | FROM events WHERE event_id % 10 = 0 GROUP BY user_id, ts),
+        |probes AS (
+        | SELECT event_id, user_id, ts FROM events WHERE event_id % 10 <> 0)
+        |SELECT p.event_id, p.user_id, p.ts, r.ref_value, r.ref_event
+        |FROM probes p ASOF LEFT JOIN refs r
+        | ON p.user_id = r.user_id AND p.ts >= r.ts""".stripMargin)((s, d) => j5AsofJoin(s, d)),
 
     // J5b (r15): the TWO-TABLE as-of API surface — same workload as j5,
     // probes and refs as separate tables through AsofJoin.leftAsof's tape
     // plan — see j5bAsofTwoTable
-    "j5b_asof_two_table" -> ((s, d) => j5bAsofTwoTable(s, d)),
+    "j5b_asof_two_table" -> Query(
+      // identical semantics to j5 by construction (refs are pre-aggregated
+      // per (user_id, ts), so the two-table tie-break has nothing to break);
+      // what differs is the ENGINE path under test: leftAsof vs leftAsofTape
+      """WITH refs AS (
+        | SELECT user_id, ts, max(value) AS ref_value, max(event_id) AS ref_event
+        | FROM events WHERE event_id % 10 = 0 GROUP BY user_id, ts),
+        |probes AS (
+        | SELECT event_id, user_id, ts FROM events WHERE event_id % 10 <> 0)
+        |SELECT p.event_id, p.user_id, p.ts, r.ref_value, r.ref_event
+        |FROM probes p ASOF LEFT JOIN refs r
+        | ON p.user_id = r.user_id AND p.ts >= r.ts""".stripMargin)((s, d) => j5bAsofTwoTable(s, d)),
 
     // A5 (beyond reference): hierarchical ROLLUP with grouping level marker.
     // Two-level formulation: Spark plans rollup as Expand(levels) BEFORE the
@@ -1771,7 +2048,10 @@ object SparkEntry {
     // integral-valued (TPC-H 1..50), so sum-of-partial-sums is
     // order-independent, and count rolls up as sum of counts. grouping_id()
     // depends only on the outer grouping columns — bitmap unchanged.
-    "a5_rollup" -> ((s, d) =>
+    "a5_rollup" -> Query(
+      """SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty,
+        | count(*) AS n, CAST(grouping(l_returnflag, l_linestatus) AS BIGINT) AS gid
+        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin)((s, d) =>
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(col("l_quantity")).as("q"), count(lit(1)).as("c"))
@@ -1783,7 +2063,11 @@ object SparkEntry {
     // and grand-total slices in one pass, tagged by the grouping_id bitmap.
     // Same two-level shape as a5_rollup: Expand over the 6-row (flag,
     // status) pre-aggregate, not over the fact table.
-    "a12_grouping_sets" -> ((s, d) =>
+    "a12_grouping_sets" -> Query(
+      """SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty,
+        | count(*) AS n, CAST(grouping(l_returnflag, l_linestatus) AS BIGINT) AS gid
+        |FROM lineitem
+        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""".stripMargin)((s, d) =>
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(col("l_quantity")).as("q"), count(lit(1)).as("c"))
@@ -1807,1205 +2091,9 @@ object SparkEntry {
     // shared constant (Dims.resultSeed, r13 ADVICE): the engine as a
     // sorted-code literal array, the oracle as a generated VALUES +
     // row_number — see chessScaleWinrate
-    "chess_scale_winrate" -> ((s, d) => chessScaleWinrate(s, d)),
-
-    // deterministic hash sample: md5-prefix filter is engine-portable
-    // (unlike TABLESAMPLE/rand whose PRNG differs per engine)
-    "sample_hash" -> ((s, d) =>
-      Tables.orders(s, d)
-        .filter(substring(md5(col("o_orderkey").cast("string")), 1, 1) === "0")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))),
-
-    // columnar-format breadth: write customer out as ORC, read it back,
-    // aggregate — the second columnar source/sink proven end-to-end under
-    // the oracle (which reads the identical rows from parquet). The write
-    // happens once per session and dir (Sources.fixture) so repeated
-    // invocations — bench passes, plan audits — time the ORC scan
-    "src_orc_roundtrip" -> ((s, d) => {
-      val dir = graft.sources.Sources.fixture(s, d, "customer", "orc")
-      graft.sources.Sources.orc(s, dir)
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n"),
-          (floor(sum(col("c_acctbal")) * 100 + 0.5) / 100).as("total_acctbal"))
-    }),
-
-    // text-format breadth, same roundtrip contract as src_orc_roundtrip:
-    // CSV sink+source (explicit schema on the read — an inferSchema pass
-    // would scan the data twice and is banned from the library's read
-    // path) and JSON-lines sink+source, each proven end-to-end under an
-    // oracle reading the identical rows from parquet
-    "src_csv_roundtrip" -> ((s, d) => {
-      val dir = graft.sources.Sources.fixture(s, d, "nation", "csv")
-      graft.sources.Sources.csv(s, dir,
-          Some(Tables.nation(s, d).schema))
-        .groupBy(col("n_regionkey"))
-        .agg(count(lit(1)).as("n"), min(col("n_name")).as("first_nation"))
-    }),
-
-    "src_json_roundtrip" -> ((s, d) => {
-      val dir = graft.sources.Sources.fixture(s, d, "supplier", "json")
-      // multiLine = false: the fixture is JSON-LINES (writeJson's format);
-      // the facade's multiLine default serves the bronze array-file shape
-      graft.sources.Sources.json(s, dir, Tables.supplier(s, d).schema,
-          multiLine = false)
-        .groupBy(col("s_nationkey"))
-        .agg(count(lit(1)).as("n"),
-          (floor(sum(col("s_acctbal")) * 100 + 0.5) / 100).as("total_acctbal"))
-    }),
-
-    // ---- scale-path: deduplication ------------------------------------
-
-    "dedup_exact" -> ((s, d) => Dedup.exactGroups(Tables.documents(s, d))),
-
-    "dedup_normalized" -> ((s, d) => Dedup.normalizedGroups(Tables.documents(s, d))),
-
-    // pairs ≥ 0.8 = a filter over the family's shared ≥ 0.5 pair table
-    // (threshold only appears in jaccardPairs' final filter)
-    "dedup_ngram_jaccard" -> ((s, d) =>
-      sharedJaccardPairs(s, d).filter(col("jaccard") >= 0.8)),
-
-    "dedup_minhash_lsh" -> ((s, d) =>
-      Dedup.minhashLshDedupFromArr(sharedShingleArr(s, d), numPerm = 16, bands = 4,
-        threshold = 0.8)),
-
-    "dedup_simhash" -> ((s, d) => Dedup.simhashSignatures(Tables.documents(s, d))),
-
-    // near-dup pairs -> duplicate clusters (connected components): the
-    // keep-one-per-cluster endgame of corpus dedup
-    "dedup_clusters" -> ((s, d) => sharedClusters(s, d)),
-
-    // same clustering semantics via large-star/small-star (O(log n) rounds
-    // on any graph shape — the adversarial-diameter alternative); shares
-    // the family's pair subtree and the min-label oracle, since both
-    // algorithms define component = min reachable doc_id. Same small-graph
-    // gate as dedup_clusters: below [[ccDriverDocBytes]] both labelers'
-    // iterative loops lose to one bounded union-find job
-    "dedup_clusters_star" -> ((s, d) =>
-      ccLabels(s, d, "clustersStar", p => Dedup.duplicateClustersStar(p))),
-
-    // the dedup endgame: pairs -> clusters -> one survivor per cluster
-    // (longest text, ties to min doc_id), singletons pass through
-    "dedup_keep" -> ((s, d) =>
-      Dedup.keepBestPerCluster(Tables.documents(s, d), sharedClusters(s, d))
-        .select(col("doc_id"), col("component"), col("n_in_cluster"))),
-
-    // cross-document duplicated-ngram statistics (the Lee et al. 2022
-    // detection pass), riding the dedup family's persisted hash-array hub —
-    // zero extra corpus hashing when the family already ran
-    "dedup_dupngram" -> ((s, d) =>
-      Dedup.dupNgramStats(sharedShingleArr(s, d))),
-
-    // the matching REMOVAL pass: duplicated 5-word spans cut everywhere
-    // except their earliest corpus occurrence, texts rebuilt (positional
-    // shingles, so it hashes fresh rather than riding the distinct-set
-    // hub). fannedDocs: the md5-per-occurrence pass otherwise runs inside
-    // the 1-file scan stage at bench sf (r12b SpanLab, both orders:
-    // 1.11/1.41 s fanned vs 1.44/1.53 s raw); past fanDocsBytes the scan
-    // is already multi-split and no repartition is added.
-    "dedup_span_cut" -> ((s, d) =>
-      Dedup.spanCut(fannedDocs(s, d), l = 5)),
-
-    // SemDeDup (Abbas et al. 2023): same deterministic first-nlist-centroid
-    // / argmax-cell convention as ann_ivf, near-identical vectors pruned
-    // within cells only — nlist bounded self-joins, no all-pairs. nlist
-    // follows the corpus (suggestNlist, mirrored by the oracle's LIMIT
-    // subquery) so the quadratic-cell guard never trips on grown data:
-    // at x100 a pinned 32 would put 6k+ vectors per cell and fail fast.
-    "dedup_semantic" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Dedup.semanticDedup(emb, threshold = 0.4,
-        nlist = operators.Similarity.suggestNlist(Tables.rowCount(s, d, "embeddings")))
-    }),
-
-    // fuzzy decontamination: Jaccard near-dups BETWEEN the corpus and a
-    // held-out eval slice. The eval set is a slice of the corpus, so the
-    // scorer is a symmetrized filter over the family's persisted
-    // pair-stats hub — zero posting passes beyond the one the family
-    // already paid (the general two-corpus operator,
-    // Dedup.crossCorpusPairsFromArr, is equivalence-spec'd against this)
-    "dedup_cross_corpus" -> ((s, d) =>
-      Dedup.crossCorpusFromStats(sharedPairStats(s, d),
-        _ % 7 === 0, threshold = 0.5)),
-
-    // deterministic stratified sample: fixed per-stratum quota by md5 rank —
-    // the balance-the-domains curation op (vs sample_hash's fixed fraction).
-    // Pre-projected to the two columns the result carries, so every scan in
-    // the plan (counts, cut, guard rerun) reads 2 of orders' 9 columns.
-    "sample_stratified" -> ((s, d) =>
-      operators.Sampling.stratified(
-          Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus")),
-          "o_orderstatus", "o_orderkey", 100)),
-
-    // threshold 0.4 sits just under the corpus's max same-bucket cosine so
-    // the oracle comparison is non-vacuous (0.95 matches zero rows on the
-    // synthetic quasi-random embeddings at every sf)
-    "dedup_embedding" -> ((s, d) =>
-      Dedup.embeddingNearDups(Tables.embeddings(s, d), threshold = 0.4, signBits = 8)
-        .select(col("vec_a"), col("vec_b"))),
-
-    // overlap-coefficient (containment) near-dups: inter / min(|A|,|B|) —
-    // catches a small doc substantially contained in a large one (quote
-    // inclusion), which jaccard structurally caps at size-ratio. Rides the
-    // family's persisted hash-array hub
-    "dedup_containment" -> ((s, d) =>
-      Dedup.containmentFromStats(sharedPairStats(s, d), threshold = 0.9)),
-
-    // threshold calibration curve: pairs flagged per candidate jaccard
-    // cutoff, zero-retention thresholds included. Rides the family's
-    // persisted pair-stats hub — no posting self-join re-run
-    "dedup_threshold_sweep" -> ((s, d) =>
-      Dedup.thresholdSweep(sharedPairStats(s, d),
-        thresholds = (1 to 9).map(_ / 10.0))),
-
-    // near-dup provenance matrix: pair counts by (unordered) source pair —
-    // the read-out that tells a curation pipeline WHICH crawls/snapshots
-    // duplicate each other (within-source boilerplate vs cross-source
-    // mirroring). Rides the family's persisted pair subtree; the only new
-    // work is joining the (tiny) pair set to the doc→source projection.
-    "dedup_source_matrix" -> ((s, d) => {
-      val src = Tables.documents(s, d).select(col("doc_id"), col("source"))
-      sharedJaccardPairs(s, d)
-        .join(src.select(col("doc_id").as("doc_a"), col("source").as("__sa")), "doc_a")
-        .join(src.select(col("doc_id").as("doc_b"), col("source").as("__sb")), "doc_b")
-        .select(least(col("__sa"), col("__sb")).as("source_a"),
-          greatest(col("__sa"), col("__sb")).as("source_b"), col("jaccard"))
-        .groupBy(col("source_a"), col("source_b"))
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(when(col("jaccard") >= 0.8, 1L).otherwise(0L)).as("n_strong"))
-    }),
-
-    // ---- scale-path: similarity search ---------------------------------
-
-    "ann_bruteforce" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") % 100 === 0), k = 10)
-    }),
-
-    "ann_lsh" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.lshTopK(emb, emb.filter(col("vec_id") % 100 === 0), k = 10)
-    }),
-
-    // refineSteps = 0: the seed-centroid IVF — every stage (assignment
-    // argmax, probe ranking, re-rank) is rounded and tie-broken, making
-    // the full neighbor list hash-comparable. The index SIZE follows the
-    // corpus ([[Similarity.suggestNlist]]: max(32, N/1024) cells), with
-    // the DuckDB oracle computing the identical formula in its LIMIT
-    // subquery — at the gate scales (500/2k vectors) the floor keeps
-    // nlist=32 so results are unchanged, while at x100 (200k vectors) a
-    // pinned 32 would put 6k+ members in every probed cell and the
-    // re-rank join dominated the whole bench (17.6 s steady, measured).
-    "ann_ivf" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.ivfTopK(emb, emb.filter(col("vec_id") % 100 === 0), k = 10,
-        nlist = Similarity.suggestNlist(Tables.rowCount(s, d, "embeddings")), refineSteps = 0)
-    }),
-
-    // one k-means refinement step: assignment through the same rounded
-    // argmax kernel, centroid means in fixed-point integer arithmetic
-    // (VectorAggregators.vecMeanFixed) — order-independent, so the
-    // REFINED index is cross-engine deterministic too and carries a full
-    // row-level oracle (recall properties stay spec'd in SimilaritySpec)
-    "ann_ivf_refined" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.ivfTopK(emb, emb.filter(col("vec_id") % 100 === 0), k = 10,
-        nlist = Similarity.suggestNlist(Tables.rowCount(s, d, "embeddings")), refineSteps = 1)
-    }),
-
-    // IVF cell assignment with unrefined (deterministic hash-sampled)
-    // centroids: the exact-arithmetic kernel inside ann_ivf, isolated so it
-    // is oracle-checkable (the k-means refine is float-sum-order dependent
-    // and so only recall-tested). Rounded cosine + cid tie-break make the
-    // argmax cross-engine deterministic; the md5 seed ordering (r15) is
-    // the same uniform sample ivfTopK/semanticDedup use.
-    "ann_ivf_assign" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val centroids = emb
-        .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(32)
-        .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-      emb.crossJoin(broadcast(centroids))
-        .select(col("vec_id"), col("cid"),
-          round(Similarity.cosine(col("embedding"), col("ce")), 6).as("ccos"))
-        .groupBy("vec_id")
-        .agg(max_by(col("cid"), struct(col("ccos"), -col("cid"))).as("cell"))
-    }),
-
-    // ---- scale-path: text analysis --------------------------------------
-
-    "text_profile" -> ((s, d) => TextAnalysis.profile(fannedDocs(s, d))),
-
-    // training-sample construction: 32-word chunks, 8-word overlap (stride
-    // 24) — documents become model-sized pieces in one shuffle-free
-    // generate inside the scan stage
-    "text_chunk" -> ((s, d) =>
-      TextAnalysis.chunkWords(fannedDocs(s, d), chunkSize = 32, overlap = 8)),
-
-    // quality-threshold calibration: docs/tokens retained at each candidate
-    // cut-off; the corpus collapses to its ≤8 distinct score values before
-    // the grid expansion touches anything
-    "text_quality_sweep" -> ((s, d) =>
-      TextAnalysis.qualityThresholdSweep(fannedDocs(s, d), gridSteps = 10)),
-
-    // top-3 salient terms per doc by the exact-rational tf-idf variant
-    // (keyword extraction; ln would diverge in the last ulp across engines)
-    "text_keywords" -> ((s, d) =>
-      TextAnalysis.keywordSalience(Tables.documents(s, d), topK = 3)),
-
-    // tokenize-to-ids against the corpus' own top-24 frequency vocab
-    // (24 < the corpus' 31 distinct tokens, so the OOV path is exercised).
-    // ids is emitted space-joined: the driver's canonicalizer sorts rows
-    // with pandas, which cannot hash array cells, so the oracled projection
-    // must be scalar on both sides (DuckDB mirrors with array_to_string)
-    "text_token_ids" -> ((s, d) =>
-      sharedEncoded(s, d).select(col("doc_id"),
-        array_join(col("ids").cast("array<string>"), " ").as("ids"))),
-
-    // train/eval n-gram contamination: every-50th doc stands in for the
-    // eval set; per train doc, distinct 5-gram overlap count and share
-    "text_contamination" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextAnalysis.contamination(docs, docs.filter(col("doc_id") % 50 === 0), k = 5)
-    }),
-
-    // the same check through the bloom pre-pass (eval side collapsed to a
-    // ~10-bits-per-shingle filter probed inside the scan stage; exact join
-    // only over survivors) — byte-identical output, so it shares the
-    // text_contamination oracle verbatim. The operator is size-adaptive:
-    // at bench sf the eval slice is broadcast-small, so this resolves to
-    // the exact path (the bloom machinery is pinned byte-identical by
-    // TextAnalysisSpec with smallBytes = 0 and by the streaming guard)
-    "text_contamination_bloom" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextAnalysis.contaminationBloom(docs, docs.filter(col("doc_id") % 50 === 0), k = 5)
-    }),
-
-    // CCNet-style LM quality signal: cross-entropy of every document under
-    // a bigram LM trained on the corpus' English slice (the "reference
-    // corpus" role wikipedia plays in CCNet)
-    "lm_cross_entropy" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      graft.operators.LanguageModel.crossEntropy(docs.filter(col("lang") === "en"), docs)
-    }),
-
-    "text_fingerprint" -> ((s, d) =>
-      fannedDocs(s, d).select(
-        col("doc_id"),
-        TextAnalysis.fingerprint(col("text")).as("fingerprint"),
-        TextAnalysis.minShingleFingerprint(col("text"), 5).as("min_shingle_fp"))),
-
-    // char-n-gram language ID + Gopher-style quality rule flags
-    // AUDIT (r8, x100 A/B): a profile-style fused spelling (one tokenize,
-    // one struct-fold for chars+alpha, shared lower(text)) measured
-    // 25.2 s vs 25.8 s composed at x100 steady and 292 s vs 274 s cold at
-    // x1000 — neutral-to-worse, REJECTED. Unlike text_profile (9 splits /
-    // 7 HOF walks collapsed to 1+1, 1.66x), this query's cost is the five
-    // regexp_extract_all corpus scans and the per-token rlike, which no
-    // fusion removes; the composed kernels stay for their reuse value.
-    "text_quality_flags" -> ((s, d) =>
-      fannedDocs(s, d)
-        .select(col("doc_id"),
-          TextAnalysis.langIdCharNgram(col("text")).as("lang_ngram"),
-          TextAnalysis.gopherFlags(col("text")).as("g"))
-        .select(col("doc_id"), col("lang_ngram"),
-          col("g.ok_word_count"), col("g.ok_mean_word_len"),
-          col("g.ok_symbol_ratio"), col("g.ok_alpha_fraction"), col("g.keep"))),
-
-    // repetition detection: top 2-gram share per document (Gopher-style
-    // duplicate-n-gram fraction). The question never crosses documents,
-    // so it is ONE per-row kernel (sorted gram array, longest equal run
-    // — TextAnalysis.repetitionStats), not the r11 corpus-wide
-    // (doc_id, gram) groupBy that shuffled every 2-gram string twice.
-    // Zero exchanges at ANY scale; r12 sf0.1: 0.82 s paired -> see
-    // BENCH_ORACLE. Docs with <2 words drop on n_grams >= 1, exactly as
-    // the old explode() dropped their empty arrays (oracle: len(w)>=2).
-    "text_repetition" -> ((s, d) =>
-      fannedDocs(s, d)
-        .select(col("doc_id"),
-          TextAnalysis.repetitionStats(col("text"), 2).as("r"))
-        .filter(col("r.n_grams") >= 1)
-        .select(col("doc_id"),
-          col("r.n_grams").as("n_2grams"),
-          col("r.top_count").as("top_2gram_count"),
-          (col("r.top_count").cast("double") /
-            col("r.n_grams").cast("double")).as("rep_ratio"))),
-
-    // PII-ish pattern counts (emails / urls / long digit runs)
-    "text_pii_flags" -> ((s, d) =>
-      fannedDocs(s, d).select(
-        col("doc_id"),
-        size(regexp_extract_all(col("text"),
-          lit("[a-zA-Z0-9._]+@[a-zA-Z0-9.-]+"), lit(0))).cast("long").as("n_emails"),
-        size(regexp_extract_all(col("text"),
-          lit("https?://[^ ]+"), lit(0))).cast("long").as("n_urls"),
-        size(regexp_extract_all(col("text"),
-          lit("[0-9]{6,}"), lit(0))).cast("long").as("n_long_digit_runs"))),
-
-    // PII REDACTION (the counterpart of text_pii_flags' detection): the
-    // curation step that actually rewrites the corpus — emails, urls and
-    // long digit runs replaced by typed placeholder tokens, as one narrow
-    // codegen'd projection (nested regexp_replace; url first so an email
-    // inside a url query-string cannot leave a half-redacted hybrid)
-    "text_pii_redact" -> ((s, d) =>
-      fannedDocs(s, d).select(
-        col("doc_id"),
-        regexp_replace(
-          regexp_replace(
-            regexp_replace(col("text"), "https?://[^ ]+", "<URL>"),
-            "[a-zA-Z0-9._]+@[a-zA-Z0-9.-]+", "<EMAIL>"),
-          "[0-9]{6,}", "<NUM>").as("redacted"))),
-
-    // cluster-aware train/val split: near-dup CLUSTERS (not documents) are
-    // the split unit, so no near-duplicate pair can straddle the boundary
-    // and leak eval into train. Deterministic: split decided by the md5 of
-    // the cluster representative id; singleton docs are their own cluster.
-    "dedup_split_by_cluster" -> ((s, d) => {
-      val labels = sharedClusters(s, d)
-      Tables.documents(s, d)
-        .join(labels, Seq("doc_id"), "left")
-        .withColumn("component", coalesce(col("component"), col("doc_id")))
-        .select(col("doc_id"), col("component"),
-          when(conv(substring(md5(col("component").cast("string")), 1, 8), 16, 10)
-              .cast("long") < lit((0.9 * 4294967296.0).toLong), "train")
-            .otherwise("val").as("split"))
-    }),
-
-    "text_rolling_hash" -> ((s, d) =>
-      fannedDocs(s, d).select(
-        col("doc_id"),
-        graft.functions.TextFunctions.rolling_hash(col("text")).as("rhash"),
-        graft.functions.TextFunctions.rolling_hash(
-          TextAnalysis.normalizedText(col("text"))).as("rhash_norm"))),
-
-    // W2: analytic window functions (lag + running sum): gap-based session
-    // assignment over the event stream — sessions break after >30 min idle
-    "w2_lag_sessions" -> ((s, d) => {
-      val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      Tables.events(s, d)
-        .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
-        .withColumn("new_session",
-          when(col("prev_ts").isNull ||
-            col("ts").cast("long") - col("prev_ts").cast("long") > 1800, 1L)
-            .otherwise(0L))
-        .withColumn("session_id", sum(col("new_session")).over(
-          byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(min(col("ts")).as("session_start"), max(col("ts")).as("session_end"),
-          count(lit(1)).as("n_events"))
-    }),
-
-    // S5: registered-view + spark.sql entry point (the reference's
-    // `con.from_df` / `FROM fct` named-relation reuse)
-    "s5_sql_view" -> ((s, d) => {
-      Tables.orders(s, d).createOrReplaceTempView("orders_v")
-      s.sql("""SELECT o_orderpriority, count(*) AS n
-              |FROM orders_v WHERE o_totalprice > 100000
-              |GROUP BY o_orderpriority""".stripMargin)
-    }),
-
-    // P3: LIMIT preview (deterministically ordered)
-    "p3_limit_preview" -> ((s, d) =>
-      Tables.region(s, d).orderBy(col("r_regionkey")).limit(3)),
-
-    // ---- scale-path: multimodal (binary column plumbing) ----------------
-
-    "mm_binary_meta" -> ((s, d) => {
-      val bin = encode(col("text"), "UTF-8")
-      Tables.documents(s, d).select(
-        col("doc_id"),
-        octet_length(bin).cast("long").as("n_bytes"),
-        md5(col("text")).as("content_hash"),
-        (octet_length(bin) % 256).cast("long").as("fake_width"),
-        floor(octet_length(bin) / lit(256)).cast("long").as("fake_height"))
-    }),
-
-    // metadata decode profile — the COLUMNAR spelling (r14): builtins +
-    // one codegen'd header-meta call in a single WholeStageCodegen span,
-    // one md5 per payload. The r13 typed path (Multimodal.profile via
-    // mapPartitions) paid per-row encoder ser/de and hashed each payload
-    // twice — 4.21x DuckDB at x1000 under a falsified
-    // "parquet-dictionary" annotation (the x1000 text carrier is 99.8%
-    // distinct, so duck amortized nothing; the gap was pure engine tax).
-    // MultimodalSpec pins decodeMetaColumns == decodeMeta on real
-    // PNG/JPEG/WAV/MP4 fixtures and undecodable carriers.
-    "mm_decode_profile" -> ((s, d) =>
-      operators.Multimodal.decodeMetaColumns(
-          Tables.documents(s, d), "doc_id", "text", "image")
-        .select(col("asset_id"), col("n_bytes"), col("content_hash"),
-          col("width"), col("height"), col("channels"))),
-
-    // perceptual-hash kernel over the (undecodable-text) asset carrier:
-    // the md5-derived stand-in dhash, signed-64-bit parity with DuckDB's
-    // HUGEINT nibble fold — the real-image path is spec-covered
-    // (MultimodalSpec's dHash/near-dup golden tests)
-    "mm_perceptual_hash" -> ((s, d) =>
-      operators.Multimodal.perceptualHashes(operators.Multimodal.asAssets(
-          Tables.documents(s, d), "doc_id", "text", "image"))
-        .toDF()),
-
-    // feature-extraction kernel over the text-carrier assets: the carrier
-    // has no image magic, so every payload takes the deterministic
-    // md5-chain stand-in, whose dim=16 embedding is exactly the 16 md5
-    // bytes mapped to (b-128)/128 — exact in binary floating point, so
-    // the byte numerators recover losslessly and oracle as integers
-    // (the real luma-grid/RMS paths are MultimodalSpec golden tests)
-    "mm_features" -> ((s, d) =>
-      operators.Multimodal.extractFeatures(operators.Multimodal.asAssets(
-          Tables.documents(s, d), "doc_id", "text", "image"), dim = 16)
-        .toDF()
-        .select(col("asset_id"),
-          array_join(transform(col("embedding"),
-            f => ((f * 128).cast("int") + 128).cast("string")), " ").as("emb_bytes"))),
-
-    // resize kernel on the undecodable carrier = the documented maxBytes
-    // truncation fallback; oracled via payload hash + length (documents
-    // are pure ASCII at every sf, so DuckDB's char substr is a byte slice)
-    "mm_resize" -> ((s, d) =>
-      operators.Multimodal.resize(operators.Multimodal.asAssets(
-          Tables.documents(s, d), "doc_id", "text", "image"),
-          maxBytes = 64, maxDim = 32)
-        .toDF()
-        .select(col("asset_id"),
-          octet_length(col("payload")).cast("long").as("n_bytes"),
-          md5(col("payload")).as("payload_hash"))),
-
-    // frame sampling: video carrier yields 4 evenly-spaced byte slices,
-    // hashed — the caption/OCR input shape; slice arithmetic mirrored in
-    // the oracle with integer division
-    "mm_frames" -> ((s, d) =>
-      operators.Multimodal.sampleFrames(operators.Multimodal.asAssets(
-          Tables.documents(s, d), "doc_id", "text", "video"), n = 4)
-        .toDF()
-        .select(col("asset_id"),
-          col("frame_index").cast("long").as("frame_index"),
-          col("frame_hash"))),
-
-    // ---- chess pipeline end-to-end (rows-only check: not SQL-expressible;
-    // runs the real 514-game sample through bronze→silver→gold→analytics
-    // when the reference checkout is present, else an empty result) -------
-
-    "chess_e2e" -> ((s, _) => {
-      val sample = "/root/reference/dev_files/Data/2024-01/games.json"
-      if (!new java.io.File(sample).exists()) {
-        s.emptyDataFrame
-      } else {
-        val root = java.nio.file.Files.createTempDirectory("chess-e2e").toString
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$root/bronze"))
-        java.nio.file.Files.copy(java.nio.file.Paths.get(sample),
-          java.nio.file.Paths.get(s"$root/bronze/2024-01-games.json"))
-        val pipe = new graft.chess.ChessPipeline(s, root, "Rhythmbear1")
-        pipe.runMonth(2024, 1, java.sql.Timestamp.valueOf("2024-02-01 00:00:00"))
-        graft.chess.ChessAnalytics.winRateByOpeningFamily(
-          pipe.fact, pipe.dimOpenings, pipe.dimResults)
-      }
-    }),
-
-    // ---- chess silver/gold full-table oracles: the engine's bronze→silver
-    // and silver→gold semantics hash-compared column-for-column against a
-    // DuckDB re-derivation from the raw 514-game JSON (the reference
-    // transform IS DuckDB SQL — python_scripts.py:169-205, 533-598) --------
-
-    // UD2 enrichment path: dim_openings with csv-book colon-form names
-    // (longest-prefix match into openings.csv; slug fallback for URLs the
-    // book misses) — the piece of the dim the slug-only chess_gold oracle
-    // could not check
-    "chess_dim_openings" -> ((s, _) => {
-      val sample = "/root/reference/dev_files/Data/2024-01/games.json"
-      val csv = "/root/reference/dev_files/Data/openings.csv"
-      if (!new java.io.File(sample).exists() || !new java.io.File(csv).exists())
-        s.emptyDataFrame
-      else {
-        val silver = graft.chess.SilverFact.transform(
-          s.read.schema(graft.chess.Schemas.bronze).option("multiLine", true).json(sample))
-        graft.chess.Dims.openingsFromSilverEnriched(silver,
-          graft.chess.OpeningMatcher.readBook(s, csv))
-      }
-    }),
-
-    "chess_silver" -> ((s, _) => {
-      val sample = "/root/reference/dev_files/Data/2024-01/games.json"
-      if (!new java.io.File(sample).exists()) s.emptyDataFrame
-      else graft.chess.SilverFact.transform(
-        s.read.schema(graft.chess.Schemas.bronze).option("multiLine", true).json(sample))
-    }),
-
-    "chess_gold" -> ((s, _) => {
-      val sample = "/root/reference/dev_files/Data/2024-01/games.json"
-      if (!new java.io.File(sample).exists()) s.emptyDataFrame
-      else {
-        val silver = graft.chess.SilverFact.transform(
-          s.read.schema(graft.chess.Schemas.bronze).option("multiLine", true).json(sample))
-        // explicit UTC instant: the session timezone is UTC in Verify, and a
-        // Timestamp.valueOf would shift with the JVM default zone
-        val batchTs = java.sql.Timestamp.from(
-          java.time.LocalDateTime.parse("2024-02-01T00:00:00")
-            .toInstant(java.time.ZoneOffset.UTC))
-        graft.chess.GoldFact.starJoin(
-          graft.chess.GoldFact.project(silver, "Rhythmbear1", batchTs),
-          graft.chess.Dims.dateFromSilver(silver),
-          graft.chess.Dims.openingsFromSilver(silver),
-          graft.chess.Dims.results(s),
-          graft.chess.Dims.timeControlFromSilver(silver))
-      }
-    }),
-
-    // W4: Spark's native session_window (batch mode) — gap-merged sessions;
-    // distinct from w2's composed lag/cumsum formulation: this exercises the
-    // built-in operator (also usable under watermarks in streaming), oracled
-    // against an explicit lag-derivation with identical gap semantics
-    // (new session when the gap is >= 30 min; end = last event + gap)
-    "w4_session_window" -> ((s, d) =>
-      Tables.events(s, d)
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
-        .agg(count(lit(1)).as("n_events"),
-          round(sum(col("value")), 2).as("total_value"))
-        .select(col("user_id"), col("sw.start").as("session_start"),
-          col("sw.end").as("session_end"), col("n_events"), col("total_value"))),
-
-    // SCD Type-2 dimension history: per-user event_type version intervals
-    // (one key exchange; change-flag window, filter, and valid_to window
-    // all share it)
-    "w5_scd2" -> ((s, d) =>
-      operators.History.scd2(Tables.events(s, d),
-        "user_id", "event_type", "ts", "event_id")),
-
-    // corpus snapshot diff (the incremental-pipeline delta): old = docs
-    // minus the % 11 slice, new = docs minus the % 13 slice with the % 17
-    // slice rewritten — exercises all four statuses. Both snapshots
-    // derive from ONE base table, so the engine takes the same-base
-    // spelling: one scan, ~one md5 per row (the %17 rewrite is the only
-    // second hash), zero exchanges — where the generic full-outer join
-    // (the oracle's spelling, and HistorySpec's parity twin) scans and
-    // hashes the corpus twice and shuffles both fingerprint sides.
-    "snapshot_diff" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val id = col("doc_id")
-      val h = operators.History.fingerprint(Seq(col("text")))
-      operators.History.snapshotDiffSameBase(docs, "doc_id",
-        oldKeep = id % 11 =!= 0, oldHash = h,
-        newKeep = id % 13 =!= 0,
-        newHash = when(id % 17 === 0,
-          operators.History.fingerprint(Seq(upper(col("text"))))).otherwise(h))
-    }),
-
-    // per-source/lang corpus rollup: the curation dashboard every
-    // training-data pipeline keeps (doc counts, token mass, size profile)
-    "text_source_stats" -> ((s, d) =>
-      Tables.documents(s, d)
-        .groupBy(col("source"), col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(TextAnalysis.tokenCount(col("text"))).as("total_tokens"),
-          (floor(avg(col("n_chars")) * 100 + 0.5) / 100).as("avg_chars"))),
-
-    // hashed linear classifier inference (fastText-style quality filter):
-    // one narrow codegen'd pass — no explode, join, or shuffle
-    "text_quality_model" -> ((s, d) =>
-      Tables.documents(s, d).select(col("doc_id"),
-        TextAnalysis.qualityModelScore(col("text")).as("lm_quality_score"))),
-
-    // tokenizer-induction telemetry: top-100 token coverage curve
-    "vocab_coverage" -> ((s, d) =>
-      TextAnalysis.vocabCoverage(Tables.documents(s, d), topK = 100)),
-
-    // Z-ORDER layout clustering: interleaved (user, hour) key, bucketed —
-    // the per-bucket min/max envelopes the layout exists to tighten
-    "layout_zorder" -> ((s, d) => {
-      val x = pmod(col("user_id"), lit(65536L))
-      val hr = expr("CAST(ts AS LONG) DIV 3600") // proven epoch idiom (stream_tumbling_agg)
-      val y = pmod(hr, lit(65536L))
-      Tables.events(s, d)
-        .select(col("user_id"), hr.as("hr"),
-          operators.Layout.zorderKey2(x, y, bits = 16).as("z"))
-        .groupBy(shiftright(col("z"), 22).as("zbucket"))
-        .agg(count(lit(1)).as("n"),
-          min(col("user_id")).as("u_min"), max(col("user_id")).as("u_max"),
-          min(col("hr")).as("h_min"), max(col("hr")).as("h_max"))
-    }),
-
-    // write-once bucketed layout as a product operator: the j4 fact
-    // projections persisted bucketed by orderkey (write-if-absent,
-    // fail-fast re-register from disk otherwise), join planned with zero
-    // exchanges; same result as j4_roleplay_join by construction
-    "layout_bucketed_join" -> ((s, d) => layoutBucketedJoin(s, d)),
-
-    // ---- streaming semantics (batch-equivalent tumbling window) ---------
-
-    "stream_tumbling_agg" -> ((s, d) =>
-      Tables.events(s, d)
-        .groupBy((floor(col("ts").cast("long") / 3600) * 3600).cast("long").as("window_epoch"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))),
-
-    // salted two-phase aggregation of a hot grouping key (events has ~5
-    // event_type values over the whole table — exactly the shape where one
-    // reduce task would own a fifth of the corpus without salting): partial
-    // agg on (key, salt-of-event_id), final combine on key. Oracled against
-    // the plain one-phase GROUP BY, proving the salt is semantically
-    // invisible; floor(x*100+0.5)/100 absorbs the reassociated double sum
-    "skew_salted_agg" -> ((s, d) =>
-      operators.SkewTools.saltedSumCount(
-          Tables.events(s, d).select(col("event_type"), col("value"), col("event_id")),
-          "event_type", "value", salt = 8, saltCols = Seq("event_id"))
-        .select(col("event_type"),
-          (floor(col("sum_value") * 100 + lit(0.5)) / 100).as("sum_value"),
-          col("n"))),
-
-    // ---- scale-path: retrieval scoring + sequence packing ---------------
-
-    // BM25 against a fixed probe query: one 1-row corpus-stats aggregate
-    // broadcast into a narrow scoring projection — no per-term shuffle
-    "text_bm25" -> ((s, d) =>
-      operators.Retrieval.bm25(Tables.documents(s, d),
-        Seq("vector", "stream", "join"))),
-
-    // GPT-style sequence packing: exact global token prefix-sum in doc_id
-    // order via the two-phase scan (range buckets + driver offsets), cut
-    // every 512 tokens
-    "pack_sequences" -> ((s, d) =>
-      operators.Packing.packSequences(
-        Tables.documents(s, d)
-          .select(col("doc_id"), TextAnalysis.tokenCount(col("text")).as("n_tokens")),
-        "doc_id", "n_tokens", capacity = 512L)),
-
-    // the materialized form: encode to ids (top-24 vocab, as
-    // text_token_ids), pack at 512, emit the actual training sequences —
-    // every row exactly 512 ids except the tail, straddling docs split
-    // the packed sequences' ids are likewise space-joined for the driver's
-    // scalar-only canonicalizer (array semantics stay covered by PackingSpec)
-    "pack_materialize" -> ((s, d) =>
-      operators.Packing.packMaterialize(
-        sharedEncoded(s, d),
-        "doc_id", "ids", capacity = 512L,
-        // r15: the hub caches ids MATERIALIZED, so size(ids) (the
-        // tokenCol=None default) is a columnar array-length read — the
-        // previous tokenCount(text) re-tokenized the corpus text to derive
-        // the same number (equal by construction: one id per whitespace
-        // token), and forced the hub to cache the text column at all
-        tokenCol = None)
-        .withColumn("ids", array_join(col("ids").cast("array<string>"), " "))),
-
-    // reproducible epoch shuffle: contiguous 0-based training order from a
-    // seed-keyed content hash. Size-adaptive: at bench sf the operator
-    // emits the single-window definition plan (audited in PlanAuditSpec);
-    // past smallBytes it switches to the two-phase prefix scan, whose
-    // shape the smallBytes=0-pinned audits cover
-    "order_epoch_shuffle" -> ((s, d) =>
-      operators.TrainOrder.epochShuffle(
-        Tables.documents(s, d).select(col("doc_id"), col("source")),
-        "doc_id", seed = 7L)),
-
-    // length-staged curriculum: 16-word bins ascending (short docs first),
-    // seeded shuffle within each stage; exact stage boundaries (size-
-    // adaptive like order_epoch_shuffle: definition window at bench sf,
-    // two-phase rank past smallBytes)
-    "order_curriculum" -> ((s, d) =>
-      operators.TrainOrder.curriculumOrder(
-        Tables.documents(s, d).select(col("doc_id"),
-          // integer DIV (matching the oracle's //): a double divide + cast
-          // would round-vs-truncate-diverge between the engines
-          expr("CAST(size(split(text, ' ', -1)) DIV 16 AS BIGINT)").as("bin")),
-        "doc_id", "bin", seed = 7L)),
-
-    // domain-diversity ordering: reading by interleave_pos cycles sources
-    // round-robin, so no training batch is a single-domain run
-    "order_interleave" -> ((s, d) =>
-      operators.TrainOrder.sourceInterleave(
-        Tables.documents(s, d).select(col("doc_id"), col("source")),
-        "doc_id", "source", seed = 13L)),
-
-    // deterministic 8-way shard materialization: round-robin along the
-    // seeded order → exactly-equal shard sizes, each an unbiased slice
-    "order_shards" -> ((s, d) =>
-      operators.TrainOrder.shardAssignments(
-          Tables.documents(s, d).select(col("doc_id")),
-          "doc_id", seed = 11L, numShards = 8)
-        .groupBy(col("shard"))
-        .agg(count(lit(1)).as("n"),
-          min(col("shuffle_pos")).as("pos_min"),
-          max(col("shuffle_pos")).as("pos_max"))),
-
-    // token-budget head of the seeded shuffle: what a fixed-budget training
-    // run actually consumes — at bench sf the budget cuts ~95% of the
-    // corpus, so the bucket prune drops it in the scan stage. The token
-    // kernel goes in as an EXPRESSION (r14): the budget pass tokenizes
-    // only live-bucket survivors, so the corpus pays ONE tokenizer scan
-    // (the stats pass), not two — the second full-corpus tokenCount was
-    // the real cost behind the falsified "parquet-dictionary" x1000
-    // annotation (the scaled text is 99.8% distinct).
-    "order_token_budget" -> ((s, d) =>
-      operators.TrainOrder.tokenBudgetHeadExpr(
-        Tables.documents(s, d).select(col("doc_id"), col("text")),
-        "doc_id", "n_tokens",
-        TextAnalysis.tokenCount(col("text")).cast("long"),
-        seed = 3L, budget = 15000L)
-        .select(col("doc_id"), col("n_tokens"), col("cum_tokens"))),
-
-    // per-source (domain-cap) token budget: within every source keep the
-    // seeded-hash-order head whose running total stays <= 800 tokens
-    "order_budget_per_source" -> ((s, d) =>
-      operators.TrainOrder.tokenBudgetPerSource(
-        Tables.documents(s, d).select(col("doc_id"), col("source"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens")),
-        "doc_id", "n_tokens", "source", seed = 5L, budget = 800L)),
-
-    // quality-weighted deterministic resample: keep probability scales with
-    // doc length (a stand-in quality weight), decided by content hash —
-    // a pure narrow filter, stable under retry/partitioning
-    "sample_weighted" -> ((s, d) =>
-      operators.Sampling.weightedBernoulli(Tables.documents(s, d), "doc_id",
-          TextAnalysis.tokenCount(col("text")).cast("double") / lit(60.0))
-        .select(col("doc_id"))),
-
-    // J8 (beyond reference): interval-overlap join via the same bin
-    // bucketing as J7 — kept exactly-once by the first-shared-bucket rule,
-    // no dedup shuffle. 90-min hour-grid windows × 3-hour user spans.
-    "j8_interval_overlap" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      val wins = ev
-        .select((floor(col("ts").cast("long") / 3600) * 3600).cast("long").as("hr"))
-        .distinct()
-        .select((col("hr") - 900).as("w_start"), (col("hr") + 4500).as("w_end"))
-      val spans = ev.groupBy(col("user_id"))
-        .agg(min(col("ts").cast("long")).as("u_start"))
-        .select(col("user_id"), col("u_start"), (col("u_start") + 10800).as("u_end"))
-      operators.IntervalJoin.intervalOverlap(wins, "w_start", "w_end",
-          spans, "u_start", "u_end", bucketWidth = 3600L)
-        .select(col("w_start"), col("user_id"))
-    }),
-
-    // domain mixing: rebalance the corpus to target language proportions
-    // (en-heavy) — bounded per-group aggregate + content-hash thinning
-    "sample_mix" -> ((s, d) =>
-      operators.Sampling.mixToWeights(Tables.documents(s, d), "lang", "doc_id",
-          Map("en" -> 0.4, "de" -> 0.15, "es" -> 0.15, "fr" -> 0.15, "zh" -> 0.15))
-        .select(col("doc_id"), col("lang"))),
-
-    // F17 (beyond reference): time-series gap-fill — densify each user's
-    // hourly grid between their first and last event and zero-fill missing
-    // hours. The grid generates per key (explode of a bounded sequence),
-    // so no global calendar table and no cross join; both joins are keyed.
-    "f17_hour_gapfill" -> ((s, d) => f17GapFill(Tables.events(s, d))),
-
-    // incremental LSH dedup: corpus (doc_id % 10 != 0) is indexed once;
-    // the new batch (doc_id % 10 == 0) probes the index — per-batch cost
-    // O(|batch| + collisions), never a corpus re-hash.
-    "dedup_incremental" -> ((s, d) => {
-      // corpus and batch sides are narrow filters over the family's ONE
-      // shared hash-array table (docShingleHashes is per-row, so
-      // filter-then-hash ≡ hash-then-filter) — neither side re-hashes
-      val arr = sharedShingleArr(s, d)
-      val arrIdx = arr.filter(col("doc_id") % 10 =!= 0)
-      val bandIdx = Dedup.bandIndexFromArr(arrIdx, numPerm = 16, bands = 4)
-      Dedup.nearDupsAgainstIndexArr(
-        arr.filter(col("doc_id") % 10 === 0), arrIdx, bandIdx,
-        numPerm = 16, bands = 4, threshold = 0.5)
-    }),
-
-    // the streaming near-dup quarantine's per-batch ROUTING decision as a
-    // batch-equivalent (same relationship as stream_tumbling_agg to
-    // tumblingAgg): batch docs (doc_id % 10 == 0) probe the corpus LSH
-    // index and split accepted/quarantined — exactly the foreachBatch body
-    // of EventStreams.nearDupQuarantine, whose micro-batch mechanics are
-    // EventStreamsSpec's routing test. Shares the family's one persisted
-    // hash-array table; index cost is the batch probe, never a corpus
-    // re-hash.
-    "stream_quarantine" -> ((s, d) => {
-      val arr = sharedShingleArr(s, d)
-      val arrIdx = arr.filter(col("doc_id") % 10 =!= 0)
-      val bandIdx = Dedup.bandIndexFromArr(arrIdx, numPerm = 16, bands = 4)
-      val dups = Dedup.nearDupsAgainstIndexArr(
-          arr.filter(col("doc_id") % 10 === 0), arrIdx, bandIdx,
-          numPerm = 16, bands = 4, threshold = 0.5)
-        .select(col("doc_b").as("doc_id")).distinct()
-      Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"))
-        // dups ⊆ the micro-batch, which is bounded by the streaming
-        // contract — broadcast the routing set so the batch never
-        // exchanges for the split (the static plan would otherwise SMJ)
-        .join(broadcast(dups.withColumn("__q", lit(true))), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("__q"), lit(false)).as("quarantined"))
-    }),
-
-    // J7 (beyond reference): point-in-interval range join via bin
-    // bucketing — an equi-join on bucket ids instead of the
-    // BroadcastNestedLoopJoin the planner would pick for the raw range
-    // predicate. Intervals: overlapping 90-min windows on the hour grid.
-    "j7_interval_join" -> ((s, d) => {
-      val pts = Tables.events(s, d)
-        .select(col("event_id"), col("ts").cast("long").as("pe"))
-      val iv = Tables.events(s, d)
-        .select((floor(col("ts").cast("long") / 3600) * 3600).cast("long").as("hr"))
-        .distinct()
-        .select((col("hr") - 900).as("start_epoch"), (col("hr") + 4500).as("end_epoch"))
-      operators.IntervalJoin.pointInInterval(pts, "pe", iv,
-          "start_epoch", "end_epoch", bucketWidth = 3600L)
-        .select(col("event_id"), col("start_epoch"))
-    })
-  )
-
-  // ---- oracles ----------------------------------------------------------
-
-  def oracleSql: Map[String, String] = Map(
-    "a1_groupby_agg" ->
-      """SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty,
-        | round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-        | count(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-    "p2_distinct" ->
-      "SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders",
-
-    "j2_anti_join" ->
-      """SELECT c_custkey, c_name, c_mktsegment FROM customer
-        |WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)""".stripMargin,
-
-    "j1_star_join" ->
-      """SELECT l.l_orderkey, l.l_linenumber, l.l_partkey, l.l_suppkey,
-        | l.l_quantity, l.l_extendedprice, l.l_returnflag, l.l_shipdate
-        |FROM lineitem l
-        |LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |LEFT JOIN part p ON l.l_partkey = p.p_partkey
-        |LEFT JOIN supplier s ON l.l_suppkey = s.s_suppkey""".stripMargin,
-
-    "j1_a1_star_rollup" ->
-      """SELECT r_name, n_name,
-        | round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-        | count(*) AS n_items
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name""".stripMargin,
-
-    "j4_roleplay_join" ->
-      """SELECT cn.n_name AS cust_nation, sn.n_name AS supp_nation, count(*) AS n
-        |FROM lineitem l
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        |JOIN nation cn ON c.c_nationkey = cn.n_nationkey
-        |JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |JOIN nation sn ON s.s_nationkey = sn.n_nationkey
-        |GROUP BY cn.n_name, sn.n_name""".stripMargin,
-
-    // layout-independent semantics: the bucketed layout changes the
-    // physical plan (zero exchanges), never the answer
-    "layout_bucketed_join" ->
-      """SELECT cn.n_name AS cust_nation, sn.n_name AS supp_nation, count(*) AS n
-        |FROM lineitem l
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        |JOIN nation cn ON c.c_nationkey = cn.n_nationkey
-        |JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |JOIN nation sn ON s.s_nationkey = sn.n_nationkey
-        |GROUP BY cn.n_name, sn.n_name""".stripMargin,
-
-    "w1_window_dedup" ->
-      """SELECT user_id, event_id, event_type, ts, value FROM (
-        | SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-        | FROM events) t
-        |WHERE rn = 1""".stripMargin,
-
-    "u1_union_distinct" ->
-      """SELECT c_nationkey AS nationkey FROM customer
-        |UNION
-        |SELECT s_nationkey AS nationkey FROM supplier""".stripMargin,
-
-    "u2_union_all" ->
-      """SELECT c_nationkey AS nationkey, 'customer' AS src FROM customer
-        |UNION ALL
-        |SELECT s_nationkey AS nationkey, 'supplier' AS src FROM supplier""".stripMargin,
-
-    "q3_shipping_priority" ->
-      """SELECT l_orderkey, o_orderdate,
-        | round(sum(l_extendedprice * (1 - l_discount)), 2) AS rev
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < DATE '1995-03-15'
-        |  AND l_shipdate > DATE '1995-03-15'
-        |GROUP BY l_orderkey, o_orderdate
-        |ORDER BY rev DESC, l_orderkey LIMIT 10""".stripMargin,
-
-    "q13_custdist" ->
-      """SELECT c_count, count(*) AS custdist FROM (
-        | SELECT c_custkey, count(o_orderkey) AS c_count
-        | FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        | GROUP BY c_custkey) t
-        |GROUP BY c_count""".stripMargin,
-
-    "q18_large_orders" ->
-      """WITH big AS (
-        | SELECT l_orderkey AS bk, sum(l_quantity) AS total_qty
-        | FROM lineitem GROUP BY l_orderkey HAVING sum(l_quantity) > 250)
-        |SELECT o_orderkey, o_orderdate, o_totalprice, total_qty
-        |FROM orders JOIN big ON o_orderkey = bk""".stripMargin,
-
-    "u3_intersect_except" ->
-      """SELECT nationkey, 'both' AS op FROM (
-        | SELECT c_nationkey AS nationkey FROM customer
-        | INTERSECT
-        | SELECT s_nationkey FROM supplier)
-        |UNION ALL
-        |SELECT nationkey, 'cust_only' AS op FROM (
-        | SELECT c_nationkey AS nationkey FROM customer
-        | EXCEPT
-        | SELECT s_nationkey FROM supplier)""".stripMargin,
-
-    "w3_frames_ranks" ->
-      """SELECT user_id, event_id,
-        | round(avg(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |   ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 6) AS mov_avg3,
-        | lead(event_id, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_event,
-        | first_value(event_id) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS first_event,
-        | CAST(rank() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) AS rnk,
-        | percent_rank() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS pct_rank,
-        | CAST(ntile(4) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT)
-        |   AS quartile
-        |FROM events""".stripMargin,
-
-    "p7_case_pivot" ->
-      """SELECT o_orderkey, o_orderstatus,
-        | CASE WHEN o_totalprice < 50000 THEN 'small'
-        |      WHEN o_totalprice < 150000 THEN 'medium'
-        |      ELSE 'large' END AS price_band,
-        | CAST(quarter(o_orderdate) AS BIGINT) AS order_quarter
-        |FROM orders""".stripMargin,
-
-    "o1_global_sort" ->
-      """SELECT n_nationkey, n_name, n_regionkey FROM nation
-        |ORDER BY n_regionkey, n_name DESC""".stripMargin,
-
-    "f3_replace_parse_date" ->
-      """SELECT o_orderkey, strftime(CAST(o_orderdate AS DATE), '%Y.%m.%d') AS dotted,
-        | CAST(strptime(replace(strftime(CAST(o_orderdate AS DATE), '%Y.%m.%d'), '.', '/'),
-        |               '%Y/%m/%d') AS DATE) AS parsed
-        |FROM orders""".stripMargin,
-
-    "o2_topk" ->
-      """SELECT c_custkey, c_acctbal FROM customer
-        |ORDER BY c_acctbal DESC, c_custkey LIMIT 10""".stripMargin,
-
-    "o3_watermark_max" ->
-      "SELECT max(ts) AS last_updated FROM events",
-
-    "f7_dim_date" ->
-      """SELECT DISTINCT CAST(o_orderdate AS DATE) AS order_date,
-        | CAST(year(CAST(o_orderdate AS DATE)) AS BIGINT) AS year,
-        | CAST(month(CAST(o_orderdate AS DATE)) AS BIGINT) AS month,
-        | strftime(CAST(o_orderdate AS DATE), '%B') AS month_name,
-        | CAST(day(CAST(o_orderdate AS DATE)) AS BIGINT) AS day,
-        | strftime(CAST(o_orderdate AS DATE), '%A') AS weekday,
-        | CAST(quarter(CAST(o_orderdate AS DATE)) AS BIGINT) AS quarter
-        |FROM orders""".stripMargin,
-
-    "p1_wide_projection" ->
-      """SELECT l_orderkey, l_linenumber, CAST(l_quantity AS BIGINT) AS qty,
-        | floor(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 100 + 0.5) / 100 AS charge,
-        | l_returnflag || '/' || l_linestatus AS flag_status,
-        | CAST(l_shipdate AS DATE) AS ship_date,
-        | CASE WHEN l_discount > 0.05 THEN 'promo' ELSE 'std' END AS promo_flag
-        |FROM lineitem""".stripMargin,
-
-    "f1_regex_extract" ->
-      """SELECT event_id, regexp_extract(props, '"k": (\d+)', 1) AS k_str,
-        | TRY_CAST(regexp_extract(props, '"k": (\d+)', 1) AS BIGINT) AS k_val
-        |FROM events""".stripMargin,
-
-    "f2_regex_count" ->
-      """SELECT doc_id,
-        | CAST(len(regexp_extract_all(text, '[a-z]+')) AS BIGINT) AS n_alpha_tokens,
-        | CAST(len(string_split(text, ' ')) AS BIGINT) AS n_ws_tokens
-        |FROM documents""".stripMargin,
-
-    "ud3_split_family" ->
-      """SELECT p_partkey, split_part(p_name, ' ', 1) AS family,
-        | split_part(p_name, ' ', 2) AS variation
-        |FROM part""".stripMargin,
-
-    "f6_duration_secs" ->
-      """SELECT user_id,
-        | CAST(floor(epoch(max(ts))) - floor(epoch(min(ts))) AS BIGINT) AS span_secs,
-        | count(*) AS n_events
-        |FROM events GROUP BY user_id""".stripMargin,
-
-    "ud6_format_time_control" ->
-      """WITH t AS (
-        | SELECT event_id,
-        |  CASE WHEN event_id % 3 = 0
-        |   THEN CAST((event_id % 9 + 1) * 60 + (event_id % 7) * 10 AS VARCHAR)
-        |   ELSE CAST((event_id % 9 + 1) * 60 + (event_id % 7) * 10 AS VARCHAR)
-        |        || '+' || CAST(event_id % 13 AS VARCHAR) END AS tc
-        | FROM events)
-        |SELECT event_id, tc,
-        | CASE WHEN strpos(tc, '+') > 0
-        |  THEN CAST(CAST(floor(CAST(split_part(tc, '+', 1) AS BIGINT) / 60) AS BIGINT) AS VARCHAR)
-        |       || '|' || split_part(tc, '+', 2)
-        |  ELSE CAST(CAST(floor(CAST(tc AS BIGINT) / 60) AS BIGINT) AS VARCHAR) END AS formatted
-        |FROM t""".stripMargin,
-
-    "p5_like_filter" ->
-      """SELECT p_partkey, p_name, p_brand FROM part
-        |WHERE p_name LIKE '%widget%' AND p_brand LIKE 'Brand#1%'""".stripMargin,
-
-    "a2_count_distinct" ->
-      """SELECT count(DISTINCT l_partkey) AS n_parts,
-        | count(DISTINCT l_suppkey) AS n_supps,
-        | count(DISTINCT (l_partkey, l_suppkey)) AS n_pairs
-        |FROM lineitem""".stripMargin,
-
-    "j3_prefix_match" ->
-      """WITH sample AS (SELECT text, string_split(text, ' ') AS w FROM documents
-        |               WHERE doc_id % 20 = 0),
-        |dict AS (
-        | SELECT DISTINCT array_to_string(w[1:2], ' ') AS p FROM sample
-        | UNION
-        | SELECT DISTINCT array_to_string(w[1:3], ' ') AS p FROM sample WHERE len(w) >= 3)
-        |SELECT d.doc_id, max_by(t.p, strlen(t.p)) AS opening,
-        | CAST(max(strlen(t.p)) AS BIGINT) AS opening_len
-        |FROM documents d LEFT JOIN dict t ON starts_with(d.text, t.p)
-        |GROUP BY d.doc_id""".stripMargin,
-
-    "g1_posexplode" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        |           WHERE doc_id < 50)
-        |SELECT doc_id, CAST(u.pos AS BIGINT) AS pos, u.tok FROM (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(w) + 1),
-        |    i -> struct_pack(pos := i - 1, tok := w[i]))) AS u FROM t)""".stripMargin,
-
-    "f15_string_ops" ->
-      """SELECT p_partkey,
-        | upper(p_name) AS upper_name,
-        | lpad(CAST(p_partkey AS VARCHAR), 8, '0') AS padded_key,
-        | translate(p_name, 'ae', '@3') AS leeted,
-        | reverse(p_brand) AS rev_brand,
-        | split_part(p_name, ' ', 2) AS second_word,
-        | repeat(substr(p_brand, 1, 2), 3) AS brand_echo
-        |FROM part""".stripMargin,
-
-    "f16_date_ops" ->
-      """SELECT o_orderkey,
-        | last_day(CAST(o_orderdate AS DATE)) AS month_end,
-        | CAST(date_trunc('month', CAST(o_orderdate AS DATE)) AS DATE) AS month_start,
-        | CAST(CAST(o_orderdate AS DATE) + INTERVAL 10 DAY AS DATE) AS plus10,
-        | CAST(CAST(o_orderdate AS DATE) + INTERVAL 2 MONTH AS DATE) AS plus2m,
-        | make_date(year(CAST(o_orderdate AS DATE)), month(CAST(o_orderdate AS DATE)),
-        |           day(CAST(o_orderdate AS DATE))) AS remade
-        |FROM orders""".stripMargin,
-
-    "a10_cube" ->
-      """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-        | CAST(grouping(o_orderstatus, o_orderpriority) AS BIGINT) AS gid
-        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""".stripMargin,
-
-    "a9_unpivot" ->
-      """SELECT l_orderkey, l_linenumber, 'quantity' AS measure, l_quantity AS value
-        |FROM lineitem
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, 'discount', l_discount FROM lineitem
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, 'tax', l_tax FROM lineitem""".stripMargin,
-
-    "a8_pivot" ->
-      """SELECT o_orderstatus,
-        | count(*) FILTER (o_orderpriority = '1-URGENT') AS p1,
-        | count(*) FILTER (o_orderpriority = '2-HIGH') AS p2,
-        | count(*) FILTER (o_orderpriority = '3-MEDIUM') AS p3,
-        | count(*) FILTER (o_orderpriority = '4-NOT SPECIFIED') AS p4,
-        | count(*) FILTER (o_orderpriority = '5-LOW') AS p5
-        |FROM orders GROUP BY o_orderstatus""".stripMargin,
-
-    "f13_array_ops" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
-        |SELECT doc_id,
-        | array_to_string(list_sort(list_distinct(w))[1:3], ',') AS first3_sorted,
-        | list_contains(w, 'the') AS has_the,
-        | CAST(len(list_filter(list_distinct(w), x -> x IN ('the', 'a', 'of'))) AS BIGINT)
-        |   AS n_common,
-        | CAST(list_aggregate(list_transform(w, x -> CAST(strlen(x) AS BIGINT)), 'sum')
-        |   AS BIGINT) AS total_chars
-        |FROM t""".stripMargin,
-
-    "f14_json_ops" ->
-      """SELECT event_id,
-        | TRY_CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
-        | json_extract_string(props, '$.tag') AS tag,
-        | json_extract_string(props, '$.missing') AS missing
-        |FROM events""".stripMargin,
-
-    "j6_semi_join" ->
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)""".stripMargin,
-
-    "a7_below_avg_qty" ->
-      """WITH pa AS (SELECT l_partkey AS ap_partkey, avg(l_quantity) AS avg_qty
-        |            FROM lineitem GROUP BY l_partkey)
-        |SELECT l_returnflag, count(*) AS n_below,
-        | round(sum(l_extendedprice) / 100, 0) AS price_hundreds
-        |FROM lineitem JOIN pa ON l_partkey = ap_partkey
-        |WHERE l_quantity < avg_qty * 0.5
-        |GROUP BY l_returnflag""".stripMargin,
-
-    "f12_null_ops" ->
-      """SELECT event_id,
-        | coalesce(TRY_CAST(nullif(regexp_extract(props, '"k": (\d+)', 1), '') AS BIGINT), -1)
-        |   AS k_or_default,
-        | nullif(event_type, 'click') AS type_not_click,
-        | TRY_CAST(nullif(regexp_extract(props, '"k": (\d+)', 1), '') AS BIGINT) IS NULL
-        |   AS k_is_null
-        |FROM events""".stripMargin,
-
-    "text_edit_distance" ->
-      """WITH t AS (
-        | SELECT doc_id,
-        |  substr(trim(regexp_replace(regexp_replace(lower(substr(text, 1, 128)), '[^a-z0-9 ]', '', 'g'),
-        |              ' +', ' ', 'g')), 1, 32) AS prefix,
-        |  substr(trim(regexp_replace(regexp_replace(lower(substr(text, 1, 128)), '[^a-z0-9 ]', '', 'g'),
-        |              ' +', ' ', 'g')), 1, 8) AS bucket
-        | FROM documents)
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        | CAST(levenshtein(a.prefix, b.prefix) AS BIGINT) AS edit_dist
-        |FROM t a JOIN t b ON a.bucket = b.bucket AND a.doc_id < b.doc_id
-        |WHERE levenshtein(a.prefix, b.prefix) <= 8""".stripMargin,
-
-    "j5_asof_join" ->
-      """WITH refs AS (
-        | SELECT user_id, ts, max(value) AS ref_value, max(event_id) AS ref_event
-        | FROM events WHERE event_id % 10 = 0 GROUP BY user_id, ts),
-        |probes AS (
-        | SELECT event_id, user_id, ts FROM events WHERE event_id % 10 <> 0)
-        |SELECT p.event_id, p.user_id, p.ts, r.ref_value, r.ref_event
-        |FROM probes p ASOF LEFT JOIN refs r
-        | ON p.user_id = r.user_id AND p.ts >= r.ts""".stripMargin,
-
-    // identical semantics to j5 by construction (refs are pre-aggregated
-    // per (user_id, ts), so the two-table tie-break has nothing to break);
-    // what differs is the ENGINE path under test: leftAsof vs leftAsofTape
-    "j5b_asof_two_table" ->
-      """WITH refs AS (
-        | SELECT user_id, ts, max(value) AS ref_value, max(event_id) AS ref_event
-        | FROM events WHERE event_id % 10 = 0 GROUP BY user_id, ts),
-        |probes AS (
-        | SELECT event_id, user_id, ts FROM events WHERE event_id % 10 <> 0)
-        |SELECT p.event_id, p.user_id, p.ts, r.ref_value, r.ref_event
-        |FROM probes p ASOF LEFT JOIN refs r
-        | ON p.user_id = r.user_id AND p.ts >= r.ts""".stripMargin,
-
-    "a5_rollup" ->
-      """SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty,
-        | count(*) AS n, CAST(grouping(l_returnflag, l_linestatus) AS BIGINT) AS gid
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-
-    "a12_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty,
-        | count(*) AS n, CAST(grouping(l_returnflag, l_linestatus) AS BIGINT) AS gid
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""".stripMargin,
-
-    // the seed VALUES literal is GENERATED from Dims.resultSeed — the one
-    // shared constant the engine entry also reads (r13 ADVICE)
-    "chess_scale_winrate" ->
+    "chess_scale_winrate" -> Query(
+      // the seed VALUES literal is GENERATED from Dims.resultSeed — the one
+      // shared constant the engine entry also reads (r13 ADVICE)
       s"""WITH seed(result_code, result) AS (VALUES
         |  ${graft.chess.Dims.resultSeed
              .map { case (c, r, _) => s"('$c','$r')" }.mkString(",")}),
@@ -3023,284 +2111,89 @@ object SparkEntry {
         |  CAST(sum(CASE WHEN result = 'Draw' THEN 1 ELSE 0 END) AS BIGINT) AS draws,
         |  avg(CAST(CASE WHEN result = 'Win' THEN 1 ELSE 0 END AS DOUBLE)) AS win_rate
         |FROM orders JOIN dim ON o_orderkey % 15 = dim.idx
-        |GROUP BY 1, 2, 3""".stripMargin,
+        |GROUP BY 1, 2, 3""".stripMargin)((s, d) => chessScaleWinrate(s, d)),
 
-    "sample_hash" ->
+    // deterministic hash sample: md5-prefix filter is engine-portable
+    // (unlike TABLESAMPLE/rand whose PRNG differs per engine)
+    "sample_hash" -> Query(
       """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |WHERE substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 1) = '0'""".stripMargin,
+        |WHERE substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 1) = '0'""".stripMargin)((s, d) =>
+      Tables.orders(s, d)
+        .filter(substring(md5(col("o_orderkey").cast("string")), 1, 1) === "0")
+        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))),
 
-    "dedup_exact" ->
+    // columnar-format breadth: write customer out as ORC, read it back,
+    // aggregate — the second columnar source/sink proven end-to-end under
+    // the oracle (which reads the identical rows from parquet). The write
+    // happens once per session and dir (Sources.fixture) so repeated
+    // invocations — bench passes, plan audits — time the ORC scan
+    "src_orc_roundtrip" -> Query(
+      """SELECT c_mktsegment, count(*) AS n,
+        | floor(sum(c_acctbal) * 100 + 0.5) / 100 AS total_acctbal
+        |FROM customer GROUP BY c_mktsegment""".stripMargin)((s, d) => {
+      val dir = graft.sources.Sources.fixture(s, d, "customer", "orc")
+      graft.sources.Sources.orc(s, dir)
+        .groupBy(col("c_mktsegment"))
+        .agg(count(lit(1)).as("n"),
+          (floor(sum(col("c_acctbal")) * 100 + 0.5) / 100).as("total_acctbal"))
+    }),
+
+    // text-format breadth, same roundtrip contract as src_orc_roundtrip:
+    // CSV sink+source (explicit schema on the read — an inferSchema pass
+    // would scan the data twice and is banned from the library's read
+    // path) and JSON-lines sink+source, each proven end-to-end under an
+    // oracle reading the identical rows from parquet
+    "src_csv_roundtrip" -> Query(
+      """SELECT n_regionkey, count(*) AS n, min(n_name) AS first_nation
+        |FROM nation GROUP BY n_regionkey""".stripMargin)((s, d) => {
+      val dir = graft.sources.Sources.fixture(s, d, "nation", "csv")
+      graft.sources.Sources.csv(s, dir,
+          Some(Tables.nation(s, d).schema))
+        .groupBy(col("n_regionkey"))
+        .agg(count(lit(1)).as("n"), min(col("n_name")).as("first_nation"))
+    }),
+
+    "src_json_roundtrip" -> Query(
+      """SELECT s_nationkey, count(*) AS n,
+        | floor(sum(s_acctbal) * 100 + 0.5) / 100 AS total_acctbal
+        |FROM supplier GROUP BY s_nationkey""".stripMargin)((s, d) => {
+      val dir = graft.sources.Sources.fixture(s, d, "supplier", "json")
+      // multiLine = false: the fixture is JSON-LINES (writeJson's format);
+      // the facade's multiLine default serves the bronze array-file shape
+      graft.sources.Sources.json(s, dir, Tables.supplier(s, d).schema,
+          multiLine = false)
+        .groupBy(col("s_nationkey"))
+        .agg(count(lit(1)).as("n"),
+          (floor(sum(col("s_acctbal")) * 100 + 0.5) / 100).as("total_acctbal"))
+    }),
+
+    // ---- scale-path: deduplication ------------------------------------
+
+    "dedup_exact" -> Query(
       """SELECT md5(text) AS text_md5, count(*) AS n_dups, min(doc_id) AS keep_id
-        |FROM documents GROUP BY md5(text)""".stripMargin,
+        |FROM documents GROUP BY md5(text)""".stripMargin)((s, d) => Dedup.exactGroups(Tables.documents(s, d))),
 
-    "dedup_normalized" ->
+    "dedup_normalized" -> Query(
       """SELECT md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'),
         |                ' +', ' ', 'g'))) AS fp,
         | count(*) AS n_dups, min(doc_id) AS keep_id
-        |FROM documents GROUP BY 1""".stripMargin,
+        |FROM documents GROUP BY 1""".stripMargin)((s, d) => Dedup.normalizedGroups(Tables.documents(s, d))),
 
-    // intersections and sizes over the DISTINCT 31-bit shingle hashes —
-    // the identical reduction Dedup.docShingleHashes applies, so both
-    // engines agree bit-for-bit even under hash collisions
-    "dedup_ngram_jaccard" ->
+    // pairs ≥ 0.8 = a filter over the family's shared ≥ 0.5 pair table
+    // (threshold only appears in jaccardPairs' final filter)
+    "dedup_ngram_jaccard" -> Query(
+      // intersections and sizes over the DISTINCT 31-bit shingle hashes —
+      // the identical reduction Dedup.docShingleHashes applies, so both
+      // engines agree bit-for-bit even under hash collisions
       s"""WITH $ShinglesCte,
          |$JaccardPrCte
          |SELECT da AS doc_a, db AS doc_b,
          | inter / (sa.n + sb.n - inter) AS jaccard
          |FROM pr JOIN szh sa ON sa.doc_id = da JOIN szh sb ON sb.doc_id = db
-         |WHERE inter / (sa.n + sb.n - inter) >= 0.8""".stripMargin,
+         |WHERE inter / (sa.n + sb.n - inter) >= 0.8""".stripMargin)((s, d) =>
+      sharedJaccardPairs(s, d).filter(col("jaccard") >= 0.8)),
 
-    // same candidate universe; grid LEFT JOIN so zero-retention cutoffs
-    // report 0 instead of vanishing
-    "dedup_threshold_sweep" ->
-      s"""WITH $ShinglesCte,
-         |$JaccardPrCte,
-         |jac AS (SELECT inter / (sa.n + sb.n - inter) AS jaccard
-         |        FROM pr JOIN szh sa ON sa.doc_id = da JOIN szh sb ON sb.doc_id = db),
-         |grid AS (SELECT unnest([0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS threshold)
-         |SELECT g.threshold, CAST(count(j.jaccard) AS BIGINT) AS n_pairs
-         |FROM grid g LEFT JOIN jac j ON j.jaccard >= g.threshold
-         |GROUP BY g.threshold""".stripMargin,
-
-    "dedup_clusters" -> ClustersOracleSql,
-
-    "text_pii_redact" ->
-      """SELECT doc_id,
-        | regexp_replace(
-        |   regexp_replace(
-        |     regexp_replace(text, 'https?://[^ ]+', '<URL>', 'g'),
-        |     '[a-zA-Z0-9._]+@[a-zA-Z0-9.-]+', '<EMAIL>', 'g'),
-        |   '[0-9]{6,}', '<NUM>', 'g') AS redacted
-        |FROM documents""".stripMargin,
-
-    // same transitive closure as the clusters oracle, then the split
-    // decided by the md5 prefix of the cluster representative —
-    // 3865470566 = floor(0.9 * 2^32), the exact long the Spark side uses
-    "dedup_split_by_cluster" ->
-      s"""WITH RECURSIVE $ShinglesCte,
-         |$JaccardPrCte,
-         |pairs AS (SELECT da, db FROM pr
-         |          JOIN szh sa ON sa.doc_id = da JOIN szh sb ON sb.doc_id = db
-         |          WHERE inter / (sa.n + sb.n - inter) >= 0.5),
-         |edges AS (SELECT da AS src, db AS dst FROM pairs
-         |          UNION SELECT db, da FROM pairs),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-         |comp AS (SELECT src AS doc_id, least(src, min(dst)) AS component
-         |         FROM reach GROUP BY src),
-         |lab AS (SELECT d.doc_id,
-         |         CAST(coalesce(c.component, d.doc_id) AS BIGINT) AS component
-         |        FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id)
-         |SELECT doc_id, component,
-         | CASE WHEN ('0x' || substr(md5(CAST(component AS VARCHAR)), 1, 8))::BIGINT
-         |        < 3865470566 THEN 'train' ELSE 'val' END AS split
-         |FROM lab""".stripMargin,
-
-    // the star-CC variant computes the identical labeling (component =
-    // min reachable doc_id), so it shares the oracle verbatim
-    "dedup_clusters_star" -> ClustersOracleSql,
-
-    "src_orc_roundtrip" ->
-      """SELECT c_mktsegment, count(*) AS n,
-        | floor(sum(c_acctbal) * 100 + 0.5) / 100 AS total_acctbal
-        |FROM customer GROUP BY c_mktsegment""".stripMargin,
-
-    // roundtrip oracles read the identical rows straight from parquet: a
-    // lossy sink (formatting, schema inference, type mangling) hash-fails
-    "src_csv_roundtrip" ->
-      """SELECT n_regionkey, count(*) AS n, min(n_name) AS first_nation
-        |FROM nation GROUP BY n_regionkey""".stripMargin,
-
-    "src_json_roundtrip" ->
-      """SELECT s_nationkey, count(*) AS n,
-        | floor(sum(s_acctbal) * 100 + 0.5) / 100 AS total_acctbal
-        |FROM supplier GROUP BY s_nationkey""".stripMargin,
-
-    // identical posting derivation; the df-cut HAVING mirrors the combined
-    // (train ∪ eval) posting heat exactly like the operator
-    // the eval set is a corpus slice, so the scorer symmetrizes the SAME
-    // unordered pair CTE the jaccard family shares (corpus-postings df-cut,
-    // mirroring Dedup.crossCorpusFromStats over the hub): (a,b) reports as
-    // (train=a, eval=b) when b is eval and as (train=b, eval=a) when a is
-    "dedup_cross_corpus" ->
-      s"""WITH $ShinglesCte,
-         |$JaccardPrCte,
-         |jac AS (SELECT da, db, inter / (sa.n + sb.n - inter) AS jaccard
-         |        FROM pr JOIN szh sa ON sa.doc_id = da
-         |                JOIN szh sb ON sb.doc_id = db
-         |        WHERE inter / (sa.n + sb.n - inter) >= 0.5)
-         |SELECT da AS train_id, db AS eval_id, jaccard FROM jac WHERE db % 7 = 0
-         |UNION ALL
-         |SELECT db AS train_id, da AS eval_id, jaccard FROM jac WHERE da % 7 = 0""".stripMargin,
-
-    // same df: one aggregate over the distinct per-doc shingle hashes; a
-    // shingle is "duplicated" iff its document frequency is ≥ 2
-    "dedup_dupngram" ->
-      s"""WITH $ShinglesCte,
-         |df AS (SELECT h31, count(*) AS df FROM hsd GROUP BY h31)
-         |SELECT h.doc_id, count(*) AS n_ngrams,
-         | CAST(sum(CASE WHEN df.df >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_ngrams,
-         | CAST(sum(CASE WHEN df.df >= 2 THEN 1 ELSE 0 END) AS DOUBLE) / count(*)
-         |   AS dup_share
-         |FROM hsd h JOIN df ON h.h31 = df.h31
-         |GROUP BY h.doc_id""".stripMargin,
-
-    // the removal pass re-derived on POSITIONAL (non-distinct) 5-grams:
-    // identical md5-prefix hash, canonical = min (doc_id, pos) per hash
-    // via row_number, duplicate occurrences expand to their <= 5 covered
-    // word positions, survivors re-joined in order
-    "dedup_span_cut" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |oc0 AS (SELECT doc_id, unnest(range(1, len(w) - 3)) AS i, w
-        |        FROM t WHERE len(w) >= 5),
-        |occ AS (SELECT doc_id, i - 1 AS pos,
-        |         ('0x' || substr(md5(array_to_string(w[i:i+4], ' ')), 1, 8))::BIGINT
-        |           % 2147483647 AS h
-        |        FROM oc0),
-        |rk AS (SELECT doc_id, pos,
-        |        row_number() OVER (PARTITION BY h ORDER BY doc_id, pos) AS rn,
-        |        count(*) OVER (PARTITION BY h) AS cnt
-        |       FROM occ),
-        |dup AS (SELECT doc_id, pos FROM rk WHERE cnt > 1 AND rn > 1),
-        |cov0 AS (SELECT doc_id, pos, unnest(range(0, 5)) AS o FROM dup),
-        |cov AS (SELECT DISTINCT doc_id, pos + o AS p FROM cov0),
-        |wd0 AS (SELECT doc_id, unnest(range(1, len(w) + 1)) AS pi, w FROM t),
-        |words AS (SELECT doc_id, pi - 1 AS p, w[pi] AS word FROM wd0),
-        |kept AS (SELECT wo.doc_id, wo.p, wo.word FROM words wo
-        |         WHERE NOT EXISTS (SELECT 1 FROM cov c
-        |                           WHERE c.doc_id = wo.doc_id AND c.p = wo.p)),
-        |agg AS (SELECT doc_id, string_agg(word, ' ' ORDER BY p) AS text_clean,
-        |         count(*) AS n_kept
-        |        FROM kept GROUP BY doc_id)
-        |SELECT t.doc_id, coalesce(a.text_clean, '') AS text_clean,
-        | CAST(coalesce(len(t.w), 0) - coalesce(a.n_kept, 0) AS BIGINT) AS n_cut
-        |FROM t LEFT JOIN agg a ON a.doc_id = t.doc_id""".stripMargin,
-
-    // identical derivation to ann_ivf_assign's cell map, then keep-lowest-id
-    // within each cell at round(cos,6) >= 0.4
-    "dedup_semantic" ->
-      """WITH c AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS ce
-        |           FROM embeddings ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-        |           LIMIT (SELECT greatest(32, count(*) // 1024) FROM embeddings)),
-        |s AS (SELECT e.vec_id, c.cid,
-        |       round(list_dot_product(CAST(e.embedding AS DOUBLE[]), c.ce) /
-        |         (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-        |                                CAST(e.embedding AS DOUBLE[]))) *
-        |          sqrt(list_dot_product(c.ce, c.ce))), 6) AS ccos
-        |      FROM embeddings e CROSS JOIN c),
-        |r AS (SELECT vec_id, cid, row_number() OVER
-        |       (PARTITION BY vec_id ORDER BY ccos DESC, cid ASC) AS rn FROM s),
-        |a AS (SELECT r.vec_id, r.cid AS cell, CAST(e.embedding AS DOUBLE[]) AS e
-        |      FROM r JOIN embeddings e ON r.vec_id = e.vec_id WHERE rn = 1),
-        |rm AS (SELECT DISTINCT x.vec_id FROM a x JOIN a y
-        |       ON x.cell = y.cell AND y.vec_id < x.vec_id
-        |       WHERE round(list_dot_product(x.e, y.e) /
-        |         (sqrt(list_dot_product(x.e, x.e)) *
-        |          sqrt(list_dot_product(y.e, y.e))), 6) >= 0.4)
-        |SELECT a.vec_id, a.cell, rm.vec_id IS NULL AS kept
-        |FROM a LEFT JOIN rm ON a.vec_id = rm.vec_id""".stripMargin,
-
-    "dedup_keep" ->
-      s"""WITH RECURSIVE $ShinglesCte,
-         |$JaccardPrCte,
-         |pairs AS (SELECT da, db FROM pr
-         |          JOIN szh sa ON sa.doc_id = da JOIN szh sb ON sb.doc_id = db
-         |          WHERE inter / (sa.n + sb.n - inter) >= 0.5),
-         |edges AS (SELECT da AS src, db AS dst FROM pairs
-         |          UNION SELECT db, da FROM pairs),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-         |comp AS (SELECT src AS doc_id, least(src, min(dst)) AS component
-         |         FROM reach GROUP BY src),
-         |lab AS (SELECT d.doc_id, length(d.text) AS len,
-         |         CAST(coalesce(c.component, d.doc_id) AS BIGINT) AS component
-         |        FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id),
-         |rk AS (SELECT doc_id, component,
-         |        row_number() OVER (PARTITION BY component ORDER BY len DESC, doc_id) AS rn,
-         |        count(*) OVER (PARTITION BY component) AS n_in_cluster
-         |       FROM lab)
-         |SELECT doc_id, component, CAST(n_in_cluster AS BIGINT) AS n_in_cluster
-         |FROM rk WHERE rn = 1""".stripMargin,
-
-    "sample_stratified" ->
-      """SELECT o_orderkey, o_orderstatus FROM (
-        | SELECT o_orderkey, o_orderstatus, row_number() OVER (
-        |   PARTITION BY o_orderstatus
-        |   ORDER BY md5(CAST(o_orderkey AS VARCHAR)), o_orderkey) AS rn
-        | FROM orders) t
-        |WHERE rn <= 100""".stripMargin,
-
-    "dedup_incremental" -> {
-      // same permutation family / band hashing as the full-corpus oracle
-      // below, with the bucket listing and cap computed over the CORPUS
-      // side only (the index) and candidates restricted to corpus × batch
-      val p = graft.operators.Dedup.MinhashPrime
-      val mins = graft.operators.Dedup.minhashCoeffs(16).zipWithIndex
-        .map { case ((a, b), i) => s"min((h31*$a + $b) % $p) AS m$i" }.mkString(", ")
-      val bandRows = (0 until 4).map { b =>
-        val cols = (b * 4 until b * 4 + 4).map(i => s"CAST(m$i AS VARCHAR)")
-          .mkString(" || '|' || ")
-        s"SELECT doc_id, $b AS band, md5($cols) AS bh FROM sig"
-      }.mkString(" UNION ALL ")
-      s"""WITH $ShinglesCte,
-         |sig AS (SELECT doc_id, $mins FROM hsd GROUP BY doc_id),
-         |bands AS ($bandRows),
-         |bfc AS (SELECT * FROM (SELECT doc_id, band, bh,
-         |         count(*) OVER (PARTITION BY band, bh) AS bn
-         |        FROM bands WHERE doc_id % 10 != 0) t
-         |        WHERE bn <= ${graft.operators.Dedup.DefaultMaxBucket}),
-         |nb AS (SELECT doc_id, band, bh FROM bands WHERE doc_id % 10 = 0),
-         |cand AS (SELECT DISTINCT c.doc_id AS da, n.doc_id AS db
-         |         FROM bfc c JOIN nb n ON c.band = n.band AND c.bh = n.bh),
-         |pr AS (SELECT c.da, c.db, count(*) AS inter
-         |       FROM cand c JOIN hsd a ON a.doc_id = c.da
-         |       JOIN hsd b ON b.doc_id = c.db AND b.h31 = a.h31
-         |       GROUP BY c.da, c.db)
-         |SELECT da AS doc_a, db AS doc_b,
-         | inter / (sa.n + sb.n - inter) AS jaccard
-         |FROM pr JOIN szh sa ON sa.doc_id = da JOIN szh sb ON sb.doc_id = db
-         |WHERE inter / (sa.n + sb.n - inter) >= 0.5""".stripMargin
-    },
-
-    "stream_quarantine" -> {
-      // the incremental-probe oracle above, wrapped in the quarantine
-      // ROUTING read-out: batch docs whose index probe clears the
-      // threshold flag true, the rest flow accepted
-      val p = graft.operators.Dedup.MinhashPrime
-      val mins = graft.operators.Dedup.minhashCoeffs(16).zipWithIndex
-        .map { case ((a, b), i) => s"min((h31*$a + $b) % $p) AS m$i" }.mkString(", ")
-      val bandRows = (0 until 4).map { b =>
-        val cols = (b * 4 until b * 4 + 4).map(i => s"CAST(m$i AS VARCHAR)")
-          .mkString(" || '|' || ")
-        s"SELECT doc_id, $b AS band, md5($cols) AS bh FROM sig"
-      }.mkString(" UNION ALL ")
-      s"""WITH $ShinglesCte,
-         |sig AS (SELECT doc_id, $mins FROM hsd GROUP BY doc_id),
-         |bands AS ($bandRows),
-         |bfc AS (SELECT * FROM (SELECT doc_id, band, bh,
-         |         count(*) OVER (PARTITION BY band, bh) AS bn
-         |        FROM bands WHERE doc_id % 10 != 0) t
-         |        WHERE bn <= ${graft.operators.Dedup.DefaultMaxBucket}),
-         |nb AS (SELECT doc_id, band, bh FROM bands WHERE doc_id % 10 = 0),
-         |cand AS (SELECT DISTINCT c.doc_id AS da, n.doc_id AS db
-         |         FROM bfc c JOIN nb n ON c.band = n.band AND c.bh = n.bh),
-         |pr AS (SELECT c.da, c.db, count(*) AS inter
-         |       FROM cand c JOIN hsd a ON a.doc_id = c.da
-         |       JOIN hsd b ON b.doc_id = c.db AND b.h31 = a.h31
-         |       GROUP BY c.da, c.db),
-         |q AS (SELECT DISTINCT db FROM pr
-         |      JOIN szh sa ON sa.doc_id = da JOIN szh sb ON sb.doc_id = db
-         |      WHERE inter / (sa.n + sb.n - inter) >= 0.5)
-         |SELECT d.doc_id, (q.db IS NOT NULL) AS quarantined
-         |FROM (SELECT doc_id FROM documents WHERE doc_id % 10 = 0) d
-         |LEFT JOIN q ON q.db = d.doc_id""".stripMargin
-    },
-
-    "dedup_minhash_lsh" -> {
+    "dedup_minhash_lsh" -> Query({
       // identical affine permutation family as Dedup.minhashSignatures:
       // one md5 per shingle, numPerm (a*h+b) mod 2^31-1 transforms
       val p = graft.operators.Dedup.MinhashPrime
@@ -3328,9 +2221,11 @@ object SparkEntry {
          | inter / (sa.n + sb.n - inter) AS jaccard
          |FROM pr JOIN szh sa ON sa.doc_id = da JOIN szh sb ON sb.doc_id = db
          |WHERE inter / (sa.n + sb.n - inter) >= 0.8""".stripMargin
-    },
+    })((s, d) =>
+      Dedup.minhashLshDedupFromArr(sharedShingleArr(s, d), numPerm = 16, bands = 4,
+        threshold = 0.8)),
 
-    "dedup_simhash" -> {
+    "dedup_simhash" -> Query({
       val votes = (0 until 16).map(b =>
         s"sum(CASE WHEN substr(h, ${b + 1}, 1) IN ('8','9','a','b','c','d','e','f') THEN 1 ELSE -1 END) AS v$b")
         .mkString(", ")
@@ -3341,9 +2236,183 @@ object SparkEntry {
          |h AS (SELECT doc_id, md5(tk) AS h FROM t),
          |v AS (SELECT doc_id, $votes FROM h GROUP BY doc_id)
          |SELECT doc_id, CAST($bits AS BIGINT) AS simhash FROM v""".stripMargin
-    },
+    })((s, d) => Dedup.simhashSignatures(Tables.documents(s, d))),
 
-    "dedup_embedding" -> {
+    // near-dup pairs -> duplicate clusters (connected components): the
+    // keep-one-per-cluster endgame of corpus dedup
+    "dedup_clusters" -> Query(ClustersOracleSql)((s, d) => sharedClusters(s, d)),
+
+    // same clustering semantics via large-star/small-star (O(log n) rounds
+    // on any graph shape — the adversarial-diameter alternative); shares
+    // the family's pair subtree and the min-label oracle, since both
+    // algorithms define component = min reachable doc_id. Same small-graph
+    // gate as dedup_clusters: below [[ccDriverDocBytes]] both labelers'
+    // iterative loops lose to one bounded union-find job
+    "dedup_clusters_star" -> Query(
+      // the star-CC variant computes the identical labeling (component =
+      // min reachable doc_id), so it shares the oracle verbatim
+      ClustersOracleSql)((s, d) =>
+      ccLabels(s, d, "clustersStar", p => Dedup.duplicateClustersStar(p))),
+
+    // the dedup endgame: pairs -> clusters -> one survivor per cluster
+    // (longest text, ties to min doc_id), singletons pass through
+    "dedup_keep" -> Query(
+      s"""WITH RECURSIVE $ShinglesCte,
+         |$JaccardPrCte,
+         |pairs AS (SELECT da, db FROM pr
+         |          JOIN szh sa ON sa.doc_id = da JOIN szh sb ON sb.doc_id = db
+         |          WHERE inter / (sa.n + sb.n - inter) >= 0.5),
+         |edges AS (SELECT da AS src, db AS dst FROM pairs
+         |          UNION SELECT db, da FROM pairs),
+         |reach(src, dst) AS (
+         |  SELECT src, dst FROM edges
+         |  UNION
+         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
+         |comp AS (SELECT src AS doc_id, least(src, min(dst)) AS component
+         |         FROM reach GROUP BY src),
+         |lab AS (SELECT d.doc_id, length(d.text) AS len,
+         |         CAST(coalesce(c.component, d.doc_id) AS BIGINT) AS component
+         |        FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id),
+         |rk AS (SELECT doc_id, component,
+         |        row_number() OVER (PARTITION BY component ORDER BY len DESC, doc_id) AS rn,
+         |        count(*) OVER (PARTITION BY component) AS n_in_cluster
+         |       FROM lab)
+         |SELECT doc_id, component, CAST(n_in_cluster AS BIGINT) AS n_in_cluster
+         |FROM rk WHERE rn = 1""".stripMargin)((s, d) =>
+      Dedup.keepBestPerCluster(Tables.documents(s, d), sharedClusters(s, d))
+        .select(col("doc_id"), col("component"), col("n_in_cluster"))),
+
+    // cross-document duplicated-ngram statistics (the Lee et al. 2022
+    // detection pass), riding the dedup family's persisted hash-array hub —
+    // zero extra corpus hashing when the family already ran
+    "dedup_dupngram" -> Query(
+      // same df: one aggregate over the distinct per-doc shingle hashes; a
+      // shingle is "duplicated" iff its document frequency is ≥ 2
+      s"""WITH $ShinglesCte,
+         |df AS (SELECT h31, count(*) AS df FROM hsd GROUP BY h31)
+         |SELECT h.doc_id, count(*) AS n_ngrams,
+         | CAST(sum(CASE WHEN df.df >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_ngrams,
+         | CAST(sum(CASE WHEN df.df >= 2 THEN 1 ELSE 0 END) AS DOUBLE) / count(*)
+         |   AS dup_share
+         |FROM hsd h JOIN df ON h.h31 = df.h31
+         |GROUP BY h.doc_id""".stripMargin)((s, d) =>
+      Dedup.dupNgramStats(sharedShingleArr(s, d))),
+
+    // the matching REMOVAL pass: duplicated 5-word spans cut everywhere
+    // except their earliest corpus occurrence, texts rebuilt (positional
+    // shingles, so it hashes fresh rather than riding the distinct-set
+    // hub). fannedDocs: the md5-per-occurrence pass otherwise runs inside
+    // the 1-file scan stage at bench sf (r12b SpanLab, both orders:
+    // 1.11/1.41 s fanned vs 1.44/1.53 s raw); past fanDocsBytes the scan
+    // is already multi-split and no repartition is added.
+    "dedup_span_cut" -> Query(
+      // the removal pass re-derived on POSITIONAL (non-distinct) 5-grams:
+      // identical md5-prefix hash, canonical = min (doc_id, pos) per hash
+      // via row_number, duplicate occurrences expand to their <= 5 covered
+      // word positions, survivors re-joined in order
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        |oc0 AS (SELECT doc_id, unnest(range(1, len(w) - 3)) AS i, w
+        |        FROM t WHERE len(w) >= 5),
+        |occ AS (SELECT doc_id, i - 1 AS pos,
+        |         ('0x' || substr(md5(array_to_string(w[i:i+4], ' ')), 1, 8))::BIGINT
+        |           % 2147483647 AS h
+        |        FROM oc0),
+        |rk AS (SELECT doc_id, pos,
+        |        row_number() OVER (PARTITION BY h ORDER BY doc_id, pos) AS rn,
+        |        count(*) OVER (PARTITION BY h) AS cnt
+        |       FROM occ),
+        |dup AS (SELECT doc_id, pos FROM rk WHERE cnt > 1 AND rn > 1),
+        |cov0 AS (SELECT doc_id, pos, unnest(range(0, 5)) AS o FROM dup),
+        |cov AS (SELECT DISTINCT doc_id, pos + o AS p FROM cov0),
+        |wd0 AS (SELECT doc_id, unnest(range(1, len(w) + 1)) AS pi, w FROM t),
+        |words AS (SELECT doc_id, pi - 1 AS p, w[pi] AS word FROM wd0),
+        |kept AS (SELECT wo.doc_id, wo.p, wo.word FROM words wo
+        |         WHERE NOT EXISTS (SELECT 1 FROM cov c
+        |                           WHERE c.doc_id = wo.doc_id AND c.p = wo.p)),
+        |agg AS (SELECT doc_id, string_agg(word, ' ' ORDER BY p) AS text_clean,
+        |         count(*) AS n_kept
+        |        FROM kept GROUP BY doc_id)
+        |SELECT t.doc_id, coalesce(a.text_clean, '') AS text_clean,
+        | CAST(coalesce(len(t.w), 0) - coalesce(a.n_kept, 0) AS BIGINT) AS n_cut
+        |FROM t LEFT JOIN agg a ON a.doc_id = t.doc_id""".stripMargin)((s, d) =>
+      Dedup.spanCut(fannedDocs(s, d), l = 5)),
+
+    // SemDeDup (Abbas et al. 2023): same deterministic first-nlist-centroid
+    // / argmax-cell convention as ann_ivf, near-identical vectors pruned
+    // within cells only — nlist bounded self-joins, no all-pairs. nlist
+    // follows the corpus (suggestNlist, mirrored by the oracle's LIMIT
+    // subquery) so the quadratic-cell guard never trips on grown data:
+    // at x100 a pinned 32 would put 6k+ vectors per cell and fail fast.
+    "dedup_semantic" -> Query(
+      // identical derivation to ann_ivf_assign's cell map, then keep-lowest-id
+      // within each cell at round(cos,6) >= 0.4
+      """WITH c AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS ce
+        |           FROM embeddings ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
+        |           LIMIT (SELECT greatest(32, count(*) // 1024) FROM embeddings)),
+        |s AS (SELECT e.vec_id, c.cid,
+        |       round(list_dot_product(CAST(e.embedding AS DOUBLE[]), c.ce) /
+        |         (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
+        |                                CAST(e.embedding AS DOUBLE[]))) *
+        |          sqrt(list_dot_product(c.ce, c.ce))), 6) AS ccos
+        |      FROM embeddings e CROSS JOIN c),
+        |r AS (SELECT vec_id, cid, row_number() OVER
+        |       (PARTITION BY vec_id ORDER BY ccos DESC, cid ASC) AS rn FROM s),
+        |a AS (SELECT r.vec_id, r.cid AS cell, CAST(e.embedding AS DOUBLE[]) AS e
+        |      FROM r JOIN embeddings e ON r.vec_id = e.vec_id WHERE rn = 1),
+        |rm AS (SELECT DISTINCT x.vec_id FROM a x JOIN a y
+        |       ON x.cell = y.cell AND y.vec_id < x.vec_id
+        |       WHERE round(list_dot_product(x.e, y.e) /
+        |         (sqrt(list_dot_product(x.e, x.e)) *
+        |          sqrt(list_dot_product(y.e, y.e))), 6) >= 0.4)
+        |SELECT a.vec_id, a.cell, rm.vec_id IS NULL AS kept
+        |FROM a LEFT JOIN rm ON a.vec_id = rm.vec_id""".stripMargin)((s, d) => {
+      val emb = Tables.embeddings(s, d)
+      Dedup.semanticDedup(emb, threshold = 0.4,
+        nlist = operators.Similarity.suggestNlist(Tables.rowCount(s, d, "embeddings")))
+    }),
+
+    // fuzzy decontamination: Jaccard near-dups BETWEEN the corpus and a
+    // held-out eval slice. The eval set is a slice of the corpus, so the
+    // scorer is a symmetrized filter over the family's persisted
+    // pair-stats hub — zero posting passes beyond the one the family
+    // already paid (the general two-corpus operator,
+    // Dedup.crossCorpusPairsFromArr, is equivalence-spec'd against this)
+    "dedup_cross_corpus" -> Query(
+      // the eval set is a corpus slice, so the scorer symmetrizes the SAME
+      // unordered pair CTE the jaccard family shares (corpus-postings df-cut,
+      // mirroring Dedup.crossCorpusFromStats over the hub): (a,b) reports as
+      // (train=a, eval=b) when b is eval and as (train=b, eval=a) when a is
+      s"""WITH $ShinglesCte,
+         |$JaccardPrCte,
+         |jac AS (SELECT da, db, inter / (sa.n + sb.n - inter) AS jaccard
+         |        FROM pr JOIN szh sa ON sa.doc_id = da
+         |                JOIN szh sb ON sb.doc_id = db
+         |        WHERE inter / (sa.n + sb.n - inter) >= 0.5)
+         |SELECT da AS train_id, db AS eval_id, jaccard FROM jac WHERE db % 7 = 0
+         |UNION ALL
+         |SELECT db AS train_id, da AS eval_id, jaccard FROM jac WHERE da % 7 = 0""".stripMargin)((s, d) =>
+      Dedup.crossCorpusFromStats(sharedPairStats(s, d),
+        _ % 7 === 0, threshold = 0.5)),
+
+    // deterministic stratified sample: fixed per-stratum quota by md5 rank —
+    // the balance-the-domains curation op (vs sample_hash's fixed fraction).
+    // Pre-projected to the two columns the result carries, so every scan in
+    // the plan (counts, cut, guard rerun) reads 2 of orders' 9 columns.
+    "sample_stratified" -> Query(
+      """SELECT o_orderkey, o_orderstatus FROM (
+        | SELECT o_orderkey, o_orderstatus, row_number() OVER (
+        |   PARTITION BY o_orderstatus
+        |   ORDER BY md5(CAST(o_orderkey AS VARCHAR)), o_orderkey) AS rn
+        | FROM orders) t
+        |WHERE rn <= 100""".stripMargin)((s, d) =>
+      operators.Sampling.stratified(
+          Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus")),
+          "o_orderstatus", "o_orderkey", 100)),
+
+    // threshold 0.4 sits just under the corpus's max same-bucket cosine so
+    // the oracle comparison is non-vacuous (0.95 matches zero rows on the
+    // synthetic quasi-random embeddings at every sf)
+    "dedup_embedding" -> Query({
       val bucket = (0 until 8).map(i =>
         s"(CASE WHEN embedding[${i + 1}] >= 0 THEN ${1L << i} ELSE 0 END)").mkString(" + ")
       s"""WITH k AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e, $bucket AS bucket
@@ -3353,12 +2422,80 @@ object SparkEntry {
          |WHERE list_dot_product(a.e, b.e) /
          |      (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e)))
          |      >= 0.4""".stripMargin
-    },
+    })((s, d) =>
+      Dedup.embeddingNearDups(Tables.embeddings(s, d), threshold = 0.4, signBits = 8)
+        .select(col("vec_a"), col("vec_b"))),
 
-    // cosine spelled out over DOUBLE[] so DuckDB's accumulation matches our
-    // double-accumulating native expression bit-for-bit (float-typed
-    // list_cosine_similarity differs in the last ulp and flips 6-dp rounding)
-    "ann_bruteforce" ->
+    // overlap-coefficient (containment) near-dups: inter / min(|A|,|B|) —
+    // catches a small doc substantially contained in a large one (quote
+    // inclusion), which jaccard structurally caps at size-ratio. Rides the
+    // family's persisted hash-array hub
+    "dedup_containment" -> Query(
+      // same posting/df-cut derivation, overlap-coefficient scoring
+      s"""WITH $ShinglesCte,
+         |$JaccardPrCte
+         |SELECT da AS doc_a, db AS doc_b, sa.n AS n_a, sb.n AS n_b,
+         |       inter / least(sa.n, sb.n) AS containment
+         |FROM pr JOIN szh sa ON sa.doc_id = da
+         |        JOIN szh sb ON sb.doc_id = db
+         |WHERE inter / least(sa.n, sb.n) >= 0.9""".stripMargin)((s, d) =>
+      Dedup.containmentFromStats(sharedPairStats(s, d), threshold = 0.9)),
+
+    // threshold calibration curve: pairs flagged per candidate jaccard
+    // cutoff, zero-retention thresholds included. Rides the family's
+    // persisted pair-stats hub — no posting self-join re-run
+    "dedup_threshold_sweep" -> Query(
+      // same candidate universe; grid LEFT JOIN so zero-retention cutoffs
+      // report 0 instead of vanishing
+      s"""WITH $ShinglesCte,
+         |$JaccardPrCte,
+         |jac AS (SELECT inter / (sa.n + sb.n - inter) AS jaccard
+         |        FROM pr JOIN szh sa ON sa.doc_id = da JOIN szh sb ON sb.doc_id = db),
+         |grid AS (SELECT unnest([0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS threshold)
+         |SELECT g.threshold, CAST(count(j.jaccard) AS BIGINT) AS n_pairs
+         |FROM grid g LEFT JOIN jac j ON j.jaccard >= g.threshold
+         |GROUP BY g.threshold""".stripMargin)((s, d) =>
+      Dedup.thresholdSweep(sharedPairStats(s, d),
+        thresholds = (1 to 9).map(_ / 10.0))),
+
+    // near-dup provenance matrix: pair counts by (unordered) source pair —
+    // the read-out that tells a curation pipeline WHICH crawls/snapshots
+    // duplicate each other (within-source boilerplate vs cross-source
+    // mirroring). Rides the family's persisted pair subtree; the only new
+    // work is joining the (tiny) pair set to the doc→source projection.
+    "dedup_source_matrix" -> Query(
+      // identical pair derivation as dedup_ngram_jaccard (threshold 0.5),
+      // then provenance roll-up by unordered source pair
+      s"""WITH $ShinglesCte,
+         |$JaccardPrCte,
+         |pj AS (SELECT da, db, inter / (sa.n + sb.n - inter) AS j
+         |       FROM pr JOIN szh sa ON sa.doc_id = da
+         |               JOIN szh sb ON sb.doc_id = db
+         |       WHERE inter / (sa.n + sb.n - inter) >= 0.5),
+         |sp AS (SELECT least(x.source, y.source) AS source_a,
+         |              greatest(x.source, y.source) AS source_b, j
+         |       FROM pj JOIN documents x ON x.doc_id = pj.da
+         |               JOIN documents y ON y.doc_id = pj.db)
+         |SELECT source_a, source_b, count(*) AS n_pairs,
+         |       CAST(sum(CASE WHEN j >= 0.8 THEN 1 ELSE 0 END) AS BIGINT) AS n_strong
+         |FROM sp GROUP BY source_a, source_b""".stripMargin)((s, d) => {
+      val src = Tables.documents(s, d).select(col("doc_id"), col("source"))
+      sharedJaccardPairs(s, d)
+        .join(src.select(col("doc_id").as("doc_a"), col("source").as("__sa")), "doc_a")
+        .join(src.select(col("doc_id").as("doc_b"), col("source").as("__sb")), "doc_b")
+        .select(least(col("__sa"), col("__sb")).as("source_a"),
+          greatest(col("__sa"), col("__sb")).as("source_b"), col("jaccard"))
+        .groupBy(col("source_a"), col("source_b"))
+        .agg(count(lit(1)).as("n_pairs"),
+          sum(when(col("jaccard") >= 0.8, 1L).otherwise(0L)).as("n_strong"))
+    }),
+
+    // ---- scale-path: similarity search ---------------------------------
+
+    "ann_bruteforce" -> Query(
+      // cosine spelled out over DOUBLE[] so DuckDB's accumulation matches our
+      // double-accumulating native expression bit-for-bit (float-typed
+      // list_cosine_similarity differs in the last ulp and flips 6-dp rounding)
       """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe
         |           FROM embeddings WHERE vec_id % 100 = 0),
         |s AS (SELECT q.query_id, e.vec_id AS neighbor_id,
@@ -3370,13 +2507,16 @@ object SparkEntry {
         |r AS (SELECT *, row_number() OVER
         |       (PARTITION BY query_id ORDER BY cos_r DESC, neighbor_id) AS rnk FROM s)
         |SELECT query_id, neighbor_id, cos_r, CAST(rnk AS BIGINT) AS rnk
-        |FROM r WHERE rnk <= 10""".stripMargin,
+        |FROM r WHERE rnk <= 10""".stripMargin)((s, d) => {
+      val emb = Tables.embeddings(s, d)
+      Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") % 100 === 0), k = 10)
+    }),
 
-    // Full LSH re-derivation: the md5-seeded plane matrix, sign-pattern
-    // buckets, <=2-bit multi-probe masks, and rounded-cosine re-rank are all
-    // deterministic, so the whole approximate operator is exactly
-    // reproducible in SQL (Similarity.planeMatrix / lshTopK).
-    "ann_lsh" ->
+    "ann_lsh" -> Query(
+      // Full LSH re-derivation: the md5-seeded plane matrix, sign-pattern
+      // buckets, <=2-bit multi-probe masks, and rounded-cosine re-rank are all
+      // deterministic, so the whole approximate operator is exactly
+      // reproducible in SQL (Similarity.planeMatrix / lshTopK).
       """WITH hx AS (
         | SELECT t1.range AS p, t2.range AS d,
         |        md5('plane:' || t1.range || ':' || t2.range) AS h
@@ -3411,14 +2551,26 @@ object SparkEntry {
         |             JOIN eb ne ON ne.vec_id = c.neighbor_id),
         |r AS (SELECT query_id, neighbor_id, row_number() OVER
         |       (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk FROM sc)
-        |SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rnk FROM r WHERE rnk <= 10""".stripMargin,
+        |SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rnk FROM r WHERE rnk <= 10""".stripMargin)((s, d) => {
+      val emb = Tables.embeddings(s, d)
+      Similarity.lshTopK(emb, emb.filter(col("vec_id") % 100 === 0), k = 10)
+    }),
 
-    // Full IVF re-derivation (refineSteps = 0 path of Similarity.ivfTopK):
-    // seed centroids = the nlist md5-ordered ids (the r15 deterministic
-    // uniform sample); corpus/query cell assignment by rounded-cosine
-    // argmax (cid tie-break); nprobe=8 nearest cells per query; exact
-    // rounded re-rank in probed cells.
-    "ann_ivf" ->
+    // refineSteps = 0: the seed-centroid IVF — every stage (assignment
+    // argmax, probe ranking, re-rank) is rounded and tie-broken, making
+    // the full neighbor list hash-comparable. The index SIZE follows the
+    // corpus ([[Similarity.suggestNlist]]: max(32, N/1024) cells), with
+    // the DuckDB oracle computing the identical formula in its LIMIT
+    // subquery — at the gate scales (500/2k vectors) the floor keeps
+    // nlist=32 so results are unchanged, while at x100 (200k vectors) a
+    // pinned 32 would put 6k+ members in every probed cell and the
+    // re-rank join dominated the whole bench (17.6 s steady, measured).
+    "ann_ivf" -> Query(
+      // Full IVF re-derivation (refineSteps = 0 path of Similarity.ivfTopK):
+      // seed centroids = the nlist md5-ordered ids (the r15 deterministic
+      // uniform sample); corpus/query cell assignment by rounded-cosine
+      // argmax (cid tie-break); nprobe=8 nearest cells per query; exact
+      // rounded re-rank in probed cells.
       """WITH c AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS ce
         |           FROM embeddings ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
         |           LIMIT (SELECT greatest(32, count(*) // 1024) FROM embeddings)),
@@ -3448,15 +2600,24 @@ object SparkEntry {
         |r AS (SELECT query_id, neighbor_id, row_number() OVER
         |       (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk FROM sc)
         |SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rnk
-        |FROM r WHERE rnk <= 10""".stripMargin,
+        |FROM r WHERE rnk <= 10""".stripMargin)((s, d) => {
+      val emb = Tables.embeddings(s, d)
+      Similarity.ivfTopK(emb, emb.filter(col("vec_id") % 100 === 0), k = 10,
+        nlist = Similarity.suggestNlist(Tables.rowCount(s, d, "embeddings")), refineSteps = 0)
+    }),
 
-    // ann_ivf plus ONE fixed-point k-means step: cell members' components
-    // are quantized to the 1e-6 grid (floor(x*1e6 + 0.5) — floor-plus-half,
-    // not round-half-away, which engines disagree on for negative halves),
-    // summed as BIGINTs (exact, order-free), then mean = two correctly-
-    // rounded IEEE divisions narrowed to FLOAT — bit-identical to
-    // VectorAggregators.vecMeanFixed on the Spark side.
-    "ann_ivf_refined" ->
+    // one k-means refinement step: assignment through the same rounded
+    // argmax kernel, centroid means in fixed-point integer arithmetic
+    // (VectorAggregators.vecMeanFixed) — order-independent, so the
+    // REFINED index is cross-engine deterministic too and carries a full
+    // row-level oracle (recall properties stay spec'd in SimilaritySpec)
+    "ann_ivf_refined" -> Query(
+      // ann_ivf plus ONE fixed-point k-means step: cell members' components
+      // are quantized to the 1e-6 grid (floor(x*1e6 + 0.5) — floor-plus-half,
+      // not round-half-away, which engines disagree on for negative halves),
+      // summed as BIGINTs (exact, order-free), then mean = two correctly-
+      // rounded IEEE divisions narrowed to FLOAT — bit-identical to
+      // VectorAggregators.vecMeanFixed on the Spark side.
       """WITH c0 AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS ce
         |            FROM embeddings ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
         |            LIMIT (SELECT greatest(32, count(*) // 1024) FROM embeddings)),
@@ -3505,9 +2666,19 @@ object SparkEntry {
         |r AS (SELECT query_id, neighbor_id, row_number() OVER
         |       (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk FROM sc)
         |SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rnk
-        |FROM r WHERE rnk <= 10""".stripMargin,
+        |FROM r WHERE rnk <= 10""".stripMargin)((s, d) => {
+      val emb = Tables.embeddings(s, d)
+      Similarity.ivfTopK(emb, emb.filter(col("vec_id") % 100 === 0), k = 10,
+        nlist = Similarity.suggestNlist(Tables.rowCount(s, d, "embeddings")), refineSteps = 1)
+    }),
 
-    "ann_ivf_assign" ->
+    // IVF cell assignment with unrefined (deterministic hash-sampled)
+    // centroids: the exact-arithmetic kernel inside ann_ivf, isolated so it
+    // is oracle-checkable (the k-means refine is float-sum-order dependent
+    // and so only recall-tested). Rounded cosine + cid tie-break make the
+    // argmax cross-engine deterministic; the md5 seed ordering (r15) is
+    // the same uniform sample ivfTopK/semanticDedup use.
+    "ann_ivf_assign" -> Query(
       """WITH c AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS ce
         |           FROM embeddings ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 32),
         |s AS (SELECT e.vec_id, c.cid,
@@ -3518,69 +2689,21 @@ object SparkEntry {
         |      FROM embeddings e CROSS JOIN c),
         |r AS (SELECT vec_id, cid, row_number() OVER
         |       (PARTITION BY vec_id ORDER BY ccos DESC, cid ASC) AS rn FROM s)
-        |SELECT vec_id, cid AS cell FROM r WHERE rn = 1""".stripMargin,
+        |SELECT vec_id, cid AS cell FROM r WHERE rn = 1""".stripMargin)((s, d) => {
+      val emb = Tables.embeddings(s, d)
+      val centroids = emb
+        .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(32)
+        .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+      emb.crossJoin(broadcast(centroids))
+        .select(col("vec_id"), col("cid"),
+          round(Similarity.cosine(col("embedding"), col("ce")), 6).as("ccos"))
+        .groupBy("vec_id")
+        .agg(max_by(col("cid"), struct(col("ccos"), -col("cid"))).as("cell"))
+    }),
 
-    // identical tf/df/score derivation; (tf*(N+1))/(df+1) is two
-    // correctly-rounded IEEE ops, so scores (and the rank window ordered
-    // by score desc, term asc) agree bit-for-bit
-    "text_keywords" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        |            FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-        |dft AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |nn AS (SELECT count(*) AS n FROM documents),
-        |s AS (SELECT doc_id, term, tf,
-        |        CAST(tf AS DOUBLE) * (n + 1) / (df + 1) AS score
-        |      FROM tf JOIN dft USING (term) CROSS JOIN nn),
-        |r AS (SELECT *, row_number() OVER
-        |        (PARTITION BY doc_id ORDER BY score DESC, term ASC) AS rank
-        |      FROM s)
-        |SELECT doc_id, CAST(rank AS BIGINT) AS rank, term, tf, score
-        |FROM r WHERE rank <= 3""".stripMargin,
+    // ---- scale-path: text analysis --------------------------------------
 
-    "text_token_ids" ->
-      """WITH tok AS (SELECT unnest(string_split(text, ' ')) AS tok FROM documents),
-        |vc AS (SELECT tok, count(*) AS c FROM tok GROUP BY 1),
-        |vocab AS (SELECT tok, CAST(row_number() OVER (ORDER BY c DESC, tok ASC) AS BIGINT) AS id
-        |          FROM vc ORDER BY c DESC, tok ASC LIMIT 24),
-        |toks AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
-        |tokd AS (SELECT doc_id, unnest(generate_series(1, len(ts))) AS ord, ts FROM toks),
-        |sel AS (SELECT doc_id, ord, ts[ord] AS tok FROM tokd)
-        |SELECT s.doc_id,
-        |       array_to_string(list(coalesce(v.id, 0) ORDER BY s.ord), ' ') AS ids
-        |FROM sel s LEFT JOIN vocab v USING (tok)
-        |GROUP BY s.doc_id""".stripMargin,
-
-    "text_contamination" -> ContaminationOracleSql,
-
-    // the bloom pre-pass is an exact-result optimization (false positives
-    // are verified away), so the oracle is shared verbatim
-    "text_contamination_bloom" -> ContaminationOracleSql,
-
-    // identical bigram-LM derivation: add-one-smoothed conditional
-    // probabilities from the en slice's bigram/context counts, uniform 1/V
-    // fallback for unseen contexts, avg(-ln P) rounded to 6 decimals
-    "lm_cross_entropy" ->
-      """WITH tok AS (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents),
-        |bgs AS (SELECT doc_id, lang,
-        |         unnest(list_transform(range(1, len(w)),
-        |                i -> array_to_string(w[i:i+1], ' '))) AS bg
-        |        FROM tok WHERE len(w) >= 2),
-        |c12 AS (SELECT bg, count(*) AS c12 FROM bgs WHERE lang = 'en' GROUP BY bg),
-        |c1 AS (SELECT string_split(bg, ' ')[1] AS w1, count(*) AS c1
-        |       FROM bgs WHERE lang = 'en' GROUP BY 1),
-        |v AS (SELECT count(DISTINCT x) AS v FROM
-        |       (SELECT unnest(w) AS x FROM tok WHERE lang = 'en'))
-        |SELECT b.doc_id, count(*) AS n_bigrams,
-        | round(avg(-ln(CAST(coalesce(c12.c12, 0) + 1 AS DOUBLE) /
-        |               CAST(coalesce(c1.c1, 0) + v.v AS DOUBLE))), 6) AS cross_entropy
-        |FROM bgs b
-        |LEFT JOIN c12 ON b.bg = c12.bg
-        |LEFT JOIN c1 ON string_split(b.bg, ' ')[1] = c1.w1
-        |CROSS JOIN v
-        |GROUP BY b.doc_id""".stripMargin,
-
-    "text_profile" -> {
+    "text_profile" -> Query({
       val stop = TextAnalysis.Stopwords.map(w => s"'$w'").mkString(", ")
       val langScores = TextAnalysis.LangMarkers.map { case (l, m) =>
         s"len(list_filter(w, t -> t IN (${m.map(x => s"'$x'").mkString(", ")}))) AS s_$l"
@@ -3618,13 +2741,16 @@ object SparkEntry {
          | md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'),
          |          ' +', ' ', 'g'))) AS fingerprint
          |FROM r""".stripMargin
-    },
+    })((s, d) => TextAnalysis.profile(fannedDocs(s, d))),
 
-    // chunk grid mirror: DuckDB range(0, greatest(n-overlap, 1), stride)
-    // excludes its bound; Spark sequence(0, greatest(n-overlap-1, 0),
-    // stride) includes its bound — both enumerate starts < n-overlap plus
-    // the mandatory start 0. Slices clamp at the document end identically.
-    "text_chunk" ->
+    // training-sample construction: 32-word chunks, 8-word overlap (stride
+    // 24) — documents become model-sized pieces in one shuffle-free
+    // generate inside the scan stage
+    "text_chunk" -> Query(
+      // chunk grid mirror: DuckDB range(0, greatest(n-overlap, 1), stride)
+      // excludes its bound; Spark sequence(0, greatest(n-overlap-1, 0),
+      // stride) includes its bound — both enumerate starts < n-overlap plus
+      // the mandatory start 0. Slices clamp at the document end identically.
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         |s AS (SELECT doc_id, w, len(w) AS n FROM t),
         |c AS (SELECT doc_id, w, n,
@@ -3632,9 +2758,13 @@ object SparkEntry {
         |SELECT doc_id, CAST(st // 24 AS BIGINT) AS chunk_id,
         |       CAST(least(32, n - st) AS BIGINT) AS n_words,
         |       array_to_string(w[st+1:st+32], ' ') AS chunk_text
-        |FROM c""".stripMargin,
+        |FROM c""".stripMargin)((s, d) =>
+      TextAnalysis.chunkWords(fannedDocs(s, d), chunkSize = 32, overlap = 8)),
 
-    "text_quality_sweep" -> {
+    // quality-threshold calibration: docs/tokens retained at each candidate
+    // cut-off; the corpus collapses to its ≤8 distinct score values before
+    // the grid expansion touches anything
+    "text_quality_sweep" -> Query({
       val stop = TextAnalysis.Stopwords.map(w => s"'$w'").mkString(", ")
       s"""WITH t AS (SELECT text, string_split(text, ' ') AS w FROM documents),
          |m AS (SELECT w, strlen(text) AS n,
@@ -3654,45 +2784,123 @@ object SparkEntry {
          |SELECT threshold, CAST(coalesce(sum(c), 0) AS BIGINT) AS n_docs_kept,
          |       CAST(coalesce(sum(t), 0) AS BIGINT) AS n_tokens_kept
          |FROM g LEFT JOIN by_q ON q >= threshold GROUP BY threshold""".stripMargin
-    },
+    })((s, d) =>
+      TextAnalysis.qualityThresholdSweep(fannedDocs(s, d), gridSteps = 10)),
 
-    // same posting/df-cut derivation, overlap-coefficient scoring
-    "dedup_containment" ->
-      s"""WITH $ShinglesCte,
-         |$JaccardPrCte
-         |SELECT da AS doc_a, db AS doc_b, sa.n AS n_a, sb.n AS n_b,
-         |       inter / least(sa.n, sb.n) AS containment
-         |FROM pr JOIN szh sa ON sa.doc_id = da
-         |        JOIN szh sb ON sb.doc_id = db
-         |WHERE inter / least(sa.n, sb.n) >= 0.9""".stripMargin,
+    // top-3 salient terms per doc by the exact-rational tf-idf variant
+    // (keyword extraction; ln would diverge in the last ulp across engines)
+    "text_keywords" -> Query(
+      // identical tf/df/score derivation; (tf*(N+1))/(df+1) is two
+      // correctly-rounded IEEE ops, so scores (and the rank window ordered
+      // by score desc, term asc) agree bit-for-bit
+      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
+        |            FROM documents),
+        |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
+        |dft AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
+        |nn AS (SELECT count(*) AS n FROM documents),
+        |s AS (SELECT doc_id, term, tf,
+        |        CAST(tf AS DOUBLE) * (n + 1) / (df + 1) AS score
+        |      FROM tf JOIN dft USING (term) CROSS JOIN nn),
+        |r AS (SELECT *, row_number() OVER
+        |        (PARTITION BY doc_id ORDER BY score DESC, term ASC) AS rank
+        |      FROM s)
+        |SELECT doc_id, CAST(rank AS BIGINT) AS rank, term, tf, score
+        |FROM r WHERE rank <= 3""".stripMargin)((s, d) =>
+      TextAnalysis.keywordSalience(Tables.documents(s, d), topK = 3)),
 
-    // identical pair derivation as dedup_ngram_jaccard (threshold 0.5),
-    // then provenance roll-up by unordered source pair
-    "dedup_source_matrix" ->
-      s"""WITH $ShinglesCte,
-         |$JaccardPrCte,
-         |pj AS (SELECT da, db, inter / (sa.n + sb.n - inter) AS j
-         |       FROM pr JOIN szh sa ON sa.doc_id = da
-         |               JOIN szh sb ON sb.doc_id = db
-         |       WHERE inter / (sa.n + sb.n - inter) >= 0.5),
-         |sp AS (SELECT least(x.source, y.source) AS source_a,
-         |              greatest(x.source, y.source) AS source_b, j
-         |       FROM pj JOIN documents x ON x.doc_id = pj.da
-         |               JOIN documents y ON y.doc_id = pj.db)
-         |SELECT source_a, source_b, count(*) AS n_pairs,
-         |       CAST(sum(CASE WHEN j >= 0.8 THEN 1 ELSE 0 END) AS BIGINT) AS n_strong
-         |FROM sp GROUP BY source_a, source_b""".stripMargin,
+    // tokenize-to-ids against the corpus' own top-24 frequency vocab
+    // (24 < the corpus' 31 distinct tokens, so the OOV path is exercised).
+    // ids is emitted space-joined: the driver's canonicalizer sorts rows
+    // with pandas, which cannot hash array cells, so the oracled projection
+    // must be scalar on both sides (DuckDB mirrors with array_to_string)
+    "text_token_ids" -> Query(
+      """WITH tok AS (SELECT unnest(string_split(text, ' ')) AS tok FROM documents),
+        |vc AS (SELECT tok, count(*) AS c FROM tok GROUP BY 1),
+        |vocab AS (SELECT tok, CAST(row_number() OVER (ORDER BY c DESC, tok ASC) AS BIGINT) AS id
+        |          FROM vc ORDER BY c DESC, tok ASC LIMIT 24),
+        |toks AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
+        |tokd AS (SELECT doc_id, unnest(generate_series(1, len(ts))) AS ord, ts FROM toks),
+        |sel AS (SELECT doc_id, ord, ts[ord] AS tok FROM tokd)
+        |SELECT s.doc_id,
+        |       array_to_string(list(coalesce(v.id, 0) ORDER BY s.ord), ' ') AS ids
+        |FROM sel s LEFT JOIN vocab v USING (tok)
+        |GROUP BY s.doc_id""".stripMargin)((s, d) =>
+      sharedEncoded(s, d).select(col("doc_id"),
+        array_join(col("ids").cast("array<string>"), " ").as("ids"))),
 
-    "text_fingerprint" ->
+    // train/eval n-gram contamination: every-50th doc stands in for the
+    // eval set; per train doc, distinct 5-gram overlap count and share
+    "text_contamination" -> Query(ContaminationOracleSql)((s, d) => {
+      val docs = Tables.documents(s, d)
+      TextAnalysis.contamination(docs, docs.filter(col("doc_id") % 50 === 0), k = 5)
+    }),
+
+    // the same check through the bloom pre-pass (eval side collapsed to a
+    // ~10-bits-per-shingle filter probed inside the scan stage; exact join
+    // only over survivors) — byte-identical output, so it shares the
+    // text_contamination oracle verbatim. The operator is size-adaptive:
+    // at bench sf the eval slice is broadcast-small, so this resolves to
+    // the exact path (the bloom machinery is pinned byte-identical by
+    // TextAnalysisSpec with smallBytes = 0 and by the streaming guard)
+    "text_contamination_bloom" -> Query(
+      // the bloom pre-pass is an exact-result optimization (false positives
+      // are verified away), so the oracle is shared verbatim
+      ContaminationOracleSql)((s, d) => {
+      val docs = Tables.documents(s, d)
+      TextAnalysis.contaminationBloom(docs, docs.filter(col("doc_id") % 50 === 0), k = 5)
+    }),
+
+    // CCNet-style LM quality signal: cross-entropy of every document under
+    // a bigram LM trained on the corpus' English slice (the "reference
+    // corpus" role wikipedia plays in CCNet)
+    "lm_cross_entropy" -> Query(
+      // identical bigram-LM derivation: add-one-smoothed conditional
+      // probabilities from the en slice's bigram/context counts, uniform 1/V
+      // fallback for unseen contexts, avg(-ln P) rounded to 6 decimals
+      """WITH tok AS (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents),
+        |bgs AS (SELECT doc_id, lang,
+        |         unnest(list_transform(range(1, len(w)),
+        |                i -> array_to_string(w[i:i+1], ' '))) AS bg
+        |        FROM tok WHERE len(w) >= 2),
+        |c12 AS (SELECT bg, count(*) AS c12 FROM bgs WHERE lang = 'en' GROUP BY bg),
+        |c1 AS (SELECT string_split(bg, ' ')[1] AS w1, count(*) AS c1
+        |       FROM bgs WHERE lang = 'en' GROUP BY 1),
+        |v AS (SELECT count(DISTINCT x) AS v FROM
+        |       (SELECT unnest(w) AS x FROM tok WHERE lang = 'en'))
+        |SELECT b.doc_id, count(*) AS n_bigrams,
+        | round(avg(-ln(CAST(coalesce(c12.c12, 0) + 1 AS DOUBLE) /
+        |               CAST(coalesce(c1.c1, 0) + v.v AS DOUBLE))), 6) AS cross_entropy
+        |FROM bgs b
+        |LEFT JOIN c12 ON b.bg = c12.bg
+        |LEFT JOIN c1 ON string_split(b.bg, ' ')[1] = c1.w1
+        |CROSS JOIN v
+        |GROUP BY b.doc_id""".stripMargin)((s, d) => {
+      val docs = Tables.documents(s, d)
+      graft.operators.LanguageModel.crossEntropy(docs.filter(col("lang") === "en"), docs)
+    }),
+
+    "text_fingerprint" -> Query(
       s"""WITH $ShinglesCte,
          |mins AS (SELECT doc_id, min(md5(s)) AS min_shingle_fp FROM ds GROUP BY doc_id)
          |SELECT d.doc_id,
          | md5(trim(regexp_replace(regexp_replace(lower(d.text), '[^a-z0-9 ]', '', 'g'),
          |          ' +', ' ', 'g'))) AS fingerprint,
          | mins.min_shingle_fp AS min_shingle_fp
-         |FROM documents d LEFT JOIN mins ON d.doc_id = mins.doc_id""".stripMargin,
+         |FROM documents d LEFT JOIN mins ON d.doc_id = mins.doc_id""".stripMargin)((s, d) =>
+      fannedDocs(s, d).select(
+        col("doc_id"),
+        TextAnalysis.fingerprint(col("text")).as("fingerprint"),
+        TextAnalysis.minShingleFingerprint(col("text"), 5).as("min_shingle_fp"))),
 
-    "text_quality_flags" -> {
+    // char-n-gram language ID + Gopher-style quality rule flags
+    // AUDIT (r8, x100 A/B): a profile-style fused spelling (one tokenize,
+    // one struct-fold for chars+alpha, shared lower(text)) measured
+    // 25.2 s vs 25.8 s composed at x100 steady and 292 s vs 274 s cold at
+    // x1000 — neutral-to-worse, REJECTED. Unlike text_profile (9 splits /
+    // 7 HOF walks collapsed to 1+1, 1.66x), this query's cost is the five
+    // regexp_extract_all corpus scans and the per-token rlike, which no
+    // fusion removes; the composed kernels stay for their reuse value.
+    "text_quality_flags" -> Query({
       val langScores = TextAnalysis.CharNgramMarkers.map { case (l, m) =>
         s"len(regexp_extract_all(lower(text), '${m.mkString("|")}')) AS s_$l"
       }.mkString(", ")
@@ -3724,9 +2932,24 @@ object SparkEntry {
          | ok_word_count AND ok_mean_word_len AND ok_symbol_ratio
          |  AND ok_alpha_fraction AS keep
          |FROM f""".stripMargin
-    },
+    })((s, d) =>
+      fannedDocs(s, d)
+        .select(col("doc_id"),
+          TextAnalysis.langIdCharNgram(col("text")).as("lang_ngram"),
+          TextAnalysis.gopherFlags(col("text")).as("g"))
+        .select(col("doc_id"), col("lang_ngram"),
+          col("g.ok_word_count"), col("g.ok_mean_word_len"),
+          col("g.ok_symbol_ratio"), col("g.ok_alpha_fraction"), col("g.keep"))),
 
-    "text_repetition" ->
+    // repetition detection: top 2-gram share per document (Gopher-style
+    // duplicate-n-gram fraction). The question never crosses documents,
+    // so it is ONE per-row kernel (sorted gram array, longest equal run
+    // — TextAnalysis.repetitionStats), not the r11 corpus-wide
+    // (doc_id, gram) groupBy that shuffled every 2-gram string twice.
+    // Zero exchanges at ANY scale; r12 sf0.1: 0.82 s paired -> see
+    // BENCH_ORACLE. Docs with <2 words drop on n_grams >= 1, exactly as
+    // the old explode() dropped their empty arrays (oracle: len(w)>=2).
+    "text_repetition" -> Query(
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         |g AS (SELECT doc_id, unnest(list_transform(range(1, len(w)),
         |                    i -> array_to_string(w[i:i+1], ' '))) AS g
@@ -3735,17 +2958,94 @@ object SparkEntry {
         |SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_2grams,
         | max(c) AS top_2gram_count,
         | CAST(max(c) AS DOUBLE) / CAST(sum(c) AS BIGINT) AS rep_ratio
-        |FROM c GROUP BY doc_id""".stripMargin,
+        |FROM c GROUP BY doc_id""".stripMargin)((s, d) =>
+      fannedDocs(s, d)
+        .select(col("doc_id"),
+          TextAnalysis.repetitionStats(col("text"), 2).as("r"))
+        .filter(col("r.n_grams") >= 1)
+        .select(col("doc_id"),
+          col("r.n_grams").as("n_2grams"),
+          col("r.top_count").as("top_2gram_count"),
+          (col("r.top_count").cast("double") /
+            col("r.n_grams").cast("double")).as("rep_ratio"))),
 
-    "text_pii_flags" ->
+    // PII-ish pattern counts (emails / urls / long digit runs)
+    "text_pii_flags" -> Query(
       """SELECT doc_id,
         | CAST(len(regexp_extract_all(text, '[a-zA-Z0-9._]+@[a-zA-Z0-9.-]+')) AS BIGINT)
         |   AS n_emails,
         | CAST(len(regexp_extract_all(text, 'https?://[^ ]+')) AS BIGINT) AS n_urls,
         | CAST(len(regexp_extract_all(text, '[0-9]{6,}')) AS BIGINT) AS n_long_digit_runs
-        |FROM documents""".stripMargin,
+        |FROM documents""".stripMargin)((s, d) =>
+      fannedDocs(s, d).select(
+        col("doc_id"),
+        size(regexp_extract_all(col("text"),
+          lit("[a-zA-Z0-9._]+@[a-zA-Z0-9.-]+"), lit(0))).cast("long").as("n_emails"),
+        size(regexp_extract_all(col("text"),
+          lit("https?://[^ ]+"), lit(0))).cast("long").as("n_urls"),
+        size(regexp_extract_all(col("text"),
+          lit("[0-9]{6,}"), lit(0))).cast("long").as("n_long_digit_runs"))),
 
-    "text_rolling_hash" -> {
+    // PII REDACTION (the counterpart of text_pii_flags' detection): the
+    // curation step that actually rewrites the corpus — emails, urls and
+    // long digit runs replaced by typed placeholder tokens, as one narrow
+    // codegen'd projection (nested regexp_replace; url first so an email
+    // inside a url query-string cannot leave a half-redacted hybrid)
+    "text_pii_redact" -> Query(
+      """SELECT doc_id,
+        | regexp_replace(
+        |   regexp_replace(
+        |     regexp_replace(text, 'https?://[^ ]+', '<URL>', 'g'),
+        |     '[a-zA-Z0-9._]+@[a-zA-Z0-9.-]+', '<EMAIL>', 'g'),
+        |   '[0-9]{6,}', '<NUM>', 'g') AS redacted
+        |FROM documents""".stripMargin)((s, d) =>
+      fannedDocs(s, d).select(
+        col("doc_id"),
+        regexp_replace(
+          regexp_replace(
+            regexp_replace(col("text"), "https?://[^ ]+", "<URL>"),
+            "[a-zA-Z0-9._]+@[a-zA-Z0-9.-]+", "<EMAIL>"),
+          "[0-9]{6,}", "<NUM>").as("redacted"))),
+
+    // cluster-aware train/val split: near-dup CLUSTERS (not documents) are
+    // the split unit, so no near-duplicate pair can straddle the boundary
+    // and leak eval into train. Deterministic: split decided by the md5 of
+    // the cluster representative id; singleton docs are their own cluster.
+    "dedup_split_by_cluster" -> Query(
+      // same transitive closure as the clusters oracle, then the split
+      // decided by the md5 prefix of the cluster representative —
+      // 3865470566 = floor(0.9 * 2^32), the exact long the Spark side uses
+      s"""WITH RECURSIVE $ShinglesCte,
+         |$JaccardPrCte,
+         |pairs AS (SELECT da, db FROM pr
+         |          JOIN szh sa ON sa.doc_id = da JOIN szh sb ON sb.doc_id = db
+         |          WHERE inter / (sa.n + sb.n - inter) >= 0.5),
+         |edges AS (SELECT da AS src, db AS dst FROM pairs
+         |          UNION SELECT db, da FROM pairs),
+         |reach(src, dst) AS (
+         |  SELECT src, dst FROM edges
+         |  UNION
+         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
+         |comp AS (SELECT src AS doc_id, least(src, min(dst)) AS component
+         |         FROM reach GROUP BY src),
+         |lab AS (SELECT d.doc_id,
+         |         CAST(coalesce(c.component, d.doc_id) AS BIGINT) AS component
+         |        FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id)
+         |SELECT doc_id, component,
+         | CASE WHEN ('0x' || substr(md5(CAST(component AS VARCHAR)), 1, 8))::BIGINT
+         |        < 3865470566 THEN 'train' ELSE 'val' END AS split
+         |FROM lab""".stripMargin)((s, d) => {
+      val labels = sharedClusters(s, d)
+      Tables.documents(s, d)
+        .join(labels, Seq("doc_id"), "left")
+        .withColumn("component", coalesce(col("component"), col("doc_id")))
+        .select(col("doc_id"), col("component"),
+          when(conv(substring(md5(col("component").cast("string")), 1, 8), 16, 10)
+              .cast("long") < lit((0.9 * 4294967296.0).toLong), "train")
+            .otherwise("val").as("split"))
+    }),
+
+    "text_rolling_hash" -> Query({
       def rh(expr: String) =
         s"""list_reduce(list_prepend(CAST(0 AS BIGINT),
            | list_transform(string_split_regex($expr, ''), c -> CAST(ascii(c) AS BIGINT))),
@@ -3753,62 +3053,16 @@ object SparkEntry {
       s"""SELECT doc_id, ${rh("text")} AS rhash,
          | ${rh("trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))")} AS rhash_norm
          |FROM documents""".stripMargin
-    },
+    })((s, d) =>
+      fannedDocs(s, d).select(
+        col("doc_id"),
+        graft.functions.TextFunctions.rolling_hash(col("text")).as("rhash"),
+        graft.functions.TextFunctions.rolling_hash(
+          TextAnalysis.normalizedText(col("text"))).as("rhash_norm"))),
 
-    // same two-window derivation: null-safe change flag on (ts, event_id)
-    // order, lead() of the surviving change rows as valid_to
-    "w5_scd2" ->
-      """WITH o AS (
-        | SELECT user_id, event_type, ts, event_id,
-        |  lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |    AS prev
-        | FROM events),
-        |c AS (
-        | SELECT user_id, event_type, ts, event_id FROM o
-        | WHERE event_type IS DISTINCT FROM prev)
-        |SELECT user_id, event_type, ts AS valid_from,
-        | lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to
-        |FROM c""".stripMargin,
-
-    // same md5-fingerprint comparison; single payload column, so the
-    // null-SKIPPING concat_ws image is coalesce(text, '') — a null
-    // payload fingerprints as empty in the operator, never as NULL
-    "snapshot_diff" ->
-      """WITH o AS (SELECT doc_id, md5(coalesce(text, '')) AS h FROM documents
-        |           WHERE doc_id % 11 <> 0),
-        |n AS (SELECT doc_id,
-        |       CASE WHEN doc_id % 17 = 0 THEN md5(coalesce(upper(text), ''))
-        |            ELSE md5(coalesce(text, '')) END AS h
-        |      FROM documents WHERE doc_id % 13 <> 0)
-        |SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
-        | CASE WHEN o.h IS NULL THEN 'added'
-        |      WHEN n.h IS NULL THEN 'removed'
-        |      WHEN o.h <> n.h THEN 'changed'
-        |      ELSE 'unchanged' END AS status
-        |FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id""".stripMargin,
-
-    // quantile_cont shares percentile()'s index-interpolation definition
-    "a11_percentiles" ->
-      """SELECT l_returnflag,
-        | round(quantile_cont(l_extendedprice, 0.5), 4) AS p50,
-        | round(quantile_cont(l_extendedprice, 0.9), 4) AS p90,
-        | round(quantile_cont(l_extendedprice, 0.99), 4) AS p99
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    // the sketch values are engine-internal; the query exports only the
-    // within-step booleans, TRUE by the accuracy-1000 error bound (rank
-    // error << any quantity value's weight run — see the queries-entry
-    // comment; the exact columns hash-match quantile_cont over the raw
-    // rows, percentile's frequency form interpolates the same multiset)
-    "a13_weighted_quantiles" ->
-      """SELECT count(DISTINCT l_quantity) AS n_quantities,
-        | count(*) AS total_rows,
-        | floor(quantile_cont(l_quantity, 0.5) * 10000 + 0.5) / 10000 AS p50,
-        | floor(quantile_cont(l_quantity, 0.9) * 10000 + 0.5) / 10000 AS p90,
-        | TRUE AS p50_within_step, TRUE AS p90_within_step
-        |FROM lineitem""".stripMargin,
-
-    "w2_lag_sessions" ->
+    // W2: analytic window functions (lag + running sum): gap-based session
+    // assignment over the event stream — sessions break after >30 min idle
+    "w2_lag_sessions" -> Query(
       """WITH e AS (
         | SELECT user_id, event_id, ts,
         |  lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
@@ -3826,28 +3080,69 @@ object SparkEntry {
         | FROM f)
         |SELECT user_id, session_id, min(ts) AS session_start,
         | max(ts) AS session_end, count(*) AS n_events
-        |FROM g GROUP BY user_id, session_id""".stripMargin,
+        |FROM g GROUP BY user_id, session_id""".stripMargin)((s, d) => {
+      val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+      Tables.events(s, d)
+        .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
+        .withColumn("new_session",
+          when(col("prev_ts").isNull ||
+            col("ts").cast("long") - col("prev_ts").cast("long") > 1800, 1L)
+            .otherwise(0L))
+        .withColumn("session_id", sum(col("new_session")).over(
+          byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .groupBy(col("user_id"), col("session_id"))
+        .agg(min(col("ts")).as("session_start"), max(col("ts")).as("session_end"),
+          count(lit(1)).as("n_events"))
+    }),
 
-    "s5_sql_view" ->
+    // S5: registered-view + spark.sql entry point (the reference's
+    // `con.from_df` / `FROM fct` named-relation reuse)
+    "s5_sql_view" -> Query(
       """SELECT o_orderpriority, count(*) AS n FROM orders
-        |WHERE o_totalprice > 100000 GROUP BY o_orderpriority""".stripMargin,
+        |WHERE o_totalprice > 100000 GROUP BY o_orderpriority""".stripMargin)((s, d) => {
+      Tables.orders(s, d).createOrReplaceTempView("orders_v")
+      s.sql("""SELECT o_orderpriority, count(*) AS n
+              |FROM orders_v WHERE o_totalprice > 100000
+              |GROUP BY o_orderpriority""".stripMargin)
+    }),
 
-    "p3_limit_preview" ->
-      "SELECT * FROM region ORDER BY r_regionkey LIMIT 3",
+    // P3: LIMIT preview (deterministically ordered)
+    "p3_limit_preview" -> Query(
+      "SELECT * FROM region ORDER BY r_regionkey LIMIT 3")((s, d) =>
+      Tables.region(s, d).orderBy(col("r_regionkey")).limit(3)),
 
-    "a6_sketch_agg" ->
-      """SELECT count(DISTINCT l_partkey) AS exact_parts,
-        | count(DISTINCT l_orderkey) AS exact_orders,
-        | floor(median(l_extendedprice) * 100 + 0.5) / 100 AS exact_median_price,
-        | TRUE AS parts_within_3rsd, TRUE AS orders_within_3rsd,
-        | TRUE AS median_within_1pct
-        |FROM lineitem""".stripMargin,
+    // ---- scale-path: multimodal (binary column plumbing) ----------------
 
-    // The decode stub's dimensions are pure md5-byte arithmetic
-    // (Multimodal.decodeMeta): width = 1 + ((b0 & 0x7f) << 4 | (b1 & 0x0f)),
-    // height the same over bytes 2/3 — re-derived here from md5 hex digits
-    // so the stub stays honest until real codecs replace it.
-    "mm_decode_profile" ->
+    "mm_binary_meta" -> Query(
+      """SELECT doc_id,
+        | CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+        | md5(text) AS content_hash,
+        | CAST(octet_length(encode(text)) % 256 AS BIGINT) AS fake_width,
+        | CAST(octet_length(encode(text)) // 256 AS BIGINT) AS fake_height
+        |FROM documents""".stripMargin)((s, d) => {
+      val bin = encode(col("text"), "UTF-8")
+      Tables.documents(s, d).select(
+        col("doc_id"),
+        octet_length(bin).cast("long").as("n_bytes"),
+        md5(col("text")).as("content_hash"),
+        (octet_length(bin) % 256).cast("long").as("fake_width"),
+        floor(octet_length(bin) / lit(256)).cast("long").as("fake_height"))
+    }),
+
+    // metadata decode profile — the COLUMNAR spelling (r14): builtins +
+    // one codegen'd header-meta call in a single WholeStageCodegen span,
+    // one md5 per payload. The r13 typed path (Multimodal.profile via
+    // mapPartitions) paid per-row encoder ser/de and hashed each payload
+    // twice — 4.21x DuckDB at x1000 under a falsified
+    // "parquet-dictionary" annotation (the x1000 text carrier is 99.8%
+    // distinct, so duck amortized nothing; the gap was pure engine tax).
+    // MultimodalSpec pins decodeMetaColumns == decodeMeta on real
+    // PNG/JPEG/WAV/MP4 fixtures and undecodable carriers.
+    "mm_decode_profile" -> Query(
+      // The decode stub's dimensions are pure md5-byte arithmetic
+      // (Multimodal.decodeMeta): width = 1 + ((b0 & 0x7f) << 4 | (b1 & 0x0f)),
+      // height the same over bytes 2/3 — re-derived here from md5 hex digits
+      // so the stub stays honest until real codecs replace it.
       """WITH t AS (SELECT doc_id AS asset_id,
         |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
         |  md5(text) AS h FROM documents),
@@ -3863,9 +3158,17 @@ object SparkEntry {
         | CAST(1 + ((x1 % 8) * 16 + x2) * 16 + x4 AS INT) AS width,
         | CAST(1 + ((x5 % 8) * 16 + x6) * 16 + x8 AS INT) AS height,
         | CAST(3 AS INT) AS channels
-        |FROM d""".stripMargin,
+        |FROM d""".stripMargin)((s, d) =>
+      operators.Multimodal.decodeMetaColumns(
+          Tables.documents(s, d), "doc_id", "text", "image")
+        .select(col("asset_id"), col("n_bytes"), col("content_hash"),
+          col("width"), col("height"), col("channels"))),
 
-    "mm_perceptual_hash" ->
+    // perceptual-hash kernel over the (undecodable-text) asset carrier:
+    // the md5-derived stand-in dhash, signed-64-bit parity with DuckDB's
+    // HUGEINT nibble fold — the real-image path is spec-covered
+    // (MultimodalSpec's dHash/near-dup golden tests)
+    "mm_perceptual_hash" -> Query(
       """WITH t AS (SELECT doc_id AS asset_id, md5(text) AS h FROM documents),
         |f AS (SELECT asset_id,
         |  list_reduce(list_transform(str_split_regex(substr(h, 1, 16), ''),
@@ -3876,332 +3179,141 @@ object SparkEntry {
         | CAST(CASE WHEN v >= 9223372036854775808 THEN v - 18446744073709551616
         |           ELSE v END AS BIGINT) AS dhash,
         | false AS decoded
-        |FROM f""".stripMargin,
+        |FROM f""".stripMargin)((s, d) =>
+      operators.Multimodal.perceptualHashes(operators.Multimodal.asAssets(
+          Tables.documents(s, d), "doc_id", "text", "image"))
+        .toDF()),
 
-    "mm_binary_meta" ->
-      """SELECT doc_id,
-        | CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        | md5(text) AS content_hash,
-        | CAST(octet_length(encode(text)) % 256 AS BIGINT) AS fake_width,
-        | CAST(octet_length(encode(text)) // 256 AS BIGINT) AS fake_height
-        |FROM documents""".stripMargin,
-
-    "stream_tumbling_agg" ->
-      """SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600 AS window_epoch,
-        | event_type, count(*) AS n, round(sum(value), 2) AS total_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    // the salt is an execution detail: the oracle is the plain GROUP BY
-    "skew_salted_agg" ->
-      """SELECT event_type,
-        | floor(sum(value)*100 + 0.5)/100 AS sum_value,
-        | CAST(count(*) AS BIGINT) AS n
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    // 16 md5 bytes of the payload — the exact numerators of the dim=16
-    // hash-chain stand-in embedding ((b-128)/128 recovers losslessly)
-    "mm_features" ->
+    // feature-extraction kernel over the text-carrier assets: the carrier
+    // has no image magic, so every payload takes the deterministic
+    // md5-chain stand-in, whose dim=16 embedding is exactly the 16 md5
+    // bytes mapped to (b-128)/128 — exact in binary floating point, so
+    // the byte numerators recover losslessly and oracle as integers
+    // (the real luma-grid/RMS paths are MultimodalSpec golden tests)
+    "mm_features" -> Query(
+      // 16 md5 bytes of the payload — the exact numerators of the dim=16
+      // hash-chain stand-in embedding ((b-128)/128 recovers losslessly)
       """SELECT doc_id AS asset_id,
         | array_to_string(list_transform(range(1, 17),
         |   i -> ('0x' || substr(md5(text), 2*i - 1, 2))::BIGINT), ' ') AS emb_bytes
-        |FROM documents""".stripMargin,
+        |FROM documents""".stripMargin)((s, d) =>
+      operators.Multimodal.extractFeatures(operators.Multimodal.asAssets(
+          Tables.documents(s, d), "doc_id", "text", "image"), dim = 16)
+        .toDF()
+        .select(col("asset_id"),
+          array_join(transform(col("embedding"),
+            f => ((f * 128).cast("int") + 128).cast("string")), " ").as("emb_bytes"))),
 
-    // truncation fallback of the resize kernel: first 64 bytes (documents
-    // are pure ASCII at every sf, so char substr == byte slice)
-    "mm_resize" ->
+    // resize kernel on the undecodable carrier = the documented maxBytes
+    // truncation fallback; oracled via payload hash + length (documents
+    // are pure ASCII at every sf, so DuckDB's char substr is a byte slice)
+    "mm_resize" -> Query(
+      // truncation fallback of the resize kernel: first 64 bytes (documents
+      // are pure ASCII at every sf, so char substr == byte slice)
       """SELECT doc_id AS asset_id,
         | CAST(least(octet_length(encode(text)), 64) AS BIGINT) AS n_bytes,
         | md5(substr(text, 1, 64)) AS payload_hash
-        |FROM documents""".stripMargin,
+        |FROM documents""".stripMargin)((s, d) =>
+      operators.Multimodal.resize(operators.Multimodal.asAssets(
+          Tables.documents(s, d), "doc_id", "text", "image"),
+          maxBytes = 64, maxDim = 32)
+        .toDF()
+        .select(col("asset_id"),
+          octet_length(col("payload")).cast("long").as("n_bytes"),
+          md5(col("payload")).as("payload_hash"))),
 
-    // 4 evenly-spaced byte slices per "video": [i*len/4, (i+1)*len/4)
-    "mm_frames" ->
+    // frame sampling: video carrier yields 4 evenly-spaced byte slices,
+    // hashed — the caption/OCR input shape; slice arithmetic mirrored in
+    // the oracle with integer division
+    "mm_frames" -> Query(
+      // 4 evenly-spaced byte slices per "video": [i*len/4, (i+1)*len/4)
       """SELECT doc_id AS asset_id, CAST(i AS BIGINT) AS frame_index,
         | md5(substr(text, (i*length(text))//4 + 1,
         |            ((i+1)*length(text))//4 - (i*length(text))//4)) AS frame_hash
-        |FROM documents, (SELECT unnest(range(0, 4)) AS i) g""".stripMargin,
+        |FROM documents, (SELECT unnest(range(0, 4)) AS i) g""".stripMargin)((s, d) =>
+      operators.Multimodal.sampleFrames(operators.Multimodal.asAssets(
+          Tables.documents(s, d), "doc_id", "text", "video"), n = 4)
+        .toDF()
+        .select(col("asset_id"),
+          col("frame_index").cast("long").as("frame_index"),
+          col("frame_hash"))),
 
-    // identical interleave arithmetic, generated term-for-term
-    "layout_zorder" -> {
-      val terms = (0 until 16).flatMap(i => Seq(
-        s"(((x >> $i) & 1) << ${2 * i})", s"(((y >> $i) & 1) << ${2 * i + 1})"))
-      s"""WITH e AS (SELECT user_id,
-         |  CAST(floor(epoch(ts)) AS BIGINT) // 3600 AS hr,
-         |  user_id % 65536 AS x,
-         |  (CAST(floor(epoch(ts)) AS BIGINT) // 3600) % 65536 AS y
-         | FROM events),
-         |z AS (SELECT user_id, hr, (${terms.mkString(" | ")}) AS z FROM e)
-         |SELECT z >> 22 AS zbucket, count(*) AS n,
-         | min(user_id) AS u_min, max(user_id) AS u_max,
-         | min(hr) AS h_min, max(hr) AS h_max
-         |FROM z GROUP BY 1""".stripMargin
-    },
+    // ---- chess pipeline end-to-end (rows-only check: not SQL-expressible;
+    // runs the real 514-game sample through bronze→silver→gold→analytics
+    // when the reference checkout is present, else an empty result) -------
 
-    // identical tokenization (single-space split), identical idf
-    // ln(1 + (N - df + 0.5)/(df + 0.5)), k1 = 1.2, b = 0.75
-    "text_bm25" ->
-      """WITH st AS (
-        | SELECT count(*) AS n, avg(len(string_split(text, ' '))) AS avgdl,
-        |  sum(CASE WHEN list_contains(string_split(text, ' '), 'vector') THEN 1 ELSE 0 END) AS df0,
-        |  sum(CASE WHEN list_contains(string_split(text, ' '), 'stream') THEN 1 ELSE 0 END) AS df1,
-        |  sum(CASE WHEN list_contains(string_split(text, ' '), 'join') THEN 1 ELSE 0 END) AS df2
-        | FROM documents),
-        |d AS (
-        | SELECT doc_id,
-        |  CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl,
-        |  CAST(len(list_filter(string_split(text, ' '), x -> x = 'vector')) AS DOUBLE) AS tf0,
-        |  CAST(len(list_filter(string_split(text, ' '), x -> x = 'stream')) AS DOUBLE) AS tf1,
-        |  CAST(len(list_filter(string_split(text, ' '), x -> x = 'join')) AS DOUBLE) AS tf2
-        | FROM documents)
-        |SELECT doc_id, score FROM (
-        | SELECT doc_id, round(
-        |   ln(1 + (n - df0 + 0.5) / (df0 + 0.5)) * (tf0 * 2.2) / (tf0 + 1.2 * (0.25 + 0.75 * dl / avgdl))
-        | + ln(1 + (n - df1 + 0.5) / (df1 + 0.5)) * (tf1 * 2.2) / (tf1 + 1.2 * (0.25 + 0.75 * dl / avgdl))
-        | + ln(1 + (n - df2 + 0.5) / (df2 + 0.5)) * (tf2 * 2.2) / (tf2 + 1.2 * (0.25 + 0.75 * dl / avgdl)),
-        |   6) AS score
-        | FROM d CROSS JOIN st) t
-        |WHERE score > 0""".stripMargin,
-
-    // the raw overlap-predicate join IS the semantic definition (half-open
-    // on both sides)
-    "j8_interval_overlap" ->
-      """WITH wv AS (
-        | SELECT DISTINCT
-        |  CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600 - 900 AS w_start,
-        |  CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600 + 4500 AS w_end
-        | FROM events),
-        |u AS (
-        | SELECT user_id, CAST(min(floor(epoch(ts))) AS BIGINT) AS u_start,
-        |  CAST(min(floor(epoch(ts))) AS BIGINT) + 10800 AS u_end
-        | FROM events GROUP BY 1)
-        |SELECT w_start, user_id
-        |FROM wv JOIN u ON w_start < u_end AND u_start < w_end""".stripMargin,
-
-    // identical scale rule: binding group kept whole, others thinned by
-    // the same md5-prefix uniform as sample_weighted
-    "sample_mix" ->
-      """WITH w(lang, wt) AS (VALUES
-        |  ('en', CAST(0.4 AS DOUBLE)), ('de', CAST(0.15 AS DOUBLE)),
-        |  ('es', CAST(0.15 AS DOUBLE)), ('fr', CAST(0.15 AS DOUBLE)),
-        |  ('zh', CAST(0.15 AS DOUBLE))),
-        |c AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1),
-        |s AS (SELECT min(CAST(n AS DOUBLE) / wt) AS scale FROM c JOIN w USING (lang)),
-        |f AS (SELECT c.lang, least(1.0, w.wt * s.scale / CAST(c.n AS DOUBLE)) AS frac
-        |      FROM c JOIN w ON c.lang = w.lang CROSS JOIN s)
-        |SELECT d.doc_id, d.lang
-        |FROM documents d JOIN f ON d.lang = f.lang
-        |WHERE CAST(CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS DOUBLE)
-        |      < f.frac * 4294967296.0""".stripMargin,
-
-    "f17_hour_gapfill" ->
+    "chess_e2e" -> Query(
+      // e2e analytics rollup (the reference's headline dashboard,
+      // README.md:29-33): win rate by opening family over the month's merged
+      // gold fact — re-derived from the raw 514-game JSON exactly like the
+      // chess_gold oracle (the sample has unique game urls, so the
+      // latest-wins merge is the identity and the raw projection IS the
+      // fact). dim_openings reduced to its key-determining columns; the
+      // slug-parsed opening name has no colon, so family == full name.
       """WITH e AS (
-        | SELECT user_id, CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600 AS hr
-        | FROM events),
-        |b AS (SELECT user_id, min(hr) AS lo, max(hr) AS hi FROM e GROUP BY 1),
-        |h AS (SELECT user_id, unnest(range(lo, hi + 3600, 3600)) AS hr FROM b),
-        |c AS (SELECT user_id, hr, count(*) AS n FROM e GROUP BY 1, 2)
-        |SELECT h.user_id, h.hr, coalesce(c.n, 0) AS n_events
-        |FROM h LEFT JOIN c ON h.user_id = c.user_id AND h.hr = c.hr""".stripMargin,
+        | SELECT regexp_extract(pgn, '\[White "(.*?)"', 1) AS pgn_white_user,
+        |  white.result AS white_result, black.result AS black_result,
+        |  regexp_extract(pgn, '\[ECOUrl "(.*?)"', 1) AS pgn_eco_url,
+        |  regexp_extract(pgn, '\[ECO "(.*?)"', 1) AS pgn_eco
+        | FROM read_json_auto('/root/reference/dev_files/Data/2024-01/games.json')
+        |), fct AS (
+        | SELECT CASE WHEN pgn_white_user = 'Rhythmbear1'
+        |          THEN white_result ELSE black_result END AS my_result,
+        |  pgn_eco_url AS opening_url
+        | FROM e
+        |), dimo AS (
+        | SELECT DISTINCT pgn_eco_url, pgn_eco,
+        |  replace(regexp_extract(pgn_eco_url, '([^/]*)$', 1), '-', ' ') AS opening_family
+        | FROM e
+        |), res AS (SELECT * FROM (VALUES
+        |  ('win','Win'),('checkmated','Loss'),('agreed','Draw'),('repetition','Draw'),
+        |  ('timeout','Win'),('resigned','Loss'),('stalemate','Draw'),('lose','Loss'),
+        |  ('insufficient','Draw'),('50move','Draw'),('abandoned','Draw'),
+        |  ('kingofthehill','Win'),('threecheck','Win'),('timevsinsufficient','Draw'),
+        |  ('bughousepartnerlose','Loss')) t(result_code, result))
+        |SELECT dimo.opening_family, count(*) AS games,
+        | CAST(sum(CASE WHEN res.result = 'Win' THEN 1 ELSE 0 END) AS BIGINT) AS wins,
+        | CAST(sum(CASE WHEN res.result = 'Loss' THEN 1 ELSE 0 END) AS BIGINT) AS losses,
+        | CAST(sum(CASE WHEN res.result = 'Draw' THEN 1 ELSE 0 END) AS BIGINT) AS draws,
+        | avg(CAST(CASE WHEN res.result = 'Win' THEN 1 ELSE 0 END AS DOUBLE)) AS win_rate
+        |FROM fct LEFT JOIN res ON fct.my_result = res.result_code
+        |LEFT JOIN dimo ON fct.opening_url = dimo.pgn_eco_url
+        |GROUP BY dimo.opening_family""".stripMargin, fixedInput = true)((s, _) => {
+      val sample = "/root/reference/dev_files/Data/2024-01/games.json"
+      if (!new java.io.File(sample).exists()) {
+        s.emptyDataFrame
+      } else {
+        val root = java.nio.file.Files.createTempDirectory("chess-e2e").toString
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$root/bronze"))
+        java.nio.file.Files.copy(java.nio.file.Paths.get(sample),
+          java.nio.file.Paths.get(s"$root/bronze/2024-01-games.json"))
+        val pipe = new graft.chess.ChessPipeline(s, root, "Rhythmbear1")
+        pipe.runMonth(2024, 1, java.sql.Timestamp.valueOf("2024-02-01 00:00:00"))
+        graft.chess.ChessAnalytics.winRateByOpeningFamily(
+          pipe.fact, pipe.dimOpenings, pipe.dimResults)
+      }
+    }),
 
-    // the raw range-predicate join IS the semantic definition the bucketed
-    // equi-join must reproduce (half-open [start, end))
-    "j7_interval_join" ->
-      """WITH p AS (
-        | SELECT event_id, CAST(floor(epoch(ts)) AS BIGINT) AS pe FROM events),
-        |iv AS (
-        | SELECT DISTINCT
-        |  CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600 - 900 AS start_epoch,
-        |  CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600 + 4500 AS end_epoch
-        | FROM events)
-        |SELECT event_id, start_epoch
-        |FROM p JOIN iv ON pe >= start_epoch AND pe < end_epoch""".stripMargin,
+    // ---- chess silver/gold full-table oracles: the engine's bronze→silver
+    // and silver→gold semantics hash-compared column-for-column against a
+    // DuckDB re-derivation from the raw 514-game JSON (the reference
+    // transform IS DuckDB SQL — python_scripts.py:169-205, 533-598) --------
 
-    // identical hash-uniform: 32-bit md5 prefix / 2^32 < clamp(weight, 0, 1)
-    "sample_weighted" ->
-      """SELECT doc_id FROM (
-        | SELECT doc_id,
-        |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS h,
-        |  least(greatest(CAST(len(string_split(text, ' ')) AS DOUBLE) / 60.0, 0.0), 1.0) AS p
-        | FROM documents) t
-        |WHERE CAST(h AS DOUBLE) < p * 4294967296.0""".stripMargin,
-
-    // the single-window ORDER BY formulation IS the semantic definition the
-    // distributed two-phase scan must reproduce exactly
-    "pack_materialize" ->
-      """WITH tok AS (SELECT unnest(string_split(text, ' ')) AS tok FROM documents),
-        |vc AS (SELECT tok, count(*) AS c FROM tok GROUP BY 1),
-        |vocab AS (SELECT tok, CAST(row_number() OVER (ORDER BY c DESC, tok ASC) AS BIGINT) AS id
-        |          FROM vc ORDER BY c DESC, tok ASC LIMIT 24),
-        |toks AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
-        |tokd AS (SELECT doc_id, unnest(generate_series(1, len(ts))) AS ord, ts FROM toks),
-        |sel AS (SELECT doc_id, ord, ts[ord] AS tok FROM tokd),
-        |enc AS (SELECT s.doc_id, list(coalesce(v.id, 0) ORDER BY s.ord) AS ids
-        |        FROM sel s LEFT JOIN vocab v USING (tok) GROUP BY s.doc_id),
-        |t AS (SELECT doc_id, ids, CAST(len(ids) AS BIGINT) AS n FROM enc),
-        |c AS (SELECT doc_id, ids, n, CAST(sum(n) OVER (ORDER BY doc_id
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum FROM t),
-        |d AS (SELECT doc_id, ids, n, cum - n AS s0 FROM c WHERE n > 0),
-        |sq AS (SELECT doc_id, ids, n, s0,
-        |        unnest(generate_series(s0 // 512, (s0 + n - 1) // 512)) AS seq_id FROM d),
-        |parts AS (SELECT seq_id, s0,
-        |        list_slice(ids, CAST(greatest(seq_id*512 - s0, 0) + 1 AS BIGINT),
-        |                        CAST(least((seq_id+1)*512, s0 + n) - s0 AS BIGINT)) AS part FROM sq)
-        |SELECT seq_id, array_to_string(flatten(list(part ORDER BY s0)), ' ') AS ids,
-        |       CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(len(flatten(list(part ORDER BY s0))) AS BIGINT) AS n_tokens
-        |FROM parts GROUP BY seq_id""".stripMargin,
-
-    "pack_sequences" ->
-      """WITH t AS (
-        | SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        | FROM documents),
-        |c AS (
-        | SELECT doc_id, n_tokens,
-        |  CAST(sum(n_tokens) OVER (ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-        | FROM t)
-        |SELECT doc_id, n_tokens, cum - n_tokens AS start_offset,
-        | (cum - n_tokens) // 512 AS seq_id,
-        | (cum - n_tokens) % 512 AS seq_offset
-        |FROM c""".stripMargin,
-
-    // the definition itself: global row_number over the seed-keyed 32-bit
-    // md5 prefix (id tie-break), minus one
-    "order_epoch_shuffle" ->
-      """SELECT doc_id, source,
-        | row_number() OVER (ORDER BY
-        |   ('0x' || substr(md5('7_' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT,
-        |   doc_id) - 1 AS shuffle_pos
-        |FROM documents""".stripMargin,
-
-    // same seeded rank with the stage bin prepended to the global order;
-    // // is DuckDB floor division, mirroring Spark's DIV
-    "order_curriculum" ->
-      """WITH b AS (SELECT doc_id,
-        |            len(string_split(text, ' ')) // 16 AS bin
-        |           FROM documents)
-        |SELECT doc_id, CAST(bin AS BIGINT) AS bin,
-        | row_number() OVER (ORDER BY bin,
-        |   ('0x' || substr(md5('7_' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT,
-        |   doc_id) - 1 AS curriculum_pos
-        |FROM b""".stripMargin,
-
-    // identical within-source seeded rank + source-index arithmetic;
-    // sources order by their ASCII string form in both engines
-    "order_interleave" ->
-      """WITH r AS (SELECT doc_id, source,
-        |  row_number() OVER (PARTITION BY source ORDER BY
-        |    ('0x' || substr(md5('13_' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT,
-        |    doc_id) - 1 AS srk
-        |  FROM documents),
-        |s AS (SELECT source, row_number() OVER (ORDER BY source) - 1 AS sidx
-        |      FROM (SELECT DISTINCT source FROM documents)),
-        |n AS (SELECT count(*) AS ns FROM (SELECT DISTINCT source FROM documents))
-        |SELECT r.doc_id, r.source, CAST(srk AS BIGINT) AS source_rank,
-        |  CAST(srk * ns + sidx AS BIGINT) AS interleave_pos
-        |FROM r JOIN s USING (source) CROSS JOIN n""".stripMargin,
-
-    // same round-robin of the seed-11 order
-    "order_shards" ->
-      """WITH r AS (SELECT doc_id, row_number() OVER (ORDER BY
-        |   ('0x' || substr(md5('11_' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT,
-        |   doc_id) - 1 AS pos FROM documents)
-        |SELECT pos % 8 AS shard, count(*) AS n,
-        | min(pos) AS pos_min, max(pos) AS pos_max
-        |FROM r GROUP BY 1""".stripMargin,
-
-    // running token total in the same seed-keyed order, cut at the budget
-    "order_token_budget" ->
-      """WITH t AS (
-        | SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |  ('0x' || substr(md5('3_' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS h
-        | FROM documents),
-        |c AS (
-        | SELECT doc_id, n_tokens,
-        |  CAST(sum(n_tokens) OVER (ORDER BY h, doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
-        | FROM t)
-        |SELECT doc_id, n_tokens, cum_tokens FROM c WHERE cum_tokens <= 15000""".stripMargin,
-
-    "order_budget_per_source" ->
-      """WITH t AS (
-        | SELECT doc_id, source, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |  ('0x' || substr(md5('5_' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS h
-        | FROM documents),
-        |c AS (
-        | SELECT doc_id, source, n_tokens,
-        |  CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY h, doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
-        | FROM t)
-        |SELECT doc_id, source, n_tokens, cum_tokens FROM c
-        |WHERE cum_tokens <= 800""".stripMargin,
-
-    "w4_session_window" ->
-      """WITH e AS (
-        | SELECT user_id, ts, value,
-        |  lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts
-        | FROM events),
-        |f AS (
-        | SELECT user_id, ts, value,
-        |  CASE WHEN prev_ts IS NULL OR epoch(ts) - epoch(prev_ts) >= 1800
-        |       THEN 1 ELSE 0 END AS new_session
-        | FROM e),
-        |g AS (
-        | SELECT user_id, ts, value, sum(new_session) OVER
-        |   (PARTITION BY user_id ORDER BY ts
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        | FROM f)
-        |SELECT user_id, min(ts) AS session_start,
-        | max(ts) + INTERVAL 30 MINUTE AS session_end,
-        | count(*) AS n_events, round(sum(value), 2) AS total_value
-        |FROM g GROUP BY user_id, sid""".stripMargin,
-
-    "text_source_stats" ->
-      """SELECT source, lang, count(*) AS n_docs,
-        | CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_tokens,
-        | floor(avg(n_chars) * 100 + 0.5) / 100 AS avg_chars
-        |FROM documents GROUP BY source, lang""".stripMargin,
-
-    // identical weight derivation: 32-bit md5 prefix of "w_<bucket>"
-    // mapped to [-1000, 1000]; integer feature sum, one division + exp
-    "text_quality_model" ->
-      s"""WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-         |           FROM documents),
-         |h AS (SELECT DISTINCT doc_id,
-         |       ('0x' || substr(md5(tok), 1, 8))::BIGINT % 2147483647 AS h31 FROM t),
-         |w AS (SELECT doc_id,
-         |       ('0x' || substr(md5('w_' ||
-         |          CAST(h31 % ${TextAnalysis.QualityModelBuckets} AS VARCHAR)),
-         |         1, 8))::BIGINT % 2001 - 1000 AS wgt FROM h)
-         |SELECT doc_id,
-         | round(1.0 / (1.0 + exp(-(CAST(sum(wgt) AS DOUBLE) / (1000.0 * count(*))))), 6)
-         |   AS lm_quality_score
-         |FROM w GROUP BY doc_id""".stripMargin,
-
-    // same rank/tie order (count desc, token asc); exact integer cumsum
-    "vocab_coverage" ->
-      """WITH t AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents),
-        |c AS (SELECT token, count(*) AS cnt FROM t GROUP BY token),
-        |tot AS (SELECT sum(cnt) AS total FROM c),
-        |r AS (SELECT token, cnt,
-        |       row_number() OVER (ORDER BY cnt DESC, token ASC) AS rank,
-        |       sum(cnt) OVER (ORDER BY cnt DESC, token ASC
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM c)
-        |SELECT rank, token, CAST(cnt AS BIGINT) AS cnt,
-        | round(CAST(cum AS DOUBLE) / total, 6) AS cum_share
-        |FROM r CROSS JOIN tot WHERE rank <= 100""".stripMargin,
-
-    // Full-fidelity re-derivation of the reference silver transform
-    // (python_scripts.py:169-205) from the raw sample JSON, including the
-    // add_move_numbers UDF (udfs.py:53-75) as a DuckDB list_transform.
-    // UD2 enrichment: the book match re-derived relationally — a book line
-    // matches a game iff its trimmed pgn equals the game's first-np tokens
-    // rejoined (token-boundary-exact, like OpeningMatcher's progressive
-    // key); per url the deepest match wins, ties to max name (the
-    // max_by(name, (moves, name)) tie-break — a flat arg-max over all
-    // matches equals Spark's per-game-then-per-url two-stage because depth
-    // dominates the struct order). Slug fallback for unmatched urls.
-    "chess_dim_openings" ->
+    // UD2 enrichment path: dim_openings with csv-book colon-form names
+    // (longest-prefix match into openings.csv; slug fallback for URLs the
+    // book misses) — the piece of the dim the slug-only chess_gold oracle
+    // could not check
+    "chess_dim_openings" -> Query(
+      // Full-fidelity re-derivation of the reference silver transform
+      // (python_scripts.py:169-205) from the raw sample JSON, including the
+      // add_move_numbers UDF (udfs.py:53-75) as a DuckDB list_transform.
+      // UD2 enrichment: the book match re-derived relationally — a book line
+      // matches a game iff its trimmed pgn equals the game's first-np tokens
+      // rejoined (token-boundary-exact, like OpeningMatcher's progressive
+      // key); per url the deepest match wins, ties to max name (the
+      // max_by(name, (moves, name)) tie-break — a flat arg-max over all
+      // matches equals Spark's per-game-then-per-url two-stage because depth
+      // dominates the struct order). Slug fallback for unmatched urls.
       """WITH e AS (
         | SELECT regexp_extract(pgn, '\[ECOUrl "(.*?)"', 1) AS pgn_eco_url,
         |  regexp_extract(pgn, '\[ECO "(.*?)"', 1) AS pgn_eco,
@@ -4238,47 +3350,20 @@ object SparkEntry {
         |   THEN substr(opening_name, strpos(opening_name, ':') + 1)
         |   ELSE opening_name END AS opening_variation,
         | eco_code
-        |FROM named""".stripMargin,
+        |FROM named""".stripMargin, fixedInput = true)((s, _) => {
+      val sample = "/root/reference/dev_files/Data/2024-01/games.json"
+      val csv = "/root/reference/dev_files/Data/openings.csv"
+      if (!new java.io.File(sample).exists() || !new java.io.File(csv).exists())
+        s.emptyDataFrame
+      else {
+        val silver = graft.chess.SilverFact.transform(
+          s.read.schema(graft.chess.Schemas.bronze).option("multiLine", true).json(sample))
+        graft.chess.Dims.openingsFromSilverEnriched(silver,
+          graft.chess.OpeningMatcher.readBook(s, csv))
+      }
+    }),
 
-    // e2e analytics rollup (the reference's headline dashboard,
-    // README.md:29-33): win rate by opening family over the month's merged
-    // gold fact — re-derived from the raw 514-game JSON exactly like the
-    // chess_gold oracle (the sample has unique game urls, so the
-    // latest-wins merge is the identity and the raw projection IS the
-    // fact). dim_openings reduced to its key-determining columns; the
-    // slug-parsed opening name has no colon, so family == full name.
-    "chess_e2e" ->
-      """WITH e AS (
-        | SELECT regexp_extract(pgn, '\[White "(.*?)"', 1) AS pgn_white_user,
-        |  white.result AS white_result, black.result AS black_result,
-        |  regexp_extract(pgn, '\[ECOUrl "(.*?)"', 1) AS pgn_eco_url,
-        |  regexp_extract(pgn, '\[ECO "(.*?)"', 1) AS pgn_eco
-        | FROM read_json_auto('/root/reference/dev_files/Data/2024-01/games.json')
-        |), fct AS (
-        | SELECT CASE WHEN pgn_white_user = 'Rhythmbear1'
-        |          THEN white_result ELSE black_result END AS my_result,
-        |  pgn_eco_url AS opening_url
-        | FROM e
-        |), dimo AS (
-        | SELECT DISTINCT pgn_eco_url, pgn_eco,
-        |  replace(regexp_extract(pgn_eco_url, '([^/]*)$', 1), '-', ' ') AS opening_family
-        | FROM e
-        |), res AS (SELECT * FROM (VALUES
-        |  ('win','Win'),('checkmated','Loss'),('agreed','Draw'),('repetition','Draw'),
-        |  ('timeout','Win'),('resigned','Loss'),('stalemate','Draw'),('lose','Loss'),
-        |  ('insufficient','Draw'),('50move','Draw'),('abandoned','Draw'),
-        |  ('kingofthehill','Win'),('threecheck','Win'),('timevsinsufficient','Draw'),
-        |  ('bughousepartnerlose','Loss')) t(result_code, result))
-        |SELECT dimo.opening_family, count(*) AS games,
-        | CAST(sum(CASE WHEN res.result = 'Win' THEN 1 ELSE 0 END) AS BIGINT) AS wins,
-        | CAST(sum(CASE WHEN res.result = 'Loss' THEN 1 ELSE 0 END) AS BIGINT) AS losses,
-        | CAST(sum(CASE WHEN res.result = 'Draw' THEN 1 ELSE 0 END) AS BIGINT) AS draws,
-        | avg(CAST(CASE WHEN res.result = 'Win' THEN 1 ELSE 0 END AS DOUBLE)) AS win_rate
-        |FROM fct LEFT JOIN res ON fct.my_result = res.result_code
-        |LEFT JOIN dimo ON fct.opening_url = dimo.pgn_eco_url
-        |GROUP BY dimo.opening_family""".stripMargin,
-
-    "chess_silver" ->
+    "chess_silver" -> Query(
       """WITH e AS (
         | SELECT url AS game_url, time_control, rated, time_class, rules,
         |  white.rating AS white_rating, white.result AS white_result,
@@ -4309,14 +3394,19 @@ object SparkEntry {
         | array_to_string(list_transform(range(1, CAST((len(m)+1)//2 AS INT) + 1),
         |   i -> CAST(i AS VARCHAR) || '. ' || m[2*i-1] || ' ' ||
         |     coalesce(m[2*i], '')), ' ') AS pgn_trans
-        |FROM e""".stripMargin,
+        |FROM e""".stripMargin, fixedInput = true)((s, _) => {
+      val sample = "/root/reference/dev_files/Data/2024-01/games.json"
+      if (!new java.io.File(sample).exists()) s.emptyDataFrame
+      else graft.chess.SilverFact.transform(
+        s.read.schema(graft.chess.Schemas.bronze).option("multiLine", true).json(sample))
+    }),
 
-    // Reference gold projection + star join (python_scripts.py:533-575):
-    // format_time_control / get_pgn_depth UDFs inlined; dim_date and
-    // dim_openings reduced to their key-determining columns (opening name /
-    // family / variation are pure functions of pgn_eco_url, so DISTINCT
-    // (url, eco) reproduces the dim's exact row multiplicity).
-    "chess_gold" ->
+    "chess_gold" -> Query(
+      // Reference gold projection + star join (python_scripts.py:533-575):
+      // format_time_control / get_pgn_depth UDFs inlined; dim_date and
+      // dim_openings reduced to their key-determining columns (opening name /
+      // family / variation are pure functions of pgn_eco_url, so DISTINCT
+      // (url, eco) reproduces the dim's exact row multiplicity).
       """WITH e AS (
         | SELECT url AS game_url, time_control, time_class,
         |  white.rating AS white_rating, white.result AS white_result,
@@ -4375,6 +3465,661 @@ object SparkEntry {
         | LEFT JOIN dim_openings dop ON fact.opening_url = dop.pgn_eco_url
         | LEFT JOIN dim_results drm ON fact.my_result = drm.result_code
         | LEFT JOIN dim_results dro ON fact.opponent_result = dro.result_code
-        | LEFT JOIN dim_tc dtc ON fact.time_control = dtc.time_control""".stripMargin
+        | LEFT JOIN dim_tc dtc ON fact.time_control = dtc.time_control""".stripMargin, fixedInput = true)((s, _) => {
+      val sample = "/root/reference/dev_files/Data/2024-01/games.json"
+      if (!new java.io.File(sample).exists()) s.emptyDataFrame
+      else {
+        val silver = graft.chess.SilverFact.transform(
+          s.read.schema(graft.chess.Schemas.bronze).option("multiLine", true).json(sample))
+        // explicit UTC instant: the session timezone is UTC in Verify, and a
+        // Timestamp.valueOf would shift with the JVM default zone
+        val batchTs = java.sql.Timestamp.from(
+          java.time.LocalDateTime.parse("2024-02-01T00:00:00")
+            .toInstant(java.time.ZoneOffset.UTC))
+        graft.chess.GoldFact.starJoin(
+          graft.chess.GoldFact.project(silver, "Rhythmbear1", batchTs),
+          graft.chess.Dims.dateFromSilver(silver),
+          graft.chess.Dims.openingsFromSilver(silver),
+          graft.chess.Dims.results(s),
+          graft.chess.Dims.timeControlFromSilver(silver))
+      }
+    }),
+
+    // W4: Spark's native session_window (batch mode) — gap-merged sessions;
+    // distinct from w2's composed lag/cumsum formulation: this exercises the
+    // built-in operator (also usable under watermarks in streaming), oracled
+    // against an explicit lag-derivation with identical gap semantics
+    // (new session when the gap is >= 30 min; end = last event + gap)
+    "w4_session_window" -> Query(
+      """WITH e AS (
+        | SELECT user_id, ts, value,
+        |  lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts
+        | FROM events),
+        |f AS (
+        | SELECT user_id, ts, value,
+        |  CASE WHEN prev_ts IS NULL OR epoch(ts) - epoch(prev_ts) >= 1800
+        |       THEN 1 ELSE 0 END AS new_session
+        | FROM e),
+        |g AS (
+        | SELECT user_id, ts, value, sum(new_session) OVER
+        |   (PARTITION BY user_id ORDER BY ts
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+        | FROM f)
+        |SELECT user_id, min(ts) AS session_start,
+        | max(ts) + INTERVAL 30 MINUTE AS session_end,
+        | count(*) AS n_events, round(sum(value), 2) AS total_value
+        |FROM g GROUP BY user_id, sid""".stripMargin)((s, d) =>
+      Tables.events(s, d)
+        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
+        .agg(count(lit(1)).as("n_events"),
+          round(sum(col("value")), 2).as("total_value"))
+        .select(col("user_id"), col("sw.start").as("session_start"),
+          col("sw.end").as("session_end"), col("n_events"), col("total_value"))),
+
+    // SCD Type-2 dimension history: per-user event_type version intervals
+    // (one key exchange; change-flag window, filter, and valid_to window
+    // all share it)
+    "w5_scd2" -> Query(
+      // same two-window derivation: null-safe change flag on (ts, event_id)
+      // order, lead() of the surviving change rows as valid_to
+      """WITH o AS (
+        | SELECT user_id, event_type, ts, event_id,
+        |  lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+        |    AS prev
+        | FROM events),
+        |c AS (
+        | SELECT user_id, event_type, ts, event_id FROM o
+        | WHERE event_type IS DISTINCT FROM prev)
+        |SELECT user_id, event_type, ts AS valid_from,
+        | lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to
+        |FROM c""".stripMargin)((s, d) =>
+      operators.History.scd2(Tables.events(s, d),
+        "user_id", "event_type", "ts", "event_id")),
+
+    // corpus snapshot diff (the incremental-pipeline delta): old = docs
+    // minus the % 11 slice, new = docs minus the % 13 slice with the % 17
+    // slice rewritten — exercises all four statuses. Both snapshots
+    // derive from ONE base table, so the engine takes the same-base
+    // spelling: one scan, ~one md5 per row (the %17 rewrite is the only
+    // second hash), zero exchanges — where the generic full-outer join
+    // (the oracle's spelling, and HistorySpec's parity twin) scans and
+    // hashes the corpus twice and shuffles both fingerprint sides.
+    "snapshot_diff" -> Query(
+      // same md5-fingerprint comparison; single payload column, so the
+      // null-SKIPPING concat_ws image is coalesce(text, '') — a null
+      // payload fingerprints as empty in the operator, never as NULL
+      """WITH o AS (SELECT doc_id, md5(coalesce(text, '')) AS h FROM documents
+        |           WHERE doc_id % 11 <> 0),
+        |n AS (SELECT doc_id,
+        |       CASE WHEN doc_id % 17 = 0 THEN md5(coalesce(upper(text), ''))
+        |            ELSE md5(coalesce(text, '')) END AS h
+        |      FROM documents WHERE doc_id % 13 <> 0)
+        |SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
+        | CASE WHEN o.h IS NULL THEN 'added'
+        |      WHEN n.h IS NULL THEN 'removed'
+        |      WHEN o.h <> n.h THEN 'changed'
+        |      ELSE 'unchanged' END AS status
+        |FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id""".stripMargin)((s, d) => {
+      val docs = Tables.documents(s, d)
+      val id = col("doc_id")
+      val h = operators.History.fingerprint(Seq(col("text")))
+      operators.History.snapshotDiffSameBase(docs, "doc_id",
+        oldKeep = id % 11 =!= 0, oldHash = h,
+        newKeep = id % 13 =!= 0,
+        newHash = when(id % 17 === 0,
+          operators.History.fingerprint(Seq(upper(col("text"))))).otherwise(h))
+    }),
+
+    // per-source/lang corpus rollup: the curation dashboard every
+    // training-data pipeline keeps (doc counts, token mass, size profile)
+    "text_source_stats" -> Query(
+      """SELECT source, lang, count(*) AS n_docs,
+        | CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_tokens,
+        | floor(avg(n_chars) * 100 + 0.5) / 100 AS avg_chars
+        |FROM documents GROUP BY source, lang""".stripMargin)((s, d) =>
+      Tables.documents(s, d)
+        .groupBy(col("source"), col("lang"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(TextAnalysis.tokenCount(col("text"))).as("total_tokens"),
+          (floor(avg(col("n_chars")) * 100 + 0.5) / 100).as("avg_chars"))),
+
+    // hashed linear classifier inference (fastText-style quality filter):
+    // one narrow codegen'd pass — no explode, join, or shuffle
+    "text_quality_model" -> Query(
+      // identical weight derivation: 32-bit md5 prefix of "w_<bucket>"
+      // mapped to [-1000, 1000]; integer feature sum, one division + exp
+      s"""WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+         |           FROM documents),
+         |h AS (SELECT DISTINCT doc_id,
+         |       ('0x' || substr(md5(tok), 1, 8))::BIGINT % 2147483647 AS h31 FROM t),
+         |w AS (SELECT doc_id,
+         |       ('0x' || substr(md5('w_' ||
+         |          CAST(h31 % ${TextAnalysis.QualityModelBuckets} AS VARCHAR)),
+         |         1, 8))::BIGINT % 2001 - 1000 AS wgt FROM h)
+         |SELECT doc_id,
+         | round(1.0 / (1.0 + exp(-(CAST(sum(wgt) AS DOUBLE) / (1000.0 * count(*))))), 6)
+         |   AS lm_quality_score
+         |FROM w GROUP BY doc_id""".stripMargin)((s, d) =>
+      Tables.documents(s, d).select(col("doc_id"),
+        TextAnalysis.qualityModelScore(col("text")).as("lm_quality_score"))),
+
+    // tokenizer-induction telemetry: top-100 token coverage curve
+    "vocab_coverage" -> Query(
+      // same rank/tie order (count desc, token asc); exact integer cumsum
+      """WITH t AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents),
+        |c AS (SELECT token, count(*) AS cnt FROM t GROUP BY token),
+        |tot AS (SELECT sum(cnt) AS total FROM c),
+        |r AS (SELECT token, cnt,
+        |       row_number() OVER (ORDER BY cnt DESC, token ASC) AS rank,
+        |       sum(cnt) OVER (ORDER BY cnt DESC, token ASC
+        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM c)
+        |SELECT rank, token, CAST(cnt AS BIGINT) AS cnt,
+        | round(CAST(cum AS DOUBLE) / total, 6) AS cum_share
+        |FROM r CROSS JOIN tot WHERE rank <= 100""".stripMargin)((s, d) =>
+      TextAnalysis.vocabCoverage(Tables.documents(s, d), topK = 100)),
+
+    // Z-ORDER layout clustering: interleaved (user, hour) key, bucketed —
+    // the per-bucket min/max envelopes the layout exists to tighten
+    "layout_zorder" -> Query({
+      // identical interleave arithmetic, generated term-for-term
+      val terms = (0 until 16).flatMap(i => Seq(
+        s"(((x >> $i) & 1) << ${2 * i})", s"(((y >> $i) & 1) << ${2 * i + 1})"))
+      s"""WITH e AS (SELECT user_id,
+         |  CAST(floor(epoch(ts)) AS BIGINT) // 3600 AS hr,
+         |  user_id % 65536 AS x,
+         |  (CAST(floor(epoch(ts)) AS BIGINT) // 3600) % 65536 AS y
+         | FROM events),
+         |z AS (SELECT user_id, hr, (${terms.mkString(" | ")}) AS z FROM e)
+         |SELECT z >> 22 AS zbucket, count(*) AS n,
+         | min(user_id) AS u_min, max(user_id) AS u_max,
+         | min(hr) AS h_min, max(hr) AS h_max
+         |FROM z GROUP BY 1""".stripMargin
+    })((s, d) => {
+      val x = pmod(col("user_id"), lit(65536L))
+      val hr = expr("CAST(ts AS LONG) DIV 3600") // proven epoch idiom (stream_tumbling_agg)
+      val y = pmod(hr, lit(65536L))
+      Tables.events(s, d)
+        .select(col("user_id"), hr.as("hr"),
+          operators.Layout.zorderKey2(x, y, bits = 16).as("z"))
+        .groupBy(shiftright(col("z"), 22).as("zbucket"))
+        .agg(count(lit(1)).as("n"),
+          min(col("user_id")).as("u_min"), max(col("user_id")).as("u_max"),
+          min(col("hr")).as("h_min"), max(col("hr")).as("h_max"))
+    }),
+
+    // write-once bucketed layout as a product operator: the j4 fact
+    // projections persisted bucketed by orderkey (write-if-absent,
+    // fail-fast re-register from disk otherwise), join planned with zero
+    // exchanges; same result as j4_roleplay_join by construction
+    "layout_bucketed_join" -> Query(
+      // layout-independent semantics: the bucketed layout changes the
+      // physical plan (zero exchanges), never the answer
+      """SELECT cn.n_name AS cust_nation, sn.n_name AS supp_nation, count(*) AS n
+        |FROM lineitem l
+        |JOIN orders o ON l.l_orderkey = o.o_orderkey
+        |JOIN customer c ON o.o_custkey = c.c_custkey
+        |JOIN nation cn ON c.c_nationkey = cn.n_nationkey
+        |JOIN supplier s ON l.l_suppkey = s.s_suppkey
+        |JOIN nation sn ON s.s_nationkey = sn.n_nationkey
+        |GROUP BY cn.n_name, sn.n_name""".stripMargin)((s, d) => layoutBucketedJoin(s, d)),
+
+    // ---- streaming semantics (batch-equivalent tumbling window) ---------
+
+    "stream_tumbling_agg" -> Query(
+      """SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600 AS window_epoch,
+        | event_type, count(*) AS n, round(sum(value), 2) AS total_value
+        |FROM events GROUP BY 1, 2""".stripMargin)((s, d) =>
+      Tables.events(s, d)
+        .groupBy((floor(col("ts").cast("long") / 3600) * 3600).cast("long").as("window_epoch"),
+          col("event_type"))
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))),
+
+    // salted two-phase aggregation of a hot grouping key (events has ~5
+    // event_type values over the whole table — exactly the shape where one
+    // reduce task would own a fifth of the corpus without salting): partial
+    // agg on (key, salt-of-event_id), final combine on key. Oracled against
+    // the plain one-phase GROUP BY, proving the salt is semantically
+    // invisible; floor(x*100+0.5)/100 absorbs the reassociated double sum
+    "skew_salted_agg" -> Query(
+      // the salt is an execution detail: the oracle is the plain GROUP BY
+      """SELECT event_type,
+        | floor(sum(value)*100 + 0.5)/100 AS sum_value,
+        | CAST(count(*) AS BIGINT) AS n
+        |FROM events GROUP BY event_type""".stripMargin)((s, d) =>
+      operators.SkewTools.saltedSumCount(
+          Tables.events(s, d).select(col("event_type"), col("value"), col("event_id")),
+          "event_type", "value", salt = 8, saltCols = Seq("event_id"))
+        .select(col("event_type"),
+          (floor(col("sum_value") * 100 + lit(0.5)) / 100).as("sum_value"),
+          col("n"))),
+
+    // ---- scale-path: retrieval scoring + sequence packing ---------------
+
+    // BM25 against a fixed probe query: one 1-row corpus-stats aggregate
+    // broadcast into a narrow scoring projection — no per-term shuffle
+    "text_bm25" -> Query(
+      // identical tokenization (single-space split), identical idf
+      // ln(1 + (N - df + 0.5)/(df + 0.5)), k1 = 1.2, b = 0.75
+      """WITH st AS (
+        | SELECT count(*) AS n, avg(len(string_split(text, ' '))) AS avgdl,
+        |  sum(CASE WHEN list_contains(string_split(text, ' '), 'vector') THEN 1 ELSE 0 END) AS df0,
+        |  sum(CASE WHEN list_contains(string_split(text, ' '), 'stream') THEN 1 ELSE 0 END) AS df1,
+        |  sum(CASE WHEN list_contains(string_split(text, ' '), 'join') THEN 1 ELSE 0 END) AS df2
+        | FROM documents),
+        |d AS (
+        | SELECT doc_id,
+        |  CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl,
+        |  CAST(len(list_filter(string_split(text, ' '), x -> x = 'vector')) AS DOUBLE) AS tf0,
+        |  CAST(len(list_filter(string_split(text, ' '), x -> x = 'stream')) AS DOUBLE) AS tf1,
+        |  CAST(len(list_filter(string_split(text, ' '), x -> x = 'join')) AS DOUBLE) AS tf2
+        | FROM documents)
+        |SELECT doc_id, score FROM (
+        | SELECT doc_id, round(
+        |   ln(1 + (n - df0 + 0.5) / (df0 + 0.5)) * (tf0 * 2.2) / (tf0 + 1.2 * (0.25 + 0.75 * dl / avgdl))
+        | + ln(1 + (n - df1 + 0.5) / (df1 + 0.5)) * (tf1 * 2.2) / (tf1 + 1.2 * (0.25 + 0.75 * dl / avgdl))
+        | + ln(1 + (n - df2 + 0.5) / (df2 + 0.5)) * (tf2 * 2.2) / (tf2 + 1.2 * (0.25 + 0.75 * dl / avgdl)),
+        |   6) AS score
+        | FROM d CROSS JOIN st) t
+        |WHERE score > 0""".stripMargin)((s, d) =>
+      operators.Retrieval.bm25(Tables.documents(s, d),
+        Seq("vector", "stream", "join"))),
+
+    // GPT-style sequence packing: exact global token prefix-sum in doc_id
+    // order via the two-phase scan (range buckets + driver offsets), cut
+    // every 512 tokens
+    "pack_sequences" -> Query(
+      """WITH t AS (
+        | SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+        | FROM documents),
+        |c AS (
+        | SELECT doc_id, n_tokens,
+        |  CAST(sum(n_tokens) OVER (ORDER BY doc_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
+        | FROM t)
+        |SELECT doc_id, n_tokens, cum - n_tokens AS start_offset,
+        | (cum - n_tokens) // 512 AS seq_id,
+        | (cum - n_tokens) % 512 AS seq_offset
+        |FROM c""".stripMargin)((s, d) =>
+      operators.Packing.packSequences(
+        Tables.documents(s, d)
+          .select(col("doc_id"), TextAnalysis.tokenCount(col("text")).as("n_tokens")),
+        "doc_id", "n_tokens", capacity = 512L)),
+
+    // the materialized form: encode to ids (top-24 vocab, as
+    // text_token_ids), pack at 512, emit the actual training sequences —
+    // every row exactly 512 ids except the tail, straddling docs split
+    // the packed sequences' ids are likewise space-joined for the driver's
+    // scalar-only canonicalizer (array semantics stay covered by PackingSpec)
+    "pack_materialize" -> Query(
+      // the single-window ORDER BY formulation IS the semantic definition the
+      // distributed two-phase scan must reproduce exactly
+      """WITH tok AS (SELECT unnest(string_split(text, ' ')) AS tok FROM documents),
+        |vc AS (SELECT tok, count(*) AS c FROM tok GROUP BY 1),
+        |vocab AS (SELECT tok, CAST(row_number() OVER (ORDER BY c DESC, tok ASC) AS BIGINT) AS id
+        |          FROM vc ORDER BY c DESC, tok ASC LIMIT 24),
+        |toks AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
+        |tokd AS (SELECT doc_id, unnest(generate_series(1, len(ts))) AS ord, ts FROM toks),
+        |sel AS (SELECT doc_id, ord, ts[ord] AS tok FROM tokd),
+        |enc AS (SELECT s.doc_id, list(coalesce(v.id, 0) ORDER BY s.ord) AS ids
+        |        FROM sel s LEFT JOIN vocab v USING (tok) GROUP BY s.doc_id),
+        |t AS (SELECT doc_id, ids, CAST(len(ids) AS BIGINT) AS n FROM enc),
+        |c AS (SELECT doc_id, ids, n, CAST(sum(n) OVER (ORDER BY doc_id
+        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum FROM t),
+        |d AS (SELECT doc_id, ids, n, cum - n AS s0 FROM c WHERE n > 0),
+        |sq AS (SELECT doc_id, ids, n, s0,
+        |        unnest(generate_series(s0 // 512, (s0 + n - 1) // 512)) AS seq_id FROM d),
+        |parts AS (SELECT seq_id, s0,
+        |        list_slice(ids, CAST(greatest(seq_id*512 - s0, 0) + 1 AS BIGINT),
+        |                        CAST(least((seq_id+1)*512, s0 + n) - s0 AS BIGINT)) AS part FROM sq)
+        |SELECT seq_id, array_to_string(flatten(list(part ORDER BY s0)), ' ') AS ids,
+        |       CAST(count(*) AS BIGINT) AS n_docs,
+        |       CAST(len(flatten(list(part ORDER BY s0))) AS BIGINT) AS n_tokens
+        |FROM parts GROUP BY seq_id""".stripMargin)((s, d) =>
+      operators.Packing.packMaterialize(
+        sharedEncoded(s, d),
+        "doc_id", "ids", capacity = 512L,
+        // r15: the hub caches ids MATERIALIZED, so size(ids) (the
+        // tokenCol=None default) is a columnar array-length read — the
+        // previous tokenCount(text) re-tokenized the corpus text to derive
+        // the same number (equal by construction: one id per whitespace
+        // token), and forced the hub to cache the text column at all
+        tokenCol = None)
+        .withColumn("ids", array_join(col("ids").cast("array<string>"), " "))),
+
+    // reproducible epoch shuffle: contiguous 0-based training order from a
+    // seed-keyed content hash. Size-adaptive: at bench sf the operator
+    // emits the single-window definition plan (audited in PlanAuditSpec);
+    // past smallBytes it switches to the two-phase prefix scan, whose
+    // shape the smallBytes=0-pinned audits cover
+    "order_epoch_shuffle" -> Query(
+      // the definition itself: global row_number over the seed-keyed 32-bit
+      // md5 prefix (id tie-break), minus one
+      """SELECT doc_id, source,
+        | row_number() OVER (ORDER BY
+        |   ('0x' || substr(md5('7_' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT,
+        |   doc_id) - 1 AS shuffle_pos
+        |FROM documents""".stripMargin)((s, d) =>
+      operators.TrainOrder.epochShuffle(
+        Tables.documents(s, d).select(col("doc_id"), col("source")),
+        "doc_id", seed = 7L)),
+
+    // length-staged curriculum: 16-word bins ascending (short docs first),
+    // seeded shuffle within each stage; exact stage boundaries (size-
+    // adaptive like order_epoch_shuffle: definition window at bench sf,
+    // two-phase rank past smallBytes)
+    "order_curriculum" -> Query(
+      // same seeded rank with the stage bin prepended to the global order;
+      // // is DuckDB floor division, mirroring Spark's DIV
+      """WITH b AS (SELECT doc_id,
+        |            len(string_split(text, ' ')) // 16 AS bin
+        |           FROM documents)
+        |SELECT doc_id, CAST(bin AS BIGINT) AS bin,
+        | row_number() OVER (ORDER BY bin,
+        |   ('0x' || substr(md5('7_' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT,
+        |   doc_id) - 1 AS curriculum_pos
+        |FROM b""".stripMargin)((s, d) =>
+      operators.TrainOrder.curriculumOrder(
+        Tables.documents(s, d).select(col("doc_id"),
+          // integer DIV (matching the oracle's //): a double divide + cast
+          // would round-vs-truncate-diverge between the engines
+          expr("CAST(size(split(text, ' ', -1)) DIV 16 AS BIGINT)").as("bin")),
+        "doc_id", "bin", seed = 7L)),
+
+    // domain-diversity ordering: reading by interleave_pos cycles sources
+    // round-robin, so no training batch is a single-domain run
+    "order_interleave" -> Query(
+      // identical within-source seeded rank + source-index arithmetic;
+      // sources order by their ASCII string form in both engines
+      """WITH r AS (SELECT doc_id, source,
+        |  row_number() OVER (PARTITION BY source ORDER BY
+        |    ('0x' || substr(md5('13_' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT,
+        |    doc_id) - 1 AS srk
+        |  FROM documents),
+        |s AS (SELECT source, row_number() OVER (ORDER BY source) - 1 AS sidx
+        |      FROM (SELECT DISTINCT source FROM documents)),
+        |n AS (SELECT count(*) AS ns FROM (SELECT DISTINCT source FROM documents))
+        |SELECT r.doc_id, r.source, CAST(srk AS BIGINT) AS source_rank,
+        |  CAST(srk * ns + sidx AS BIGINT) AS interleave_pos
+        |FROM r JOIN s USING (source) CROSS JOIN n""".stripMargin)((s, d) =>
+      operators.TrainOrder.sourceInterleave(
+        Tables.documents(s, d).select(col("doc_id"), col("source")),
+        "doc_id", "source", seed = 13L)),
+
+    // deterministic 8-way shard materialization: round-robin along the
+    // seeded order → exactly-equal shard sizes, each an unbiased slice
+    "order_shards" -> Query(
+      // same round-robin of the seed-11 order
+      """WITH r AS (SELECT doc_id, row_number() OVER (ORDER BY
+        |   ('0x' || substr(md5('11_' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT,
+        |   doc_id) - 1 AS pos FROM documents)
+        |SELECT pos % 8 AS shard, count(*) AS n,
+        | min(pos) AS pos_min, max(pos) AS pos_max
+        |FROM r GROUP BY 1""".stripMargin)((s, d) =>
+      operators.TrainOrder.shardAssignments(
+          Tables.documents(s, d).select(col("doc_id")),
+          "doc_id", seed = 11L, numShards = 8)
+        .groupBy(col("shard"))
+        .agg(count(lit(1)).as("n"),
+          min(col("shuffle_pos")).as("pos_min"),
+          max(col("shuffle_pos")).as("pos_max"))),
+
+    // token-budget head of the seeded shuffle: what a fixed-budget training
+    // run actually consumes — at bench sf the budget cuts ~95% of the
+    // corpus, so the bucket prune drops it in the scan stage. The token
+    // kernel goes in as an EXPRESSION (r14): the budget pass tokenizes
+    // only live-bucket survivors, so the corpus pays ONE tokenizer scan
+    // (the stats pass), not two — the second full-corpus tokenCount was
+    // the real cost behind the falsified "parquet-dictionary" x1000
+    // annotation (the scaled text is 99.8% distinct).
+    "order_token_budget" -> Query(
+      // running token total in the same seed-keyed order, cut at the budget
+      """WITH t AS (
+        | SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+        |  ('0x' || substr(md5('3_' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS h
+        | FROM documents),
+        |c AS (
+        | SELECT doc_id, n_tokens,
+        |  CAST(sum(n_tokens) OVER (ORDER BY h, doc_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
+        | FROM t)
+        |SELECT doc_id, n_tokens, cum_tokens FROM c WHERE cum_tokens <= 15000""".stripMargin)((s, d) =>
+      operators.TrainOrder.tokenBudgetHeadExpr(
+        Tables.documents(s, d).select(col("doc_id"), col("text")),
+        "doc_id", "n_tokens",
+        TextAnalysis.tokenCount(col("text")).cast("long"),
+        seed = 3L, budget = 15000L)
+        .select(col("doc_id"), col("n_tokens"), col("cum_tokens"))),
+
+    // per-source (domain-cap) token budget: within every source keep the
+    // seeded-hash-order head whose running total stays <= 800 tokens
+    "order_budget_per_source" -> Query(
+      """WITH t AS (
+        | SELECT doc_id, source, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+        |  ('0x' || substr(md5('5_' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS h
+        | FROM documents),
+        |c AS (
+        | SELECT doc_id, source, n_tokens,
+        |  CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY h, doc_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
+        | FROM t)
+        |SELECT doc_id, source, n_tokens, cum_tokens FROM c
+        |WHERE cum_tokens <= 800""".stripMargin)((s, d) =>
+      operators.TrainOrder.tokenBudgetPerSource(
+        Tables.documents(s, d).select(col("doc_id"), col("source"),
+          TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens")),
+        "doc_id", "n_tokens", "source", seed = 5L, budget = 800L)),
+
+    // quality-weighted deterministic resample: keep probability scales with
+    // doc length (a stand-in quality weight), decided by content hash —
+    // a pure narrow filter, stable under retry/partitioning
+    "sample_weighted" -> Query(
+      // identical hash-uniform: 32-bit md5 prefix / 2^32 < clamp(weight, 0, 1)
+      """SELECT doc_id FROM (
+        | SELECT doc_id,
+        |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS h,
+        |  least(greatest(CAST(len(string_split(text, ' ')) AS DOUBLE) / 60.0, 0.0), 1.0) AS p
+        | FROM documents) t
+        |WHERE CAST(h AS DOUBLE) < p * 4294967296.0""".stripMargin)((s, d) =>
+      operators.Sampling.weightedBernoulli(Tables.documents(s, d), "doc_id",
+          TextAnalysis.tokenCount(col("text")).cast("double") / lit(60.0))
+        .select(col("doc_id"))),
+
+    // J8 (beyond reference): interval-overlap join via the same bin
+    // bucketing as J7 — kept exactly-once by the first-shared-bucket rule,
+    // no dedup shuffle. 90-min hour-grid windows × 3-hour user spans.
+    "j8_interval_overlap" -> Query(
+      // the raw overlap-predicate join IS the semantic definition (half-open
+      // on both sides)
+      """WITH wv AS (
+        | SELECT DISTINCT
+        |  CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600 - 900 AS w_start,
+        |  CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600 + 4500 AS w_end
+        | FROM events),
+        |u AS (
+        | SELECT user_id, CAST(min(floor(epoch(ts))) AS BIGINT) AS u_start,
+        |  CAST(min(floor(epoch(ts))) AS BIGINT) + 10800 AS u_end
+        | FROM events GROUP BY 1)
+        |SELECT w_start, user_id
+        |FROM wv JOIN u ON w_start < u_end AND u_start < w_end""".stripMargin)((s, d) => {
+      val ev = Tables.events(s, d)
+      val wins = ev
+        .select((floor(col("ts").cast("long") / 3600) * 3600).cast("long").as("hr"))
+        .distinct()
+        .select((col("hr") - 900).as("w_start"), (col("hr") + 4500).as("w_end"))
+      val spans = ev.groupBy(col("user_id"))
+        .agg(min(col("ts").cast("long")).as("u_start"))
+        .select(col("user_id"), col("u_start"), (col("u_start") + 10800).as("u_end"))
+      operators.IntervalJoin.intervalOverlap(wins, "w_start", "w_end",
+          spans, "u_start", "u_end", bucketWidth = 3600L)
+        .select(col("w_start"), col("user_id"))
+    }),
+
+    // domain mixing: rebalance the corpus to target language proportions
+    // (en-heavy) — bounded per-group aggregate + content-hash thinning
+    "sample_mix" -> Query(
+      // identical scale rule: binding group kept whole, others thinned by
+      // the same md5-prefix uniform as sample_weighted
+      """WITH w(lang, wt) AS (VALUES
+        |  ('en', CAST(0.4 AS DOUBLE)), ('de', CAST(0.15 AS DOUBLE)),
+        |  ('es', CAST(0.15 AS DOUBLE)), ('fr', CAST(0.15 AS DOUBLE)),
+        |  ('zh', CAST(0.15 AS DOUBLE))),
+        |c AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1),
+        |s AS (SELECT min(CAST(n AS DOUBLE) / wt) AS scale FROM c JOIN w USING (lang)),
+        |f AS (SELECT c.lang, least(1.0, w.wt * s.scale / CAST(c.n AS DOUBLE)) AS frac
+        |      FROM c JOIN w ON c.lang = w.lang CROSS JOIN s)
+        |SELECT d.doc_id, d.lang
+        |FROM documents d JOIN f ON d.lang = f.lang
+        |WHERE CAST(CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS DOUBLE)
+        |      < f.frac * 4294967296.0""".stripMargin)((s, d) =>
+      operators.Sampling.mixToWeights(Tables.documents(s, d), "lang", "doc_id",
+          Map("en" -> 0.4, "de" -> 0.15, "es" -> 0.15, "fr" -> 0.15, "zh" -> 0.15))
+        .select(col("doc_id"), col("lang"))),
+
+    // F17 (beyond reference): time-series gap-fill — densify each user's
+    // hourly grid between their first and last event and zero-fill missing
+    // hours. The grid generates per key (explode of a bounded sequence),
+    // so no global calendar table and no cross join; both joins are keyed.
+    "f17_hour_gapfill" -> Query(
+      """WITH e AS (
+        | SELECT user_id, CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600 AS hr
+        | FROM events),
+        |b AS (SELECT user_id, min(hr) AS lo, max(hr) AS hi FROM e GROUP BY 1),
+        |h AS (SELECT user_id, unnest(range(lo, hi + 3600, 3600)) AS hr FROM b),
+        |c AS (SELECT user_id, hr, count(*) AS n FROM e GROUP BY 1, 2)
+        |SELECT h.user_id, h.hr, coalesce(c.n, 0) AS n_events
+        |FROM h LEFT JOIN c ON h.user_id = c.user_id AND h.hr = c.hr""".stripMargin)((s, d) => f17GapFill(Tables.events(s, d))),
+
+    // incremental LSH dedup: corpus (doc_id % 10 != 0) is indexed once;
+    // the new batch (doc_id % 10 == 0) probes the index — per-batch cost
+    // O(|batch| + collisions), never a corpus re-hash.
+    "dedup_incremental" -> Query({
+      // same permutation family / band hashing as the dedup_minhash_lsh
+      // oracle, with the bucket listing and cap computed over the CORPUS
+      // side only (the index) and candidates restricted to corpus × batch
+      val p = graft.operators.Dedup.MinhashPrime
+      val mins = graft.operators.Dedup.minhashCoeffs(16).zipWithIndex
+        .map { case ((a, b), i) => s"min((h31*$a + $b) % $p) AS m$i" }.mkString(", ")
+      val bandRows = (0 until 4).map { b =>
+        val cols = (b * 4 until b * 4 + 4).map(i => s"CAST(m$i AS VARCHAR)")
+          .mkString(" || '|' || ")
+        s"SELECT doc_id, $b AS band, md5($cols) AS bh FROM sig"
+      }.mkString(" UNION ALL ")
+      s"""WITH $ShinglesCte,
+         |sig AS (SELECT doc_id, $mins FROM hsd GROUP BY doc_id),
+         |bands AS ($bandRows),
+         |bfc AS (SELECT * FROM (SELECT doc_id, band, bh,
+         |         count(*) OVER (PARTITION BY band, bh) AS bn
+         |        FROM bands WHERE doc_id % 10 != 0) t
+         |        WHERE bn <= ${graft.operators.Dedup.DefaultMaxBucket}),
+         |nb AS (SELECT doc_id, band, bh FROM bands WHERE doc_id % 10 = 0),
+         |cand AS (SELECT DISTINCT c.doc_id AS da, n.doc_id AS db
+         |         FROM bfc c JOIN nb n ON c.band = n.band AND c.bh = n.bh),
+         |pr AS (SELECT c.da, c.db, count(*) AS inter
+         |       FROM cand c JOIN hsd a ON a.doc_id = c.da
+         |       JOIN hsd b ON b.doc_id = c.db AND b.h31 = a.h31
+         |       GROUP BY c.da, c.db)
+         |SELECT da AS doc_a, db AS doc_b,
+         | inter / (sa.n + sb.n - inter) AS jaccard
+         |FROM pr JOIN szh sa ON sa.doc_id = da JOIN szh sb ON sb.doc_id = db
+         |WHERE inter / (sa.n + sb.n - inter) >= 0.5""".stripMargin
+    })((s, d) => {
+      // corpus and batch sides are narrow filters over the family's ONE
+      // shared hash-array table (docShingleHashes is per-row, so
+      // filter-then-hash ≡ hash-then-filter) — neither side re-hashes
+      val arr = sharedShingleArr(s, d)
+      val arrIdx = arr.filter(col("doc_id") % 10 =!= 0)
+      val bandIdx = Dedup.bandIndexFromArr(arrIdx, numPerm = 16, bands = 4)
+      Dedup.nearDupsAgainstIndexArr(
+        arr.filter(col("doc_id") % 10 === 0), arrIdx, bandIdx,
+        numPerm = 16, bands = 4, threshold = 0.5)
+    }),
+
+    // the streaming near-dup quarantine's per-batch ROUTING decision as a
+    // batch-equivalent (same relationship as stream_tumbling_agg to
+    // tumblingAgg): batch docs (doc_id % 10 == 0) probe the corpus LSH
+    // index and split accepted/quarantined — exactly the foreachBatch body
+    // of EventStreams.nearDupQuarantine, whose micro-batch mechanics are
+    // EventStreamsSpec's routing test. Shares the family's one persisted
+    // hash-array table; index cost is the batch probe, never a corpus
+    // re-hash.
+    "stream_quarantine" -> Query({
+      // the dedup_incremental oracle, wrapped in the quarantine
+      // ROUTING read-out: batch docs whose index probe clears the
+      // threshold flag true, the rest flow accepted
+      val p = graft.operators.Dedup.MinhashPrime
+      val mins = graft.operators.Dedup.minhashCoeffs(16).zipWithIndex
+        .map { case ((a, b), i) => s"min((h31*$a + $b) % $p) AS m$i" }.mkString(", ")
+      val bandRows = (0 until 4).map { b =>
+        val cols = (b * 4 until b * 4 + 4).map(i => s"CAST(m$i AS VARCHAR)")
+          .mkString(" || '|' || ")
+        s"SELECT doc_id, $b AS band, md5($cols) AS bh FROM sig"
+      }.mkString(" UNION ALL ")
+      s"""WITH $ShinglesCte,
+         |sig AS (SELECT doc_id, $mins FROM hsd GROUP BY doc_id),
+         |bands AS ($bandRows),
+         |bfc AS (SELECT * FROM (SELECT doc_id, band, bh,
+         |         count(*) OVER (PARTITION BY band, bh) AS bn
+         |        FROM bands WHERE doc_id % 10 != 0) t
+         |        WHERE bn <= ${graft.operators.Dedup.DefaultMaxBucket}),
+         |nb AS (SELECT doc_id, band, bh FROM bands WHERE doc_id % 10 = 0),
+         |cand AS (SELECT DISTINCT c.doc_id AS da, n.doc_id AS db
+         |         FROM bfc c JOIN nb n ON c.band = n.band AND c.bh = n.bh),
+         |pr AS (SELECT c.da, c.db, count(*) AS inter
+         |       FROM cand c JOIN hsd a ON a.doc_id = c.da
+         |       JOIN hsd b ON b.doc_id = c.db AND b.h31 = a.h31
+         |       GROUP BY c.da, c.db),
+         |q AS (SELECT DISTINCT db FROM pr
+         |      JOIN szh sa ON sa.doc_id = da JOIN szh sb ON sb.doc_id = db
+         |      WHERE inter / (sa.n + sb.n - inter) >= 0.5)
+         |SELECT d.doc_id, (q.db IS NOT NULL) AS quarantined
+         |FROM (SELECT doc_id FROM documents WHERE doc_id % 10 = 0) d
+         |LEFT JOIN q ON q.db = d.doc_id""".stripMargin
+    })((s, d) => {
+      val arr = sharedShingleArr(s, d)
+      val arrIdx = arr.filter(col("doc_id") % 10 =!= 0)
+      val bandIdx = Dedup.bandIndexFromArr(arrIdx, numPerm = 16, bands = 4)
+      val dups = Dedup.nearDupsAgainstIndexArr(
+          arr.filter(col("doc_id") % 10 === 0), arrIdx, bandIdx,
+          numPerm = 16, bands = 4, threshold = 0.5)
+        .select(col("doc_b").as("doc_id")).distinct()
+      Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
+        .select(col("doc_id"))
+        // dups ⊆ the micro-batch, which is bounded by the streaming
+        // contract — broadcast the routing set so the batch never
+        // exchanges for the split (the static plan would otherwise SMJ)
+        .join(broadcast(dups.withColumn("__q", lit(true))), Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          coalesce(col("__q"), lit(false)).as("quarantined"))
+    }),
+
+    // J7 (beyond reference): point-in-interval range join via bin
+    // bucketing — an equi-join on bucket ids instead of the
+    // BroadcastNestedLoopJoin the planner would pick for the raw range
+    // predicate. Intervals: overlapping 90-min windows on the hour grid.
+    "j7_interval_join" -> Query(
+      // the raw range-predicate join IS the semantic definition the bucketed
+      // equi-join must reproduce (half-open [start, end))
+      """WITH p AS (
+        | SELECT event_id, CAST(floor(epoch(ts)) AS BIGINT) AS pe FROM events),
+        |iv AS (
+        | SELECT DISTINCT
+        |  CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600 - 900 AS start_epoch,
+        |  CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600 + 4500 AS end_epoch
+        | FROM events)
+        |SELECT event_id, start_epoch
+        |FROM p JOIN iv ON pe >= start_epoch AND pe < end_epoch""".stripMargin)((s, d) => {
+      val pts = Tables.events(s, d)
+        .select(col("event_id"), col("ts").cast("long").as("pe"))
+      val iv = Tables.events(s, d)
+        .select((floor(col("ts").cast("long") / 3600) * 3600).cast("long").as("hr"))
+        .distinct()
+        .select((col("hr") - 900).as("start_epoch"), (col("hr") + 4500).as("end_epoch"))
+      operators.IntervalJoin.pointInInterval(pts, "pe", iv,
+          "start_epoch", "end_epoch", bucketWidth = 3600L)
+        .select(col("event_id"), col("start_epoch"))
+    })
   )
+
+  /** Each query's DuckDB oracle by name, as [[graft.Verify]] dumps it. */
+  lazy val oracleSql: Map[String, String] = queries.map { case (n, q) => n -> q.oracle }
 }

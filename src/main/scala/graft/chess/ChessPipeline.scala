@@ -176,7 +176,7 @@ class ChessPipeline(spark: SparkSession, root: String, username: String,
     * idempotent (overwrite writes, existence-probe upserts), so a rerun
     * after a transient failure converges to the same state.
     */
-  var retries: Int = 1
+  private val retries = 1
   var retryDelayMs: Long = 10000L
 
   private def withRetry[T](stage: String)(body: => T): T = {

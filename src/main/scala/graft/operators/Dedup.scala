@@ -80,16 +80,16 @@ object Dedup {
   val MinhashPrime: Long = 2147483647L
 
   /** Band-bucket df-cut shared by [[lshCandidates]] AND the
-    * `dedup_minhash_lsh` DuckDB oracle SQL (SparkEntry.oracleSql mirrors
-    * it), so the two engines agree even on a corpus with a degenerate
-    * bucket above the cap. */
+    * `dedup_minhash_lsh` DuckDB oracle SQL (its SparkEntry.queries entry
+    * mirrors it), so the two engines agree even on a corpus with a
+    * degenerate bucket above the cap. */
   val DefaultMaxBucket: Long = 100000L
 
   /** Posting-list df-cut shared by [[jaccardPairs]] AND the jaccard-family
-    * DuckDB oracles (SparkEntry.oracleSql mirrors it in their `pr` CTE), so
-    * the two engines agree even when the cap binds: over-cap shingles are
-    * excluded from intersections in BOTH engines while per-doc set sizes
-    * stay full-universe. */
+    * DuckDB oracles (their SparkEntry.queries entries mirror it in the `pr`
+    * CTE), so the two engines agree even when the cap binds: over-cap
+    * shingles are excluded from intersections in BOTH engines while per-doc
+    * set sizes stay full-universe. */
   val DefaultMaxPostings: Long = 1000000L
 
   /** Default per-IVF-cell row cap for [[semanticDedup]]'s fail-fast
@@ -672,6 +672,13 @@ object Dedup {
     Some(pairs.sparkSession.createDataFrame(out, schema))
   }
 
+  /** Connected components of the (doc_a, doc_b) pairs by min-label
+    * propagation: one row per vertex, `component` = the min doc_id
+    * reachable. It needs diameter-many rounds (1-2 on the clique-shaped
+    * clusters near-dup pairs form) and throws IllegalStateException when
+    * `maxIter` rounds end unconverged; [[duplicateClustersStar]] bounds the
+    * rounds on chains. The result is persisted; the caller releases it.
+    */
   def duplicateClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     // localCheckpoint (eager) after every step: iterative algorithms must
     // truncate lineage, or each round's logical plan nests all previous
@@ -720,6 +727,16 @@ object Dedup {
       labels = next
       labelIds = nextIds
       i += 1
+    }
+    // unconverged labels split components (a path needs diameter-many
+    // rounds), so refuse them as duplicateClustersStar does
+    if (!converged) {
+      freeCheckpoints(labels, labelIds)
+      freeCheckpoints(edges, edgeIds)
+      throw new IllegalStateException(
+        s"duplicateClusters: not converged after maxIter = $maxIter rounds — " +
+          "raise maxIter, or use duplicateClustersStar, whose rounds are " +
+          "O(log n) on any graph shape")
     }
     // hand the (small: one row per doc appearing in any pair) result to the
     // CacheManager so callers release it with unpersist()/clearCache(), and

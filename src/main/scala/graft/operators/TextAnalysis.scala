@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * linearly with the corpus.
   *
   * Semantics are chosen to be expressible in ANSI SQL as well, so every
-  * operator has a DuckDB oracle (see [[graft.SparkEntry.oracleSql]]).
+  * operator's query carries a DuckDB oracle in its
+  * [[graft.SparkEntry.queries]] entry.
   */
 object TextAnalysis {
 

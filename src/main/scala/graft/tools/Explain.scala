@@ -2,9 +2,10 @@ package graft.tools
 
 import graft.{GraftSession, SparkEntry}
 
-/** Dev harness: dump formatted physical plans for every SparkEntry query
-  * (or the named subset) to stdout for plan review — pushed filters, scan
-  * schemas, join strategies, codegen spans.
+/** Dev harness: dump formatted physical plans for every sf-scaled
+  * SparkEntry query (or the named subset; fixed-input queries read the
+  * reference sample, not `sfDir`) to stdout for plan review — pushed
+  * filters, scan schemas, join strategies, codegen spans.
   * Usage: sbt "runMain graft.tools.Explain [sfDir] [name ...]"
   */
 object Explain {
@@ -20,7 +21,7 @@ object Explain {
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => names.isEmpty || names.contains(q._1))
-      .filterNot(_._1.startsWith("chess_"))
+      .filterNot(_._2.fixedInput)
       .foreach { case (name, fn) =>
         println(s"\n========== $name ==========")
         try fn(spark, sfDir).explain("formatted")

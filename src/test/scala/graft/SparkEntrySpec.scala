@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 /** Contract-level checks of the driver surface: every query runs at
-  * sf0.001, the flagship entry returns rows, and every oracle key refers to
-  * an implemented query.
+  * sf0.001, the flagship entry returns rows, and the oracle keys are
+  * exactly the query names.
   */
 class SparkEntrySpec extends AnyFunSuite with Matchers with SparkFixture {
 
@@ -14,8 +14,9 @@ class SparkEntrySpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("every oracleSql key has a matching queries entry") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    missing shouldBe empty
+    // both directions: a query without an oracle is never checked (a blank
+    // oracle already fails SparkEntry.Query's construction)
+    SparkEntry.oracleSql.keySet shouldBe SparkEntry.queries.keySet
   }
 
   /** The queries whose DataFrame construction submits Spark jobs at
@@ -264,7 +265,7 @@ class SparkEntrySpec extends AnyFunSuite with Matchers with SparkFixture {
     all(seed.map(_._1)) should fullyMatch regex "[a-z0-9]+"
     // the oracle's VALUES literal is generated from the constant — every
     // (code, result) pair must appear verbatim, and no extras
-    val sql = SparkEntry.oracleSql("chess_scale_winrate")
+    val sql = SparkEntry.queries("chess_scale_winrate").oracle
     for ((c, r, _) <- seed) sql should include(s"('$c','$r')")
     "\\('([a-z0-9]+)','".r.findAllMatchIn(sql).map(_.group(1)).toSet shouldBe
       seed.map(_._1).toSet

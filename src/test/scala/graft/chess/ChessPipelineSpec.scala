@@ -220,7 +220,6 @@ class ChessPipelineSpec extends AnyFunSuite with Matchers with SparkFixture {
       override def readBronze(year: Int, month: Int) =
         throw new java.io.IOException("permanent outage")
     }
-    dead.retries = 1
     dead.retryDelayMs = 1L
     an[java.io.IOException] should be thrownBy
       dead.runMonth(2024, 1, ts("2024-02-01 00:00:00"))

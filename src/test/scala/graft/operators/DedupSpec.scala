@@ -264,6 +264,21 @@ class DedupSpec extends AnyFunSuite with Matchers with SparkFixture {
     ex.getMessage should include("not converged")
   }
 
+  test("min-label CC refuses to emit a labeling when maxIter preempts convergence") {
+    // a 201-vertex path needs ~200 rounds; after 20 the labels would split
+    // the one component into ~180 wrong ones
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    val baseline = sc.getPersistentRDDs.size
+    val path = spark.range(200L).toDF("doc_a")
+      .select($"doc_a", ($"doc_a" + 1L).as("doc_b"))
+    val ex = intercept[IllegalStateException] {
+      Dedup.duplicateClusters(path, maxIter = 20)
+    }
+    ex.getMessage should (include("maxIter") and include("duplicateClustersStar"))
+    sc.getPersistentRDDs.size shouldBe baseline
+  }
+
   test("star CC pins no storage after release (checkpoints freed)") {
     val sc = spark.sparkContext
     spark.catalog.clearCache()

@@ -38,8 +38,8 @@ for t in ["region", "nation", "customer", "supplier", "part", "orders",
 
 oracle = json.load(open(f"{oracledir}/oracle_sql.json"))
 bench = {}
-# queries reading the fixed reference sample, not the sf dir: the canonical
-# set is SparkEntry.fixedInputQueries, published in the full bench file
+# queries reading the fixed reference sample, not the sf dir: the entries
+# flagged fixedInput in SparkEntry.queries, published in the full bench file
 FIXED_INPUT = set()
 if bench_path:
     bench_files = [(bp, json.load(open(bp))) for bp in bench_path.split(",")]
