@@ -869,6 +869,24 @@ object SparkEntry {
       |         ('0x' || substr(md5(s), 1, 8))::BIGINT % 2147483647 AS h31 FROM ds),
       |szh AS (SELECT doc_id, count(*) AS n FROM hsd GROUP BY doc_id)""".stripMargin
 
+  /** The minhash signature (`sig`) and band-hash (`bands`) CTEs shared by
+    * the LSH oracles, over [[ShinglesCte]]'s `hsd`: the same affine
+    * permutation family as [[Dedup.minhashSignatures]] (one md5 per
+    * shingle, 16 (a*h+b) mod 2^31-1 transforms), hashed in 4 bands of 4.
+    */
+  private val MinhashBandsCte = {
+    val p = graft.operators.Dedup.MinhashPrime
+    val mins = graft.operators.Dedup.minhashCoeffs(16).zipWithIndex
+      .map { case ((a, b), i) => s"min((h31*$a + $b) % $p) AS m$i" }.mkString(", ")
+    val bandRows = (0 until 4).map { b =>
+      val cols = (b * 4 until b * 4 + 4).map(i => s"CAST(m$i AS VARCHAR)")
+        .mkString(" || '|' || ")
+      s"SELECT doc_id, $b AS band, md5($cols) AS bh FROM sig"
+    }.mkString(" UNION ALL ")
+    s"""sig AS (SELECT doc_id, $mins FROM hsd GROUP BY doc_id),
+       |bands AS ($bandRows)""".stripMargin
+  }
+
   /** Candidate-intersection CTE shared by the jaccard-family oracles,
     * mirroring [[Dedup.jaccardPairs]]' `maxPostings` df-cut: over-cap
     * shingles are excluded from intersections in BOTH engines (per-doc set
@@ -2193,20 +2211,9 @@ object SparkEntry {
          |WHERE inter / (sa.n + sb.n - inter) >= 0.8""".stripMargin)((s, d) =>
       sharedJaccardPairs(s, d).filter(col("jaccard") >= 0.8)),
 
-    "dedup_minhash_lsh" -> Query({
-      // identical affine permutation family as Dedup.minhashSignatures:
-      // one md5 per shingle, numPerm (a*h+b) mod 2^31-1 transforms
-      val p = graft.operators.Dedup.MinhashPrime
-      val mins = graft.operators.Dedup.minhashCoeffs(16).zipWithIndex
-        .map { case ((a, b), i) => s"min((h31*$a + $b) % $p) AS m$i" }.mkString(", ")
-      val bandRows = (0 until 4).map { b =>
-        val cols = (b * 4 until b * 4 + 4).map(i => s"CAST(m$i AS VARCHAR)")
-          .mkString(" || '|' || ")
-        s"SELECT doc_id, $b AS band, md5($cols) AS bh FROM sig"
-      }.mkString(" UNION ALL ")
+    "dedup_minhash_lsh" -> Query(
       s"""WITH $ShinglesCte,
-         |sig AS (SELECT doc_id, $mins FROM hsd GROUP BY doc_id),
-         |bands AS ($bandRows),
+         |$MinhashBandsCte,
          |bf AS (SELECT * FROM (SELECT doc_id, band, bh,
          |        count(*) OVER (PARTITION BY band, bh) AS bn FROM bands) t
          |       WHERE bn <= ${graft.operators.Dedup.DefaultMaxBucket}),
@@ -2220,8 +2227,7 @@ object SparkEntry {
          |SELECT da AS doc_a, db AS doc_b,
          | inter / (sa.n + sb.n - inter) AS jaccard
          |FROM pr JOIN szh sa ON sa.doc_id = da JOIN szh sb ON sb.doc_id = db
-         |WHERE inter / (sa.n + sb.n - inter) >= 0.8""".stripMargin
-    })((s, d) =>
+         |WHERE inter / (sa.n + sb.n - inter) >= 0.8""".stripMargin)((s, d) =>
       Dedup.minhashLshDedupFromArr(sharedShingleArr(s, d), numPerm = 16, bands = 4,
         threshold = 0.8)),
 
@@ -3248,8 +3254,9 @@ object SparkEntry {
       // gold fact — re-derived from the raw 514-game JSON exactly like the
       // chess_gold oracle (the sample has unique game urls, so the
       // latest-wins merge is the identity and the raw projection IS the
-      // fact). dim_openings reduced to its key-determining columns; the
-      // slug-parsed opening name has no colon, so family == full name.
+      // fact). dim_openings reduced to one row per URL, like the engine's
+      // dim; the slug-parsed opening name has no colon, so family == full
+      // name.
       """WITH e AS (
         | SELECT regexp_extract(pgn, '\[White "(.*?)"', 1) AS pgn_white_user,
         |  white.result AS white_result, black.result AS black_result,
@@ -3262,7 +3269,7 @@ object SparkEntry {
         |  pgn_eco_url AS opening_url
         | FROM e
         |), dimo AS (
-        | SELECT DISTINCT pgn_eco_url, pgn_eco,
+        | SELECT DISTINCT pgn_eco_url,
         |  replace(regexp_extract(pgn_eco_url, '([^/]*)$', 1), '-', ' ') AS opening_family
         | FROM e
         |), res AS (SELECT * FROM (VALUES
@@ -3313,7 +3320,8 @@ object SparkEntry {
       // key); per url the deepest match wins, ties to max name (the
       // max_by(name, (moves, name)) tie-break — a flat arg-max over all
       // matches equals Spark's per-game-then-per-url two-stage because depth
-      // dominates the struct order). Slug fallback for unmatched urls.
+      // dominates the struct order). Slug fallback for unmatched urls. One
+      // row per url: the smallest ECO code it was seen with (Dims' tie-break).
       """WITH e AS (
         | SELECT regexp_extract(pgn, '\[ECOUrl "(.*?)"', 1) AS pgn_eco_url,
         |  regexp_extract(pgn, '\[ECO "(.*?)"', 1) AS pgn_eco,
@@ -3336,7 +3344,7 @@ object SparkEntry {
         | SELECT pgn_eco_url AS matched_url,
         |  max_by(name, lpad(CAST(np AS VARCHAR), 4, '0') || '|' || name) AS csv_name
         | FROM matches GROUP BY pgn_eco_url
-        |), du AS (SELECT DISTINCT pgn_eco_url, pgn_eco FROM e
+        |), du AS (SELECT pgn_eco_url, min(pgn_eco) AS pgn_eco FROM e GROUP BY pgn_eco_url
         |), named AS (
         | SELECT du.pgn_eco_url,
         |  coalesce(b.csv_name,
@@ -3405,8 +3413,9 @@ object SparkEntry {
       // Reference gold projection + star join (python_scripts.py:533-575):
       // format_time_control / get_pgn_depth UDFs inlined; dim_date and
       // dim_openings reduced to their key-determining columns (opening name /
-      // family / variation are pure functions of pgn_eco_url, so DISTINCT
-      // (url, eco) reproduces the dim's exact row multiplicity).
+      // family / variation are pure functions of pgn_eco_url). Each dim has
+      // one row per key with Dims' tie-break: the smallest ECO code per URL,
+      // the smallest class per formatted time control.
       """WITH e AS (
         | SELECT url AS game_url, time_control, time_class,
         |  white.rating AS white_rating, white.result AS white_result,
@@ -3454,12 +3463,14 @@ object SparkEntry {
         |  TIMESTAMP '2024-02-01 00:00:00' AS last_updated
         | FROM silver
         |), dim_date AS (SELECT DISTINCT game_date FROM silver
-        |), dim_openings AS (SELECT DISTINCT pgn_eco_url, pgn_eco FROM silver
+        |), dim_openings AS (SELECT pgn_eco_url, min(pgn_eco) AS pgn_eco FROM silver
+        |  GROUP BY pgn_eco_url
         |), dim_results AS (SELECT * FROM (VALUES ('win'),('checkmated'),('agreed'),
         |  ('repetition'),('timeout'),('resigned'),('stalemate'),('lose'),
         |  ('insufficient'),('50move'),('abandoned'),('kingofthehill'),
         |  ('threecheck'),('timevsinsufficient'),('bughousepartnerlose')) t(result_code)
-        |), dim_tc AS (SELECT DISTINCT fmt_tc AS time_control, time_class FROM silver)
+        |), dim_tc AS (SELECT fmt_tc AS time_control, min(time_class) AS time_class
+        |  FROM silver GROUP BY fmt_tc)
         |SELECT fact.* FROM fct AS fact
         | LEFT JOIN dim_date dd ON fact.game_date = dd.game_date
         | LEFT JOIN dim_openings dop ON fact.opening_url = dop.pgn_eco_url
@@ -3992,21 +4003,12 @@ object SparkEntry {
     // incremental LSH dedup: corpus (doc_id % 10 != 0) is indexed once;
     // the new batch (doc_id % 10 == 0) probes the index — per-batch cost
     // O(|batch| + collisions), never a corpus re-hash.
-    "dedup_incremental" -> Query({
-      // same permutation family / band hashing as the dedup_minhash_lsh
-      // oracle, with the bucket listing and cap computed over the CORPUS
-      // side only (the index) and candidates restricted to corpus × batch
-      val p = graft.operators.Dedup.MinhashPrime
-      val mins = graft.operators.Dedup.minhashCoeffs(16).zipWithIndex
-        .map { case ((a, b), i) => s"min((h31*$a + $b) % $p) AS m$i" }.mkString(", ")
-      val bandRows = (0 until 4).map { b =>
-        val cols = (b * 4 until b * 4 + 4).map(i => s"CAST(m$i AS VARCHAR)")
-          .mkString(" || '|' || ")
-        s"SELECT doc_id, $b AS band, md5($cols) AS bh FROM sig"
-      }.mkString(" UNION ALL ")
+    "dedup_incremental" -> Query(
+      // the dedup_minhash_lsh oracle, with the bucket listing and cap
+      // computed over the CORPUS side only (the index) and candidates
+      // restricted to corpus × batch
       s"""WITH $ShinglesCte,
-         |sig AS (SELECT doc_id, $mins FROM hsd GROUP BY doc_id),
-         |bands AS ($bandRows),
+         |$MinhashBandsCte,
          |bfc AS (SELECT * FROM (SELECT doc_id, band, bh,
          |         count(*) OVER (PARTITION BY band, bh) AS bn
          |        FROM bands WHERE doc_id % 10 != 0) t
@@ -4021,8 +4023,7 @@ object SparkEntry {
          |SELECT da AS doc_a, db AS doc_b,
          | inter / (sa.n + sb.n - inter) AS jaccard
          |FROM pr JOIN szh sa ON sa.doc_id = da JOIN szh sb ON sb.doc_id = db
-         |WHERE inter / (sa.n + sb.n - inter) >= 0.5""".stripMargin
-    })((s, d) => {
+         |WHERE inter / (sa.n + sb.n - inter) >= 0.5""".stripMargin)((s, d) => {
       // corpus and batch sides are narrow filters over the family's ONE
       // shared hash-array table (docShingleHashes is per-row, so
       // filter-then-hash ≡ hash-then-filter) — neither side re-hashes
@@ -4042,21 +4043,12 @@ object SparkEntry {
     // EventStreamsSpec's routing test. Shares the family's one persisted
     // hash-array table; index cost is the batch probe, never a corpus
     // re-hash.
-    "stream_quarantine" -> Query({
+    "stream_quarantine" -> Query(
       // the dedup_incremental oracle, wrapped in the quarantine
       // ROUTING read-out: batch docs whose index probe clears the
       // threshold flag true, the rest flow accepted
-      val p = graft.operators.Dedup.MinhashPrime
-      val mins = graft.operators.Dedup.minhashCoeffs(16).zipWithIndex
-        .map { case ((a, b), i) => s"min((h31*$a + $b) % $p) AS m$i" }.mkString(", ")
-      val bandRows = (0 until 4).map { b =>
-        val cols = (b * 4 until b * 4 + 4).map(i => s"CAST(m$i AS VARCHAR)")
-          .mkString(" || '|' || ")
-        s"SELECT doc_id, $b AS band, md5($cols) AS bh FROM sig"
-      }.mkString(" UNION ALL ")
       s"""WITH $ShinglesCte,
-         |sig AS (SELECT doc_id, $mins FROM hsd GROUP BY doc_id),
-         |bands AS ($bandRows),
+         |$MinhashBandsCte,
          |bfc AS (SELECT * FROM (SELECT doc_id, band, bh,
          |         count(*) OVER (PARTITION BY band, bh) AS bn
          |        FROM bands WHERE doc_id % 10 != 0) t
@@ -4073,8 +4065,7 @@ object SparkEntry {
          |      WHERE inter / (sa.n + sb.n - inter) >= 0.5)
          |SELECT d.doc_id, (q.db IS NOT NULL) AS quarantined
          |FROM (SELECT doc_id FROM documents WHERE doc_id % 10 = 0) d
-         |LEFT JOIN q ON q.db = d.doc_id""".stripMargin
-    })((s, d) => {
+         |LEFT JOIN q ON q.db = d.doc_id""".stripMargin)((s, d) => {
       val arr = sharedShingleArr(s, d)
       val arrIdx = arr.filter(col("doc_id") % 10 =!= 0)
       val bandIdx = Dedup.bandIndexFromArr(arrIdx, numPerm = 16, bands = 4)

@@ -17,18 +17,23 @@ object ChessFunctions {
     * final pair ends WITHOUT a trailing space while an odd trailing ply
     * keeps one (the f-string's space before the empty black survives) —
     * both quirks reproduced here for bit-parity (SURVEY.md quirk 4).
+    *
+    * Built ply by ply: the white ply at even index `i` gets its number
+    * `i / 2 + 1`, the black ply stays bare, and one space joins them all;
+    * an odd ply count appends the quirk's trailing space. The lambda reads
+    * only its own element and index, never `moves`: Spark evaluates a
+    * lambda body interpretively once per element, so a body that captured
+    * `moves` would re-evaluate the whole argument expression per ply — for
+    * `regexp_extract_all(pgn, …)` (the silver input) a rescan of the game's
+    * PGN per ply, O(plies²) per game instead of O(plies).
     */
   def addMoveNumbers(moves: Column): Column = {
-    // number of full-move slots = ceil(plies / 2); `get` (0-based) returns
-    // null past the end instead of raising under ANSI mode
-    val pairs = floor((size(moves) + lit(1)) / lit(2)).cast("int")
-    val numbered = transform(
-      sequence(lit(0), pairs - 1),
-      i => concat(
-        (i + 1).cast("string"), lit(". "),
-        get(moves, i * 2), lit(" "),
-        coalesce(get(moves, i * 2 + 1), lit(""))))
-    when(size(moves) === 0, lit("")).otherwise(concat_ws(" ", numbered))
+    val numbered = transform(moves, (m, i) =>
+      when(i % 2 === 0, concat((shiftright(i, 1) + 1).cast("string"), lit(". "), m))
+        .otherwise(m))
+    coalesce(
+      concat(array_join(numbered, " "), when(size(moves) % 2 === 1, lit(" ")).otherwise(lit(""))),
+      lit(""))
   }
 
   /** UD3 `get_opening_family` (udfs.py:78-101): text before the first ":",

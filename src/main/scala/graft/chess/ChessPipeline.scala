@@ -54,12 +54,14 @@ class ChessPipeline(spark: SparkSession, root: String, username: String,
       df
   }
 
+  /** Replaces a dim: the incremental build reads the previous dim, so
+    * stage to a temp location then swap (parquet overwrite would clobber
+    * its input). A dim has one row per key, so it is written as one file;
+    * the incremental union would otherwise add a file per batch.
+    */
   private def writeGold(df: DataFrame, rel: String): Unit = {
-    // dims and the cumulative fact are replaced atomically each batch; the
-    // window-merge already read the previous state into the plan, so stage
-    // to a temp location then swap (parquet overwrite would clobber input)
     val tmp = path(rel + ".tmp")
-    df.write.mode(SaveMode.Overwrite).parquet(tmp)
+    df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
     written(rel, df)
     val fs = new Path(path(rel)).getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(new Path(path(rel)), true)
@@ -123,51 +125,44 @@ class ChessPipeline(spark: SparkSession, root: String, username: String,
     Await.result(Future.sequence(builds), Duration.Inf)
   }
 
-  /** EP2 fact: gold projection → star join → merge into the cumulative
-    * fact, which is laid out partitioned by `game_month` (yyyy-MM).
+  /** EP2 fact: gold projection → merge into the cumulative fact, which is
+    * laid out partitioned by `game_month` (yyyy-MM).
+    *
+    * The fact reads no dim. The reference's star join (J1,
+    * [[GoldFact.starJoin]]) left-joins the dims and keeps only fact
+    * columns; with dims that have one row per key ([[Dims]]) it returns
+    * the projection unchanged, so the batch does not run it.
     *
     * The merge is partition-pruned: only the months present in the new
     * batch are read back (Parquet partition pruning on `game_month`),
-    * merged latest-wins, and rewritten via dynamic partition overwrite —
-    * cost is O(months in batch), not O(history). The reference re-window-
-    * dedups its entire cumulative file every run (python_scripts.py:576-598);
-    * semantics here are identical because a game_url never moves months
-    * (its game_date is fixed).
+    * merged latest-wins, and written once with dynamic partition
+    * overwrite — cost is O(months in batch), not O(history). The reference
+    * re-window-dedups its entire cumulative file every run
+    * (python_scripts.py:576-598); semantics here are identical because a
+    * game_url never moves months (its game_date is fixed).
     */
   def buildFact(silver: DataFrame, lastUpdated: java.sql.Timestamp): Unit = {
     import org.apache.spark.sql.functions.{col, date_format}
     val factRel = "gold/fact-games.parquet"
     val projected = GoldFact.project(silver, username, lastUpdated)
       .withColumn("game_month", date_format(col("game_date"), "yyyy-MM"))
-    val joined = GoldFact.starJoin(projected,
-      readBack("gold/dim_date.parquet"),
-      readBack("gold/dim_openings.parquet"),
-      readBack("gold/dim_results.parquet"),
-      readBack("gold/dim_time_control.parquet"))
     if (!exists(factRel)) {
-      joined.write.mode(SaveMode.Overwrite).partitionBy("game_month")
+      projected.write.mode(SaveMode.Overwrite).partitionBy("game_month")
         .parquet(path(factRel))
-      written(factRel, joined, "game_month")
+      written(factRel, projected, "game_month")
     } else {
-      val months = joined.select("game_month").distinct()
+      val months = projected.select("game_month").distinct()
         .collect().map(_.getString(0)).toSeq // one entry per batch month
       val prevMonths = readBack(factRel)
         .filter(col("game_month").isin(months: _*)) // partition-pruned scan
-        .select(joined.columns.map(col): _*)
-      val merged = GoldFact.merge(prevMonths, joined)
-      // stage the merged months (can't overwrite a path being read), then
-      // dynamic-overwrite replaces exactly those partitions
-      val tmpRel = factRel + ".merge-tmp"
-      val tmp = path(tmpRel)
-      merged.write.mode(SaveMode.Overwrite).parquet(tmp)
-      written(tmpRel, merged)
-      val staged = readBack(tmpRel)
-      try staged.write.mode(SaveMode.Overwrite).partitionBy("game_month")
-        .option("partitionOverwriteMode", "dynamic").parquet(path(factRel))
-      finally {
-        val fs = new Path(tmp).getFileSystem(spark.sessionState.newHadoopConf())
-        fs.delete(new Path(tmp), true)
-      }
+        .select(projected.columns.map(col): _*)
+      // the merge writes to the path it reads: dynamic partition overwrite
+      // stages the output under the table's staging directory and replaces
+      // only the partitions it wrote, at job commit, after every task has
+      // read the previous rows
+      GoldFact.merge(prevMonths, projected).write.mode(SaveMode.Overwrite)
+        .partitionBy("game_month").option("partitionOverwriteMode", "dynamic")
+        .parquet(path(factRel))
     }
   }
 

@@ -7,29 +7,49 @@ import org.apache.spark.sql.functions._
   *
   * Each `xxxFromSilver` is the initial build; [[incremental]] is the shared
   * merge semantics: new keys anti-joined against the existing dim, then a
-  * set-union (the reference's `NOT IN … UNION`, J2+U1 — equivalent because
-  * dim keys are non-null). Deliberate deviations from reference quirks
-  * (SURVEY.md §2.11): DISTINCT applied on *both* initial and incremental
-  * paths (quirk 2), and opening names derived from the ECO-URL slug instead
-  * of a per-row HTTP scrape (UD2).
+  * set-union (the reference's `NOT IN … UNION`, J2+U1). Every builder
+  * emits exactly one row per warehouse-DDL key (`create_datawarehouse.sql`:
+  * `pgn_eco_url`, `game_date`, `time_control`, `result_code`), so the
+  * star join ([[GoldFact.starJoin]]) is row-preserving. Deliberate
+  * deviations from reference quirks (SURVEY.md §2.11): one row per key on
+  * *both* initial and incremental paths (quirk 2: the reference's initial
+  * dim_time_control load has no DISTINCT at all), one row per key rather than per distinct row (quirk 3: the
+  * reference's row-wise DISTINCT keeps a URL seen with two ECO codes twice,
+  * and the star join then duplicates that URL's games) with a
+  * deterministic tie-break — the smallest ECO code per URL, the smallest
+  * class per formatted time control, among the rows of the batch that
+  * first saw the key ([[incremental]] keeps an existing row, so a smaller
+  * code arriving in a later batch does not replace it) — and opening names
+  * derived from the ECO-URL slug instead of a per-row HTTP scrape (UD2).
   */
 object Dims {
 
-  /** newRows ∪ existing, keeping existing rows for already-present keys. */
-  def incremental(newRows: DataFrame, existing: DataFrame, key: String): DataFrame =
-    newRows.join(existing.select(key), Seq(key), "left_anti")
-      .unionByName(existing).distinct()
+  /** newRows ∪ existing, keeping existing rows for already-present keys.
+    * Both sides are unique on `key` and the null-safe anti-join makes their
+    * keys disjoint, so the union is unique on `key` without a DISTINCT.
+    */
+  def incremental(newRows: DataFrame, existing: DataFrame, key: String): DataFrame = {
+    val old = existing.select(col(key).as("existing_key"))
+    newRows.join(old, newRows(key) <=> old("existing_key"), "left_anti")
+      .unionByName(existing)
+  }
 
   // ---- dim_openings (python_scripts.py:257-282) -------------------------
 
+  /** One (url, ECO code) row per URL: the smallest code the URL has in
+    * `silver`. Names are functions of the URL alone.
+    */
+  private def ecoPerUrl(silver: DataFrame): DataFrame =
+    silver.groupBy(col("pgn_eco_url")).agg(min(col("pgn_eco")).as("eco_code"))
+
   def openingsFromSilver(silver: DataFrame): DataFrame = {
     val name = ChessFunctions.openingNameFromUrl(col("pgn_eco_url"))
-    silver.select(
+    ecoPerUrl(silver).select(
       col("pgn_eco_url"),
       name.as("opening_name"),
       ChessFunctions.openingFamily(name).as("opening_family"),
       ChessFunctions.openingVariation(name).as("opening_variation"),
-      col("pgn_eco").as("eco_code")).distinct()
+      col("eco_code"))
   }
 
   /** [[openingsFromSilver]] enriched with the openings-book CSV (SURVEY
@@ -52,37 +72,41 @@ object Dims {
         struct(col("opening_moves"), col("opening_name"))).as("csv_name"))
     val slug = ChessFunctions.openingNameFromUrl(col("pgn_eco_url"))
     val name = coalesce(col("csv_name"), slug)
-    silver.select(col("pgn_eco_url"), col("pgn_eco")).distinct()
+    ecoPerUrl(silver)
       .join(best, col("pgn_eco_url") === col("matched_url"), "left")
       .select(
         col("pgn_eco_url"),
         name.as("opening_name"),
         ChessFunctions.openingFamily(name).as("opening_family"),
         ChessFunctions.openingVariation(name).as("opening_variation"),
-        col("pgn_eco").as("eco_code"))
-      .distinct()
+        col("eco_code"))
   }
 
   // ---- dim_date (python_scripts.py:326-366) -----------------------------
 
   def dateFromSilver(silver: DataFrame): DataFrame = {
     val d = col("game_date")
-    silver.select(
+    // every other column is a function of the date
+    silver.select(d).distinct().select(
       d,
       year(d).cast("long").as("year"),
       month(d).cast("long").as("month"),
       date_format(d, "MMMM").as("month_name"),
       dayofmonth(d).cast("long").as("day"),
       date_format(d, "EEEE").as("weekday"),
-      quarter(d).cast("long").as("quarter")).distinct()
+      quarter(d).cast("long").as("quarter"))
   }
 
   // ---- dim_time_control (python_scripts.py:402-418) ---------------------
 
+  /** One row per formatted time control, with its smallest class in
+    * `silver`: formatting floors base seconds to minutes, so "120+1"
+    * (bullet) and "150+1" (blitz) both become "2|1".
+    */
   def timeControlFromSilver(silver: DataFrame): DataFrame =
-    silver.select(
-      ChessFunctions.formatTimeControl(col("time_control")).as("time_control"),
-      col("time_class")).distinct()
+    silver.groupBy(
+      ChessFunctions.formatTimeControl(col("time_control")).as("time_control"))
+      .agg(min(col("time_class")).as("time_class"))
 
   // ---- dim_results: 16-row static seed ----------------------------------
   // (sql/create_dim_results_table.sql; write-once semantics per quirk 1)

@@ -42,10 +42,15 @@ object GoldFact {
 
   /** Referential-integrity star join (J1): left-join all four dims —
     * dim_results twice, role-playing — but project only fact columns.
-    * With unique dim keys (guaranteed by [[Dims]]) this is row-preserving;
-    * Catalyst broadcasts every dim (all ≪ autoBroadcastJoinThreshold) and,
-    * since no dim column survives the projection, can prune the joins
-    * entirely — we keep them for validation parity with the reference.
+    * [[Dims]] emits one row per key, so this is row-preserving and returns
+    * `fact` unchanged; [[ChessPipeline.buildFact]] therefore skips it, and
+    * the `chess_gold` query keeps it for parity with the reference.
+    * Catalyst alone does not prune these joins: it cannot know a dim key is
+    * unique. Where a dim's key is declared ([[graft.plans.UniqueKeys]]) or
+    * its plan groups by that key, the optimizer's
+    * [[graft.plans.EliminateUniqueKeyLeftJoin]] removes the join, since no
+    * dim column survives the projection; otherwise every dim is broadcast
+    * and joined.
     */
   def starJoin(fact: DataFrame, dimDate: DataFrame, dimOpenings: DataFrame,
                dimResults: DataFrame, dimTimeControl: DataFrame): DataFrame = {

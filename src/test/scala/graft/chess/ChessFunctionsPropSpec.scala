@@ -1,6 +1,8 @@
 package graft.chess
 
 import graft.SparkFixture
+import org.apache.spark.sql.{functions => F, Column}
+import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, Attribute, LambdaFunction, NamedLambdaVariable}
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -60,6 +62,51 @@ class ChessFunctionsPropSpec extends AnyFunSuite with Matchers with SparkFixture
         stripped shouldBe moves
       }
     }
+  }
+
+  /** The pairing formula `addMoveNumbers` had before it went ply by ply:
+    * one lambda call per full-move slot that indexes into `moves`. Kept
+    * here as the reference the linear formula must reproduce.
+    */
+  private def pairedMoveNumbers(moves: Column): Column = {
+    val pairs = F.floor((F.size(moves) + F.lit(1)) / F.lit(2)).cast("int")
+    val numbered = F.transform(
+      F.sequence(F.lit(0), pairs - 1),
+      i => F.concat(
+        (i + 1).cast("string"), F.lit(". "),
+        F.get(moves, i * 2), F.lit(" "),
+        F.coalesce(F.get(moves, i * 2 + 1), F.lit(""))))
+    F.when(F.size(moves) === 0, F.lit("")).otherwise(F.concat_ws(" ", numbered))
+  }
+
+  test("addMoveNumbers' lambda reads only its own element and index") {
+    // a lambda that captured `moves` would re-evaluate the whole argument
+    // expression (a PGN regex scan in the silver step) once per ply
+    val analyzed = Seq(Seq("e4")).toDF("m")
+      .select(ChessFunctions.addMoveNumbers($"m")).queryExecution.analyzed
+    val lambdas = analyzed.expressions.flatMap(_.collect {
+      case t: ArrayTransform => t.function.asInstanceOf[LambdaFunction]
+    })
+    lambdas should not be empty
+    for (f <- lambdas) withClue(f.sql + ": ") {
+      val vars = f.arguments.map(_.exprId).toSet
+      f.function.collect { case a: Attribute => a } shouldBe empty
+      f.function.collect { case v: NamedLambdaVariable => v.exprId }.toSet
+        .subsetOf(vars) shouldBe true
+    }
+  }
+
+  test("property: addMoveNumbers equals the pairing formula (empty, odd, even, null)") {
+    // ply arrays as regexp_extract_all emits them: no null elements
+    val plyLists = Gen.listOfN(200, Gen.choose(0, 41).flatMap(n => Gen.listOfN(n, sanMove)))
+      .sample.get.map(Option(_))
+    val rows = plyLists ++ Seq(Some(Nil), Some(List("e4")), Some(List("e4", "e5")), None)
+    val out = rows.toDF("moves").select(
+      ChessFunctions.addMoveNumbers($"moves"), pairedMoveNumbers($"moves")).collect()
+    out.map(r => (r.getString(0), r.getString(1))).foreach { case (linear, paired) =>
+      linear shouldBe paired
+    }
+    rows.map(_.fold(-1)(_.length % 2)).toSet shouldBe Set(-1, 0, 1)
   }
 
   test("property: family/variation partition the name around the first colon") {
